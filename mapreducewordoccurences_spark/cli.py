@@ -13,8 +13,9 @@ Exit-code contract (verified against the reference, FIXTURES.md):
 - success → sorted ``word=count`` lines on stdout, nothing else
 
 The collect-to-driver print is CLI-parity only: distinct-word output is
-small. Library users at scale should write ``count_words`` results with
-a DataFrame sink instead (sources/sinks.py).
+small, and ``count_words`` sorts it in one ordered output partition.
+Library users at scale should write ``count_words(..., sort=False)``
+results with a DataFrame sink instead (sources/sinks.py).
 """
 
 from __future__ import annotations

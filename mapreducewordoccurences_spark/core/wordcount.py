@@ -26,6 +26,9 @@ Spark-first design (vs the reference's manual pipeline):
   HashAggregate: map-side combine happens automatically inside the
   scan stage, the only shuffle moves (word, partial_count) pairs.
   Skewed tokens (stop-word-like) are absorbed by partial aggregation.
+- The reference's single-threaded sort of the distinct set after its
+  workers join (src/main.c:164-168) maps to one ordered output
+  partition (``count_words(sort=True)``).
 - Everything stays in whole-stage codegen: split/explode/filter/agg
   are JVM built-ins; no Python in the hot path.
 """
@@ -61,10 +64,9 @@ def tokenize(df: DataFrame, text_col: str = "text", word_col: str = "word") -> D
 
     Uses ``regexp_extract_all`` (positive match of WORD_REGEX) rather
     than ``split`` on the separator class: identical results (proven
-    against the reference binary's output), but measured ~19× faster —
-    split materializes empty-string array slots and a post-filter,
-    while extract_all emits matches directly. 155 MB/s/32-cores vs
-    8 MB/s on the 74 MB baseline corpus.
+    against the reference binary's output), and faster, because split
+    materializes empty-string array slots that a post-filter must then
+    drop, while extract_all emits matches directly.
     """
     col = F.col(text_col)
     return df.select(
@@ -75,23 +77,36 @@ def tokenize(df: DataFrame, text_col: str = "text", word_col: str = "word") -> D
 def count_words(df: DataFrame, text_col: str = "text", sort: bool = True) -> DataFrame:
     """The reference's one query: word-occurrence counts.
 
-    Returns DataFrame[word: string, count: bigint], sorted ascending by
-    word when ``sort`` (reference output contract, src/main.c:168-174).
+    Returns DataFrame[word: string, count: bigint]. Partial aggregation
+    makes the one shuffle proportional to (distinct words × input
+    partitions), not to corpus size.
 
-    Scale notes: partial aggregation makes the shuffle proportional to
-    (distinct words × partitions), not corpus size; the final global
-    sort is over the distinct-word set only (≪ corpus size), which is
-    a range-partitioned sort — fine at 100 TB inputs.
+    ``sort=True`` is the reference output contract (src/main.c:164-174):
+    ONE partition holding every distinct word in ascending order, made
+    by ``coalesce(1)`` + ``sortWithinPartitions``. Like the reference's
+    single-threaded qsort after its workers join, the final merge of
+    the partial counts and the sort run in one task, over the
+    distinct-word set only. The plan keeps one Exchange and runs as two
+    Spark jobs; a global ``orderBy`` would add a range-sampling job, a
+    second Exchange and a recomputation of the final aggregate. Its
+    consumers read one ordered stream (``cli.main``,
+    ``toLocalIterator``).
+
+    ``sort=False`` keeps the aggregate's hash partitioning, so the
+    result stays spread over the shuffle partitions: the form for
+    library callers at scale (queries/textops.py, streaming), which
+    write or join the counts instead of reading them in order.
     """
     counts = tokenize(df, text_col).groupBy("word").count()
-    return counts.orderBy("word") if sort else counts
+    return counts.coalesce(1).sortWithinPartitions("word") if sort else counts
 
 
 def count_words_in_file(spark: SparkSession, path: str, sort: bool = True) -> DataFrame:
     """File → word counts. Distributed, out-of-core replacement for the
     reference's whole-file slurp (src/main.c:74-110): spark.read.text
     streams line-split input splits instead of requiring the input to
-    fit in RAM.
+    fit in RAM. A file of a few MB already splits over every core
+    (``spark.sql.files.openCostInBytes`` in session._DEFAULTS).
     """
     return count_words(spark.read.text(path), text_col="value", sort=sort)
 

@@ -1079,19 +1079,27 @@ def build_ivfpq_index(
 def _write_meta_rowcount_local(vectors_dir: str, meta_dir: str) -> None:
     """Sum the just-written vector files' parquet FOOTER row counts and
     write the 1-row meta table, all driver-side via pyarrow — no Spark
-    job for either step. Local-filesystem paths only (OSError
-    propagates for the caller's Spark fallback)."""
+    job for either step. Local-filesystem paths only: raises OSError,
+    before writing anything, when ``vectors_dir`` is not a local
+    directory (a URI such as ``file:``/``hdfs:``) or holds no parquet
+    files, so the caller's Spark fallback counts instead of a silent
+    ``n_rows=0``."""
     import os  # noqa: PLC0415
 
     import pyarrow as pa  # noqa: PLC0415
     import pyarrow.parquet as pq  # noqa: PLC0415
 
-    n_rows = sum(
-        pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
+    if not os.path.isdir(vectors_dir):
+        raise NotADirectoryError(f"not a local directory: {vectors_dir}")
+    parts = [
+        os.path.join(root, f)
         for root, _dirs, files in os.walk(vectors_dir)
         for f in files
         if f.endswith(".parquet")
-    )
+    ]
+    if not parts:
+        raise FileNotFoundError(f"no parquet files under {vectors_dir}")
+    n_rows = sum(pq.ParquetFile(f).metadata.num_rows for f in parts)
     os.makedirs(meta_dir, exist_ok=True)
     # clear prior part files (overwrite semantics, matching the Spark
     # writer this replaces)
@@ -1108,7 +1116,8 @@ def ivfpq_index_rowcount(spark: SparkSession, path: str) -> int:
     """Corpus row count recorded at ``build_ivfpq_index`` time — one
     1-row parquet read instead of a full corpus scan. Read driver-side
     via pyarrow when the path is local (no Spark job); Spark read
-    otherwise."""
+    otherwise. Zero-row part files (a Spark writer may leave them) are
+    skipped."""
     try:
         import os  # noqa: PLC0415
 
@@ -1117,8 +1126,9 @@ def ivfpq_index_rowcount(spark: SparkSession, path: str) -> int:
         meta_dir = f"{path}/meta"
         for f in sorted(os.listdir(meta_dir)):
             if f.endswith(".parquet"):
-                tbl = pq.read_table(os.path.join(meta_dir, f))
-                return int(tbl.column("n_rows")[0].as_py())
+                rows = pq.read_table(os.path.join(meta_dir, f)).column("n_rows")
+                if len(rows):
+                    return int(rows[0].as_py())
     except OSError:
         pass
     return int(spark.read.parquet(f"{path}/meta").head()[0])

@@ -29,6 +29,12 @@ def formatted_plan(df: DataFrame) -> str:
     return _explain(df, "formatted")
 
 
+def _plan_text(plan: DataFrame | str) -> str:
+    """FORMATTED plan text; a string is taken as that text already
+    (lets a caller that audits one plan several ways explain it once)."""
+    return plan if isinstance(plan, str) else formatted_plan(plan)
+
+
 def simple_plan(df: DataFrame) -> str:
     return _explain(df, "simple")
 
@@ -72,15 +78,15 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
-def has_python_eval(df: DataFrame) -> bool:
+def has_python_eval(plan: DataFrame | str) -> bool:
     """True if the plan contains row-at-a-time Python (BatchEvalPython)
     or Arrow-batched Python (ArrowEvalPython / MapInPandas). The
     catalog's relational/text queries must report False; only the
     multimodal stubs may report True."""
-    plan = formatted_plan(df)
     return bool(
         re.search(
-            r"BatchEvalPython|ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan
+            r"BatchEvalPython|ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas",
+            _plan_text(plan),
         )
     )
 
@@ -104,7 +110,7 @@ def plan_audit(df: DataFrame) -> dict:
     }
 
 
-def global_window_inputs(df: DataFrame) -> list[str]:
+def global_window_inputs(plan: DataFrame | str) -> list[str]:
     """The ``Input`` line of every UNPARTITIONED Window node in the
     plan (empty list = no single-partition windows).
 
@@ -117,9 +123,8 @@ def global_window_inputs(df: DataFrame) -> list[str]:
     configuration or algebra (partition counts, frequency classes,
     percentile grids), never over a scan of a scaling table.
     """
-    plan = formatted_plan(df)
     out: list[str] = []
-    for block in re.split(r"^\(\d+\) ", plan, flags=re.MULTILINE):
+    for block in re.split(r"^\(\d+\) ", _plan_text(plan), flags=re.MULTILINE):
         lines = block.splitlines()
         # exact node-name match: "WindowGroupLimit" (partial top-k,
         # always partitioned) must not count

@@ -9,6 +9,16 @@ Defaults are chosen for the 100 TB design point:
 - AQE on (runtime coalescing, skew-join splitting, join re-planning)
 - Arrow on (vectorized Python interop for the pandas-UDF operators)
 - UTC session timezone (deterministic timestamp semantics)
+- 2 MiB file open cost (``spark.sql.files.openCostInBytes``; Spark's
+  default is 4 MiB). Spark sizes file splits as
+  ``min(maxPartitionBytes, max(openCostInBytes, bytes / cores))``, so
+  the open cost is a floor on the split size: at 4 MiB an 8.8 MB text
+  file scans as 4+4+0.8 MB splits and leaves one of 4 cores idle; at
+  2 MiB it scans as four splits of at most 2.7 MB. Inputs split at 128 MB
+  (``maxPartitionBytes``) are unaffected, and a single file under
+  2 MiB stays one split. Only the session conf is honoured: the
+  per-read ``maxPartitionBytes``/``openCostInBytes`` options are
+  ignored by ``spark.read`` on Spark 4.1.
 
 Skew: AQE's skew-join split is ON here but its 256MB
 ``skewedPartitionThresholdInBytes`` default can silently not fire
@@ -45,6 +55,8 @@ _DEFAULTS: dict[str, str] = {
     # under this even at SF large; customer/orders never should be hinted.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.files.maxPartitionBytes": "128m",
+    # split-size floor; see the module docstring
+    "spark.sql.files.openCostInBytes": str(2 * 1024 * 1024),
     "spark.sql.shuffle.partitions": "32",
     # Push MIN/MAX/COUNT aggregates down to parquet/ORC footer statistics
     # when no filter intervenes: a full-table count/min/max becomes a

@@ -20,12 +20,13 @@ from tools.bench_diff import (  # noqa: E402
 )
 
 
-def _rec(queries, extra=None, sf=0.1, runs=7):
+def _rec(queries, extra=None, sf=0.1, runs=7, cpus=32):
     return {
         "queries": dict(queries),
         "extra_queries": dict(extra or {}),
         "sf": sf,
         "runs_per_query": runs,
+        "cpus": cpus,
     }
 
 
@@ -62,6 +63,16 @@ def test_incomparable_records_yield_no_flags():
     assert comparable(_rec({"a": 1}), _rec({"b": 2}))
 
 
+def test_records_at_different_core_counts_are_incomparable():
+    # an 8-core record diffed against a 32-core one reads the core-count
+    # difference as per-query "regressions"
+    wide = _rec({"a": 1.0}, cpus=32)
+    narrow = _rec({"a": 2.0}, cpus=8)
+    assert not comparable(wide, narrow)
+    assert diff_records(wide, narrow) == []
+    assert [r["query"] for r in diff_records(wide, _rec({"a": 2.0}))] == ["a"]
+
+
 def test_latest_local_record_filters_by_comparability(tmp_path):
     for n, sf in ((3, 0.1), (4, 0.001), (5, 0.1)):
         (tmp_path / f"BENCH_local_r{n}.json").write_text(
@@ -72,6 +83,9 @@ def test_latest_local_record_filters_by_comparability(tmp_path):
     assert latest_local_record(str(tmp_path), like=like).endswith("r5.json")
     assert latest_local_record(
         str(tmp_path), like=_rec({}, sf=1.0)
+    ) is None
+    assert latest_local_record(
+        str(tmp_path), like=_rec({}, sf=0.1, cpus=8)
     ) is None
     assert record_round(str(tmp_path / "BENCH_local_r5.json")) == 5
 

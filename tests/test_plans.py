@@ -12,6 +12,8 @@ import pytest
 from mapreducewordoccurences_spark.plans.explain import (
     codegen_spans,
     count_exchanges,
+    formatted_plan,
+    global_window_inputs,
     has_broadcast_join,
     has_pushed_filters,
     has_python_eval,
@@ -25,6 +27,20 @@ from tests.conftest import SF_DIR
 
 def q(spark, name):
     return QUERIES[name](spark, SF_DIR)
+
+
+@pytest.fixture(scope="session")
+def catalog_plans(spark) -> dict[str, str | Exception]:
+    """FORMATTED plan text of every catalog query, built once for the
+    catalog-wide audits (building a query also runs its build-time
+    jobs). A query whose construction raised maps to the exception."""
+    plans: dict[str, str | Exception] = {}
+    for name in sorted(QUERIES):
+        try:
+            plans[name] = formatted_plan(q(spark, name))
+        except Exception as e:  # plan construction must succeed too
+            plans[name] = e
+    return plans
 
 
 def test_wordcount_plan_shape(spark):
@@ -59,8 +75,6 @@ def test_q5_broadcasts_dims(spark):
 
 
 def test_window_topk_inserts_group_limit(spark):
-    from mapreducewordoccurences_spark.plans.explain import formatted_plan
-
     df = q(spark, "window_topk_orders_per_cust")
     # rank-filter pattern must trigger WindowGroupLimit: partial top-k
     # before the shuffle so it carries O(groups×k), not all rows
@@ -106,8 +120,6 @@ def test_split_and_sample_plan_shapes(spark):
     # share the lang partitioning)
     assert count_exchanges(q(spark, "stratified_sample_by_lang")) == 1
     # deterministic shuffle head: top-k, never a global sort
-    from mapreducewordoccurences_spark.plans.explain import formatted_plan
-
     assert "TakeOrderedAndProject" in formatted_plan(q(spark, "shuffled_shard_head"))
     assert "TakeOrderedAndProject" in formatted_plan(q(spark, "bigram_counts"))
 
@@ -119,7 +131,6 @@ def test_ivf_probe_prunes_partitions(spark, tmp_path):
         build_ivf_index,
         ivf_probe,
     )
-    from mapreducewordoccurences_spark.plans.explain import formatted_plan
     from mapreducewordoccurences_spark.sources.readers import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings")
@@ -141,7 +152,6 @@ def test_ivfpq_probe_prunes_partitions(spark, tmp_path):
         build_ivfpq_index,
         ivfpq_probe,
     )
-    from mapreducewordoccurences_spark.plans.explain import formatted_plan
     from mapreducewordoccurences_spark.sources.readers import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings")
@@ -215,8 +225,6 @@ def test_q17_probe_side_never_shuffles(spark):
 
 
 def test_q10_topk_avoids_global_sort(spark):
-    from mapreducewordoccurences_spark.plans.explain import formatted_plan
-
     plan = formatted_plan(q(spark, "q10_returned_revenue_topk"))
     assert "TakeOrderedAndProject" in plan
     assert has_pushed_filters(q(spark, "q10_returned_revenue_topk"), "l_returnflag")
@@ -331,16 +339,15 @@ PYTHON_ALLOWED = {
 }
 
 
-def test_catalog_hot_paths_have_no_python(spark):
+def test_catalog_hot_paths_have_no_python(catalog_plans):
     failures = []
-    for name in sorted(QUERIES):
+    for name, plan in catalog_plans.items():
         if name in PYTHON_ALLOWED:
             continue
-        try:
-            if has_python_eval(q(spark, name)):
-                failures.append(name)
-        except Exception as e:  # building the plan must also succeed
-            failures.append(f"{name}: {type(e).__name__}")
+        if isinstance(plan, Exception):  # building the plan must also succeed
+            failures.append(f"{name}: {type(plan).__name__}")
+        elif has_python_eval(plan):
+            failures.append(name)
     assert not failures, failures
 
 
@@ -363,8 +370,6 @@ def test_gram_matrix_single_shuffle_and_pruning(spark):
 
 
 def test_fuzzy_match_no_cartesian_and_no_python(spark):
-    from mapreducewordoccurences_spark.plans.explain import formatted_plan
-
     df = q(spark, "fuzzy_match_part_names")
     assert "CartesianProduct" not in formatted_plan(df)
     assert not has_python_eval(df)
@@ -381,20 +386,17 @@ def test_hopping_window_single_shuffle(spark):
     assert not has_python_eval(df)
 
 
-def test_catalog_has_no_cartesian_products(spark):
+def test_catalog_has_no_cartesian_products(catalog_plans):
     """No catalog query may plan a CartesianProduct: every cross-ish
     shape must be a broadcast of a scalar/centroid/dim table
     (BroadcastNestedLoop over bounded rows is acceptable; an
     unbounded pairwise product is never)."""
-    from mapreducewordoccurences_spark.plans.explain import formatted_plan
-
     offenders = []
-    for name in sorted(QUERIES):
-        try:
-            if "CartesianProduct" in formatted_plan(q(spark, name)):
-                offenders.append(name)
-        except Exception as e:  # plan construction must succeed too
-            offenders.append(f"{name}: {type(e).__name__}")
+    for name, plan in catalog_plans.items():
+        if isinstance(plan, Exception):  # plan construction must succeed too
+            offenders.append(f"{name}: {type(plan).__name__}")
+        elif "CartesianProduct" in plan:
+            offenders.append(name)
     assert not offenders, offenders
 
 
@@ -403,8 +405,6 @@ def test_rfm_bands_by_broadcast_join_no_global_window(spark):
     boundaries broadcast back onto the user table — NOT global
     ntile windows, which single-partition-sort the whole user axis
     (unbounded at scale)."""
-    from mapreducewordoccurences_spark.plans.explain import formatted_plan
-
     df = q(spark, "rfm_user_segments")
     plan = formatted_plan(df)
     assert "ntile(" not in plan  # ("ntile" alone matches perceNTILE_disc)
@@ -421,8 +421,6 @@ def test_vocab_shift_no_window_over_vocabulary(spark):
     web-scale) in one partition."""
     import re
 
-    from mapreducewordoccurences_spark.plans.explain import formatted_plan
-
     df = q(spark, "vocab_shift_js_divergence")
     plan = formatted_plan(df)
     assert not re.search(r"^\(\d+\) Window\s*$", plan, re.MULTILINE)
@@ -436,8 +434,6 @@ def test_zipf_windows_only_the_class_axis(spark):
     vocabulary-sized rank rows are regenerated by a distributed
     sequence+explode, never a global row_number over the vocab."""
     import re
-
-    from mapreducewordoccurences_spark.plans.explain import formatted_plan
 
     df = q(spark, "zipf_slope_vocabulary")
     plan = formatted_plan(df)
@@ -453,8 +449,6 @@ def test_hybrid_rrf_topk_and_semantic_dedup_plan_shapes(spark):
     SemDeDup profile must keep cosine scoring JVM-side and join pairs
     only within a k-means cell (equi-join on cluster_id — no
     cartesian)."""
-    from mapreducewordoccurences_spark.plans.explain import formatted_plan
-
     hp = formatted_plan(q(spark, "hybrid_rrf_retrieval"))
     assert hp.count("TakeOrderedAndProject") >= 2
     assert "CartesianProduct" not in hp
@@ -509,22 +503,17 @@ GLOBAL_WINDOW_BOUNDED = {
 }
 
 
-def test_catalog_global_windows_only_on_bounded_axes(spark):
+def test_catalog_global_windows_only_on_bounded_axes(catalog_plans):
     """Catalog-wide audit: every UNPARTITIONED Window node must sit
     over a config- or algebra-bounded axis. A global window over a
     scaling table single-partitions the whole input — the shape the
     distributed global_rank/global_ntile operators exist to avoid."""
-    from mapreducewordoccurences_spark.plans.explain import (
-        global_window_inputs,
-    )
-
     offenders = []
-    for name in sorted(QUERIES):
-        try:
-            inputs = global_window_inputs(q(spark, name))
-        except Exception as e:  # plan construction must succeed
-            offenders.append(f"{name}: {type(e).__name__}")
+    for name, plan in catalog_plans.items():
+        if isinstance(plan, Exception):  # plan construction must succeed
+            offenders.append(f"{name}: {type(plan).__name__}")
             continue
+        inputs = global_window_inputs(plan)
         if not inputs:
             continue
         if name not in GLOBAL_WINDOW_BOUNDED:
@@ -622,8 +611,6 @@ def test_reranker_broadcasts_candidates_no_python(spark):
     candidate set against documents/embeddings — no corpus-side
     shuffle beyond the first stage's own bounded top-50 legs, and the
     deterministic stand-in scorer stays JVM-side."""
-    from mapreducewordoccurences_spark.plans.explain import formatted_plan
-
     df = q(spark, "hybrid_rrf_reranked_topk")
     plan = formatted_plan(df)
     assert has_broadcast_join(df)

@@ -15,7 +15,12 @@ import string
 
 import pytest
 
-from mapreducewordoccurences_spark.core import count_words, format_kv_lines
+from mapreducewordoccurences_spark.core import (
+    count_words,
+    count_words_in_file,
+    format_kv_lines,
+)
+from mapreducewordoccurences_spark.plans.explain import count_exchanges, formatted_plan
 
 ORACLE_RE = re.compile(r"[A-Za-z0-9]+")
 
@@ -92,3 +97,44 @@ def test_counts_are_int64(spark):
     df = spark.createDataFrame([("a a a",)], ["text"])
     out = count_words(df)
     assert dict(out.dtypes)["count"] == "bigint"
+
+
+def test_sorted_file_count_is_two_jobs_over_every_core(spark, tmp_path):
+    """The CLI path (file -> sorted lines -> toLocalIterator) runs as
+    one Exchange and two Spark jobs (the aggregation's map stage, then
+    the single ordered output partition), and a text file larger than
+    cores x 2 MiB (the session's file open cost) scans in at least one
+    split per core."""
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    rng = random.Random(99)
+    alphabet = string.ascii_letters + string.digits
+    vocab = [
+        "".join(rng.choices(alphabet, k=rng.randrange(1, 12))) for _ in range(20_000)
+    ]
+    target = cores * 2 * 1024 * 1024 + 64 * 1024
+    chunks, size = [], 0
+    while size < target:
+        line = " ".join(rng.choice(vocab) for _ in range(12)) + ",;\n"
+        chunks.append(line)
+        size += len(line)
+    text = "".join(chunks)
+    path = str(tmp_path / "corpus.txt")
+    with open(path, "w") as f:
+        f.write(text)
+
+    df = format_kv_lines(count_words_in_file(spark, path))
+    plan = formatted_plan(df)
+    assert count_exchanges(df) == 1
+    assert "rangepartitioning" not in plan.lower()
+    assert spark.read.text(path).rdd.getNumPartitions() >= cores
+
+    group = "test-woc-shape"
+    sc.setJobGroup(group, group)
+    try:
+        lines = [r["line"] for r in df.toLocalIterator()]
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert lines == oracle_lines(text)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2

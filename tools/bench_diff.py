@@ -35,14 +35,16 @@ def _all_timings(rec: dict) -> dict[str, float]:
     return out
 
 
+_COMPARABLE_KEYS = ("sf", "runs_per_query", "cpus")
+
+
 def comparable(prev: dict, cur: dict) -> bool:
-    """Records are comparable only at the same scale factor and
-    warm-up protocol: a cold (runs_per_query=1) sf0.001 smoke run vs a
-    warm (runs=7) sf0.1 record flags ~every query as a 2-11x
-    "regression" that is pure measurement-condition delta."""
-    return prev.get("sf") == cur.get("sf") and prev.get(
-        "runs_per_query"
-    ) == cur.get("runs_per_query")
+    """Records are comparable only at the same scale factor, warm-up
+    protocol and core count: a cold (runs_per_query=1) sf0.001 smoke
+    run vs a warm (runs=7) sf0.1 record flags ~every query as a 2-11x
+    "regression" that is pure measurement-condition delta, and so does
+    an 8-core record diffed against a 32-core one."""
+    return all(prev.get(k) == cur.get(k) for k in _COMPARABLE_KEYS)
 
 
 def diff_records(
@@ -53,7 +55,7 @@ def diff_records(
 ) -> list[dict]:
     """Regression list, worst ratio first. Queries present in only one
     record are skipped (additions/removals aren't regressions).
-    Incomparable records (different sf / warm-up) yield no flags."""
+    Incomparable records (different sf / warm-up / cpus) yield no flags."""
     if not comparable(prev, cur):
         return []
     p, c = _all_timings(prev), _all_timings(cur)
@@ -106,10 +108,12 @@ def main() -> int:
     prev = json.load(open(sys.argv[1]))
     cur = json.load(open(sys.argv[2]))
     if not comparable(prev, cur):
+        def conditions(rec: dict) -> str:
+            return " ".join(f"{k}={rec.get(k)}" for k in _COMPARABLE_KEYS)
+
         print(
-            f"records not comparable (prev sf={prev.get('sf')} "
-            f"runs={prev.get('runs_per_query')}, cur sf={cur.get('sf')} "
-            f"runs={cur.get('runs_per_query')}) — no regression check"
+            f"records not comparable (prev {conditions(prev)}, "
+            f"cur {conditions(cur)}) — no regression check"
         )
         return 0
     regs = diff_records(prev, cur)
