@@ -1,6 +1,6 @@
 """Embedding similarity search over array<float> columns.
 
-Three tiers:
+Tiers:
 - ``brute_force_knn``: exact cosine top-k — the correctness baseline.
   O(|queries| × |corpus|); fine when the query set is small enough to
   broadcast (the usual case: a probe/eval set vs a 100 TB corpus).
@@ -8,11 +8,18 @@ Three tiers:
   vector hashes to one bucket per table; candidates share a bucket in
   ≥1 table; exact cosine re-ranks candidates. Shuffle is proportional
   to bucket collisions, not |corpus|².
-- ``ivf_knn``: inverted-file (IVF-flat) — k-means cells built once
-  (``kmeans_centroids``), corpus rows assigned to their nearest cell,
-  queries probe only the ``nprobe`` nearest cells. At 100 TB the
-  assignment is a one-time index build persisted with
-  ``partitionBy(cell)`` so a probe reads nprobe/nlist of the data.
+- ``ivf_knn``: inverted-file (IVF-flat) — corpus rows assigned to the
+  nearest of nlist cells, queries probe only the ``nprobe`` nearest
+  cells. At 100 TB the assignment is a one-time index build persisted
+  with ``partitionBy(cell)`` so a probe reads nprobe/nlist of the data.
+- ``pq_knn_rerank`` / ``ivfpq_knn``: product quantization — an ADC scan
+  over m-subspace codes cuts a shortlist that exact cosine re-ranks;
+  IVF∘PQ scans only the probed cells' codes.
+
+One vector-quantization core serves every index: ``pq_codebooks`` is
+the only Lloyd trainer and ``pq_encode`` the only assignment. The IVF
+cells are the one-subspace codebook ``pq_codebooks(corpus, m=1,
+ks=nlist)``; a vector's cell is its m=1 code.
 
 All arithmetic is JVM-side (``zip_with``/``aggregate`` fold in
 double) — no Python in the data path; results are deterministic
@@ -23,6 +30,7 @@ from __future__ import annotations
 
 import math
 import random
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -103,143 +111,247 @@ def _sq_dist(a: Column | str, b: Column | str) -> Column:
     )
 
 
-def _centroid_array(centroids: DataFrame) -> DataFrame:
-    """Collapse the (``__cell``, ``__centroid``) table to ONE row
-    holding the whole codebook as an array — the broadcastable form
-    the fold-based assignment consumes. nlist × dim doubles: a few KB
-    at any sane nlist."""
-    return centroids.agg(
-        F.collect_list(F.struct("__cell", "__centroid")).alias("__cents")
+# ---------------------------------------------------------------------------
+# Vector quantization core — the one Lloyd trainer behind every ANN index
+# here. Product quantization (Jégou et al., "Product Quantization for
+# Nearest Neighbor Search", TPAMI 2011) splits each vector into m
+# subspaces with ks codewords each; the IVF coarse quantizer is its m=1
+# case (one subspace = the whole vector, ks = nlist cells).
+# ---------------------------------------------------------------------------
+
+def _subvectors(df: DataFrame, m: int, vec_col: str, *keep: str) -> DataFrame:
+    """(*keep, __sub, __subvec): the vector split into m contiguous
+    subspaces, JVM-side (one posexplode of a transform-built array)."""
+    return df.select(
+        *keep,
+        F.posexplode(
+            F.expr(
+                f"transform(sequence(0, {m - 1}),"
+                f" j -> slice({vec_col}, j * (size({vec_col}) div {m}) + 1,"
+                f" size({vec_col}) div {m}))"
+            )
+        ).alias("__sub", "__subvec"),
     )
 
 
-def _nearest_cell(vec_col: Column | str, cents_col: Column | str) -> Column:
-    """argmin over the in-row centroid array: score every centroid,
-    take the (dist, cell)-lexicographic minimum. Identical arithmetic
-    and tie-break (lowest cell on equal distance) as the former
-    ``min_by(__cell, struct(__dist, __cell))`` — but evaluated inside
-    one projection, so assignment needs NO shuffle at all (guide
-    §2.4): the old shape shuffled corpus × nlist scored rows back
-    into a groupBy(id) just to run the argmin."""
+def _book_arrays(books: DataFrame) -> DataFrame:
+    """(__sub, __codes: array<struct<__code, __cvec>>) — one row per
+    subspace, the broadcastable per-subspace codebook the fold-based
+    nearest-codeword assignment consumes (m rows of ks codewords)."""
+    return books.groupBy("__sub").agg(
+        F.collect_list(F.struct("__code", "__cvec")).alias("__codes")
+    )
+
+
+def _nearest_code(subvec_col: Column | str, codes_col: Column | str) -> Column:
+    """argmin over the in-row codeword array: score every codeword and
+    take the (dist, code)-lexicographic minimum (lowest code on equal
+    distance). Evaluated inside one projection, so assignment needs no
+    shuffle of corpus × ks scored rows."""
     scored = F.transform(
-        _c(cents_col),
-        lambda ct: F.struct(
-            _sq_dist(_c(vec_col), ct["__centroid"]).alias("__d"),
-            ct["__cell"].alias("__cell"),
+        _c(codes_col),
+        lambda c: F.struct(
+            _sq_dist(_c(subvec_col), c["__cvec"]).alias("__d"),
+            c["__code"].alias("__code"),
         ),
     )
-    return F.array_min(scored)["__cell"]
+    return F.array_min(scored)["__code"]
 
 
-def _assign_cells(
-    df: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
+def _pq_assign(
+    corpus: DataFrame, books: DataFrame, m: int, id_col: str, vec_col: str
 ) -> DataFrame:
-    """Nearest-centroid assignment, map-only: the centroid table rides
-    in as a broadcast single-row array and the argmin folds per row —
-    zero Exchange (the former broadcast-join + groupBy(id).min_by
-    shuffled every vector once per assignment; at 100 TB that was a
-    corpus-sized shuffle per Lloyd round)."""
-    cents = _centroid_array(centroids)
-    return df.crossJoin(F.broadcast(cents)).select(
-        F.col(id_col),
-        _nearest_cell(F.col(vec_col), F.col("__cents")).alias("__cell"),
-        F.col(vec_col),
+    """(id, __sub, __code, __subvec): every vector's m subvectors, each
+    with its nearest codeword — map-only: the m codebook rows ride in
+    as a broadcast and the argmin folds per row. At m=1 the one
+    subvector is the whole vector and ``__code`` is its IVF cell."""
+    return (
+        _subvectors(corpus, m, vec_col, id_col)
+        .join(F.broadcast(_book_arrays(books)), "__sub")
+        .select(
+            id_col,
+            "__sub",
+            _nearest_code(F.col("__subvec"), F.col("__codes")).alias("__code"),
+            "__subvec",
+        )
     )
 
 
-def kmeans_centroids(
+def pq_codebooks(
     corpus: DataFrame,
-    nlist: int,
+    m: int = 8,
+    ks: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     iters: int = 2,
 ) -> DataFrame:
-    """Deterministically-seeded Lloyd k-means → (``__cell``,
-    ``__centroid``) with nlist rows.
+    """Per-subspace Lloyd codebooks → (__sub, __code, __cvec), m·ks
+    rows. The only trainer of this module: the IVF coarse quantizer is
+    ``pq_codebooks(corpus, m=1, ks=nlist, iters=kmeans_iters)``, whose
+    ``__code`` is the cell id and ``__cvec`` the cell centroid.
 
-    Seeds are the nlist lowest-id vectors (deterministic, no RNG in
-    the plan); each Lloyd round is one broadcast assignment plus one
-    posexplode + (cell, dim) groupBy to average element-wise — both
-    shuffle O(corpus × dim) numbers, the price of an index build, paid
-    once. Empty cells simply drop out (fewer lists, never a crash).
-
-    Centroid updates use the repo's fixed-point convention (exact
-    BIGINT sums of 2²⁰-scaled values + truncating integer division,
-    same as functions/clustering.py and pq_codebooks): the persisted
-    index is bit-identical regardless of partition count or summation
-    order — F.avg over raw doubles would drift with cluster layout."""
-    w_id = F.row_number().over(Window.orderBy(id_col))
-    centroids = (
-        corpus.orderBy(id_col)
-        .limit(nlist)
-        .select(
-            (w_id - 1).alias("__cell"),
-            F.transform(vec_col, lambda x: x.cast("double")).alias("__centroid"),
-        )
+    Seeds are the ks lowest-id vectors (a TakeOrderedAndProject —
+    bounded, no corpus-wide window), split into subvectors; each Lloyd
+    round is one broadcast-codebook assignment plus one
+    (sub, code, dim)-keyed fixed-point average (exact BIGINT sums of
+    2²⁰-scaled values + truncating integer division, the
+    functions/clustering.py convention — codebooks, codes and
+    shortlists are bit-identical across runs and cluster layouts,
+    where F.avg over raw doubles would drift with summation order).
+    Empty codewords drop out (fewer cells, never a crash). All m
+    subspaces train in the SAME passes — the corpus streams once per
+    round, not once per subspace. At 100 TB, train on a hash-sampled
+    slice (codebooks need ~100k points, not the corpus) and broadcast
+    the result."""
+    seeds = corpus.orderBy(id_col).limit(ks).select(
+        (F.row_number().over(Window.orderBy(id_col)) - 1).alias("__code"),
+        vec_col,
+    )
+    books = _subvectors(seeds, m, vec_col, "__code").select(
+        "__sub",
+        "__code",
+        F.transform("__subvec", lambda x: x.cast("double")).alias("__cvec"),
     )
     for _ in range(iters):
-        assigned = _assign_cells(corpus, centroids, id_col, vec_col)
-        centroids = (
-            assigned.select("__cell", F.posexplode(vec_col).alias("__pos", "__v"))
-            .groupBy("__cell", "__pos")
+        books = (
+            _pq_assign(corpus, books, m, id_col, vec_col)
+            .select(
+                "__sub", "__code", F.posexplode("__subvec").alias("__pos", "__v")
+            )
+            .groupBy("__sub", "__code", "__pos")
             .agg(
                 F.sum(
-                    (F.col("__v").cast("double") * F.lit(1048576)).cast("long")
+                    (F.col("__v").cast("double") * F.lit(1048576)).cast(
+                        "long"
+                    )
                 ).alias("__s"),
                 F.count(F.lit(1)).alias("__n"),
             )
             .select(
-                "__cell",
+                "__sub",
+                "__code",
                 "__pos",
-                (F.expr("__s div __n").cast("double") / F.lit(1048576.0)).alias(
-                    "__m"
-                ),
+                (
+                    F.expr("__s div __n").cast("double") / F.lit(1048576.0)
+                ).alias("__mv"),
             )
-            .groupBy("__cell")
+            .groupBy("__sub", "__code")
             .agg(
                 F.transform(
-                    F.array_sort(F.collect_list(F.struct("__pos", "__m"))),
-                    lambda s: s.getField("__m"),
-                ).alias("__centroid")
+                    F.array_sort(F.collect_list(F.struct("__pos", "__mv"))),
+                    lambda s: s.getField("__mv"),
+                ).alias("__cvec")
             )
         )
-    return centroids
+    return books
+
+
+def pq_encode(
+    corpus: DataFrame,
+    books: DataFrame,
+    m: int = 8,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(vec_id, __sub, __code): nearest-codeword id per subspace — the
+    stored form. m log2(ks)-bit codes replace the float vector: at
+    m=8, ks=16 that is 4 bytes/vector vs 256 for float32×64 — the 64×
+    compression that lets a trillion-vector corpus live in RAM. With
+    an m=1 codebook, ``__code`` is the vector's IVF cell."""
+    return _pq_assign(corpus, books, m, id_col, vec_col).drop("__subvec")
+
+
+def _ivf_cells(
+    corpus: DataFrame, cells: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, __cell, vec): the IVF assignment — ``pq_encode`` at m=1,
+    keeping its one subvector, which is the whole vector."""
+    return _pq_assign(corpus, cells, 1, id_col, vec_col).select(
+        id_col, F.col("__code").alias("__cell"), F.col("__subvec").alias(vec_col)
+    )
+
+
+def _run_concurrent_jobs(*thunks) -> None:
+    """Run independent Spark actions from a small driver thread pool so
+    each job's task tail is back-filled by the next job's tasks instead
+    of leaving the executors idle between sequential actions.
+    InheritableThread propagates the JVM thread-locals (job
+    description/group) into the pool threads. Exceptions propagate."""
+    from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
+
+    from pyspark import inheritable_thread_target  # noqa: PLC0415
+
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(th)) for th in thunks
+        ]
+        for f in futures:
+            f.result()
+
+
+def _trained_books(
+    corpus: DataFrame, id_col: str, vec_col: str, *specs
+) -> list[DataFrame]:
+    """One table per ``(given, m, ks, iters)`` spec: ``given`` when the
+    caller passed a trained table, else ``pq_codebooks(corpus, m, ks,
+    iters=iters)`` materialized by an eager localCheckpoint, so the
+    Lloyd lineage runs once for all its consumers (its blocks are
+    freed by ``unpersist()`` or when the DataFrame is garbage-collected
+    — no session-lifetime cache). Missing tables are independent
+    trainings (IVF cells and PQ codebooks) and run as concurrent
+    jobs."""
+    out = [spec[0] for spec in specs]
+
+    def train(i: int) -> None:
+        _, m, ks, iters = specs[i]
+        out[i] = pq_codebooks(
+            corpus, m, ks, id_col, vec_col, iters
+        ).localCheckpoint(eager=True)
+
+    missing = [i for i, spec in enumerate(specs) if spec[0] is None]
+    if missing:
+        _run_concurrent_jobs(*[partial(train, i) for i in missing])
+    return out
 
 
 def _probe_cells(
     queries: DataFrame,
-    centroids: DataFrame,
+    cells: DataFrame,
     nprobe: int,
     id_col: str,
     vec_col: str,
     query_id_col: str,
 ) -> DataFrame:
     """(query_id, __qvec, __cell) for each query's nprobe nearest
-    cells — centroids broadcast as a single collapsed-array row; the
-    per-query top-nprobe is an in-row array_sort + slice (same
-    (dist, cell) total order the former ranking window used), so
-    probing plans no window Exchange at all."""
-    q = queries.select(F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qvec"))
-    cents = _centroid_array(centroids)
-    scored = q.crossJoin(F.broadcast(cents)).select(
-        query_id_col,
-        "__qvec",
-        F.slice(
-            F.array_sort(
-                F.transform(
-                    F.col("__cents"),
-                    lambda ct: F.struct(
-                        _sq_dist(F.col("__qvec"), ct["__centroid"]).alias("__dist"),
-                        ct["__cell"].alias("__cell"),
-                    ),
-                )
-            ),
-            1,
-            nprobe,
-        ).alias("__near"),
+    cells — the queries are split and joined to the broadcast m=1
+    codebook exactly as ``_pq_assign`` does the corpus, so one
+    broadcast serves both; the per-query top-nprobe is an in-row
+    array_sort + slice over the (dist, cell) order, so probing plans
+    no window Exchange at all."""
+    q = queries.select(
+        F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qvec")
     )
-    return scored.select(
-        query_id_col, "__qvec", F.explode(F.col("__near.__cell")).alias("__cell")
+    near = F.slice(
+        F.array_sort(
+            F.transform(
+                F.col("__codes"),
+                lambda c: F.struct(
+                    _sq_dist(F.col("__qvec"), c["__cvec"]).alias("__dist"),
+                    c["__code"].alias("__cell"),
+                ),
+            )
+        ),
+        1,
+        nprobe,
+    )
+    return (
+        _subvectors(q, 1, "__qvec", query_id_col, "__qvec")
+        .join(F.broadcast(_book_arrays(cells)), "__sub")
+        .select(
+            query_id_col,
+            "__qvec",
+            F.explode(near.getField("__cell")).alias("__cell"),
+        )
     )
 
 
@@ -258,6 +370,35 @@ def _rerank_candidates(cand: DataFrame, k: int, query_id_col: str) -> DataFrame:
     ).select(query_id_col, "neighbor_id", "rnk", "sim")
 
 
+def _ivf_search(
+    assigned: DataFrame,
+    cells: DataFrame,
+    queries: DataFrame,
+    k: int,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """The IVF-flat search body of ``ivf_knn`` (assignment computed
+    inline) and ``ivf_probe`` (assignment read from the index).
+    ``assigned`` is (id, __cell, vec); it joins the broadcast probe
+    list on ``__cell`` — a dynamic-partition-pruning filter when
+    ``assigned`` is the __cell-partitioned parquet scan — and the
+    candidates are re-ranked by exact cosine."""
+    probes = _probe_cells(queries, cells, nprobe, id_col, vec_col, query_id_col)
+    cand = (
+        assigned.select(
+            F.col(id_col).alias("neighbor_id"),
+            "__cell",
+            F.col(vec_col).alias("__cvec"),
+        )
+        .join(F.broadcast(probes), "__cell")
+        .where(F.col("neighbor_id") != F.col(query_id_col))
+    )
+    return _rerank_candidates(cand, k, query_id_col)
+
+
 def ivf_knn(
     corpus: DataFrame,
     queries: DataFrame,
@@ -273,12 +414,13 @@ def ivf_knn(
     """Approximate cosine top-k via IVF-flat, index built inline.
 
     Corpus rows join queries only within the query's ``nprobe``
-    nearest cells → the candidate set (and shuffle) shrinks by
-    ~nprobe/nlist vs brute force. Recall rises with nprobe (nprobe =
-    nlist ≡ exact). The centroid table (nlist rows) is materialized
-    eagerly via localCheckpoint so the k-means lineage runs once for
-    both the assignment and the probe; its blocks are freed when the
-    DataFrame is garbage-collected (no session-lifetime cache leak).
+    nearest cells → the candidate set shrinks by ~nprobe/nlist vs
+    brute force. Recall rises with nprobe (nprobe = nlist ≡ exact).
+    The query side is broadcast, as in ``brute_force_knn`` (a probe or
+    eval set). The cell table (nlist rows) is materialized eagerly via
+    localCheckpoint so the Lloyd lineage runs once for both the
+    assignment and the probe; its blocks are freed when the DataFrame
+    is garbage-collected (no session-lifetime cache leak).
 
     At real scale use ``build_ivf_index`` + ``ivf_probe`` instead:
     the assignment is persisted ``partitionBy(__cell)`` once, and each
@@ -286,43 +428,24 @@ def ivf_knn(
     partition pruning.
 
     ``centroids`` accepts an already-trained (and ideally already
-    materialized) centroid table with the same (nlist, iters, seed
-    protocol) — callers composing this with ``build_ivf_index`` over
-    the same corpus train ONCE and pass the result to both (the
-    trainer is fixed-point deterministic, so sharing is bit-identical
-    to retraining)."""
-    if centroids is None:
-        centroids = kmeans_centroids(
-            corpus, nlist, id_col=id_col, vec_col=vec_col, iters=kmeans_iters
-        ).localCheckpoint(eager=True)
-
-    assigned = _assign_cells(corpus, centroids, id_col, vec_col).withColumnRenamed(
-        id_col, "neighbor_id"
-    ).withColumnRenamed(vec_col, "__cvec")
-
-    probes = _probe_cells(queries, centroids, nprobe, id_col, vec_col, query_id_col)
-    cand = assigned.join(probes, on="__cell").where(
-        F.col("neighbor_id") != F.col(query_id_col)
+    materialized) cell table, ``pq_codebooks(corpus, m=1, ks=nlist,
+    iters=kmeans_iters)`` — callers composing this with
+    ``build_ivf_index`` over the same corpus train ONCE and pass the
+    result to both (the trainer is fixed-point deterministic, so
+    sharing is bit-identical to retraining)."""
+    (cells,) = _trained_books(
+        corpus, id_col, vec_col, (centroids, 1, nlist, kmeans_iters)
     )
-    return _rerank_candidates(cand, k, query_id_col)
-
-
-def _run_concurrent_jobs(*thunks) -> None:
-    """Run independent Spark actions from a small driver thread pool so
-    each job's task tail is back-filled by the next job's tasks instead
-    of leaving the executors idle between sequential actions (guide
-    §2.6). InheritableThread propagates the JVM thread-locals (job
-    description/group) into the pool threads. Exceptions propagate."""
-    from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
-
-    from pyspark import inheritable_thread_target  # noqa: PLC0415
-
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [
-            pool.submit(inheritable_thread_target(th)) for th in thunks
-        ]
-        for f in futures:
-            f.result()
+    return _ivf_search(
+        _ivf_cells(corpus, cells, id_col, vec_col),
+        cells,
+        queries,
+        k,
+        nprobe,
+        id_col,
+        vec_col,
+        query_id_col,
+    )
 
 
 def build_ivf_index(
@@ -338,35 +461,35 @@ def build_ivf_index(
     """One-time IVF-flat index build, persisted for partition-pruned
     probes (the 100 TB layout the ivf_knn docstring prescribes):
 
-    - ``{path}/centroids``: nlist rows (__cell, __centroid)
-    - ``{path}/assignment``: every corpus vector under its nearest
-      cell, written ``partitionBy(__cell)`` — one directory per cell,
-      so a probe of nprobe cells reads nprobe/nlist of the files.
+    - ``{path}/centroids``: the m=1 codebook, nlist rows
+      (__sub = 0, __code = cell id, __cvec = centroid)
+    - ``{path}/assignment``: every corpus vector (id, vec) under its
+      nearest cell, written ``partitionBy(__cell)`` — one directory
+      per cell, so a probe of nprobe cells reads nprobe/nlist of the
+      files.
 
     The index build shuffles O(corpus) rows once; probes never touch
     the un-indexed corpus again.
 
-    ``centroids`` accepts a pre-trained centroid table (see ivf_knn);
+    ``centroids`` accepts a pre-trained cell table (see ivf_knn);
     when provided, its lifecycle (checkpoint blocks) stays with the
     caller.
     """
-    own_centroids = centroids is None
-    if own_centroids:
-        centroids = kmeans_centroids(
-            corpus, nlist, id_col=id_col, vec_col=vec_col, iters=kmeans_iters
-        ).localCheckpoint(eager=True)
-    assigned = _assign_cells(corpus, centroids, id_col, vec_col)
+    (cells,) = _trained_books(
+        corpus, id_col, vec_col, (centroids, 1, nlist, kmeans_iters)
+    )
+    assigned = _ivf_cells(corpus, cells, id_col, vec_col)
     # the two index files are independent jobs; submit them together so
     # the tiny centroids write back-fills the assignment write's task
-    # tail instead of queueing behind it (guide §2.6)
+    # tail instead of queueing behind it
     _run_concurrent_jobs(
         lambda: assigned.write.mode(mode)
         .partitionBy("__cell")
         .parquet(f"{path}/assignment"),
-        lambda: centroids.write.mode(mode).parquet(f"{path}/centroids"),
+        lambda: cells.write.mode(mode).parquet(f"{path}/centroids"),
     )
-    if own_centroids:
-        centroids.unpersist()
+    if centroids is None:
+        cells.unpersist()
 
 
 def ivf_probe(
@@ -378,7 +501,9 @@ def ivf_probe(
     query_id_col: str = "query_id",
     nprobe: int = 4,
 ) -> DataFrame:
-    """Probe a persisted IVF index (``build_ivf_index``).
+    """Probe a persisted IVF index (``build_ivf_index``) — the same
+    search body as ``ivf_knn``, reading the cells and the assignment
+    from the index files.
 
     The assignment scan joins the (broadcast) probe list on ``__cell``
     — the partition column — so Catalyst inserts a dynamic-partition-
@@ -387,17 +512,16 @@ def ivf_probe(
     O(|queries| × corpus × nprobe/nlist), independent of total corpus
     file count."""
     spark = queries.sparkSession
-    centroids = spark.read.parquet(f"{path}/centroids")
-    assigned = (
-        spark.read.parquet(f"{path}/assignment")
-        .withColumnRenamed(id_col, "neighbor_id")
-        .withColumnRenamed(vec_col, "__cvec")
+    return _ivf_search(
+        spark.read.parquet(f"{path}/assignment"),
+        spark.read.parquet(f"{path}/centroids"),
+        queries,
+        k,
+        nprobe,
+        id_col,
+        vec_col,
+        query_id_col,
     )
-    probes = _probe_cells(queries, centroids, nprobe, id_col, vec_col, query_id_col)
-    cand = assigned.join(F.broadcast(probes), on="__cell").where(
-        F.col("neighbor_id") != F.col(query_id_col)
-    )
-    return _rerank_candidates(cand, k, query_id_col)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -596,209 +720,10 @@ def quantized_knn(
 
 
 # ---------------------------------------------------------------------------
-# Product quantization (PQ) — the memory-bound ANN tier (Jégou et al.,
-# "Product Quantization for Nearest Neighbor Search", TPAMI 2011).
+# PQ search — the memory-bound ANN tier: an asymmetric-distance (ADC) scan
+# over the codes cuts a shortlist that the exact tier re-ranks. Flat PQ is
+# the one-cell case of IVF∘PQ.
 # ---------------------------------------------------------------------------
-
-def _subvectors(
-    df: DataFrame, m: int, id_col: str, vec_col: str, out_id: str
-) -> DataFrame:
-    """(out_id, __sub, __subvec): the vector split into m contiguous
-    subspaces, JVM-side (one posexplode of a transform-built array)."""
-    return df.select(
-        F.col(id_col).alias(out_id),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" j -> slice({vec_col}, j * (size({vec_col}) div {m}) + 1,"
-                f" size({vec_col}) div {m}))"
-            )
-        ).alias("__sub", "__subvec"),
-    )
-
-
-def _book_arrays(books: DataFrame) -> DataFrame:
-    """(__sub, __codes: array<struct<__code, __cvec>>) — one row per
-    subspace, the broadcastable per-subspace codebook the fold-based
-    nearest-codeword assignment consumes (m rows of ks codewords)."""
-    return books.groupBy("__sub").agg(
-        F.collect_list(F.struct("__code", "__cvec")).alias("__codes")
-    )
-
-
-def _nearest_code(subvec_col: Column | str, codes_col: Column | str) -> Column:
-    """argmin over the in-row codeword array — identical arithmetic
-    and (dist, code) tie-break as the former broadcast-join +
-    groupBy(__vid, __sub).min_by, without shuffling corpus × m scored
-    rows per Lloyd round (guide §2.4)."""
-    scored = F.transform(
-        _c(codes_col),
-        lambda c: F.struct(
-            _sq_dist(_c(subvec_col), c["__cvec"]).alias("__d"),
-            c["__code"].alias("__code"),
-        ),
-    )
-    return F.array_min(scored)["__code"]
-
-
-def pq_codebooks(
-    corpus: DataFrame,
-    m: int = 8,
-    ks: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    iters: int = 2,
-) -> DataFrame:
-    """Per-subspace Lloyd codebooks → (__sub, __code, __cvec), m·ks
-    rows. Seeds are the ks lowest-id vectors' subvectors (the id pick
-    is a TakeOrderedAndProject — bounded, no corpus-wide window);
-    each Lloyd round is one broadcast-codebook assignment plus one
-    (sub, code, dim)-keyed fixed-point average (exact BIGINT sums,
-    functions/clustering.py convention — codebooks, codes, and
-    shortlists are bit-identical across runs and cluster layouts).
-    All m subspaces train in the SAME passes — the corpus streams
-    once per round, not once per subspace. At 100 TB, train on a
-    hash-sampled slice (codebooks need ~100k points, not the corpus)
-    and broadcast the result."""
-    subs = _subvectors(corpus, m, id_col, vec_col, "__vid")
-    seed_ids = (
-        corpus.orderBy(id_col)
-        .limit(ks)
-        .select(
-            F.col(id_col).alias("__vid"),
-            (F.row_number().over(Window.orderBy(id_col)) - 1).alias("__code"),
-        )
-    )
-    books = subs.join(F.broadcast(seed_ids), "__vid").select(
-        "__sub",
-        "__code",
-        F.transform("__subvec", lambda x: x.cast("double")).alias("__cvec"),
-    )
-    for _ in range(iters):
-        assigned = subs.join(F.broadcast(_book_arrays(books)), "__sub").select(
-            "__vid",
-            "__sub",
-            _nearest_code(F.col("__subvec"), F.col("__codes")).alias("__code"),
-            "__subvec",
-        )
-        books = (
-            assigned.select(
-                "__sub", "__code", F.posexplode("__subvec").alias("__pos", "__v")
-            )
-            .groupBy("__sub", "__code", "__pos")
-            # fixed-point centroid update (same convention as
-            # functions/clustering.py): exact BIGINT sums + truncating
-            # integer division, so the codebooks are bit-identical
-            # regardless of partition count / summation order — F.avg
-            # over raw doubles would drift with cluster layout
-            .agg(
-                F.sum(
-                    (F.col("__v").cast("double") * F.lit(1048576)).cast(
-                        "long"
-                    )
-                ).alias("__s"),
-                F.count(F.lit(1)).alias("__n"),
-            )
-            .select(
-                "__sub",
-                "__code",
-                "__pos",
-                (
-                    F.expr("__s div __n").cast("double") / F.lit(1048576.0)
-                ).alias("__mv"),
-            )
-            .groupBy("__sub", "__code")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("__pos", "__mv"))),
-                    lambda s: s.getField("__mv"),
-                ).alias("__cvec")
-            )
-        )
-    return books
-
-
-def pq_encode(
-    corpus: DataFrame,
-    books: DataFrame,
-    m: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vec_id, __sub, __code): nearest-codeword id per subspace — the
-    stored form. m log2(ks)-bit codes replace the float vector: at
-    m=8, ks=16 that is 4 bytes/vector vs 256 for float32×64 — the 64×
-    compression that lets a trillion-vector corpus live in RAM."""
-    subs = _subvectors(corpus, m, id_col, vec_col, "__vid")
-    return subs.join(F.broadcast(_book_arrays(books)), "__sub").select(
-        F.col("__vid").alias(id_col),
-        "__sub",
-        _nearest_code(F.col("__subvec"), F.col("__codes")).alias("__code"),
-    )
-
-
-def pq_knn(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    m: int = 8,
-    ks: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    iters: int = 2,
-) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes: each query
-    precomputes its distance table to every codeword (m·ks broadcast
-    rows per query — the table IS the query plan), the coded corpus
-    joins the table on (subspace, code), and a (query, vec) sum of m
-    lookups approximates the squared L2 distance. Unit-norm corpus ⇒
-    rank-consistent with cosine.
-
-    Scale: the per-(query, vec) sum shuffles O(corpus × queries) id
-    pairs — the flat-PQ shape, fine for bounded probe sets; for a
-    real query load use ``ivfpq_knn`` (or the persisted
-    ``build_ivfpq_index`` + ``ivfpq_probe``), which ADC-scans only
-    the nprobe/nlist probed IVF cells per query. Returns
-    (query_id, neighbor_id, rnk, dist); ties break by neighbor id."""
-    from mapreducewordoccurences_spark.operators.windows import top_k_per_group
-
-    # the codebook table feeds BOTH the corpus encode and the query
-    # distance table; materialize it eagerly (m·ks rows) so the Lloyd
-    # training lineage runs once, not once per consumer (same pattern
-    # ivfpq_knn already used — guide §5, reuse beats recompute for a
-    # dimension-bounded table)
-    books = pq_codebooks(corpus, m, ks, id_col, vec_col, iters).localCheckpoint(
-        eager=True
-    )
-    codes = pq_encode(corpus, books, m, id_col, vec_col)
-    dt = (
-        _subvectors(queries, m, id_col, vec_col, query_id_col)
-        .join(F.broadcast(books), "__sub")
-        .select(
-            query_id_col,
-            "__sub",
-            "__code",
-            _sq_dist("__subvec", "__cvec").alias("__d"),
-        )
-    )
-    scored = (
-        codes.join(F.broadcast(dt), ["__sub", "__code"])
-        .where(F.col(id_col) != F.col(query_id_col))
-        .groupBy(query_id_col, id_col)
-        .agg(F.sum("__d").alias("dist"))
-        # ADC sums exactly m terms; rows with fewer joined subspaces
-        # cannot occur (every (sub, code) exists in the table)
-    )
-    return top_k_per_group(
-        scored.select(
-            query_id_col, F.col(id_col).alias("neighbor_id"), "dist"
-        ),
-        [query_id_col],
-        [F.col("dist").asc(), F.col("neighbor_id").asc()],
-        k,
-    ).select(query_id_col, "neighbor_id", "rnk", "dist")
-
 
 def pq_knn_rerank(
     corpus: DataFrame,
@@ -819,69 +744,73 @@ def pq_knn_rerank(
     (random unit vectors are PQ's hardest case — no cluster structure
     for codewords to exploit; the shortlist+rerank shape is what
     makes the tier robust to it). Returns (query_id, neighbor_id,
-    rnk, sim) — same contract as the other ANN tiers."""
-    cand = pq_knn(
-        corpus, queries, shortlist, m, ks, id_col, vec_col, query_id_col
-    ).select(query_id_col, "neighbor_id")
-    qv = queries.select(
-        F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qvec")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
-    )
-    joined = cand.join(F.broadcast(qv), query_id_col).join(cv, "neighbor_id")
-    return _rerank_candidates(joined, k, query_id_col)
+    rnk, sim) — same contract as the other ANN tiers.
 
-
-def _pq_distance_table(
-    queries: DataFrame,
-    books: DataFrame,
-    m: int,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-) -> DataFrame:
-    """(query_id, __sub, __code, __d): each query's squared-L2 to
-    every codeword — m·ks rows per query, the broadcast side of every
-    ADC scan."""
-    return (
-        _subvectors(queries, m, id_col, vec_col, query_id_col)
-        .join(F.broadcast(books), "__sub")
-        .select(
-            query_id_col,
-            "__sub",
-            "__code",
-            _sq_dist("__subvec", "__cvec").alias("__d"),
-        )
+    Flat scan: every code row sits in one cell that every query
+    probes, so the ADC sum shuffles O(corpus × queries) id pairs —
+    fine for bounded probe sets; for a real query load use
+    ``ivfpq_knn`` (or the persisted ``build_ivfpq_index`` +
+    ``ivfpq_probe``), which scans only the nprobe/nlist probed IVF
+    cells per query."""
+    # the codebooks feed both the corpus encode and the query distance
+    # table; materialize them once (m·ks rows)
+    books = pq_codebooks(corpus, m, ks, id_col, vec_col).localCheckpoint(
+        eager=True
+    )
+    coded = pq_encode(corpus, books, m, id_col, vec_col).withColumn(
+        "__cell", F.lit(0)
+    )
+    probes = queries.select(
+        F.col(id_col).alias(query_id_col),
+        F.col(vec_col).alias("__qvec"),
+        F.lit(0).alias("__cell"),
+    )
+    return _adc_shortlist_rerank(
+        coded, probes, books, queries, corpus, k, shortlist, m,
+        id_col, vec_col, query_id_col,
     )
 
 
 def _adc_shortlist_rerank(
     coded: DataFrame,
     probes: DataFrame,
-    dt: DataFrame,
+    books: DataFrame,
+    queries: DataFrame,
+    vectors: DataFrame,
+    k: int,
     shortlist: int,
+    m: int,
     id_col: str,
+    vec_col: str,
     query_id_col: str,
 ) -> DataFrame:
-    """Shared IVF∘PQ core: ADC-score the coded rows of each query's
-    probed cells only and cut a per-query ``shortlist`` from the
-    codes — callers re-rank the returned (query_id, neighbor_id)
-    shortlist from the full vectors.
+    """The PQ search body of ``pq_knn_rerank``, ``ivfpq_knn`` and
+    ``ivfpq_probe``: ADC-score the coded rows of each query's probed
+    cells only, cut a per-query ``shortlist`` from the codes, then
+    fetch the shortlist's full vectors by id and re-rank it exactly.
 
     ``coded`` is (id, __sub, __code, __cell); ``probes`` is
-    (query_id, __cell) — broadcast, so the cell restriction is a
-    map-side semi-filter (or a dynamic-partition-pruning filter when
+    (query_id, __qvec, __cell), one row per probed cell. The distance
+    table — each query's squared L2 to every codeword, m·ks rows per
+    probed cell — is the broadcast side of the ADC join, keyed on
+    (__cell, __sub, __code), so the cell restriction is part of the
+    map-side join (and a dynamic-partition-pruning filter when
     ``coded`` is a __cell-partitioned parquet scan). The ADC shuffle
-    is O(Σ_q |probed cells of q| × m), never O(corpus × queries)."""
-    from mapreducewordoccurences_spark.operators.windows import top_k_per_group
-
-    scored = (
-        coded.join(F.broadcast(probes), "__cell")
-        .join(
-            F.broadcast(dt),
-            [query_id_col, "__sub", "__code"],
+    is O(Σ_q |probed cells of q| × m). ``vectors`` is the (id, vec)
+    store of the re-rank fetch."""
+    dt = (
+        _subvectors(probes, m, "__qvec", query_id_col, "__cell")
+        .join(F.broadcast(books), "__sub")
+        .select(
+            query_id_col,
+            "__cell",
+            "__sub",
+            "__code",
+            _sq_dist("__subvec", "__cvec").alias("__d"),
         )
+    )
+    scored = (
+        coded.join(F.broadcast(dt), ["__cell", "__sub", "__code"])
         .where(F.col(id_col) != F.col(query_id_col))
         .groupBy(query_id_col, id_col)
         .agg(F.sum("__d").alias("__dist"))
@@ -894,7 +823,14 @@ def _adc_shortlist_rerank(
         [F.col("__dist").asc(), F.col("neighbor_id").asc()],
         shortlist,
     ).select(query_id_col, "neighbor_id")
-    return cand
+    qv = queries.select(
+        F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qvec")
+    )
+    cv = vectors.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
+    )
+    joined = cand.join(F.broadcast(qv), query_id_col).join(cv, "neighbor_id")
+    return _rerank_candidates(joined, k, query_id_col)
 
 
 def ivfpq_knn(
@@ -916,78 +852,44 @@ def ivfpq_knn(
 ) -> DataFrame:
     """IVF∘PQ (Jégou et al. TPAMI'11 §V, IVFADC): the memory-bound PQ
     scan composed with IVF cell pruning — the deployed
-    billion-vector layout. The coarse quantizer (k-means cells)
-    bounds WHICH codes each query scans (nprobe/nlist of the corpus);
-    PQ bounds WHAT a scan touches (m log2(ks)-bit codes, not float
-    vectors); the exact tier re-ranks a ``shortlist`` from the full
-    vectors so codebook quantization never surfaces in the top-k.
+    billion-vector layout. The coarse quantizer (an m=1 codebook of
+    nlist cells) bounds WHICH codes each query scans (nprobe/nlist of
+    the corpus); PQ bounds WHAT a scan touches (m log2(ks)-bit codes,
+    not float vectors); the exact tier re-ranks a ``shortlist`` from
+    the full vectors so codebook quantization never surfaces in the
+    top-k.
 
-    vs flat ``pq_knn``: the ADC shuffle drops from
+    vs flat ``pq_knn_rerank``: the ADC shuffle drops from
     O(corpus × queries) to O(corpus × queries × nprobe/nlist).
     vs ``ivf_knn``: the probed-cell scan touches codes (4-16 B/row),
     not embeddings (256 B/row) — the tier a trillion-row corpus needs
     to keep its index in RAM. Deterministic end-to-end: fixed-point
-    k-means + fixed-point codebooks + (dist, id) tie-breaks.
+    codebooks + (dist, id) tie-breaks.
 
     Returns (query_id, neighbor_id, rnk, sim) — the family contract.
 
-    ``centroids``/``books`` accept pre-trained artifacts with the same
-    protocol parameters (see ivf_knn) — the fixed-point trainers are
-    deterministic, so sharing is bit-identical to retraining.
+    ``centroids``/``books`` accept pre-trained tables,
+    ``pq_codebooks(corpus, m=1, ks=nlist, iters=kmeans_iters)`` and
+    ``pq_codebooks(corpus, m, ks, iters=pq_iters)`` (see ivf_knn) —
+    the fixed-point trainer is deterministic, so sharing is
+    bit-identical to retraining.
     """
-    if centroids is None and books is None:
-        # the coarse quantizer and the PQ codebooks are independent
-        # trainings — materialize them concurrently (guide §2.6)
-        trained: dict[str, DataFrame] = {}
-        _run_concurrent_jobs(
-            lambda: trained.__setitem__(
-                "c",
-                kmeans_centroids(
-                    corpus, nlist, id_col=id_col, vec_col=vec_col,
-                    iters=kmeans_iters,
-                ).localCheckpoint(eager=True),
-            ),
-            lambda: trained.__setitem__(
-                "b",
-                pq_codebooks(
-                    corpus, m, ks, id_col, vec_col, pq_iters
-                ).localCheckpoint(eager=True),
-            ),
-        )
-        centroids, books = trained["c"], trained["b"]
-    elif centroids is None:
-        centroids = kmeans_centroids(
-            corpus, nlist, id_col=id_col, vec_col=vec_col, iters=kmeans_iters
-        ).localCheckpoint(eager=True)
-    elif books is None:
-        books = pq_codebooks(
-            corpus, m, ks, id_col, vec_col, pq_iters
-        ).localCheckpoint(eager=True)
-    assigned = _assign_cells(corpus, centroids, id_col, vec_col).select(
-        id_col, "__cell"
-    )
-    codes = pq_encode(corpus, books, m, id_col, vec_col)
-    coded = codes.join(assigned, id_col)
-    probes = _probe_cells(
-        queries, centroids, nprobe, id_col, vec_col, query_id_col
-    )
-    dt = _pq_distance_table(queries, books, m, id_col, vec_col, query_id_col)
-    cand = _adc_shortlist_rerank(
-        coded,
-        probes.select(query_id_col, "__cell"),
-        dt,
-        shortlist,
+    cells, books = _trained_books(
+        corpus,
         id_col,
-        query_id_col,
+        vec_col,
+        (centroids, 1, nlist, kmeans_iters),
+        (books, m, ks, pq_iters),
     )
-    qv = queries.select(
-        F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qvec")
+    coded = pq_encode(corpus, books, m, id_col, vec_col).join(
+        _ivf_cells(corpus, cells, id_col, vec_col).select(id_col, "__cell"), id_col
     )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
+    return _adc_shortlist_rerank(
+        coded,
+        _probe_cells(queries, cells, nprobe, id_col, vec_col, query_id_col),
+        books, queries, corpus, k, shortlist, m,
+        id_col, vec_col, query_id_col,
     )
-    joined = cand.join(F.broadcast(qv), query_id_col).join(cv, "neighbor_id")
-    return _rerank_candidates(joined, k, query_id_col)
 
 
 def build_ivfpq_index(
@@ -1007,7 +909,8 @@ def build_ivfpq_index(
     """One-time IVF∘PQ index build, persisted for partition-pruned
     ADC probes:
 
-    - ``{path}/centroids``: nlist coarse cells (__cell, __centroid)
+    - ``{path}/centroids``: the m=1 codebook of nlist coarse cells
+      (__sub = 0, __code = cell id, __cvec = centroid)
     - ``{path}/books``: m·ks PQ codewords (__sub, __code, __cvec)
     - ``{path}/codes``: (id, __sub, __code) per corpus vector,
       written ``partitionBy(__cell)`` — a probe of nprobe cells reads
@@ -1015,53 +918,50 @@ def build_ivfpq_index(
       touches; full vectors are fetched id-keyed for the shortlist
       re-rank only)
     - ``{path}/vectors``: (id, vec) for the re-rank fetch
+    - ``{path}/meta``: one row, ``n_rows`` = the vector count
 
-    Build cost: two k-means trainings + one encode, each O(corpus)
-    with broadcast codebooks — paid once; probes never rescan the
-    un-indexed corpus.
+    Build cost: two concurrent codebook trainings + one encode, each
+    O(corpus) with broadcast codebooks — paid once; probes never
+    rescan the un-indexed corpus.
 
-    ``centroids``/``books`` accept pre-trained artifacts (see
-    ivf_knn); when provided, their lifecycle stays with the caller."""
-    own_centroids = centroids is None
-    if own_centroids:
-        centroids = kmeans_centroids(
-            corpus, nlist, id_col=id_col, vec_col=vec_col, iters=kmeans_iters
-        ).localCheckpoint(eager=True)
-    assigned = _assign_cells(corpus, centroids, id_col, vec_col).select(
-        id_col, "__cell"
+    ``centroids``/``books`` accept pre-trained tables (see
+    ivfpq_knn); when provided, their lifecycle stays with the
+    caller."""
+    cells, pq_books = _trained_books(
+        corpus,
+        id_col,
+        vec_col,
+        (centroids, 1, nlist, kmeans_iters),
+        (books, m, ks, pq_iters),
     )
-    own_books = books is None
-    if own_books:
-        books = pq_codebooks(
-            corpus, m, ks, id_col, vec_col, pq_iters
-        ).localCheckpoint(eager=True)
-    codes = pq_encode(corpus, books, m, id_col, vec_col)
+    codes = pq_encode(corpus, pq_books, m, id_col, vec_col).join(
+        _ivf_cells(corpus, cells, id_col, vec_col).select(id_col, "__cell"), id_col
+    )
     # the four index files are independent writes; overlapping them
-    # (guide §2.6) lets the small books/centroids jobs and the plain
+    # lets the small books/centroids jobs and the plain
     # vectors copy back-fill the partitioned codes write's tail —
     # measured ~1 s off the build at sf0.1, and on a real cluster it
     # keeps executors busy through the commit barriers
     _run_concurrent_jobs(
-        lambda: codes.join(assigned, id_col)
-        .write.mode(mode)
+        lambda: codes.write.mode(mode)
         .partitionBy("__cell")
         .parquet(f"{path}/codes"),
-        lambda: books.write.mode(mode).parquet(f"{path}/books"),
-        lambda: centroids.write.mode(mode).parquet(f"{path}/centroids"),
+        lambda: pq_books.write.mode(mode).parquet(f"{path}/books"),
+        lambda: cells.write.mode(mode).parquet(f"{path}/centroids"),
         lambda: corpus.select(id_col, vec_col)
         .write.mode(mode)
         .parquet(f"{path}/vectors"),
     )
     # persist the corpus row count as index metadata so probe/
     # acceptance paths can size shortlist fractions without
-    # re-counting the corpus (VERDICT r10 #7). Counting the JUST-
-    # WRITTEN vectors is footer-metadata work; since r13 both the
-    # count and the 1-row meta write happen DRIVER-SIDE via pyarrow
-    # (zero Spark jobs — the former spark.read.count + spark.range
-    # write pair cost ~0.5 s of job latency per build; a local-list
-    # createDataFrame was worse still, ~4 s, measured r12). Falls
-    # back to the Spark pair on non-local filesystems, where pyarrow
-    # cannot reach the index path directly.
+    # re-counting the corpus. Counting the JUST-WRITTEN vectors is
+    # footer-metadata work, and both the count and the 1-row meta
+    # write happen DRIVER-SIDE via pyarrow (zero Spark jobs — the
+    # spark.read.count + spark.range write pair costs ~0.5 s of job
+    # latency per build). Falls back to that Spark pair on non-local
+    # filesystems, where pyarrow cannot reach the index path
+    # directly. The meta is overwritten in every mode: the count it
+    # records is always the whole vectors directory's.
     spark = corpus.sparkSession
     try:
         _write_meta_rowcount_local(f"{path}/vectors", f"{path}/meta")
@@ -1069,11 +969,11 @@ def build_ivfpq_index(
         n_rows = spark.read.parquet(f"{path}/vectors").count()
         spark.range(1).select(
             F.lit(int(n_rows)).cast("bigint").alias("n_rows")
-        ).write.mode(mode).parquet(f"{path}/meta")
-    if own_centroids:
-        centroids.unpersist()
-    if own_books:
-        books.unpersist()
+        ).write.mode("overwrite").parquet(f"{path}/meta")
+    if centroids is None:
+        cells.unpersist()
+    if books is None:
+        pq_books.unpersist()
 
 
 def _write_meta_rowcount_local(vectors_dir: str, meta_dir: str) -> None:
@@ -1145,37 +1045,32 @@ def ivfpq_probe(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """Probe a persisted IVF∘PQ index (``build_ivfpq_index``).
+    """Probe a persisted IVF∘PQ index (``build_ivfpq_index``) — the
+    same search body as ``ivfpq_knn``, reading the cells, codebooks,
+    codes and vectors from the index files.
 
-    The code scan joins the (broadcast) probe list on ``__cell`` —
-    the partition column — so Catalyst inserts a dynamic-partition-
-    pruning filter and only nprobe/nlist of the code files are read
+    The code scan joins the broadcast distance table of the probed
+    cells on ``__cell`` — the partition column — among its keys, so
+    Catalyst inserts a dynamic-partition-pruning filter and only nprobe/nlist of the code files are read
     (plan-tested); the shortlist re-rank then fetches just
     |queries|·shortlist full vectors by id."""
     spark = queries.sparkSession
-    centroids = spark.read.parquet(f"{path}/centroids")
-    books = spark.read.parquet(f"{path}/books")
-    coded = spark.read.parquet(f"{path}/codes")
     probes = _probe_cells(
-        queries, centroids, nprobe, id_col, vec_col, query_id_col
-    )
-    dt = _pq_distance_table(queries, books, m, id_col, vec_col, query_id_col)
-    cand = _adc_shortlist_rerank(
-        coded,
-        probes.select(query_id_col, "__cell"),
-        dt,
-        shortlist,
+        queries,
+        spark.read.parquet(f"{path}/centroids"),
+        nprobe,
         id_col,
+        vec_col,
         query_id_col,
     )
-    qv = queries.select(
-        F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qvec")
+    return _adc_shortlist_rerank(
+        spark.read.parquet(f"{path}/codes"),
+        probes,
+        spark.read.parquet(f"{path}/books"),
+        queries,
+        spark.read.parquet(f"{path}/vectors"),
+        k, shortlist, m, id_col, vec_col, query_id_col,
     )
-    cv = spark.read.parquet(f"{path}/vectors").select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
-    )
-    joined = cand.join(F.broadcast(qv), query_id_col).join(cv, "neighbor_id")
-    return _rerank_candidates(joined, k, query_id_col)
 
 
 def _seq_dot(a: list[float], b: list[float]) -> float:

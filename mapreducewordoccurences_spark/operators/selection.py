@@ -78,20 +78,27 @@ def exact_quantile_disc(
                 F.least(
                     F.floor((F.col("v") - F.lit(lo)) / F.lit(width)).cast("int"),
                     F.lit(buckets - 1),
-                ).alias("b")
+                ).alias("b"),
+                "v",
             )
             .groupBy("b")
-            .agg(F.count(F.lit(1)).alias("c"))
+            .agg(
+                F.count(F.lit(1)).alias("c"),
+                F.min("v").alias("lo"),
+                F.max("v").alias("hi"),
+            )
             .collect()
         )
-        counts = {r.b: r.c for r in hist}
+        counts = {r.b: r for r in hist}
         run = 0
-        for b in range(buckets):
-            cb = counts.get(b, 0)
+        for b in sorted(counts):
+            cb = counts[b].c
             if run + cb >= remaining:
                 below += run
-                new_lo = lo + b * width
-                new_hi = hi if b == buckets - 1 else lo + (b + 1) * width
+                # narrow to the values the bucket counted: a bound
+                # computed as lo + b·width can round past one of them
+                # (v - lo loses a subnormal v next to a large |lo|)
+                new_lo, new_hi = counts[b].lo, counts[b].hi
                 # guard: a single dominant value can stop the range
                 # from shrinking — resolve by equality count
                 if new_lo == lo and new_hi == hi:

@@ -887,7 +887,7 @@ def q_mmr_diversified_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ivf_sel feeds the plan TWICE (__n_sel and the shared join);
     # since r11 the greedy is a lazy distributed stage, so without a
     # cut the whole ivf_knn + greedy subtree would evaluate twice —
-    # pin the ≤ k-row selection once (bounded, the kmeans-centroid
+    # pin the ≤ k-row selection once (bounded, the IVF cell-table
     # caching contract). The IVF-tier and exact-tier selections are
     # independent jobs; materialize them concurrently (guide §2.6).
     sel: dict[str, DataFrame] = {}
@@ -1010,14 +1010,14 @@ def q_matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Every other ANN row trains its index IN-QUERY — correct, but not the
 # 100 TB deployment shape, which is train-once / probe-many
-# (functions/similarity.py build_ivf_index:263 / build_ivfpq_index:860).
+# (functions/similarity.py build_ivf_index / build_ivfpq_index).
 # Until now that lifecycle was exercised only by pytest; these rows put
 # it under the oracle gate: build to a scratch path, probe the files,
 # and emit BOTH the family recall acceptance AND a `matches_inline`
 # boolean asserting the probe's (query_id, neighbor_id, rnk, sim)
 # output is row-for-row identical to the in-query composition —
 # deterministic because parquet round-trips ids and float vectors
-# exactly and both paths share the fixed-point k-means / codebooks.
+# exactly and both paths share the fixed-point trainer's tables.
 # Cell pruning on the probe scan is plan-tested
 # (tests/test_plans.py test_ivf_probe_prunes_partitions /
 # test_ivfpq_probe_prunes_partitions).
@@ -1105,19 +1105,19 @@ def q_embedding_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_ivf_index,
         ivf_knn,
         ivf_probe,
-        kmeans_centroids,
+        pq_codebooks,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 10)
     path = _index_scratch(sf_dir, "ivf")
-    # train ONCE and hand the same centroid table to the index build
-    # and the inline composition: the fixed-point trainer is
-    # deterministic, so the former retrain-per-consumer produced a
-    # bit-identical table at 2x the Lloyd cost (guide §1.2 — don't
-    # compute things twice). The probe path still exercises the full
-    # on-disk lifecycle: it reads centroids back from the index files.
-    centroids = kmeans_centroids(emb, 16).localCheckpoint(eager=True)
+    # train the 16 IVF cells (the m=1 codebook) ONCE and hand the same
+    # table to the index build and the inline composition: the
+    # fixed-point trainer is deterministic, so retraining per consumer
+    # would produce a bit-identical table at 2x the Lloyd cost (pinned
+    # by tests/test_ann.py). The probe path still exercises the full
+    # on-disk lifecycle: it reads the cells back from the index files.
+    centroids = pq_codebooks(emb, m=1, ks=16).localCheckpoint(eager=True)
     build_ivf_index(emb, path, nlist=16, centroids=centroids)
     probe_out = ivf_probe(queries, path, k=5, nprobe=4)
     inline_out = ivf_knn(
@@ -1145,37 +1145,26 @@ def q_embedding_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall floor. This is the layout the 100 TB story actually
     deploys — codes in RAM-sized files, vectors fetched id-keyed."""
     from mapreducewordoccurences_spark.functions.similarity import (
-        _run_concurrent_jobs,
+        _trained_books,
         build_ivfpq_index,
         ivfpq_index_rowcount,
         ivfpq_knn,
         ivfpq_probe,
-        kmeans_centroids,
-        pq_codebooks,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 10)
     path = _index_scratch(sf_dir, "ivfpq")
-    # train ONCE (coarse centroids + PQ codebooks) and hand the same
-    # tables to the index build and the inline composition — the
-    # fixed-point trainers are deterministic, so the former
-    # retrain-per-consumer produced bit-identical tables at 2x the
-    # cost (guide §1.2). The probe path still reads its centroids and
-    # codebooks back from the index files (the on-disk lifecycle
-    # under test is unchanged).
-    # the coarse quantizer and the PQ codebooks are independent
-    # trainings — overlap them (guide §2.6)
-    trained: dict[str, DataFrame] = {}
-    _run_concurrent_jobs(
-        lambda: trained.__setitem__(
-            "c", kmeans_centroids(emb, 16).localCheckpoint(eager=True)
-        ),
-        lambda: trained.__setitem__(
-            "b", pq_codebooks(emb, 16, 16).localCheckpoint(eager=True)
-        ),
+    # train ONCE (the 16 coarse cells and the 16x16 PQ codebooks, as
+    # two concurrent jobs) and hand the same tables to the index build
+    # and the inline composition — the fixed-point trainer is
+    # deterministic, so retraining per consumer would produce
+    # bit-identical tables at 2x the cost. The probe path still reads
+    # its cells and codebooks back from the index files (the on-disk
+    # lifecycle under test is unchanged).
+    centroids, books = _trained_books(
+        emb, "vec_id", "embedding", (None, 1, 16, 2), (None, 16, 16, 2)
     )
-    centroids, books = trained["c"], trained["b"]
     build_ivfpq_index(
         emb, path, nlist=16, m=16, ks=16, centroids=centroids, books=books
     )

@@ -167,30 +167,6 @@ def test_asof_join_null_timestamps_yield_null_match(spark):
     assert out == {"a": "r1", "b": None, "c": "r2"}
 
 
-def test_ivf_persisted_probe_matches_inline(spark, tmp_path):
-    """build_ivf_index + ivf_probe (the persisted, partition-pruned
-    scale path) must return exactly what inline ivf_knn returns —
-    same deterministic k-means, same probe, different storage."""
-    from mapreducewordoccurences_spark.functions.similarity import (
-        build_ivf_index,
-        ivf_knn,
-        ivf_probe,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    queries = emb.where(F.col("vec_id") < 10)
-    build_ivf_index(emb, str(tmp_path / "ivf"), nlist=16)
-    persisted = {
-        (r["query_id"], r["rnk"], r["neighbor_id"])
-        for r in ivf_probe(queries, str(tmp_path / "ivf"), k=5, nprobe=4).collect()
-    }
-    inline = {
-        (r["query_id"], r["rnk"], r["neighbor_id"])
-        for r in ivf_knn(emb, queries, k=5, nlist=16, nprobe=4).collect()
-    }
-    assert persisted == inline
-
-
 def test_quantize_embedding_roundtrip_error_bounded(spark):
     from mapreducewordoccurences_spark.functions.similarity import quantize_embedding
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import collections
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 
@@ -40,6 +40,13 @@ def test_heavy_hitters_equals_reference(spark, spec, share):
 @given(
     st.lists(st.floats(-1e6, 1e6, allow_nan=False), min_size=1, max_size=300),
     st.sampled_from([0.1, 0.5, 0.9, 1.0]),
+)
+# a subnormal next to a large |min| falls into the bucket whose
+# computed lower bound (min + b·width) rounds above it
+@example(
+    vals=[0.0] * 4 + [-1e6] + [0.0] * 3 + [999999.9999999999] + [0.0] * 3
+    + [-1.401298464324817e-45],
+    q=0.1,
 )
 def test_selection_quantile_equals_sorted_reference(spark, vals, q):
     import math

@@ -1,11 +1,10 @@
 """Round-11 operators: the distributed MMR greedy phase (VERDICT r10
 ask #1 — applyInPandas per query_id replaces the driver-side loop,
-bit-identical to the old panel path), and the IVF∘PQ index metadata
-row count that replaced the probe path's full corpus scan."""
+bit-identical to the old panel path). The IVF∘PQ index metadata tests
+live in test_ann.py."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -91,62 +90,3 @@ class TestDistributedMmr:
         ).collect()
         picked = {r["vec_id"] for r in got}
         assert picked == {1, 3}
-
-
-class TestIvfpqIndexMeta:
-    def test_rowcount_recorded_at_build(self, spark, tmp_path):
-        from mapreducewordoccurences_spark.functions.similarity import (
-            build_ivfpq_index,
-            ivfpq_index_rowcount,
-        )
-
-        emb = _emb(spark)
-        path = str(tmp_path / "ivfpq_idx")
-        build_ivfpq_index(emb, path, nlist=4, m=4, ks=8)
-        assert ivfpq_index_rowcount(spark, path) == emb.count()
-
-    def test_rowcount_on_file_uri_falls_back_to_spark(self, spark, tmp_path, monkeypatch):
-        """A ``file:`` URI is not a local directory to os: the driver-side
-        footer count must raise before writing anything (os.walk finds
-        no files there, and a URI pyarrow can write to would get
-        n_rows=0), so the Spark count runs."""
-        from mapreducewordoccurences_spark.functions.similarity import (
-            _write_meta_rowcount_local,
-            build_ivfpq_index,
-            ivfpq_index_rowcount,
-        )
-
-        monkeypatch.chdir(tmp_path)
-        emb = _emb(spark)
-        local = tmp_path / "ivfpq_idx"
-        uri = f"file:{local}"
-        build_ivfpq_index(emb, uri, nlist=4, m=4, ks=8)
-        n = emb.count()
-        assert ivfpq_index_rowcount(spark, uri) == n
-        assert ivfpq_index_rowcount(spark, str(local)) == n
-        assert not (tmp_path / "file:").exists()
-
-        with pytest.raises(OSError):
-            _write_meta_rowcount_local(f"{uri}/vectors", f"{uri}/meta")
-        empty = tmp_path / "empty"
-        empty.mkdir()
-        with pytest.raises(OSError):
-            _write_meta_rowcount_local(str(empty), str(tmp_path / "meta"))
-        assert not (tmp_path / "meta").exists()
-
-    def test_rowcount_reader_skips_zero_row_part_files(self, spark, tmp_path):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from mapreducewordoccurences_spark.functions.similarity import (
-            ivfpq_index_rowcount,
-        )
-
-        meta = tmp_path / "meta"
-        meta.mkdir()
-        for i, rows in enumerate(([], [7])):
-            pq.write_table(
-                pa.table({"n_rows": pa.array(rows, type=pa.int64())}),
-                meta / f"part-{i:05d}.parquet",
-            )
-        assert ivfpq_index_rowcount(spark, str(tmp_path)) == 7

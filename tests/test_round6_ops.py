@@ -143,45 +143,3 @@ class TestGroupSplitAndPacking:
             assert abs(r["fill_rate"] - 700 / 1024) < 1e-12
         finally:
             shutil.rmtree(d, ignore_errors=True)
-
-
-class TestProductQuantization:
-    def test_codes_within_codebook_and_complete(self, spark):
-        from mapreducewordoccurences_spark.functions.similarity import (
-            pq_codebooks,
-            pq_encode,
-        )
-        from mapreducewordoccurences_spark.sources.readers import load_table
-
-        emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-        n = emb.count()
-        books = pq_codebooks(emb, m=8, ks=16)
-        codes = pq_encode(emb, books, m=8)
-        # every vector gets exactly m codes, each a valid codeword id
-        assert codes.count() == n * 8
-        bad = codes.where((F.col("__code") < 0) | (F.col("__code") >= 16))
-        assert bad.count() == 0
-        per_vec = codes.groupBy("vec_id").count().where("count <> 8")
-        assert per_vec.count() == 0
-
-    def test_rerank_recall_vs_exact(self, spark):
-        from mapreducewordoccurences_spark.functions.similarity import (
-            brute_force_knn,
-            pq_knn_rerank,
-        )
-        from mapreducewordoccurences_spark.sources.readers import load_table
-
-        emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-        q = emb.where(F.col("vec_id") < 10)
-        approx = pq_knn_rerank(emb, q, k=5, shortlist=100, m=16, ks=16)
-        exact = brute_force_knn(emb, q, k=5)
-        hits = (
-            approx.select("query_id", "neighbor_id")
-            .join(exact.select("query_id", "neighbor_id"),
-                  ["query_id", "neighbor_id"])
-            .groupBy("query_id")
-            .count()
-        )
-        rec = {r["query_id"]: r["count"] / 5 for r in hits.collect()}
-        assert len(rec) == 10
-        assert min(rec.values()) >= 0.8  # observed 1.0; margin for seeds

@@ -1,97 +1,12 @@
-"""Round-7 operators: IVF∘PQ composition and fixed-point codebook
-determinism."""
+"""Round-7 operators: k-core guards, approximate triangle counts,
+portable SimHash, DSIR importance scores and repetition stats (the
+IVF∘PQ and codebook-determinism tests live in test_ann.py)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from mapreducewordoccurences_spark.sources.readers import load_table
-
-
-class TestIvfPq:
-    def test_inline_recall_vs_exact(self, spark):
-        from mapreducewordoccurences_spark.functions.similarity import (
-            brute_force_knn,
-            ivfpq_knn,
-        )
-
-        emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-        q = emb.where(F.col("vec_id") < 10)
-        approx = ivfpq_knn(
-            emb, q, k=5, nlist=16, nprobe=4, shortlist=100, m=16, ks=16
-        )
-        exact = brute_force_knn(emb, q, k=5)
-        a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
-        e = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
-        assert len({qid for qid, _ in a}) == 10
-        # observed 0.9 with nprobe=4 (cell pruning loses cross-cell
-        # neighbors by design); generous margin for seed sensitivity
-        assert len(a & e) / len(e) >= 0.5
-
-    def test_full_probe_equals_flat_pq(self, spark):
-        """nprobe = nlist scans every cell, so IVF∘PQ must reproduce
-        flat PQ's rerank output exactly (same codebooks, same ADC,
-        same shortlist, same tie-breaks)."""
-        from mapreducewordoccurences_spark.functions.similarity import (
-            ivfpq_knn,
-            pq_knn_rerank,
-        )
-
-        emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-        q = emb.where(F.col("vec_id") < 5)
-        flat = pq_knn_rerank(emb, q, k=5, shortlist=100, m=16, ks=16)
-        composed = ivfpq_knn(
-            emb, q, k=5, nlist=16, nprobe=16, shortlist=100, m=16, ks=16
-        )
-        fr = {(r["query_id"], r["neighbor_id"], r["rnk"]) for r in flat.collect()}
-        cr = {
-            (r["query_id"], r["neighbor_id"], r["rnk"])
-            for r in composed.collect()
-        }
-        assert cr == fr
-
-    def test_persisted_probe_matches_inline(self, spark, tmp_path):
-        from mapreducewordoccurences_spark.functions.similarity import (
-            build_ivfpq_index,
-            ivfpq_knn,
-            ivfpq_probe,
-        )
-
-        emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-        q = emb.where(F.col("vec_id") < 10)
-        inline = ivfpq_knn(
-            emb, q, k=5, nlist=16, nprobe=4, shortlist=100, m=16, ks=16
-        )
-        build_ivfpq_index(emb, str(tmp_path / "idx"), nlist=16, m=16, ks=16)
-        probed = ivfpq_probe(
-            q, str(tmp_path / "idx"), k=5, nprobe=4, shortlist=100, m=16
-        )
-        li = sorted(map(tuple, inline.collect()))
-        lp = sorted(map(tuple, probed.collect()))
-        assert li == lp
-
-
-class TestCodebookDeterminism:
-    def test_codebooks_invariant_to_partitioning(self, spark):
-        """Fixed-point centroid updates (exact BIGINT sums +
-        truncating division) must make codebooks bit-identical
-        regardless of how the corpus is partitioned — the F.avg
-        formulation drifted with summation order (ADVICE r6)."""
-        from mapreducewordoccurences_spark.functions.similarity import (
-            pq_codebooks,
-        )
-
-        emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-
-        def book_map(df):
-            return {
-                (r["__sub"], r["__code"]): tuple(r["__cvec"])
-                for r in pq_codebooks(df, m=8, ks=16).collect()
-            }
-
-        b1 = book_map(emb.repartition(1))
-        b32 = book_map(emb.repartition(32, "vec_id"))
-        assert b1 == b32
 
 
 class TestKcoreGuards:

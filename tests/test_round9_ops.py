@@ -8,6 +8,8 @@ from pyspark.sql import functions as F
 
 from mapreducewordoccurences_spark.sources.readers import load_table
 
+from tests.conftest import SF_DIR
+
 
 class TestMmrHardening:
     def test_zero_norm_candidate_is_skipped(self, spark):
@@ -115,6 +117,23 @@ class TestScopedVerifyCache:
         assert len(reg) == 2
         for h in reg:
             h.unpersist()
+
+    def test_unpruned_call_takes_no_persist(self, spark):
+        """Unpruned, the gram table is corpus-sized: the verifier must
+        not persist it (nor anything else)."""
+        from mapreducewordoccurences_spark.dedup.verify import (
+            exact_verify_pairs,
+        )
+
+        docs = load_table(spark, SF_DIR, "documents")
+        cand = spark.createDataFrame([(0, 1)], ["doc_a", "doc_b"])
+        reg: list = []
+        out = exact_verify_pairs(
+            docs, cand, threshold=0.0, prune_to_candidates=False,
+            persist_registry=reg,
+        )
+        assert out.count() >= 0
+        assert reg == []
 
     def test_caller_persisted_cand_not_registered(self, spark):
         """A caller-persisted cand keeps its lifecycle: no new persist
