@@ -35,24 +35,13 @@ Spark-first design (vs the reference's manual pipeline):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # The exact character class of the reference's isWordChar (C-locale
 # isalnum, src/main.c:187-189). Keep in sync with its negation below.
 WORD_REGEX = "[A-Za-z0-9]+"
 SEPARATOR_REGEX = "[^A-Za-z0-9]+"
-
-
-def words_array(text: Column | str) -> Column:
-    """Array-of-words column for one text value (no explode).
-
-    ``split`` on the separator class yields a leading "" element when
-    the text starts with a separator (and one trailing "" when it ends
-    with one); callers must drop empties.
-    """
-    col = F.col(text) if isinstance(text, str) else text
-    return F.split(col, SEPARATOR_REGEX)
 
 
 def tokenize(df: DataFrame, text_col: str = "text", word_col: str = "word") -> DataFrame:

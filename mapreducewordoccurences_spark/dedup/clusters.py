@@ -105,110 +105,9 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "
             f"rounds (graph diameter exceeds the budget); raise "
-            f"max_iterations or use connected_components_two_phase "
-            f"(O(log² n) rounds on chain-shaped graphs)"
+            f"max_iterations"
         )
     return labels
-
-
-def connected_components_two_phase(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iterations: int = 20,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """(node, component) via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond").
-
-    Same output contract as ``connected_components``; different round
-    complexity: label propagation needs O(diameter) rounds, star
-    rounds CONTRACT the graph (large-star hangs every node's larger
-    neighbors under its minimum neighbor; small-star re-hangs the rest)
-    and converge in O(log² n) — even on pathological chain graphs
-    where the diameter is the node count. Use this variant when the
-    dup graph may contain long chains (e.g. drifting near-dup
-    sequences); cliques converge in 2-3 rounds under either.
-
-    Each round is two groupBys over the edge list; per-round lineage
-    truncation exactly as in ``connected_components`` (and the same
-    opt-in reliable ``checkpoint_dir``).
-    """
-    from mapreducewordoccurences_spark.core.checkpointing import make_truncate
-
-    truncate = make_truncate(pairs, checkpoint_dir)
-    # normalize to undirected edges u≠v, deduped
-    e = truncate(
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        )
-        .distinct()
-    )
-
-    for _ in range(max_iterations):
-        # ---- large-star: for each node, link every LARGER neighbor to
-        # m = min(neighborhood ∪ self)
-        sym = e.select("u", "v").union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        large = truncate(
-            sym.join(m, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u2"), F.col("m").alias("v2"))
-            .where(F.col("u2") != F.col("v2"))
-            .select(
-                F.least("u2", "v2").alias("u"), F.greatest("u2", "v2").alias("v")
-            )
-            .distinct()
-        )
-        # ---- small-star: every node links its SMALLER-OR-EQUAL
-        # neighbors to m = min(smaller neighbors ∪ self)
-        sym2 = large.select("u", "v").union(
-            large.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        smaller = sym2.where(F.col("v") < F.col("u"))
-        m2 = smaller.groupBy("u").agg(F.min("v").alias("m"))
-        small = truncate(
-            smaller.join(m2, "u")
-            .select(
-                F.when(F.col("v") != F.col("m"), F.col("v")).otherwise(F.col("u")).alias("u2"),
-                F.col("m").alias("v2"),
-            )
-            .where(F.col("u2") != F.col("v2"))
-            .select(
-                F.least("u2", "v2").alias("u"), F.greatest("u2", "v2").alias("v")
-            )
-            .distinct()
-        )
-        # converged when the edge set is a stable star forest (edges
-        # unchanged by a full round) — one symmetric-difference job,
-        # not two separate exceptAll counts
-        converged = (
-            small.exceptAll(e).union(e.exceptAll(small)).limit(1).count() == 0
-        )
-        e = small
-        if converged:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components_two_phase did not converge in "
-            f"{max_iterations} rounds; labels would be inconsistent — "
-            f"raise max_iterations (star rounds converge in O(log² n))"
-        )
-
-    # star forest → labels: every v in an edge (u, v) with u<v hangs
-    # under u; roots label themselves
-    members = e.select(F.col("v").alias("node"), F.col("u").alias("component"))
-    roots = (
-        e.select(F.col("u").alias("node"))
-        .distinct()
-        .join(members.select("node"), "node", "left_anti")
-        .select("node", F.col("node").alias("component"))
-    )
-    return members.unionByName(roots)
 
 
 def dup_clusters(

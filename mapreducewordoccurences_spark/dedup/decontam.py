@@ -79,20 +79,3 @@ def ngram_overlap(
             (F.col("n_shared") / F.col("n_shingles")).alias("overlap_ratio"),
         )
     )
-
-
-def drop_contaminated(
-    train_df: DataFrame,
-    bench_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    max_overlap_ratio: float = 0.0,
-) -> DataFrame:
-    """Training rows whose benchmark shingle overlap is ≤ the allowed
-    ratio (default: any shared n-gram disqualifies). Anti-join on ids
-    — full training rows never shuffle."""
-    dirty = ngram_overlap(train_df, bench_df, id_col, text_col, n).where(
-        F.col("overlap_ratio") > max_overlap_ratio
-    )
-    return train_df.join(dirty.select(id_col), on=id_col, how="left_anti")

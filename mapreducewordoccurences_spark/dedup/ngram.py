@@ -74,7 +74,7 @@ def _shingle_pair_counts(
     """Shared candidate machinery for the set-similarity scorers:
     (doc_a, doc_b, __inter, __na, __nb) for every doc pair sharing at
     least one shingle — intersection size plus both set sizes. The
-    Jaccard and containment scorers are pure projections over this.
+    Jaccard scorer is a pure projection over this.
 
     ``persist`` caches the multiply-consumed intermediate (the capped
     posting-list table, or the uncapped shingle table read by both
@@ -163,40 +163,4 @@ def ngram_jaccard_pairs(
     return (
         counts.select("doc_a", "doc_b", jac.alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
-    )
-
-
-def ngram_containment_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.9,
-    max_shingle_df: int | None = None,
-    persist: bool = True,
-) -> DataFrame:
-    """All doc pairs (a < b) where the SMALLER shingle set is
-    ≥ threshold contained in the other: C(A,B) = |A∩B| / min(|A|,|B|).
-
-    Containment catches what symmetric Jaccard structurally cannot: a
-    short document embedded verbatim inside a much longer one (quoted
-    boilerplate, wrapper pages, excerpt spam) has high containment but
-    LOW Jaccard, because the union is dominated by the long side. This
-    is the Broder (1997) resemblance/containment split; training-data
-    pipelines run both.
-
-    Same candidate plan as Jaccard (shared inverted-index machinery:
-    only pairs sharing ≥1 shingle are scored; ``max_shingle_df`` caps
-    posting-list blow-up). The score is one int/int divide —
-    bit-portable.
-    """
-    counts = _shingle_pair_counts(df, id_col, text_col, n, max_shingle_df, persist)
-    cont = F.col("__inter") / F.least(F.col("__na"), F.col("__nb"))
-    return (
-        counts.select(
-            "doc_a", "doc_b", cont.alias("containment"),
-            F.col("__na").alias("n_shingles_a"),
-            F.col("__nb").alias("n_shingles_b"),
-        )
-        .where(F.col("containment") >= threshold)
     )

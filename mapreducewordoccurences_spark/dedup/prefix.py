@@ -140,9 +140,8 @@ def prefix_filter_containment_pairs(
     threshold: float = 0.9,
 ) -> DataFrame:
     """All doc pairs (a < b) with set containment
-    C(A,B) = |A∩B| / min(|A|,|B|) ≥ threshold — bit-identical output
-    to ``ngram_containment_pairs`` with no df cap, via ASYMMETRIC
-    prefix filtering. Returns
+    C(A,B) = |A∩B| / min(|A|,|B|) ≥ threshold, exact (no df cap),
+    via ASYMMETRIC prefix filtering. Returns
     (doc_a, doc_b, containment, n_shingles_a, n_shingles_b).
 
     Why asymmetric: for containment the required overlap
@@ -248,25 +247,3 @@ def prefix_filter_containment_pairs(
         )
     )
     return scored.where(F.col("containment") >= threshold)
-
-
-def prefix_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """One-row audit of what prefix filtering saves: total shingle
-    postings vs indexed prefix postings, and the implied index
-    fraction — the number that justifies the tier at corpus scale."""
-    sh = shingles_df(df, id_col, text_col, n)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    pref = F.col("sz") - F.ceil(F.col("sz") * F.lit(float(threshold))).cast(
-        "int"
-    ) + F.lit(1)
-    return sizes.agg(
-        F.sum("sz").cast("bigint").alias("total_postings"),
-        F.sum(pref).cast("bigint").alias("prefix_postings"),
-        (F.sum(pref) / F.sum("sz")).alias("index_fraction"),
-    )

@@ -168,66 +168,3 @@ def bpe_merge_table(
     return spark.createDataFrame(
         rows, "merge_rank int, left string, right string, merged string, pair_count long"
     )
-
-
-def encode_vocabulary(
-    vocab_words: DataFrame,
-    merges: list[tuple[str, str, int]] | list[tuple[str, str]],
-    word_col: str = "word",
-) -> DataFrame:
-    """Apply a learned merge list (in order) to a table of distinct
-    words: (word, symbols, n_symbols). The scale contract of BPE
-    ENCODING: encode the VOCABULARY once (distinct words), then join
-    token streams against it — never re-merge per occurrence. Each
-    merge is the same built-in fold the learner uses; the chained
-    folds stay in codegen (k folds = k expression layers, constant
-    per plan)."""
-    # _apply_merge's contract is the learner's (word, freq, symbols)
-    # schema, so normalize the input column to "word" internally and
-    # restore the caller's name on return — otherwise any word_col
-    # other than "word" fails UNRESOLVED_COLUMN on the first merge.
-    out = vocab_words.select(
-        F.col(word_col).alias("word"),
-        F.split(F.col(word_col), "(?!^)(?=.)").alias("symbols"),
-    )
-    for m in merges:
-        left, right = m[0], m[1]
-        out = _apply_merge(
-            out.withColumn("freq", F.lit(1)), left, right
-        ).select("word", "symbols")
-    return out.select(
-        F.col("word").alias(word_col),
-        "symbols",
-        F.size("symbols").alias("n_symbols"),
-    )
-
-
-def corpus_token_compression(
-    df: DataFrame,
-    text_col: str = "text",
-    num_merges: int = 20,
-) -> DataFrame:
-    """Learn merges, encode the vocabulary, and report the corpus
-    compression the merge list buys: one row — (n_merges,
-    n_words_total, n_chars_total, n_symbols_total, compression =
-    chars/symbols). The token stream joins the encoded vocabulary on
-    the word (broadcast — vocabulary-sized), so the corpus is
-    scanned, never re-encoded row by row."""
-    merges = learn_bpe_merges(df, text_col, num_merges)
-    wf = (
-        df.select(F.explode(tokens(text_col, lowercase=True)).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    enc = encode_vocabulary(wf.select("word"), merges)
-    joined = wf.join(F.broadcast(enc), "word")
-    return joined.agg(
-        F.lit(len(merges)).cast("int").alias("n_merges"),
-        F.sum("freq").alias("n_words_total"),
-        F.sum(F.col("freq") * F.length("word")).alias("n_chars_total"),
-        F.sum(F.col("freq") * F.col("n_symbols")).alias("n_symbols_total"),
-        (
-            F.sum(F.col("freq") * F.length("word"))
-            / F.sum(F.col("freq") * F.col("n_symbols"))
-        ).alias("compression"),
-    )

@@ -47,16 +47,6 @@ def cms_build(
     return rows.groupBy("__row", "__bucket").agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Merge two sketches built with identical (depth, width, hash
-    family): cell-wise count addition."""
-    return (
-        a.unionByName(b)
-        .groupBy("__row", "__bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
 def cms_estimate(
     sketch: DataFrame,
     probes: DataFrame,

@@ -1,12 +1,11 @@
-"""PCA over an embedding column — whitening/compression for the
-embedding stages of a training-data pipeline.
+"""Gram matrix and X^T y over an embedding column — the row-scale
+passes of PCA and of a normal-equations linear fit.
 
 The scale split is the whole design: the only pass over the (huge)
-row set computes the d×d gram matrix; everything eigen happens on the
-driver against a d² object (64-dim ⇒ 32 KB — bounded by dimension,
-never by rows), and the projection is a second distributed map with
-the components broadcast. This is exactly how distributed PCA is done
-at 100 TB: no row-space matrix ever materializes.
+row set computes the d×d gram matrix (and, for a fit, the d-vector
+X^T y); any eigen or solve step works on a d² object (64-dim ⇒ 32 KB —
+bounded by dimension, never by rows). This is how distributed PCA is
+done at 100 TB: no row-space matrix ever materializes.
 
 Determinism: gram entries are fixed-point integer sums — each per-row
 product is one IEEE-double op (identical on every engine), truncated
@@ -66,58 +65,6 @@ def gram_matrix(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return upper.unionByName(lower)
 
 
-def pca_components(df: DataFrame, vec_col: str = "embedding", k: int = 8):
-    """Top-k principal directions (rows of a k×d numpy array) from the
-    uncentered gram matrix. Driver-side numpy eigh on the d×d collect —
-    legitimate because the object is dimension-bounded, not
-    row-bounded. Deterministic: exact gram + LAPACK eigh + a sign
-    convention (largest-|component| coordinate made positive)."""
-    import numpy as np
-
-    rows = gram_matrix(df, vec_col).collect()
-    d = max(r.i for r in rows) + 1
-    g = np.zeros((d, d))
-    for r in rows:
-        g[r.i][r.j] = r.g
-    vals, vecs = np.linalg.eigh(g)  # ascending
-    comps = vecs[:, ::-1][:, :k].T  # k×d, leading first
-    # sign convention so the basis is reproducible across LAPACK builds
-    for c in comps:
-        pivot = int(np.argmax(np.abs(c)))
-        if c[pivot] < 0:
-            c *= -1.0
-    return comps
-
-
-def pca_project(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str = "embedding",
-    k: int = 8,
-) -> DataFrame:
-    """(id, projection: array<double> length k): rows projected onto
-    the top-k principal directions. The components ship to executors
-    as literals (k·d doubles); projection is a map-only pass of
-    built-in fold expressions — no shuffle at all."""
-    comps = pca_components(df, vec_col, k)
-    vec = F.col(vec_col).cast("array<double>")
-    proj = F.array(
-        *[
-            F.aggregate(
-                F.zip_with(
-                    vec,
-                    F.array(*[F.lit(float(x)) for x in comp]),
-                    lambda a, b: a * b,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            for comp in comps
-        ]
-    )
-    return df.select(F.col(id_col), proj.alias("projection"))
-
-
 def xty_vector(
     df: DataFrame, vec_col: str = "embedding", y_col: str = "label"
 ) -> DataFrame:
@@ -130,49 +77,3 @@ def xty_vector(
     )
     prod = F.expr("CAST(xi * __y * 1e12 AS BIGINT)")
     return pairs.groupBy("i").agg((F.sum(prod) / F.lit(1e12)).alias("v"))
-
-
-def ridge_fit(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    y_col: str = "label",
-    l2: float = 1e-3,
-):
-    """Ridge regression by normal equations: beta =
-    (X^T X + l2·I)^{-1} X^T y. Two distributed passes (gram + xty,
-    both dimension-bounded exchanges), one d×d driver solve — the
-    at-scale shape for d up to a few thousand. Returns a numpy array
-    of coefficients (no intercept; append a 1-column for one)."""
-    import numpy as np
-
-    g_rows = gram_matrix(df, vec_col).collect()
-    d = max(r.i for r in g_rows) + 1
-    g = np.zeros((d, d))
-    for r in g_rows:
-        g[r.i][r.j] = r.g
-    b = np.zeros(d)
-    for r in xty_vector(df, vec_col, y_col).collect():
-        b[r.i] = r.v
-    return np.linalg.solve(g + l2 * np.eye(d), b)
-
-
-def ridge_predict(
-    df: DataFrame,
-    beta,
-    id_col: str,
-    vec_col: str = "embedding",
-    out_col: str = "prediction",
-) -> DataFrame:
-    """Map-only scoring: broadcast coefficients as literals, one fold
-    per row — identical shape to pca_project."""
-    vec = F.col(vec_col).cast("array<double>")
-    pred = F.aggregate(
-        F.zip_with(
-            vec,
-            F.array(*[F.lit(float(x)) for x in beta]),
-            lambda a, b: a * b,
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return df.select(F.col(id_col), pred.alias(out_col))

@@ -25,16 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _tf(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, word, tf) term frequencies — lowercased [a-z0-9]+ tokens,
-    one groupBy shuffle, partial aggregation map-side."""
-    words = df.select(
-        F.col(id_col),
-        F.explode(F.split(F.lower(text_col), "[^a-z0-9]+")).alias("word"),
-    ).where(F.length("word") > 0)
-    return words.groupBy(id_col, "word").agg(F.count(F.lit(1)).alias("tf"))
-
-
 def bm25_scores(
     df: DataFrame,
     query_terms: Sequence[str],

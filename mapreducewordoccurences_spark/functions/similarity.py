@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreducewordoccurences_spark.operators.windows import top_k_per_group
+from mapreducewordoccurences_spark.sources.readers import parquet_footer_rows
 
 
 def _c(col: Column | str) -> Column:
@@ -977,13 +978,13 @@ def build_ivfpq_index(
 
 
 def _write_meta_rowcount_local(vectors_dir: str, meta_dir: str) -> None:
-    """Sum the just-written vector files' parquet FOOTER row counts and
-    write the 1-row meta table, all driver-side via pyarrow — no Spark
-    job for either step. Local-filesystem paths only: raises OSError,
-    before writing anything, when ``vectors_dir`` is not a local
-    directory (a URI such as ``file:``/``hdfs:``) or holds no parquet
-    files, so the caller's Spark fallback counts instead of a silent
-    ``n_rows=0``."""
+    """Sum the just-written vector files' parquet FOOTER row counts
+    (the files Spark reads, see ``parquet_footer_rows``) and write the
+    1-row meta table, all driver-side via pyarrow — no Spark job for
+    either step. Local-filesystem paths only: raises OSError, before
+    writing anything, when ``vectors_dir`` is not a local directory (a
+    URI such as ``file:``/``hdfs:``) or holds no parquet files, so the
+    caller's Spark fallback counts instead of a silent ``n_rows=0``."""
     import os  # noqa: PLC0415
 
     import pyarrow as pa  # noqa: PLC0415
@@ -991,15 +992,7 @@ def _write_meta_rowcount_local(vectors_dir: str, meta_dir: str) -> None:
 
     if not os.path.isdir(vectors_dir):
         raise NotADirectoryError(f"not a local directory: {vectors_dir}")
-    parts = [
-        os.path.join(root, f)
-        for root, _dirs, files in os.walk(vectors_dir)
-        for f in files
-        if f.endswith(".parquet")
-    ]
-    if not parts:
-        raise FileNotFoundError(f"no parquet files under {vectors_dir}")
-    n_rows = sum(pq.ParquetFile(f).metadata.num_rows for f in parts)
+    n_rows = parquet_footer_rows(vectors_dir)
     os.makedirs(meta_dir, exist_ok=True)
     # clear prior part files (overwrite semantics, matching the Spark
     # writer this replaces)

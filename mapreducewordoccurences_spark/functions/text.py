@@ -264,27 +264,6 @@ def doc_fingerprint(text: Column | str, normalize: bool = True) -> Column:
     return F.md5(col)
 
 
-def rolling_hash_fingerprint(toks_col: Column | str, window: int = 8) -> Column:
-    """Winnowing-style rolling fingerprint: min of hashes over
-    ``window``-token windows. Cheap locality-sensitive summary; equal
-    fingerprints → almost surely a shared window.
-
-    Takes a MATERIALIZED token-array column (not the tokenize
-    expression): expressions referenced inside a transform lambda are
-    re-inlined per element — project ``tokens(text)`` to a named
-    column first."""
-    toks = _c(toks_col)
-    win = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - window, F.lit(0))),
-        lambda i: F.conv(
-            F.substring(F.md5(F.concat_ws(" ", F.slice(toks, i + 1, window))), 1, 15),
-            16,
-            10,
-        ).cast("long"),
-    )
-    return F.array_min(win)
-
-
 # PII patterns shared by redact_pii and its DuckDB oracle strings —
 # deliberately restricted to syntax both Java regex (Spark) and RE2
 # (DuckDB) interpret identically: character classes, bounded repeats,

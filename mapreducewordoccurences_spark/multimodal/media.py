@@ -26,7 +26,7 @@ NULL dims/features,
 the same graceful path corrupt bytes take, so jobs never fail on
 codec availability. The Spark-side contract — schemas,
 batch iteration, partitioning, UDF signatures — is identical on
-every path. Video (ffmpeg) remains header-driven: frame COUNTS fan
+every path. Video frame sampling is header-driven: frame COUNTS fan
 out rows; attaching real frame bytes would slot into the same
 iterator.
 """
@@ -733,9 +733,9 @@ def sample_frames(
     (media_id, frame_idx). Frame COUNTS come from the test header, or
     from Pillow's n_frames for real animated formats (GIF/APNG) when
     installed. Real decoders would additionally attach the frame
-    bytes (ffmpeg for video — absent here); attaching them is one
-    more column in this same iterator, the row-multiplicity plumbing
-    is the part that matters to the plan.
+    bytes; attaching them is one more column in this same iterator,
+    the row-multiplicity plumbing is the part that matters to the
+    plan.
     """
     out_schema = T.StructType(
         [
@@ -1737,12 +1737,23 @@ def make_fake_jpeg_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# MP4 corpora (round 11) — the vendored ISO BMFF muxer/demuxer
-# (multimodal/mp4.py) gives the video tier a REAL container format
-# served end-to-end with zero native deps: every sample is a complete
-# JFIF stream through the vendored JPEG codec. H.264/VP9 remain behind
-# the availability-gated ffmpeg seam (multimodal/video.py).
+# MP4 corpora — the vendored ISO BMFF muxer/demuxer (multimodal/mp4.py)
+# gives the video tier a REAL container format served end-to-end with
+# zero native deps: every sample is a complete JFIF stream through the
+# vendored JPEG codec. Other video codecs (H.264/VP9) have no sample
+# decoder here: their container metadata reads, their frames do not.
 # ---------------------------------------------------------------------------
+
+VIDEO_META_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("width", T.IntegerType(), True),
+        T.StructField("height", T.IntegerType(), True),
+        T.StructField("n_frames", T.IntegerType(), True),
+        T.StructField("codec", T.StringType(), True),
+        T.StructField("duration_ms", T.DoubleType(), True),
+    ]
+)
 
 
 def decode_mp4_meta(
@@ -1752,13 +1763,9 @@ def decode_mp4_meta(
     duration_ms) through the vendored MP4 sample-table walker in
     Arrow-batched mapInPandas — no sample bytes touched, so corpus
     profiling is cheap. Non-MP4/corrupt payloads yield NULL metadata
-    (the 100 TB corruption rule), identical in shape to the ffprobe
-    path (multimodal/video.py decode_video_meta_ffmpeg)."""
+    (the 100 TB corruption rule)."""
     from mapreducewordoccurences_spark.multimodal.mp4 import (  # noqa: PLC0415
         mp4_meta,
-    )
-    from mapreducewordoccurences_spark.multimodal.video import (  # noqa: PLC0415
-        VIDEO_META_SCHEMA,
     )
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -1,17 +1,13 @@
 """Vendored minimal MP4 (ISO BMFF) muxer/demuxer — Motion-JPEG
 profile, ZERO optional deps (stdlib struct).
 
-Round 11 closes VERDICT r10 ask #4 ("no green MP4 row in this
-environment"): ffmpeg is absent and the container has no network, so
-neither an H.264 fixture nor a recorded golden digest can be produced
-here. Instead of leaving the video container format entirely behind
-the availability-gated ffmpeg seam (multimodal/video.py — which
-remains the H.264/VP9 path), this module vendors the PUBLIC ISO
-Base Media File Format (ISO/IEC 14496-12) for the one video codec the
-engine already owns end-to-end: Motion-JPEG, where every sample is a
-complete JFIF image served by the vendored multimodal/jpeg.py codec
-(baseline AND progressive, itself cross-validated against
-javax.imageio).
+The engine carries no H.264/VP9 decoder, so instead of leaving the
+video container format behind a native dependency, this module
+vendors the PUBLIC ISO Base Media File Format (ISO/IEC 14496-12) for
+the one video codec the engine already owns end-to-end: Motion-JPEG,
+where every sample is a complete JFIF image served by the vendored
+multimodal/jpeg.py codec (baseline AND progressive, itself
+cross-validated against javax.imageio).
 
 Coverage:
 
@@ -32,8 +28,8 @@ Coverage:
 Scale shape: identical to the other vendored codecs — demux + frame
 decode run inside Arrow-batched ``mapInPandas``; payload bytes never
 shuffle; fingerprints (~20 B/frame) are all that moves. Swapping in
-libav for H.264 corpora changes no schema, no shuffle, no test
-contract (that path is multimodal/video.py's ffmpeg seam).
+libav for H.264 corpora would change no schema, no shuffle, no test
+contract.
 """
 
 from __future__ import annotations
@@ -44,8 +40,8 @@ _CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl", b"dinf"}
 _MAX_SAMPLES = 4096
 # Only plain-JFIF sample entries qualify for the dHash tier (ADVICE
 # r11): 'mjpa'/'mjpb' are field-split (not whole JFIF streams) and
-# 'mp4v' is MPEG-4 Part 2 bitstream — all three stay on the ffmpeg
-# seam (multimodal/video.py). Each sample is additionally validated
+# 'mp4v' is MPEG-4 Part 2 bitstream — none of the three has a decoder
+# here. Each sample is additionally validated
 # to start with an SOI marker before being returned.
 _JPEG_FOURCC = {b"jpeg"}
 

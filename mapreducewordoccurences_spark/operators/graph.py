@@ -327,9 +327,9 @@ def kcore_membership(
     the plan stays round-count-independent; pass ``checkpoint_dir``
     for reliable checkpoints on a cluster. Peel depth (rounds to
     converge) is small on heavy-tailed graphs — degeneracy-ordering
-    literature reports O(log n)-ish rounds in practice; at 100 TB the
-    same loop runs with a convergence check (alive count stable)
-    instead of a fixed count.
+    literature reports O(log n)-ish rounds in practice, and the loop
+    stops early once the alive count is stable, so a generous
+    ``iterations`` budget costs no extra rounds.
     """
     from mapreducewordoccurences_spark.core.checkpointing import make_truncate
 
@@ -371,9 +371,11 @@ def kcore_membership(
         alive = truncate(deg.where(F.col("core_degree") >= k).select("node"))
         # convergence check: the peel is monotone, so a stable alive
         # count means a fixed point — stop instead of paying no-op
-        # rounds (one cheap driver-scalar aggregate per round; this is
-        # what guarantees the returned set IS the k-core rather than a
-        # superset when ``iterations`` under-estimates peel depth)
+        # rounds (one cheap driver-scalar aggregate per round). It only
+        # ever ends the loop early: when ``iterations`` is below the
+        # peel depth, the result is the partial peel after exactly
+        # ``iterations`` rounds (a superset of the k-core), the
+        # fixed-round contract the oracle's unrolled recurrence shares
         n_now = alive.count()
         if n_alive is not None and n_now == n_alive:
             break

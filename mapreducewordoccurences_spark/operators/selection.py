@@ -12,9 +12,8 @@ enough to resolve exactly with one ordered limit.
 
 Driver state: two floats and a B-row histogram per round. Executor
 state: none beyond a map-side partial count. Every pass is a full
-predicate-pushdown scan (``col BETWEEN lo AND hi``), so a z-ordered /
-sorted layout (sources/sinks.py write_zorder) prunes later rounds to
-a handful of row groups.
+predicate-pushdown scan (``col BETWEEN lo AND hi``), so a layout
+sorted on the column prunes later rounds to a handful of row groups.
 """
 
 from __future__ import annotations

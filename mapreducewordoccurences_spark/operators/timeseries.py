@@ -81,55 +81,6 @@ def resample_with_gap_fill(
     )
 
 
-def resample_with_interpolation(
-    df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    bucket_us: int = 3_600_000_000,
-) -> DataFrame:
-    """Like :func:`resample_with_gap_fill` but gap buckets get LINEAR
-    interpolation between the surrounding observations instead of a
-    step function. Endpoints (first/last bucket per key) are
-    observations by construction, so every gap has both neighbors.
-
-    Returns (key, bucket, v, interp). For an observed bucket
-    ``interp == v``; for a gap at distance d into an (prev, next)
-    span of length L: ``interp = prev + (next - prev) · d / L``.
-
-    Plan adds two window passes over the gap-fill shape (previous
-    value+bucket via last-ignorenulls, next via first-ignorenulls on
-    the reversed frame) — same key partitioning, no extra shuffle
-    beyond :func:`resample_with_gap_fill`'s inventory.
-    """
-    base = resample_with_gap_fill(df, key_col, ts_col, value_col, bucket_us)
-    back = (
-        Window.partitionBy(key_col)
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    fwd = (
-        Window.partitionBy(key_col)
-        .orderBy("bucket")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    prev_v = F.last("v", ignorenulls=True).over(back)
-    prev_b = F.last(
-        F.when(F.col("v").isNotNull(), F.col("bucket")), ignorenulls=True
-    ).over(back)
-    next_v = F.first("v", ignorenulls=True).over(fwd)
-    next_b = F.first(
-        F.when(F.col("v").isNotNull(), F.col("bucket")), ignorenulls=True
-    ).over(fwd)
-    interp = F.when(F.col("v").isNotNull(), F.col("v")).otherwise(
-        prev_v
-        + (next_v - prev_v)
-        * (F.col("bucket") - prev_b).cast("double")
-        / (next_b - prev_b).cast("double")
-    )
-    return base.select(key_col, "bucket", "v", interp.alias("interp"))
-
-
 def ewma_last(
     df: DataFrame,
     key_col: str,

@@ -469,9 +469,9 @@ def q_media_mp4_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     stts/stsz frame counts, mdhd timescale→duration) in Arrow-batched
     mapInPandas, and aggregate a histogram the oracle predicts
     arithmetically. Any container break (box framing, sample-table
-    layout, 64-bit sizes) diverges the hash. H.264 corpora still go
-    through the availability-gated ffmpeg seam — this row proves the
-    container layer itself is real in the default environment."""
+    layout, 64-bit sizes) diverges the hash. The engine has no H.264
+    sample decoder — this row proves the container layer itself is
+    real with zero native deps."""
     from mapreducewordoccurences_spark.multimodal.media import (
         decode_mp4_meta,
         make_fake_mp4_media,

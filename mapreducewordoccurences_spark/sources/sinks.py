@@ -35,13 +35,6 @@ def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).json(path)
 
 
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,
@@ -89,149 +82,3 @@ def start_foreach_batch_sink(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    n_shards: int,
-    max_records_per_file: int | None = None,
-    salt: str = "",
-    mode: str = "overwrite",
-) -> None:
-    """Training-shard writer: the corpus lands as ``n_shards``
-    contiguous ranges of a deterministic md5 shuffle key — a
-    reproducible global shuffle materialized as files. The same rows
-    land in the same shard with the same intra-shard order on every
-    run and cluster size; change ``salt`` to get a fresh epoch
-    permutation.
-
-    ``repartitionByRange`` samples key quantiles so shards are
-    size-balanced even when ids aren't; ``sortWithinPartitions``
-    fixes the intra-file order (readers streaming a shard see one
-    deterministic sequence). ``max_records_per_file`` caps file size
-    below executor/loader memory — the small-files governance knob in
-    the other direction (against 100 GB monoliths; against tiny files,
-    lower n_shards).
-    """
-    from mapreducewordoccurences_spark.functions.sampling import (
-        deterministic_shuffle_key,
-    )
-
-    keyed = df.withColumn("__shard_key", deterministic_shuffle_key(id_col, salt))
-    writer = (
-        keyed.repartitionByRange(n_shards, "__shard_key")
-        .sortWithinPartitions("__shard_key")
-        .drop("__shard_key")
-        .write.mode(mode)
-    )
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.parquet(path)
-
-
-def zorder_key(df: DataFrame, cols: list[str], bits_per_col: int = 16) -> DataFrame:
-    """Add ``__zkey``: the Morton (Z-order) interleaving of the given
-    numeric columns, each min-max scaled to a ``bits_per_col``-bit
-    grid.
-
-    Why: parquet keeps min/max stats per row group and per file, but a
-    single-column sort only tightens the bounds of THAT column —
-    predicates on a second column still touch every file. Interleaving
-    bits makes files cover small hyper-rectangles in the combined key
-    space, so point/box predicates on ANY prefix subset of the columns
-    prune most row groups. (Same layout idea Delta/Iceberg expose as
-    OPTIMIZE ZORDER BY; here it's plain parquet + stats pruning.)
-
-    The global min/max per column come from one tiny aggregate
-    broadcast onto the scan — no window, no single-reducer rank. All
-    bit math is built-in expressions inside whole-stage codegen.
-    """
-    mm = df.agg(
-        *[F.min(c).cast("double").alias(f"__min_{c}") for c in cols],
-        *[F.max(c).cast("double").alias(f"__max_{c}") for c in cols],
-    )
-    scaled = df.join(F.broadcast(mm), how="cross")
-    grid_max = (1 << bits_per_col) - 1
-    cells = []
-    for c in cols:
-        rng = F.col(f"__max_{c}") - F.col(f"__min_{c}")
-        norm = F.when(rng > 0, (F.col(c).cast("double") - F.col(f"__min_{c}")) / rng).otherwise(
-            F.lit(0.0)
-        )
-        cells.append(F.least(F.floor(norm * grid_max).cast("long"), F.lit(grid_max)))
-    # interleave: bit i of column j lands at position i*n_cols + j
-    n = len(cols)
-    terms = []
-    for j, cell in enumerate(cells):
-        for i in range(bits_per_col):
-            terms.append(
-                F.shiftleft(F.shiftright(cell, i).bitwiseAND(F.lit(1)), i * n + j)
-            )
-    zkey = terms[0]
-    for t in terms[1:]:
-        zkey = zkey + t
-    return scaled.select(*df.columns, zkey.alias("__zkey"))
-
-
-def write_zorder(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    num_files: int = 8,
-    bits_per_col: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as parquet laid out in Z-order on ``cols``:
-    range-partitioned then sorted by the Morton key, so each output
-    file (and row group within it) covers a tight hyper-rectangle of
-    the key space. Readers need nothing special — Spark's parquet
-    filter pushdown prunes on the row-group stats this layout
-    tightens."""
-    keyed = zorder_key(df, cols, bits_per_col)
-    (
-        keyed.repartitionByRange(num_files, "__zkey")
-        .sortWithinPartitions("__zkey")
-        .drop("__zkey")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def compact_parquet(
-    spark,
-    src: str,
-    dst: str,
-    target_mb: int = 128,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> int:
-    """Small-file compaction: rewrite ``src`` as ceil(bytes/target)
-    right-sized files. The small-files problem is a real 100 TB tax —
-    per-file open/footer costs and a task per tiny split dominate
-    scans once streaming sinks / frequent batches fragment a table.
-
-    File count comes from the actual on-disk byte size (footers
-    included — what scan planning sees), not row counts. Optional
-    ``sort_cols`` re-establishes clustering while rewriting (pair with
-    zorder_key for multi-column layouts). Returns the output file
-    count."""
-    import math
-    import os as _os
-
-    total = 0
-    for root, _dirs, files in _os.walk(src):
-        for f in files:
-            if f.endswith(".parquet") or f.startswith("part-"):
-                total += _os.path.getsize(_os.path.join(root, f))
-    n_out = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    df = spark.read.parquet(src)
-    if sort_cols:
-        out = df.repartitionByRange(n_out, *sort_cols).sortWithinPartitions(
-            *sort_cols
-        )
-    else:
-        out = df.repartition(n_out)
-    out.write.mode(mode).parquet(dst)
-    return n_out

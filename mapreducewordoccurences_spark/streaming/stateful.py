@@ -1,12 +1,10 @@
-"""Custom stateful streaming operators: applyInPandasWithState (the
-stable API) and transformWithStateInPandas (the Spark 4 successor).
+"""Custom stateful streaming operator on applyInPandasWithState.
 
 Covers the "custom stateful operators" streaming checklist item
 (SURVEY.md §2d): arbitrary per-key state machines beyond what
 built-in windowed aggregation expresses. The demo operator maintains
 a per-user running session: event count, total value, and last-seen
-timestamp, emitting one updated row per key per micro-batch and
-timing out idle users via processing-time timeout.
+timestamp, emitting one updated row per key per micro-batch.
 
 State is partitioned by key in the state store (RocksDB/HDFS-backed
 on a cluster) — per-key state must stay O(1); anything list-shaped
@@ -76,82 +74,5 @@ def running_user_totals(stream_df: DataFrame) -> DataFrame:
             stateStructType=STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def _make_totals_processor():
-    """StatefulProcessor for transformWithStateInPandas — the Spark 4
-    API with typed, composable state variables (ValueState here;
-    ListState/MapState/timers available) instead of one opaque tuple.
-    Needs the RocksDB state-store provider (see
-    ``rocksdb_state_conf``)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotalsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total, last = (
-                self._totals.get() if self._totals.exists() else (0, 0.0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-                if len(pdf):
-                    last = max(last, int(pdf["ts"].max()))
-            self._totals.update((n, total, last))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                    "last_ts": [last],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return RunningTotalsProcessor()
-
-
-ROCKSDB_STATE_CONF = {
-    # transformWithState requires the RocksDB provider (bundled with
-    # Spark 4); it also gives changelog-checkpointed, out-of-heap state
-    # at scale — the right default for any big stateful stream.
-    "spark.sql.streaming.stateStore.providerClass": (
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    ),
-}
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas needs protobuf for its state-server
-    protocol; absent in some runtimes (gate callers/tests on this)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_user_totals_tws(stream_df: DataFrame) -> DataFrame:
-    """``running_user_totals`` on the transformWithStateInPandas API.
-    Set ``ROCKSDB_STATE_CONF`` on the session before starting the
-    query; requires ``tws_available()`` (protobuf)."""
-    return (
-        stream_df.select("user_id", ts_micros(stream_df, "ts").alias("ts"), "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_make_totals_processor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
         )
     )

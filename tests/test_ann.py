@@ -284,6 +284,30 @@ class TestIvfpqIndexMeta:
         assert spark.read.parquet(f"{uri}/meta").count() == 1
         assert ivfpq_index_rowcount(spark, uri) == 2 * emb.count()
 
+    def test_rowcount_ignores_aborted_write_leftovers(self, spark, tmp_path):
+        """A staging directory an aborted write left in ``vectors`` is
+        not part of the table Spark reads, so it is not in the count."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from mapreducewordoccurences_spark.functions.similarity import (
+            build_ivfpq_index,
+            ivfpq_index_rowcount,
+        )
+
+        emb = _emb(spark)
+        path = tmp_path / "ivfpq_idx"
+        staging = path / "vectors" / ".spark-staging-1"
+        staging.mkdir(parents=True)
+        pq.write_table(
+            pa.table({"vec_id": pa.array([0, 1], type=pa.int64())}),
+            staging / "part-00000.parquet",
+        )
+        build_ivfpq_index(emb, str(path), nlist=4, m=4, ks=8, mode="append")
+        n = spark.read.parquet(str(path / "vectors")).count()
+        assert n == emb.count()
+        assert ivfpq_index_rowcount(spark, str(path)) == n
+
     def test_rowcount_reader_skips_zero_row_part_files(self, spark, tmp_path):
         import pyarrow as pa
         import pyarrow.parquet as pq

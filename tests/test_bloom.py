@@ -97,9 +97,8 @@ def test_bloom_prefilter_shrinks_corpus_probe(spark):
     assert out.count() == 950
 
 
-def test_cms_never_undercounts_and_merges(spark):
-    """CMS one-sided error: estimate >= exact for EVERY key, and the
-    sketch of a union equals the cell-wise sum of the parts."""
+def test_cms_never_undercounts(spark):
+    """CMS one-sided error: estimate >= exact for EVERY key."""
     import collections
 
     from pyspark.sql import functions as F
@@ -107,7 +106,6 @@ def test_cms_never_undercounts_and_merges(spark):
     from mapreducewordoccurences_spark.functions.cms import (
         cms_build,
         cms_estimate,
-        cms_merge,
     )
 
     rows1 = [(f"k{i % 37}",) for i in range(500)]
@@ -121,13 +119,7 @@ def test_cms_never_undercounts_and_merges(spark):
 
     # small width forces collisions — the bound must still hold
     width, depth = 64, 4
-    merged = cms_merge(
-        cms_build(a, "w", width, depth), cms_build(b, "w", width, depth)
-    )
     direct = cms_build(union, "w", width, depth)
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, direct.collect())
-    )
 
     import math
 

@@ -69,69 +69,3 @@ def test_bpe_on_testdata_is_deterministic_and_plausible(spark):
     assert all(r["pair_count"] > 0 and r["merged"] == r["left"] + r["right"] for r in t1)
     # merged symbols grow: later merges may combine earlier outputs
     assert all(len(r["merged"]) >= 2 for r in t1)
-
-
-def test_encode_matches_reference(spark):
-    from mapreducewordoccurences_spark.functions.bpe import (
-        encode_vocabulary,
-        learn_bpe_merges,
-    )
-
-    texts = ["the cat sat on the mat", "the hat and the bat", "that cat that hat"] * 2
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    merges = learn_bpe_merges(df, "text", num_merges=6)
-
-    words = sorted({w for t in texts for w in t.split()})
-    wdf = spark.createDataFrame([(w,) for w in words], "word string")
-    got = {r["word"]: list(r["symbols"]) for r in
-           encode_vocabulary(wdf, merges).collect()}
-
-    for w in words:
-        syms = list(w)
-        for left, right, _ in merges:
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == left and syms[i + 1] == right:
-                    out.append(left + right)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        assert got[w] == syms, (w, got[w], syms)
-
-
-def test_encode_custom_word_col(spark):
-    """encode_vocabulary must honor a non-default word_col (it is
-    normalized to the internal 'word' name for _apply_merge and
-    restored on return)."""
-    from mapreducewordoccurences_spark.functions.bpe import (
-        encode_vocabulary,
-        learn_bpe_merges,
-    )
-
-    texts = ["aa ab aa ab aa", "ab aa ab"]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    merges = learn_bpe_merges(df, "text", num_merges=2)
-    assert merges  # 'a'+'a' and/or 'a'+'b' must fire
-
-    wdf = spark.createDataFrame([("aa",), ("ab",)], "term string")
-    out = encode_vocabulary(wdf, merges, word_col="term")
-    assert out.columns == ["term", "symbols", "n_symbols"]
-    got = {r["term"]: list(r["symbols"]) for r in out.collect()}
-    default = {r["word"]: list(r["symbols"]) for r in encode_vocabulary(
-        wdf.withColumnRenamed("term", "word"), merges).collect()}
-    assert got == default
-
-
-def test_corpus_compression_improves_with_merges(spark):
-    from mapreducewordoccurences_spark.functions.bpe import corpus_token_compression
-    from mapreducewordoccurences_spark.sources.readers import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(150)
-    r0 = corpus_token_compression(docs, num_merges=0).collect()[0]
-    r8 = corpus_token_compression(docs, num_merges=8).collect()[0]
-    assert r0["compression"] == 1.0           # no merges: symbols == chars
-    assert r8["compression"] > 1.2            # merges must actually compress
-    assert r8["n_symbols_total"] < r0["n_symbols_total"]
-    assert r8["n_chars_total"] == r0["n_chars_total"]

@@ -123,9 +123,9 @@ def test_time_weighted_avg_vs_plain_mean_on_bursts(spark):
 
 
 def test_containment_catches_embedded_doc(spark):
-    from mapreducewordoccurences_spark.dedup.ngram import (
-        ngram_containment_pairs,
-        ngram_jaccard_pairs,
+    from mapreducewordoccurences_spark.dedup.ngram import ngram_jaccard_pairs
+    from mapreducewordoccurences_spark.dedup.prefix import (
+        prefix_filter_containment_pairs,
     )
 
     short = "alpha beta gamma delta epsilon zeta"
@@ -134,7 +134,7 @@ def test_containment_catches_embedded_doc(spark):
         [(1, short), (2, long_), (3, "unrelated words entirely different here")],
         "doc_id int, text string",
     )
-    cont = ngram_containment_pairs(df, n=3, threshold=0.9).collect()
+    cont = prefix_filter_containment_pairs(df, n=3, threshold=0.9).collect()
     assert [(r["doc_a"], r["doc_b"]) for r in cont] == [(1, 2)]
     assert cont[0]["containment"] == 1.0  # short fully embedded
     # symmetric Jaccard misses the same pair at any reasonable threshold

@@ -50,54 +50,6 @@ def test_kmeans_more_iters_never_worse_objective(spark):
     assert obj(3) <= obj(1)
 
 
-def test_pagerank_fixed_point_semantics(spark):
-    """Mass conservation (± integer truncation) and ordering on a
-    hand-analyzable graph: c receives two in-edges, a feeds from c's
-    full mass, b gets teleport only."""
-    from mapreducewordoccurences_spark.operators.graph import (
-        SCALE,
-        pagerank_fixed_point,
-    )
-
-    edges = spark.createDataFrame(
-        [("a", "c", 1), ("b", "c", 1), ("c", "a", 1)],
-        "src string, dst string, w int",
-    )
-    out = {
-        r["node"]: r["rank_fp"]
-        for r in pagerank_fixed_point(
-            edges, weight_col="w", iterations=20
-        ).collect()
-    }
-    assert abs(sum(out.values()) - SCALE) < 1000
-    assert out["c"] > out["a"] > out["b"]
-    # b never receives an edge: exactly the teleport constant
-    assert out["b"] == (SCALE * 15) // (100 * 3)
-
-
-def test_pagerank_weight_sensitivity(spark):
-    """Weighted edges split mass proportionally: doubling one
-    out-edge's weight shifts rank toward its destination."""
-    from mapreducewordoccurences_spark.operators.graph import pagerank_fixed_point
-
-    def ranks(w_ab, w_ac):
-        edges = spark.createDataFrame(
-            [("a", "b", w_ab), ("a", "c", w_ac), ("b", "a", 1), ("c", "a", 1)],
-            "src string, dst string, w int",
-        )
-        return {
-            r["node"]: r["rank_fp"]
-            for r in pagerank_fixed_point(
-                edges, weight_col="w", iterations=15
-            ).collect()
-        }
-
-    even = ranks(1, 1)
-    skewed = ranks(3, 1)
-    assert abs(even["b"] - even["c"]) <= 1          # symmetric split
-    assert skewed["b"] > skewed["c"]                # 3:1 split favors b
-
-
 def test_triangle_count_known_graphs(spark):
     from mapreducewordoccurences_spark.operators.graph import triangle_count
 

@@ -1,6 +1,5 @@
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from mapreducewordoccurences_spark.dedup.clusters import connected_components, dup_clusters
@@ -60,43 +59,6 @@ def test_dup_clusters_summary(spark):
         for r in dup_clusters(pairs).collect()
     }
     assert got == {(5, 3, 5), (100, 2, 100)}
-
-
-def test_two_phase_matches_label_propagation(spark):
-    """large-star/small-star must produce the same components as label
-    propagation on mixed graphs (chain + triangle + pair + singletons
-    via random edges)."""
-    import random
-
-    from mapreducewordoccurences_spark.dedup.clusters import (
-        connected_components_two_phase,
-    )
-
-    rng = random.Random(7)
-    edges = [(i, i + 1) for i in range(12)]                      # chain
-    edges += [(20, 21), (21, 22), (20, 22), (30, 31)]            # triangle+pair
-    edges += [(rng.randrange(40, 70), rng.randrange(40, 70)) for _ in range(25)]
-    edges = [(a, b) for a, b in edges if a != b]
-    pairs = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
-
-    lp = {r["node"]: r["component"] for r in connected_components(pairs).collect()}
-    tp = {
-        r["node"]: r["component"]
-        for r in connected_components_two_phase(pairs).collect()
-    }
-    assert tp == lp
-
-
-def test_two_phase_long_chain(spark):
-    from mapreducewordoccurences_spark.dedup.clusters import (
-        connected_components_two_phase,
-    )
-
-    edges = [(i, i + 1) for i in range(30)]  # diameter 30 — the hard case
-    pairs = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
-    cc = connected_components_two_phase(pairs, max_iterations=10).collect()
-    assert {r["component"] for r in cc} == {0}
-    assert len(cc) == 31
 
 
 def test_embedding_lsh_near_dup_recall(spark):

@@ -2,9 +2,8 @@
 (multimodal/mp4.py, r11). These are the default environment's
 POSITIVE-path video container tests (VERDICT r10 ask #4): genuine MP4
 bytes, genuine sample-table walking, genuine per-sample JPEG decode —
-no ffmpeg. The H.264 seam (multimodal/video.py) keeps its
-availability-gated tests; where ffmpeg exists, an extra cross-check
-here validates our container against ffprobe."""
+no ffmpeg. Where ffmpeg exists, an extra cross-check here validates
+our container against ffprobe."""
 
 from __future__ import annotations
 

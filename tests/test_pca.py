@@ -1,16 +1,12 @@
-"""PCA (functions/pca.py): distributed gram + driver eigensolve +
-broadcast projection, checked against a straight numpy PCA."""
+"""functions/pca.py: the distributed fixed-point gram matrix, checked
+against a straight numpy X^T X."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
 
-from mapreducewordoccurences_spark.functions.pca import (
-    gram_matrix,
-    pca_components,
-    pca_project,
-)
+from mapreducewordoccurences_spark.functions.pca import gram_matrix
 from tests.conftest import SF_DIR
 
 
@@ -28,48 +24,3 @@ def test_gram_matches_numpy(spark):
     want = x.T @ x
     for r in g:
         assert abs(r.g - want[r.i][r.j]) < 1e-9
-
-
-def test_components_orthonormal_and_principal(spark):
-    ids, x = _np_data()
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    comps = pca_components(emb, "embedding", k=4)
-    assert comps.shape == (4, x.shape[1])
-    assert np.allclose(comps @ comps.T, np.eye(4), atol=1e-9)
-    # captured energy must match numpy's top-4 eigenvalues of X^T X
-    vals = np.sort(np.linalg.eigvalsh(x.T @ x))[::-1][:4]
-    got = np.sort(((x @ comps.T) ** 2).sum(axis=0))[::-1]
-    assert np.allclose(got, vals, rtol=1e-6)
-
-
-def test_projection_matches_numpy(spark):
-    ids, x = _np_data()
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    comps = pca_components(emb, "embedding", k=4)
-    proj = {r.vec_id: np.array(r.projection) for r in
-            pca_project(emb, "vec_id", "embedding", k=4).collect()}
-    want = x @ comps.T
-    for vid, row in zip(ids, want):
-        assert np.allclose(proj[vid], row, atol=1e-9)
-
-
-def test_ridge_fit_matches_numpy(spark):
-    import numpy as np
-    import pandas as pd
-
-    from mapreducewordoccurences_spark.functions.pca import ridge_fit, ridge_predict
-
-    pdf = pd.read_parquet(f"{SF_DIR}/embeddings.parquet")
-    x = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-    y = pdf["label"].to_numpy(dtype=np.float64)
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    beta = ridge_fit(emb, "embedding", "label", l2=1e-3)
-    want = np.linalg.solve(x.T @ x + 1e-3 * np.eye(x.shape[1]), x.T @ y)
-    assert np.allclose(beta, want, atol=1e-6)
-
-    preds = {r.vec_id: r.prediction
-             for r in ridge_predict(emb, beta, "vec_id", "embedding").collect()}
-    want_preds = x @ beta
-    for vid, wp in zip(pdf["vec_id"], want_preds):
-        assert abs(preds[vid] - wp) < 1e-9

@@ -7,13 +7,14 @@ results stay correct.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from mapreducewordoccurences_spark.plans.explain import (
     codegen_spans,
     count_exchanges,
     formatted_plan,
-    global_window_inputs,
     has_broadcast_join,
     has_pushed_filters,
     has_python_eval,
@@ -501,6 +502,44 @@ GLOBAL_WINDOW_BOUNDED = {
     # input bounded at the widest fixed top-N, never the vocab axis
     "vocab_coverage_topn": None,
 }
+
+
+def global_window_inputs(plan: str) -> list[str]:
+    """The ``Input`` line of every UNPARTITIONED Window node in a
+    FORMATTED plan text (empty list = no single-partition windows).
+
+    A Window node's ``Arguments`` carry [functions], [partition cols],
+    [order] when partitioned but only [functions], [order] when global
+    — so the top-level list separator ``], [`` appears twice vs once.
+    The audit below matches the returned Input lines against known
+    config-bounded axes: a global window is only acceptable over an
+    aggregate whose row count is bounded by configuration or algebra
+    (partition counts, frequency classes, percentile grids), never
+    over a scan of a scaling table.
+    """
+    out: list[str] = []
+    for block in re.split(r"^\(\d+\) ", plan, flags=re.MULTILINE):
+        lines = block.splitlines()
+        # exact node-name match: "WindowGroupLimit" (partial top-k,
+        # always partitioned) must not count
+        if not lines or lines[0].strip() != "Window":
+            continue
+        args = next((ln for ln in lines if ln.startswith("Arguments:")), "")
+        # Arguments carry [functions], [partition], [order] — but both
+        # the partition and order lists are omitted when empty, so the
+        # top-level list count alone is ambiguous at 2: it's either
+        # global+ordered ([funcs], [order]) or partitioned+unordered
+        # ([funcs], [partition]). Order lists always carry ASC/DESC
+        # markers; partition lists never do.
+        n_lists = args.count("], [") + 1
+        if n_lists >= 3:
+            continue  # partitioned (+ordered)
+        if n_lists == 2:
+            last = args.rsplit("], [", 1)[-1]
+            if " ASC" not in last and " DESC" not in last:
+                continue  # partitioned, no order — not global
+        out.append(next((ln for ln in lines if ln.startswith("Input")), ""))
+    return out
 
 
 def test_catalog_global_windows_only_on_bounded_axes(catalog_plans):

@@ -6,10 +6,15 @@ from __future__ import annotations
 
 import pytest
 
-from mapreducewordoccurences_spark.dedup.ngram import ngram_jaccard_pairs
+from pyspark.sql import functions as F
+
+from mapreducewordoccurences_spark.dedup.ngram import (
+    _shingle_pair_counts,
+    ngram_jaccard_pairs,
+)
 from mapreducewordoccurences_spark.dedup.prefix import (
+    prefix_filter_containment_pairs,
     prefix_filter_jaccard_pairs,
-    prefix_stats,
 )
 
 from tests.conftest import SF_DIR
@@ -41,14 +46,6 @@ def test_adversarial_small_corpus(spark):
         want = pairs_of(ngram_jaccard_pairs(docs, n=3, threshold=t))
         got = pairs_of(prefix_filter_jaccard_pairs(docs, n=3, threshold=t))
         assert got == want, t
-
-
-def test_prefix_index_fraction_shrinks(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    row = prefix_stats(docs, threshold=0.8).collect()[0]
-    assert 0 < row["prefix_postings"] < row["total_postings"]
-    # p = sz - ceil(0.8 sz) + 1 ≈ 0.2·sz (+1): comfortably under 40%
-    assert row["index_fraction"] < 0.4
 
 
 def test_bad_threshold_rejected(spark):
@@ -99,6 +96,18 @@ def test_random_corpora_match_python_reference(spark):
         assert got == expect, (t, len(got), len(expect))
 
 
+def uncapped_containment_pairs(docs, n, threshold):
+    """Reference containment join: every pair sharing a shingle, scored
+    from the uncapped posting self-join, C = |A∩B| / min(|A|,|B|)."""
+    counts = _shingle_pair_counts(docs, "doc_id", "text", n, None, False)
+    cont = F.col("__inter") / F.least(F.col("__na"), F.col("__nb"))
+    return counts.select(
+        "doc_a", "doc_b", cont.alias("containment"),
+        F.col("__na").alias("n_shingles_a"),
+        F.col("__nb").alias("n_shingles_b"),
+    ).where(F.col("containment") >= threshold)
+
+
 def cont_pairs_of(df):
     return {
         (r["doc_a"], r["doc_b"]): (
@@ -110,13 +119,8 @@ def cont_pairs_of(df):
 
 @pytest.mark.parametrize("threshold", [0.7, 0.9])
 def test_containment_identical_to_uncapped_posting_join(spark, threshold):
-    from mapreducewordoccurences_spark.dedup.ngram import ngram_containment_pairs
-    from mapreducewordoccurences_spark.dedup.prefix import (
-        prefix_filter_containment_pairs,
-    )
-
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    want = cont_pairs_of(ngram_containment_pairs(docs, n=3, threshold=threshold))
+    want = cont_pairs_of(uncapped_containment_pairs(docs, 3, threshold))
     got = cont_pairs_of(
         prefix_filter_containment_pairs(docs, n=3, threshold=threshold)
     )
@@ -124,11 +128,6 @@ def test_containment_identical_to_uncapped_posting_join(spark, threshold):
 
 
 def test_containment_adversarial_small_corpus(spark):
-    from mapreducewordoccurences_spark.dedup.ngram import ngram_containment_pairs
-    from mapreducewordoccurences_spark.dedup.prefix import (
-        prefix_filter_containment_pairs,
-    )
-
     rows = [
         (1, "a b c d e f g h i j k l m n o p"),   # long host
         (2, "a b c d e"),                          # fully contained in 1
@@ -139,7 +138,7 @@ def test_containment_adversarial_small_corpus(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     for t in (0.3, 0.6, 0.9, 1.0):
-        want = cont_pairs_of(ngram_containment_pairs(docs, n=3, threshold=t))
+        want = cont_pairs_of(uncapped_containment_pairs(docs, 3, t))
         got = cont_pairs_of(
             prefix_filter_containment_pairs(docs, n=3, threshold=t)
         )
@@ -152,10 +151,6 @@ def test_containment_random_differential(spark):
     stress the asymmetric probe/index split."""
     import itertools
     import random
-
-    from mapreducewordoccurences_spark.dedup.prefix import (
-        prefix_filter_containment_pairs,
-    )
 
     rng = random.Random(23)
     vocab = [f"w{i}" for i in range(25)]

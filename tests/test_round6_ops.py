@@ -1,8 +1,8 @@
 """Hand-computed goldens for the round-6 operators: substring-level
-dedup spans, k-core peel, group-aware split + leakage audit, and
-sequence-packing stats. (Oracle parity for the catalog rows is in
-test_oracle_parity.py; these pin the SEMANTICS on inputs small enough
-to verify by hand.)"""
+dedup spans, group-aware split + leakage audit, and sequence-packing
+stats; the k-core tests live in test_graph.py. (Oracle parity for the
+catalog rows is in test_oracle_parity.py; these pin the SEMANTICS on
+inputs small enough to verify by hand.)"""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ from mapreducewordoccurences_spark.dedup.substrings import (
     duplicate_window_spans,
     window_hashes,
 )
-from mapreducewordoccurences_spark.operators.graph import kcore_membership
 
 
 def _docs(spark, rows):
@@ -66,38 +65,6 @@ class TestDuplicateWindowSpans:
         docs = _docs(spark, [(1, " ".join(f"w{i}" for i in range(13)))])
         rows = window_hashes(docs, window=10).collect()
         assert sorted(r["pos"] for r in rows) == [0, 1, 2, 3]
-
-
-class TestKcoreMembership:
-    def test_triangle_survives_chain_peels(self, spark):
-        # chain 1-2-3 (peels at k=2) + triangle 4-5-6 (2-core)
-        edges = spark.createDataFrame(
-            [(1, 2), (2, 3), (4, 5), (5, 6), (4, 6)], "doc_a bigint, doc_b bigint"
-        )
-        got = {
-            r["node"]: r["core_degree"]
-            for r in kcore_membership(edges, k=2, iterations=4).collect()
-        }
-        assert got == {4: 2, 5: 2, 6: 2}
-
-    def test_pendant_peel_cascades(self, spark):
-        # path 1-2-3-4: first round peels 1 and 4, second peels 2,3
-        edges = spark.createDataFrame(
-            [(1, 2), (2, 3), (3, 4)], "doc_a bigint, doc_b bigint"
-        )
-        assert kcore_membership(edges, k=2, iterations=4).count() == 0
-        # ...but a single round has not converged yet: 2,3 still alive
-        assert kcore_membership(edges, k=2, iterations=1).count() == 2
-
-    def test_k1_keeps_every_connected_node(self, spark):
-        edges = spark.createDataFrame(
-            [(1, 2), (3, 3)], "doc_a bigint, doc_b bigint"
-        )  # self-loop dropped
-        got = {
-            r["node"]: r["core_degree"]
-            for r in kcore_membership(edges, k=1, iterations=3).collect()
-        }
-        assert got == {1: 1, 2: 1}
 
 
 class TestGroupSplitAndPacking:

@@ -1,110 +1,13 @@
-"""Round-7 operators: k-core guards, approximate triangle counts,
-portable SimHash, DSIR importance scores and repetition stats (the
-IVF∘PQ and codebook-determinism tests live in test_ann.py)."""
+"""Round-7 operators: portable SimHash, DSIR importance scores and
+repetition stats (the IVF∘PQ and codebook-determinism tests live in
+test_ann.py, the k-core guards and approximate triangle counts in
+test_graph.py)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from mapreducewordoccurences_spark.sources.readers import load_table
-
-
-class TestKcoreGuards:
-    def test_iterations_zero_raises(self, spark):
-        import pytest as _pytest
-
-        from mapreducewordoccurences_spark.operators.graph import (
-            kcore_membership,
-        )
-
-        edges = spark.createDataFrame(
-            [(1, 2)], "doc_a long, doc_b long"
-        )
-        with _pytest.raises(ValueError):
-            kcore_membership(edges, k=2, iterations=0)
-
-    def test_early_stop_returns_converged_core(self, spark):
-        """A long chain peels one pendant pair per round — deep peel
-        depth. With a huge iterations budget the convergence check
-        must stop at the fixed point and return the true (empty)
-        2-core without paying the remaining no-op rounds."""
-        from mapreducewordoccurences_spark.operators.graph import (
-            kcore_membership,
-        )
-
-        chain = [(i, i + 1) for i in range(12)]
-        edges = spark.createDataFrame(chain, "doc_a long, doc_b long")
-        out = kcore_membership(edges, k=2, iterations=50)
-        assert out.count() == 0
-        # and a triangle + pendant tail converges to exactly the triangle
-        tri = [(0, 1), (1, 2), (0, 2), (2, 3), (3, 4)]
-        edges2 = spark.createDataFrame(tri, "doc_a long, doc_b long")
-        got = {
-            (r["node"], r["core_degree"])
-            for r in kcore_membership(edges2, k=2, iterations=50).collect()
-        }
-        assert got == {(0, 2), (1, 2), (2, 2)}
-
-
-class TestTriangleApprox:
-    def _edges(self, spark, rows):
-        return spark.createDataFrame(rows, "doc_a long, doc_b long")
-
-    def test_complete_graph_exact_recovery(self, spark):
-        """K6 has C(6,3)=20 triangles; every wedge closes, so the
-        estimator is exact regardless of which wedges get sampled."""
-        from mapreducewordoccurences_spark.operators.graph import (
-            triangle_count_approx,
-        )
-
-        rows = [(a, b) for a in range(6) for b in range(a + 1, 6)]
-        out = triangle_count_approx(self._edges(spark, rows), n_samples=500).collect()[0]
-        assert out["n_nodes"] == 6 and out["n_edges"] == 15
-        assert out["n_wedges"] == 6 * 10  # 6 centers x C(5,2)
-        assert abs(out["est_triangles"] - 20.0) < 1e-9
-
-    def test_triangle_free_graph_estimates_zero(self, spark):
-        """A star has wedges but no closures: the estimate must be
-        exactly 0 (no sampled wedge can close)."""
-        from mapreducewordoccurences_spark.operators.graph import (
-            triangle_count_approx,
-        )
-
-        rows = [(0, b) for b in range(1, 8)]
-        out = triangle_count_approx(self._edges(spark, rows), n_samples=200).collect()[0]
-        assert out["n_wedges"] == 21  # C(7,2) at the hub only
-        assert out["est_triangles"] == 0.0
-
-    def test_deterministic_across_runs_and_partitioning(self, spark):
-        """xxhash64-seeded picks + row_number index: same estimate on
-        reruns and under a different input partitioning."""
-        from mapreducewordoccurences_spark.operators.graph import (
-            triangle_count_approx,
-        )
-
-        rows = [(a, b) for a in range(12) for b in range(a + 1, 12) if (a + b) % 3]
-        df = self._edges(spark, rows)
-        r1 = triangle_count_approx(df, n_samples=100).collect()[0]
-        r2 = triangle_count_approx(df.repartition(7), n_samples=100).collect()[0]
-        assert r1["est_triangles"] == r2["est_triangles"]
-        assert r1["n_sampled"] == r2["n_sampled"]
-
-    def test_mixed_graph_within_tolerance(self, spark):
-        """Two dense K5 cliques joined by a chain: 20 exact triangles;
-        stratified sampling at moderate k lands well within 10%."""
-        from mapreducewordoccurences_spark.operators.graph import (
-            triangle_count,
-            triangle_count_approx,
-        )
-
-        k5a = [(a, b) for a in range(5) for b in range(a + 1, 5)]
-        k5b = [(a + 10, b + 10) for a, b in k5a]
-        chain = [(4, 20), (20, 21), (21, 10)]
-        df = self._edges(spark, k5a + k5b + chain)
-        exact = triangle_count(df).collect()[0]["n_triangles"]
-        est = triangle_count_approx(df, n_samples=2000).collect()[0]["est_triangles"]
-        assert exact == 20
-        assert abs(est - exact) / exact <= 0.10
 
 
 class TestPortableSimhash:

@@ -40,26 +40,6 @@ class TestGlobalRank:
         assert got.select("r").distinct().count() == n
 
 
-class TestTriangleEdgeCases:
-    def test_wedge_free_graph_estimates_zero(self, spark):
-        """ADVICE r7: a graph whose every vertex has degree <= 1 has
-        no wedges; the estimator must return 0 (not NULL) for
-        est_triangles / n_wedges / n_sampled."""
-        from mapreducewordoccurences_spark.operators.graph import (
-            triangle_count_approx,
-        )
-
-        edges = spark.createDataFrame(
-            [(1, 2), (3, 4), (5, 6)], ["doc_a", "doc_b"]
-        )
-        row = triangle_count_approx(edges, n_samples=10).first()
-        assert row["n_nodes"] == 6
-        assert row["n_edges"] == 3
-        assert row["n_wedges"] == 0
-        assert row["n_sampled"] == 0
-        assert row["est_triangles"] == 0.0
-
-
 class TestGlobalNtile:
     def test_matches_sql_ntile(self, spark):
         """Differential vs F.ntile over the naive global window, and

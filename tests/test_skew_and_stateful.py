@@ -86,67 +86,6 @@ def test_stateful_running_user_totals(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_transform_with_state_running_user_totals(spark):
-    """transformWithStateInPandas (Spark 4 typed-state API, RocksDB
-    provider): same contract as the applyInPandasWithState version —
-    final per-user totals equal the batch aggregation."""
-    from mapreducewordoccurences_spark.streaming.stateful import (
-        ROCKSDB_STATE_CONF,
-        running_user_totals_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        # Not implementable without the dep: transformWithStateInPandas
-        # talks to the JVM state server over a protobuf-defined protocol
-        # (pyspark.sql.streaming.proto), so there is no protobuf-free
-        # list-state path. This sandbox has no protobuf and no network
-        # to vendor it; the applyInPandasWithState test above covers the
-        # identical stateful contract on the non-protobuf API.
-        pytest.skip("transformWithState needs protobuf (absent here, no network)")
-
-    d = tempfile.mkdtemp(prefix="stateful_tws_")
-    conf_key = next(iter(ROCKSDB_STATE_CONF))
-    prev = spark.conf.get(conf_key)
-    try:
-        for k, v in ROCKSDB_STATE_CONF.items():
-            spark.conf.set(k, v)
-        src = os.path.join(d, "src")
-        rows = [(i, 1 + (i % 3), float(i % 10), i * 1000) for i in range(100)]
-        df = spark.createDataFrame(
-            rows, "event_id bigint, user_id bigint, value double, ts bigint"
-        )
-        df.write.parquet(src)
-
-        stream = spark.readStream.schema(
-            "event_id bigint, user_id bigint, value double, ts bigint"
-        ).parquet(src)
-        q = (
-            running_user_totals_tws(stream)
-            .writeStream.format("memory")
-            .queryName("user_totals_tws")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-        got = {
-            r["user_id"]: (r["n_events"], r["total_value"])
-            for r in spark.sql("SELECT * FROM user_totals_tws").collect()
-        }
-        expected = {
-            r["user_id"]: (r["n"], r["tv"])
-            for r in df.groupBy("user_id")
-            .agg(F.count("*").alias("n"), F.sum("value").alias("tv"))
-            .collect()
-        }
-        assert got == expected
-    finally:
-        spark.conf.set(conf_key, prev)
-        shutil.rmtree(d, ignore_errors=True)
-
-
 class TestKeySkewStats:
     def test_hand_computed_shares(self, spark):
         from mapreducewordoccurences_spark.operators.skew import key_skew_stats

@@ -107,313 +107,6 @@ def test_bucketed_tables_join_without_exchange(spark, tmpd):
         spark.sql("DROP TABLE IF EXISTS bkt_right")
 
 
-def test_orc_roundtrip_with_pushdown(spark, tmpd):
-    from pyspark.sql import functions as F
-
-    from mapreducewordoccurences_spark.plans.explain import formatted_plan
-    from mapreducewordoccurences_spark.sources.readers import read_orc
-    from mapreducewordoccurences_spark.sources.sinks import write_orc
-
-    df = spark.createDataFrame(
-        [(i, f"s{i}", i % 3) for i in range(100)], "id bigint, s string, k int"
-    )
-    path = os.path.join(tmpd, "o")
-    write_orc(df, path, partition_by=["k"])
-    back = read_orc(spark, path).where(F.col("id") < 10).select("id", "s")
-    # ORC scan gets the same pushdown/pruning contract as parquet
-    plan = formatted_plan(back)
-    assert "PushedFilters" in plan and "id" in plan
-    assert back.count() == 10
-    # partition pruning on the partition column
-    pruned = read_orc(spark, path).where(F.col("k") == 1)
-    assert "PartitionFilters" in formatted_plan(pruned)
-    assert pruned.count() == sum(1 for i in range(100) if i % 3 == 1)
-
-
-class TestBinaryFileSource:
-    def test_reads_payload_and_glob_filters(self, spark, tmp_path):
-        from mapreducewordoccurences_spark.sources.readers import read_binary_files
-
-        (tmp_path / "a.bin").write_bytes(b"\x01\x02\x03")
-        (tmp_path / "b.bin").write_bytes(b"\xff" * 10)
-        (tmp_path / "skip.txt").write_text("nope")
-        df = read_binary_files(spark, str(tmp_path), glob="*.bin")
-        rows = {r["path"].rsplit("/", 1)[-1]: r for r in df.collect()}
-        assert set(rows) == {"a.bin", "b.bin"}
-        assert bytes(rows["a.bin"]["content"]) == b"\x01\x02\x03"
-        assert rows["b.bin"]["length"] == 10
-
-    def test_max_bytes_pushdown_skips_oversized(self, spark, tmp_path):
-        from mapreducewordoccurences_spark.sources.readers import read_binary_files
-
-        (tmp_path / "small.bin").write_bytes(b"ok")
-        (tmp_path / "big.bin").write_bytes(b"x" * 1000)
-        df = read_binary_files(spark, str(tmp_path), glob="*.bin", max_bytes_per_file=100)
-        names = [r["path"].rsplit("/", 1)[-1] for r in df.collect()]
-        assert names == ["small.bin"]
-        # the length predicate reaches the scan (metadata pushdown)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "PushedFilters" in plan and "length" in plan.split("PushedFilters")[1][:120]
-
-
-class TestTrainingShards:
-    def test_shard_count_determinism_and_order(self, spark, tmp_path):
-        from mapreducewordoccurences_spark.sources.sinks import write_training_shards
-
-        df = spark.range(200).withColumnRenamed("id", "doc_id")
-        p1, p2 = str(tmp_path / "e1"), str(tmp_path / "e2")
-        write_training_shards(df, p1, "doc_id", n_shards=4)
-        write_training_shards(df, p2, "doc_id", n_shards=4)
-
-        import glob as g
-
-        files1 = sorted(g.glob(f"{p1}/part-*"))
-        assert len(files1) == 4
-        # identical runs produce identical shard contents in order
-        r1 = [r["doc_id"] for r in spark.read.parquet(p1).collect()]
-        r2 = [r["doc_id"] for r in spark.read.parquet(p2).collect()]
-        assert sorted(r1) == list(range(200))
-        # per-file sequences match across the two writes
-        for f1, f2 in zip(files1, sorted(g.glob(f"{p2}/part-*"))):
-            a = [r["doc_id"] for r in spark.read.parquet(f1).collect()]
-            b = [r["doc_id"] for r in spark.read.parquet(f2).collect()]
-            assert a == b
-
-    def test_salt_changes_permutation(self, spark, tmp_path):
-        from mapreducewordoccurences_spark.sources.sinks import write_training_shards
-
-        df = spark.range(100).withColumnRenamed("id", "doc_id")
-        pa, pb = str(tmp_path / "s0"), str(tmp_path / "s1")
-        write_training_shards(df, pa, "doc_id", n_shards=2)
-        write_training_shards(df, pb, "doc_id", n_shards=2, salt="epoch1")
-        import glob as g
-
-        a0 = [r["doc_id"] for r in spark.read.parquet(sorted(g.glob(f"{pa}/part-*"))[0]).collect()]
-        b0 = [r["doc_id"] for r in spark.read.parquet(sorted(g.glob(f"{pb}/part-*"))[0]).collect()]
-        assert a0 != b0  # different epoch permutation
-        rows = [r["doc_id"] for r in spark.read.parquet(pb).collect()]
-        assert sorted(rows) == list(range(100))  # still a permutation
-
-    def test_max_records_per_file_caps(self, spark, tmp_path):
-        from mapreducewordoccurences_spark.sources.sinks import write_training_shards
-
-        df = spark.range(100).withColumnRenamed("id", "doc_id")
-        p = str(tmp_path / "capped")
-        write_training_shards(df, p, "doc_id", n_shards=2, max_records_per_file=20)
-        import glob as g
-
-        for f in g.glob(f"{p}/part-*"):
-            assert spark.read.parquet(f).count() <= 20
-
-
-def test_zorder_layout_tightens_rowgroup_stats(spark, tmp_path):
-    """A 2-D box predicate must intersect strictly fewer files'
-    min/max bounding boxes under the Z-order layout than under a
-    random layout — the stats-pruning win the writer exists for."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from mapreducewordoccurences_spark.sources.sinks import write_zorder
-    from tests.conftest import SF_DIR
-
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    zpath, rpath = str(tmp_path / "z"), str(tmp_path / "r")
-    write_zorder(orders, zpath, ["o_custkey", "o_totalprice"], num_files=16)
-    orders.repartition(16).write.mode("overwrite").parquet(rpath)
-
-    def boxes(path):
-        out = []
-        for f in glob.glob(f"{path}/*.parquet"):
-            md = pq.read_metadata(f)
-            sch = md.schema.to_arrow_schema()
-            idx = {sch.field(i).name: i for i in range(len(sch.names))}
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                ck = g.column(idx["o_custkey"]).statistics
-                tp = g.column(idx["o_totalprice"]).statistics
-                out.append((ck.min, ck.max, tp.min, tp.max))
-        return out
-
-    # box predicate: lowest quartile of both dimensions
-    import duckdb
-
-    con = duckdb.connect()
-    cmax, tmax = con.sql(
-        f"""SELECT quantile_cont(o_custkey, 0.25),
-                   quantile_cont(o_totalprice, 0.25)
-            FROM '{SF_DIR}/orders.parquet'"""
-    ).fetchone()
-    con.close()
-
-    def hits(bs):
-        return sum(1 for clo, chi, tlo, thi in bs if clo <= cmax and tlo <= tmax)
-
-    zb, rb = boxes(zpath), boxes(rpath)
-    assert len(zb) >= 8 and len(rb) >= 8
-    assert hits(zb) < hits(rb), (hits(zb), len(zb), hits(rb), len(rb))
-    # row counts preserved
-    assert spark.read.parquet(zpath).count() == orders.count()
-
-
-def test_kvtext_datasource_roundtrip(spark, tmp_path):
-    """write_csv_kv -> kvtext DataSource read must reproduce the
-    wordcount table exactly (the reference's output contract as a
-    first-class readable format)."""
-    from pyspark.sql import functions as F
-
-    from mapreducewordoccurences_spark.core.wordcount import count_words
-    from mapreducewordoccurences_spark.sources.kv_datasource import register_kvtext
-    from mapreducewordoccurences_spark.sources.sinks import write_csv_kv
-    from tests.conftest import SF_DIR
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    wc = count_words(docs, "text", sort=False)
-    path = str(tmp_path / "kv")
-    write_csv_kv(wc, path, "word", "count")
-
-    register_kvtext(spark)
-    back = (
-        spark.read.format("kvtext")
-        .schema("word string, count bigint")
-        .load(path)
-    )
-    a = {(r.word, r["count"]) for r in wc.collect()}
-    b = {(r.word, r["count"]) for r in back.collect()}
-    assert a == b and len(a) > 0
-    # a multi-file dir reads with one partition per file
-    n_files = len([f for f in __import__("os").listdir(path) if f.startswith("part-")])
-    assert back.rdd.getNumPartitions() == n_files
-
-
-def test_kvtext_datasource_value_tolerance(spark, tmp_path):
-    """Blank lines and '='-less lines skip; bad ints become NULL;
-    values keep everything after the first '='."""
-    p = tmp_path / "kv-weird.txt"
-    p.write_text("a=1\n\nnoequals\nb=x\nc=2=3\n")
-    from mapreducewordoccurences_spark.sources.kv_datasource import register_kvtext
-
-    register_kvtext(spark)
-    rows = {
-        r.key: r.value
-        for r in spark.read.format("kvtext")
-        .schema("key string, value string")
-        .load(str(p))
-        .collect()
-    }
-    assert rows == {"a": "1", "b": "x", "c": "2=3"}
-
-
-def test_file_bloom_index_prunes_and_never_misses(spark, tmp_path):
-    """Point lookups through the file-level Bloom index must read a
-    strict subset of files and return exactly the full-scan answer —
-    for every probed key, present or absent."""
-    from pyspark.sql import functions as F
-
-    from mapreducewordoccurences_spark.sources.file_index import (
-        build_file_bloom_index,
-        candidate_files,
-        point_lookup_with_index,
-    )
-
-    path = str(tmp_path / "keyed")
-    # 16 files, keys hash-scattered so no file-range pruning could help
-    spark.range(0, 4000).select(
-        F.concat(F.lit("user-"), F.col("id")).alias("k"),
-        (F.col("id") * 3).alias("payload"),
-    ).repartition(16).write.mode("overwrite").parquet(path)
-
-    index, m, h = build_file_bloom_index(
-        spark, path, "k", expected_keys_per_file=300
-    )
-    n_files = spark.read.parquet(path).select(
-        F.input_file_name()
-    ).distinct().count()
-
-    for probe in ["user-1234", "user-7", "user-99999"]:  # last one absent
-        cand = candidate_files(index, probe, m, h).count()
-        assert cand < n_files  # the index must actually prune
-        got = point_lookup_with_index(spark, path, "k", probe, index, m, h)
-        want = spark.read.parquet(path).where(F.col("k") == probe)
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, want.collect())
-        )
-
-
-def test_compact_parquet_right_sizes_files(spark, tmp_path):
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from mapreducewordoccurences_spark.sources.sinks import compact_parquet
-
-    src, dst = str(tmp_path / "frag"), str(tmp_path / "compact")
-    spark.range(0, 20000).select(
-        F.col("id"), F.md5(F.col("id").cast("string")).alias("payload")
-    ).repartition(32).write.mode("overwrite").parquet(src)
-    assert len(glob.glob(f"{src}/part-*")) == 32
-
-    n_out = compact_parquet(spark, src, dst, target_mb=1)
-    files = glob.glob(f"{dst}/part-*")
-    assert len(files) == n_out <= 4  # ~1.5 MB of data → a few files
-    assert spark.read.parquet(dst).count() == 20000
-
-
-def test_materialized_snapshot_time_travel(spark, tmp_path):
-    import os
-
-    from pyspark.sql import functions as F
-
-    from mapreducewordoccurences_spark.streaming.materialized import (
-        read_snapshot_version,
-        start_materialized_sum_count,
-    )
-
-    src = str(tmp_path / "src")
-    base = str(tmp_path / "mv")
-    os.makedirs(src)
-    spark.range(0, 100).select(
-        (F.col("id") % 3).alias("k"), F.col("id").cast("double").alias("v")
-    ).write.mode("append").parquet(src)
-    q = start_materialized_sum_count(
-        spark.readStream.schema("k bigint, v double").parquet(src),
-        "k", "v", base, str(tmp_path / "ck"),
-    )
-    q.awaitTermination(120)
-    spark.range(100, 200).select(
-        (F.col("id") % 3).alias("k"), F.col("id").cast("double").alias("v")
-    ).write.mode("append").parquet(src)
-    q2 = start_materialized_sum_count(
-        spark.readStream.schema("k bigint, v double").parquet(src),
-        "k", "v", base, str(tmp_path / "ck"),
-    )
-    q2.awaitTermination(120)
-
-    v0 = read_snapshot_version(spark, base, "v0")
-    assert v0.agg(F.sum("n_rows")).collect()[0][0] == 100  # old state intact
-
-
-def test_read_parquet_evolved_additive_column(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from mapreducewordoccurences_spark.sources.readers import read_parquet_evolved
-
-    v1, v2 = str(tmp_path / "t/v1"), str(tmp_path / "t/v2")
-    spark.range(0, 50).select(F.col("id"), F.lit("a").alias("src")).write.parquet(v1)
-    spark.range(50, 80).select(
-        F.col("id"), F.lit("b").alias("src"), (F.col("id") * 2).alias("score")
-    ).write.parquet(v2)
-
-    df = read_parquet_evolved(spark, v1, v2)
-    assert set(df.columns) == {"id", "src", "score"}
-    assert df.count() == 80
-    # pre-evolution rows surface the new column as NULL
-    assert df.where(F.col("src") == "a").where(F.col("score").isNull()).count() == 50
-    assert df.where(F.col("src") == "b").where(F.col("score").isNotNull()).count() == 30
-
-
 def test_csv_malformed_row_policies(spark, tmp_path):
     """PERMISSIVE + corrupt-record quarantine vs DROPMALFORMED vs
     FAILFAST — the three malformed-row contracts a crawl-scale CSV
@@ -446,3 +139,33 @@ def test_csv_malformed_row_policies(spark, tmp_path):
 
     with pytest.raises(Exception, match="(?i)malformed|FAILFAST"):
         read_csv(spark, str(p), schema="k int, v int", mode="FAILFAST").collect()
+
+
+def _write_rows(path, n):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path.parent.mkdir(parents=True, exist_ok=True)
+    pq.write_table(pa.table({"x": pa.array(range(n), type=pa.int64())}), path)
+
+
+def test_footer_row_count_skips_files_spark_ignores(spark, tmp_path):
+    """An aborted write leaves part files under ``_temporary/`` and
+    ``.spark-staging-*``; Spark's file index skips them, so the footer
+    count must too. "_"-prefixed partition directories (with "=")
+    stay visible, as they do to Spark."""
+    from mapreducewordoccurences_spark.sources.readers import parquet_row_count
+
+    t = tmp_path / "t.parquet"
+    _write_rows(t / "part-00000.parquet", 3)
+    _write_rows(t / "_temporary" / "0" / "task_x" / "part-00001.parquet", 2)
+    _write_rows(t / ".spark-staging-1" / "part-00002.parquet", 1)
+    assert spark.read.parquet(str(t)).count() == 3
+    assert parquet_row_count(str(tmp_path), "t") == 3
+
+    p = tmp_path / "p.parquet"
+    _write_rows(p / "_k=0" / "part-00000.parquet", 3)
+    _write_rows(p / "_k=1" / "part-00000.parquet", 2)
+    _write_rows(p / "_k=1" / "_temporary" / "part-00001.parquet", 4)
+    assert spark.read.parquet(str(p)).count() == 5
+    assert parquet_row_count(str(tmp_path), "p") == 5

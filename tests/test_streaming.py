@@ -11,7 +11,6 @@ import shutil
 import tempfile
 
 import pytest
-from pyspark.sql import functions as F
 
 from mapreducewordoccurences_spark.streaming import (
     read_text_stream,
@@ -133,102 +132,3 @@ def test_streaming_events_ts_normalization(spark):
     df, et = _as_event_time(ev, "ts")
     row = df.select(et).first()
     assert row[0].year >= 2024
-
-
-def test_kvtext_streaming_source_tails_new_files(spark, tmp_path):
-    """The kvtext streaming reader must pick up files exactly once:
-    two files at start, one more mid-stream, no dup rows."""
-    import time
-
-    from mapreducewordoccurences_spark.sources.kv_datasource import register_kvtext
-
-    src = tmp_path / "kvstream"
-    src.mkdir()
-    (src / "kv-0.txt").write_text("a=1\nb=2\n")
-    (src / "kv-1.txt").write_text("c=3\n")
-
-    register_kvtext(spark)
-    stream = (
-        spark.readStream.format("kvtext")
-        .schema("key string, value bigint")
-        .load(str(src))
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("kv_stream_test")
-        .outputMode("append")
-        .trigger(processingTime="0.2 seconds")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        (src / "kv-2.txt").write_text("d=4\n")
-        deadline = time.monotonic() + 30
-        want = {("a", 1), ("b", 2), ("c", 3), ("d", 4)}
-        got = set()
-        while time.monotonic() < deadline:
-            q.processAllAvailable()
-            got = {
-                (r.key, r.value)
-                for r in spark.sql("SELECT * FROM kv_stream_test").collect()
-            }
-            if got == want:
-                break
-            time.sleep(0.3)
-        assert got == want
-        # exactly once: no duplicate rows
-        n = spark.sql("SELECT count(*) AS n FROM kv_stream_test").collect()[0].n
-        assert n == 4
-    finally:
-        q.stop()
-
-
-def test_materialized_aggregate_matches_batch(spark, tmp_path):
-    """Stream a parquet directory in two availableNow passes; the
-    maintained snapshot must equal the one-shot batch aggregate."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from mapreducewordoccurences_spark.streaming.materialized import (
-        read_current_snapshot,
-        start_materialized_sum_count,
-    )
-
-    src = str(tmp_path / "src")
-    base = str(tmp_path / "mv")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-
-    df1 = spark.range(0, 500).select(
-        (F.col("id") % 7).alias("k"), (F.col("id") * 2).cast("double").alias("v")
-    )
-    df1.write.mode("append").parquet(src)
-
-    schema = "k bigint, v double"
-    q = start_materialized_sum_count(
-        spark.readStream.schema(schema).parquet(src), "k", "v", base, ckpt
-    )
-    q.awaitTermination(120)
-
-    df2 = spark.range(500, 900).select(
-        (F.col("id") % 7).alias("k"), (F.col("id") * 2).cast("double").alias("v")
-    )
-    df2.write.mode("append").parquet(src)
-    q2 = start_materialized_sum_count(
-        spark.readStream.schema(schema).parquet(src), "k", "v", base, ckpt
-    )
-    q2.awaitTermination(120)
-
-    snap = {
-        r.k: (r.sum_value, r.n_rows)
-        for r in read_current_snapshot(spark, base).collect()
-    }
-    want = {
-        r.k: (r.sum_value, r.n_rows)
-        for r in spark.read.parquet(src)
-        .groupBy("k")
-        .agg(F.sum("v").alias("sum_value"), F.count(F.lit(1)).alias("n_rows"))
-        .collect()
-    }
-    assert snap == want and len(snap) == 7

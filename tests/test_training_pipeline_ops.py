@@ -12,10 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from mapreducewordoccurences_spark.dedup.decontam import (
-    drop_contaminated,
-    ngram_overlap,
-)
+from mapreducewordoccurences_spark.dedup.decontam import ngram_overlap
 from mapreducewordoccurences_spark.dedup.exact import incremental_new_unique
 from mapreducewordoccurences_spark.functions.sampling import source_mix_weights
 from mapreducewordoccurences_spark.functions.text import repetition_stats
@@ -42,15 +39,6 @@ class TestNgramOverlap:
         # "a quick brown", "quick brown fox", "brown fox jumps", "fox jumps today"
         assert got[1]["n_shingles"] == 4
         assert got[1]["overlap_ratio"] == pytest.approx(0.5)
-
-    def test_drop_contaminated_removes_only_dirty(self, spark):
-        bench = _docs(spark, [(100, "alpha beta gamma delta")])
-        train = _docs(
-            spark,
-            [(1, "alpha beta gamma epsilon"), (2, "zeta eta theta iota kappa")],
-        )
-        kept = drop_contaminated(train, bench, n=3)
-        assert [r["doc_id"] for r in kept.collect()] == [2]
 
     def test_short_docs_have_no_shingles(self, spark):
         bench = _docs(spark, [(100, "alpha beta gamma")])
