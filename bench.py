@@ -388,29 +388,34 @@ def main() -> int:
     # the previous round's FULL local record — the driver's BENCH_r{N}
     # artifacts tail-capture stdout and can truncate the per-query
     # dump, which made r4→r5 comparison archaeology. The full record
-    # persists to BENCH_local_r{R}.json; "regressions" rides in both
+    # persists to artifacts/BENCH_local_r{R}.json; "regressions" rides in both
     # output lines (empty list = nothing >1.5× and >0.3 s slower).
     regressions: list[dict] = []
     prev_path = None
     try:
         repo_dir = os.path.dirname(os.path.abspath(__file__))
         sys.path.insert(0, repo_dir)
-        from tools.bench_diff import diff_records, latest_local_record, record_round
+        from tools.bench_diff import (
+            ARTIFACTS_DIR,
+            diff_records,
+            latest_local_record,
+            record_round,
+        )
 
         prev_path = os.environ.get(
             "SPARK_GRAFT_BENCH_PREV"
-        ) or latest_local_record(repo_dir, like=record)
+        ) or latest_local_record(like=record)
         if prev_path and os.path.exists(prev_path):
             with open(prev_path) as f:
                 regressions = diff_records(json.load(f), record)
         # round number comes from the newest record regardless of
         # comparability — a smoke run at another sf must not reset
         # the numbering back to r1
-        latest_any = latest_local_record(repo_dir)
+        latest_any = latest_local_record()
         rnd = os.environ.get("SPARK_GRAFT_ROUND") or str(
             (record_round(latest_any) if latest_any else 0) + 1
         )
-        out_path = os.path.join(repo_dir, f"BENCH_local_r{int(rnd)}.json")
+        out_path = os.path.join(ARTIFACTS_DIR, f"BENCH_local_r{int(rnd)}.json")
         with open(out_path, "w") as f:
             json.dump(
                 {
@@ -451,7 +456,7 @@ def main() -> int:
                 "cpus": int(cpus),
                 "runs_per_query": runs,
                 # full per-query prev/cur detail lives in the
-                # BENCH_local_r{R}.json record; the compact line keeps
+                # artifacts/BENCH_local_r{R}.json record; the compact line keeps
                 # the names so a tail capture still shows what moved
                 "regressions": [r["query"] for r in regressions],
                 "n_regressions": len(regressions),

@@ -12,13 +12,13 @@ needs.
 
 Layout:
   core/       wordcount parity core (reference semantics, SURVEY §2a)
-  operators/  relational operators (joins incl. as-of, aggs, windows, set ops)
-  sources/    readers & sinks (parquet/csv/json/text; kv-line sink)
+  operators/  relational operators (joins incl. as-of, aggs, windows)
+  sources/    table loader, footer row counts, Python DataSource
   functions/  scalar/text/similarity function surface
   dedup/      exact + MinHash-LSH + SimHash + n-gram-Jaccard dedup
-  multimodal/ binary-column (image/audio) plumbing with stubbed decoders
-  streaming/  Structured Streaming wordcount + windowed aggregations
-  plans/      plan inspection helpers (explain/shuffle audit)
+  multimodal/ binary-column (image/audio/video) plumbing, vendored codecs
+  streaming/  custom stateful operator + PSI drift monitor
+  queries/    the catalog: named queries with DuckDB oracles
 """
 
 __version__ = "0.1.0"

@@ -15,7 +15,7 @@ Exit-code contract (verified against the reference, FIXTURES.md):
 The collect-to-driver print is CLI-parity only: distinct-word output is
 small, and ``count_words`` sorts it in one ordered output partition.
 Library users at scale should write ``count_words(..., sort=False)``
-results with a DataFrame sink instead (sources/sinks.py).
+results with a DataFrame writer (``df.write``) instead.
 """
 
 from __future__ import annotations

@@ -58,7 +58,7 @@ def incremental_new_unique(
     Scale: the corpus side is the big one, so this is a shuffle hash
     join keyed by the uniform md5 — linear, skew-free. In production
     keep the corpus fingerprints as a table bucketed by fingerprint
-    (sources/sinks.py write_bucketed): the nightly anti-join then
+    (``df.write.bucketBy``): the nightly anti-join then
     shuffles only the new batch.
     """
     new_fp = new_df.select(

@@ -1,10 +1,7 @@
 from mapreducewordoccurences_spark.multimodal.media import (
     MEDIA_SCHEMA,
     IMAGE_META_SCHEMA,
-    fake_image_bytes,
     decode_image_meta,
-    extract_image_features,
-    resize_images,
     sample_frames,
     dhash_images,
     dhash_frames,
@@ -14,10 +11,7 @@ from mapreducewordoccurences_spark.multimodal.media import (
 __all__ = [
     "MEDIA_SCHEMA",
     "IMAGE_META_SCHEMA",
-    "fake_image_bytes",
     "decode_image_meta",
-    "extract_image_features",
-    "resize_images",
     "sample_frames",
     "dhash_images",
     "dhash_frames",

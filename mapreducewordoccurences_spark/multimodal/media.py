@@ -18,12 +18,10 @@ arrives in — is handled by a vendored codec (multimodal/jpeg.py:
 full Huffman/DCT decode incl. 4:2:0, restart markers, and — r11 —
 progressive SOF2 with successive approximation; encoders for planted
 corpora; cross-validated against javax.imageio in
-tests/test_jpeg.py). The engine's legacy self-describing test header
-(``fake_image_bytes``) still parses first (constant-time, used by
-corrupt-path tests), and Pillow remains a try-import fallback for
-the REMAINING formats (TIFF/WebP/...) — absent Pillow those yield
-NULL dims/features,
-the same graceful path corrupt bytes take, so jobs never fail on
+tests/test_jpeg.py), GIF by a vendored LZW codec (multimodal/gif.py),
+and Pillow remains a try-import fallback for the REMAINING formats
+(TIFF/WebP/...) — absent Pillow those yield NULL dims, the same
+graceful path corrupt bytes take, so jobs never fail on
 codec availability. The Spark-side contract — schemas,
 batch iteration, partitioning, UDF signatures — is identical on
 every path. Video frame sampling is header-driven: frame COUNTS fan
@@ -114,29 +112,6 @@ def bounded_persist(df: DataFrame) -> DataFrame:
     return out
 
 
-_MAGIC = b"FAKEIMG1"
-_HEADER = struct.Struct("<8sHHBB")  # magic, width, height, channels, n_frames
-
-
-def fake_image_bytes(width: int, height: int, channels: int = 3, n_frames: int = 1) -> bytes:
-    """Deterministic stand-in for an encoded image/clip: a parseable
-    header + a payload whose bytes are a simple position function."""
-    header = _HEADER.pack(_MAGIC, width, height, channels, n_frames)
-    body = bytes(
-        (x * 31 + 7) % 256 for x in range(min(width * height * channels, 4096))
-    )
-    return header + body
-
-
-def _parse_header(payload: bytes | None) -> tuple[int, int, int, int] | None:
-    if payload is None or len(payload) < _HEADER.size:
-        return None
-    magic, w, h, c, f = _HEADER.unpack_from(payload)
-    if magic != _MAGIC:
-        return None
-    return w, h, c, f
-
-
 # ---------------------------------------------------------------------------
 # Real image codec with ZERO optional deps: PNG / APNG via stdlib
 # ``zlib`` + ``struct`` (mirrors the stdlib-``wave`` audio move).
@@ -146,7 +121,7 @@ def _parse_header(payload: bytes | None) -> tuple[int, int, int, int] | None:
 # with shared sequence numbering). ``_png_meta`` / ``_png_pixels``
 # parse them back through the codec, so the catalog's media rows
 # exercise a real encode→decode round-trip in any Python. Pillow
-# remains the try-import fallback for OTHER formats (JPEG/GIF).
+# remains the try-import fallback for OTHER formats (TIFF/WebP/...).
 # ---------------------------------------------------------------------------
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -166,8 +141,8 @@ def _png_chunk(tag: bytes, data: bytes) -> bytes:
 
 def _png_frame_pixels(width: int, height: int, channels: int, frame: int) -> bytes:
     """Deterministic pixel bytes for synthetic frame ``frame``:
-    byte i = (i·31 + 7 + frame·13) mod 256 — same closed form as the
-    legacy fake body, so features/oracles stay arithmetic."""
+    byte i = (i·31 + 7 + frame·13) mod 256 — a closed form, so
+    oracles stay arithmetic."""
     import numpy as np  # noqa: PLC0415 — worker-side
 
     n = width * height * channels
@@ -390,29 +365,6 @@ def _nn_resample(
     return np.ascontiguousarray(arr[ys][:, xs]).tobytes()
 
 
-def _png_resize(payload: bytes, tw: int, th: int) -> bytes | None:
-    """Decode → nearest-neighbor resample every frame → re-encode,
-    all through the stdlib codec. Returns None for non-PNG bytes."""
-    meta = _png_meta(payload)
-    if meta is None:
-        return None
-    w, h, ch, _ = meta
-    streams = _png_frame_streams(payload)
-    if streams is None:
-        return None
-    frames_px = []
-    for stream in streams:
-        try:
-            raw = zlib.decompress(stream)
-        except zlib.error:
-            return None
-        px = _png_unfilter(raw, w, h, ch)
-        if px is None:
-            return None
-        frames_px.append(_nn_resample(px, w, h, ch, tw, th))
-    return png_encode(tw, th, ch, len(frames_px), frames=frames_px)
-
-
 def _try_import_pil():
     """Pillow, or None. Evaluated lazily inside worker batches so the
     real-codec path lights up wherever the executor image has Pillow,
@@ -441,8 +393,7 @@ def _real_image_meta(payload: bytes | None) -> tuple[int, int, int, int] | None:
 
 
 def _any_image_meta(payload: bytes | None) -> tuple[int, int, int, int] | None:
-    """Fake-header first (cheap constant-time parse), then the stdlib
-    PNG/APNG codec, then the vendored JPEG codec (multimodal/jpeg.py —
+    """The stdlib PNG/APNG codec first, then the vendored JPEG codec (multimodal/jpeg.py —
     baseline + progressive), then the vendored GIF codec
     (multimodal/gif.py — r11), then Pillow for the remaining formats
     (TIFF/WebP/...)."""
@@ -450,8 +401,7 @@ def _any_image_meta(payload: bytes | None) -> tuple[int, int, int, int] | None:
     from mapreducewordoccurences_spark.multimodal.jpeg import jpeg_meta  # noqa: PLC0415
 
     return (
-        _parse_header(payload)
-        or _png_meta(payload)
+        _png_meta(payload)
         or jpeg_meta(payload)
         or gif_meta(payload)
         or _real_image_meta(payload)
@@ -539,9 +489,9 @@ def make_fake_media(df: DataFrame, id_col: str = "doc_id", kind: str = "image") 
 
 def decode_image_meta(df: DataFrame, payload_col: str = "payload", id_col: str = "media_id") -> DataFrame:
     """payload → (media_id, width, height, channels, n_frames) via
-    Arrow-batched mapInPandas. Test-header payloads parse in constant
-    time; anything else goes through Pillow when installed (PNG/JPEG/
-    GIF, n_frames for animated formats). Undecodable payloads yield
+    Arrow-batched mapInPandas, through the vendored PNG/APNG, JPEG and
+    GIF codecs, then Pillow when installed (``_any_image_meta``;
+    n_frames for animated formats). Undecodable payloads yield
     NULL dims (never fail the job — at 100 TB some corruption is
     guaranteed)."""
 
@@ -561,168 +511,6 @@ def decode_image_meta(df: DataFrame, payload_col: str = "payload", id_col: str =
     return df.select(id_col, payload_col).mapInPandas(decode, IMAGE_META_SCHEMA)
 
 
-def extract_image_features(
-    df: DataFrame,
-    dim: int = 16,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-) -> DataFrame:
-    """payload → fixed-dim float feature vector (array<float>).
-
-    Deterministic byte-histogram projection (a stand-in for a vision
-    encoder) so downstream similarity/dedup operators
-    (functions/similarity.py) have real inputs to chew on. Test-header
-    payloads featurize over the fake body; real images featurize over
-    Pillow-DECODED pixel bytes when Pillow is installed (codec
-    framing stripped — the histogram sees pixels, not compression
-    artifacts). The batch shape — Arrow in, array<float> out — is
-    exactly what a model-backed UDF uses.
-    """
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("features", T.ArrayType(T.FloatType()), True),
-        ]
-    )
-
-    # plain int — closures ship via cloudpickle and struct.Struct
-    # objects don't pickle
-    hdr_size = _HEADER.size
-
-    def _featurizable_bytes(p):
-        if p is None:
-            return None
-        if _parse_header(p) is not None:
-            return p[hdr_size:]
-        png_px = _png_pixels(p)
-        if png_px is not None:
-            return png_px
-        image_mod = _try_import_pil()
-        if image_mod is None:
-            return None
-        import io  # noqa: PLC0415
-
-        try:
-            with image_mod.open(io.BytesIO(p)) as img:
-                return img.tobytes()
-        except Exception:  # noqa: BLE001
-            return None
-
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for p in pdf[payload_col]:
-                # undecodable payloads yield NULL features, matching
-                # decode_image_meta (don't featurize garbage bytes)
-                body = _featurizable_bytes(p)
-                if body is None:
-                    feats.append(None)
-                    continue
-                hist = [0.0] * dim
-                for i, byte in enumerate(body[:2048]):
-                    hist[byte % dim] += 1.0
-                total = sum(hist) or 1.0
-                feats.append([v / total for v in hist])
-            yield pd.DataFrame({"media_id": pdf[id_col], "features": feats})
-
-    return df.select(id_col, payload_col).mapInPandas(featurize, out_schema)
-
-
-def resize_images(
-    df: DataFrame,
-    target_width: int,
-    target_height: int,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-) -> DataFrame:
-    """payload → payload re-encoded at (target_width, target_height).
-
-    Test-header payloads take the stub resample (header dims rewritten,
-    fake body nearest-neighbor-sampled so output size tracks the
-    target); real images decode → resize → re-encode in their original
-    format through Pillow when installed, NULL otherwise. The
-    Spark-side contract is identical on every path: binary in / binary
-    out, Arrow-batched, constant memory per batch — resized payloads
-    REPLACE originals in the same column so downstream stages are
-    layout-agnostic.
-    """
-    if not (0 < target_width <= 0xFFFF and 0 < target_height <= 0xFFFF):
-        raise ValueError(
-            f"target dims must be in 1..65535 (header fields are uint16), "
-            f"got {target_width}x{target_height}"
-        )
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField(payload_col, T.BinaryType(), True),
-            T.StructField("width", T.IntegerType(), True),
-            T.StructField("height", T.IntegerType(), True),
-        ]
-    )
-    hdr_size = _HEADER.size
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        header = _struct.Struct("<8sHHBB")  # Struct objects don't pickle
-        def real_resize(p):
-            image_mod = _try_import_pil()
-            if image_mod is None:
-                return None
-            import io  # noqa: PLC0415
-
-            try:
-                with image_mod.open(io.BytesIO(p)) as img:
-                    fmt = img.format
-                    buf = io.BytesIO()
-                    img.resize((target_width, target_height)).save(buf, format=fmt)
-                    return buf.getvalue()
-            except Exception:  # noqa: BLE001
-                return None
-
-        for pdf in batches:
-            payloads, widths, heights = [], [], []
-            for p in pdf[payload_col]:
-                hdr = _parse_header(p)
-                if hdr is None:
-                    # stdlib PNG/APNG first (always available), Pillow
-                    # for other formats, NULL for the rest
-                    resized = None
-                    if p is not None:
-                        resized = _png_resize(p, target_width, target_height)
-                        if resized is None:
-                            resized = real_resize(p)
-                    payloads.append(resized)
-                    widths.append(target_width if resized is not None else None)
-                    heights.append(target_height if resized is not None else None)
-                    continue
-                w, h, c, f = hdr
-                body = p[hdr_size:]
-                n_out = min(target_width * target_height * c, 4096)
-                n_in = len(body)
-                # nearest-neighbor over the stub body
-                out_body = (
-                    bytes(body[(i * n_in) // n_out] for i in range(n_out))
-                    if n_in and n_out
-                    else b""
-                )
-                payloads.append(
-                    header.pack(_MAGIC, target_width, target_height, c, f) + out_body
-                )
-                widths.append(target_width)
-                heights.append(target_height)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    payload_col: payloads,
-                    "width": pd.array(widths, dtype="Int32"),
-                    "height": pd.array(heights, dtype="Int32"),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(resize, out_schema)
-
-
 def sample_frames(
     df: DataFrame,
     every_nth: int = 2,
@@ -730,9 +518,9 @@ def sample_frames(
     id_col: str = "media_id",
 ) -> DataFrame:
     """Video-style frame sampling: one output row per kept frame index
-    (media_id, frame_idx). Frame COUNTS come from the test header, or
-    from Pillow's n_frames for real animated formats (GIF/APNG) when
-    installed. Real decoders would additionally attach the frame
+    (media_id, frame_idx). Frame COUNTS come from the codec's n_frames
+    (``_any_image_meta``: APNG acTL, GIF frame count, Pillow for other
+    animated formats). Real decoders would additionally attach the frame
     bytes; attaching them is one more column in this same iterator,
     the row-multiplicity plumbing is the part that matters to the
     plan.

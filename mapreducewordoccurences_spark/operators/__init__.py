@@ -1,36 +1,14 @@
-from mapreducewordoccurences_spark.operators.joins import asof_join, semi_join, anti_join, range_join
-from mapreducewordoccurences_spark.operators.aggregates import (
-    decimal_sum,
-    decimal_avg,
-    top_k,
-    rollup_agg,
-    cube_agg,
-)
+from mapreducewordoccurences_spark.operators.joins import asof_join, semi_join, anti_join
+from mapreducewordoccurences_spark.operators.aggregates import decimal_sum, decimal_avg
 from mapreducewordoccurences_spark.operators.windows import top_k_per_group, running_agg, lag_delta
-from mapreducewordoccurences_spark.operators.setops import (
-    union_all,
-    union_distinct,
-    intersect,
-    except_all,
-    except_distinct,
-)
 
 __all__ = [
     "asof_join",
     "semi_join",
     "anti_join",
-    "range_join",
     "decimal_sum",
     "decimal_avg",
-    "top_k",
-    "rollup_agg",
-    "cube_agg",
     "top_k_per_group",
     "running_agg",
     "lag_delta",
-    "union_all",
-    "union_distinct",
-    "intersect",
-    "except_all",
-    "except_distinct",
 ]

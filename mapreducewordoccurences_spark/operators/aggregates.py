@@ -3,7 +3,7 @@
 The reference's only aggregate is a grouped count via a shared locked
 hashmap (src/chash.c:100-153); Spark's partial→final HashAggregate
 subsumes it. These helpers add the numeric-determinism layer the
-engine's money-typed aggregates need, plus rollup/cube/top-k wrappers.
+engine's money-typed aggregates need.
 
 Why decimal: floating-point SUM is order-dependent, and at cluster
 scale partial-aggregation order is nondeterministic run to run. Every
@@ -16,9 +16,7 @@ the same casts).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -43,26 +41,6 @@ def decimal_avg(col: Column | str, scale: int = 6, alias: str | None = None) -> 
     c = F.col(col) if isinstance(col, str) else col
     out = F.sum(c.cast(f"decimal(28,{scale})")).cast("double") / F.count(c)
     return out.alias(alias) if alias else out
-
-
-def top_k(df: DataFrame, order_by: Sequence[Column], k: int) -> DataFrame:
-    """Global top-k. ``orderBy().limit(k)`` lets Spark plan
-    TakeOrderedAndProject: each partition keeps a k-heap, the driver
-    merges k×partitions rows — no global sort, no full shuffle. The
-    ordering should be total (add a unique tiebreak column) for
-    deterministic results."""
-    return df.orderBy(*order_by).limit(k)
-
-
-def rollup_agg(df: DataFrame, keys: Sequence[str], aggs: Sequence[Column]) -> DataFrame:
-    """Hierarchical subtotals: (k1,k2,…) ⊃ (k1,…) ⊃ … ⊃ grand total.
-    Single shuffle; Spark expands grouping sets map-side."""
-    return df.rollup(*keys).agg(*aggs)
-
-
-def cube_agg(df: DataFrame, keys: Sequence[str], aggs: Sequence[Column]) -> DataFrame:
-    """All 2^n grouping-set combinations."""
-    return df.cube(*keys).agg(*aggs)
 
 
 def fixedpoint_sum(expr: str, scale: int = 4, alias: str | None = None) -> Column:

@@ -31,7 +31,7 @@ def snapshot_diff(
     Returns (keys…, change_type, old/new compare columns). The diff is
     ONE full outer join on the key — the minimal shuffle for this
     semantics; with both snapshots bucketed by the key
-    (sources/sinks.py write_bucketed) it is exchange-free. Column
+    (``df.write.bucketBy``) it is exchange-free. Column
     comparison uses null-safe equality (``<=>``) so a NULL→value
     transition counts as an update, not an accidental "unchanged".
     At 100 TB the output is typically ≪ input (most keys unchanged) —

@@ -3,7 +3,7 @@
 The reference has no joins at all (SURVEY.md §2d) — hash/sort-merge/
 broadcast/semi/anti are Spark built-ins reached through ``df.join``.
 What Spark's DataFrame API lacks natively is the time-series as-of
-join and an ergonomic range join; both are implemented here as
+join and a bucketed interval-overlap join; both are implemented here as
 compositions of built-in operators (no Python in the data path), so
 Catalyst/AQE still own the physical strategy.
 """
@@ -127,53 +127,6 @@ def asof_join(
         out_name = c + suffix if c in left_names else c
         out_cols.append(F.col(f"__match.{c}").alias(out_name))
     return matched.select(*out_cols)
-
-
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | Sequence[str],
-    left_point: str,
-    right_lower: str,
-    right_upper: str,
-    bucket_width: int | None = None,
-) -> DataFrame:
-    """Point-in-interval join: left.point ∈ [right.lower, right.upper).
-
-    Naive form is an equi-join on ``on`` plus two range predicates —
-    Catalyst plans that as a join with post-filter, which is fine when
-    ``on`` is selective. When intervals are short relative to the point
-    domain, pass ``bucket_width`` to add a bucket equi-key on both
-    sides (intervals explode into the buckets they overlap), turning
-    the plan into a proper equi-join that scales: shuffle is then
-    proportional to data + interval/bucket overlap, never the cross
-    product.
-    """
-    keys = _as_list(on)
-    cond = (F.col(f"__l.{left_point}") >= F.col(f"__r.{right_lower}")) & (
-        F.col(f"__l.{left_point}") < F.col(f"__r.{right_upper}")
-    )
-    for k in keys:
-        cond = cond & (F.col(f"__l.{k}") == F.col(f"__r.{k}"))
-
-    if bucket_width is None:
-        out = left.alias("__l").join(right.alias("__r"), on=cond, how="inner")
-        return out.select("__l.*", *[F.col(f"__r.{c}").alias(c) for c in right.columns if c not in keys])
-
-    lb = left.withColumn("__bucket", (F.col(left_point) / F.lit(bucket_width)).cast("long"))
-    rb = right.withColumn(
-        "__buckets",
-        F.sequence(
-            (F.col(right_lower) / F.lit(bucket_width)).cast("long"),
-            (F.col(right_upper) / F.lit(bucket_width)).cast("long"),
-        ),
-    ).withColumn("__bucket", F.explode("__buckets")).drop("__buckets")
-    cond_b = cond & (F.col("__l.__bucket") == F.col("__r.__bucket"))
-    out = lb.alias("__l").join(rb.alias("__r"), on=cond_b, how="inner")
-    return out.select(
-        *[F.col(f"__l.{c}").alias(c) for c in left.columns],
-        *[F.col(f"__r.{c}").alias(c) for c in right.columns if c not in keys],
-    )
 
 
 def interval_overlap_join(

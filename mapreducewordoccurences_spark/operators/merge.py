@@ -9,8 +9,8 @@ partitions that contain touched keys — pair with a partition-pruned
 write for the at-scale path).
 
 Plan shape: one anti-join keyed by the primary key (shuffle hash join;
-exchange-free if both sides are bucketed by the key —
-sources/sinks.py write_bucketed), plus a per-key latest-version pick
+exchange-free if both sides are bucketed by the key with
+``df.write.bucketBy``), plus a per-key latest-version pick
 on the update stream (WindowGroupLimit-prunable rank-1). Nothing here
 is driver-side; delete handling is a filter on a tombstone column.
 """

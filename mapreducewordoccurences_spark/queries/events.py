@@ -1428,9 +1428,8 @@ def q_session_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle): both define a session break as a silence strictly longer
     than 30 minutes (session_window's half-open [ts, ts+gap) merge ≡
     islands' gap > 1800s; the testdata has no exact-1800s gap, probed
-    at every sf). This is the same operator the streaming path uses
-    (streaming/windows.py session_event_counts) — batch/stream
-    session semantics verified identical through the driver gate."""
+    at every sf). The same ``session_window`` operator runs unchanged
+    on a streaming DataFrame with a watermark."""
     events = _t(spark, sf_dir, "events")
     ev = events.select(
         "user_id",

@@ -433,8 +433,7 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-interval range join of lineitem quantities into bands.
     The band table is tiny → broadcast nested-loop with the range
-    predicate; at scale with many intervals use
-    operators.joins.range_join(bucket_width=...) for an equi-join plan."""
+    predicate."""
     li = _t(spark, sf_dir, "lineitem").select("l_quantity")
     bands = F.broadcast(
         spark.createDataFrame(
@@ -494,8 +493,6 @@ def q_lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL of two grouped scans — concatenation only, no
     dedup shuffle."""
-    from mapreducewordoccurences_spark.operators.setops import union_all
-
     cust = (
         _t(spark, sf_dir, "customer")
         .groupBy(F.col("c_nationkey").alias("nationkey"))
@@ -508,7 +505,7 @@ def q_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.lit("supplier").alias("side"), "nationkey", "n")
     )
-    return union_all(cust, supp)
+    return cust.unionByName(supp)
 
 
 @register(
@@ -852,7 +849,7 @@ def q_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n_name
     """,
 )
-def q_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_rich_idle_customers_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: customers richer than the global positive-
     balance average with no jumbo (>400k) order. The scalar subquery becomes
     a broadcast cross-join of a 1-row aggregate (never a driver-side
@@ -898,15 +895,13 @@ def q_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiset EXCEPT ALL (bag semantics — multiplicities subtract,
     unlike the distinct EXCEPT elsewhere in the catalog). Spark plans
     it as a single hash aggregation over tagged counts."""
-    from mapreducewordoccurences_spark.operators.setops import except_all
-
     cust = _t(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nationkey")
     )
     supp = _t(spark, sf_dir, "supplier").select(
         F.col("s_nationkey").alias("nationkey")
     )
-    return except_all(cust, supp).groupBy("nationkey").agg(
+    return cust.exceptAll(supp).groupBy("nationkey").agg(
         F.count(F.lit(1)).alias("n")
     )
 
@@ -926,15 +921,13 @@ def q_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiset INTERSECT ALL (pairwise with the EXCEPT ALL query:
     min-of-multiplicities semantics)."""
-    from mapreducewordoccurences_spark.operators.setops import intersect
-
     cust = _t(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nationkey")
     )
     supp = _t(spark, sf_dir, "supplier").select(
         F.col("s_nationkey").alias("nationkey")
     )
-    return intersect(cust, supp, all=True).groupBy("nationkey").agg(
+    return cust.intersectAll(supp).groupBy("nationkey").agg(
         F.count(F.lit(1)).alias("n")
     )
 

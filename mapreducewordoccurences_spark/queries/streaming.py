@@ -7,7 +7,82 @@ module registers its queries with the shared registry.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+import uuid
+from collections.abc import Callable
+
+from pyspark.sql.streaming import StreamingQuery
+
 from mapreducewordoccurences_spark.queries._shared import *  # noqa: F401,F403
+
+# every row's query drains one availableNow micro-batch; one that is
+# still running after this long is stopped and the row fails
+STREAM_TIMEOUT_S = 300
+
+
+def _table_stream(spark: SparkSession, sf_dir: str, name: str, schema) -> DataFrame:
+    """One testdata table as a file stream: file streams need a
+    DIRECTORY source, so glob-filter to the table's file in ``sf_dir``."""
+    return (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", f"{name}.parquet")
+        .parquet(sf_dir)
+    )
+
+
+def _run_stream(
+    spark: SparkSession,
+    prefix: str,
+    start: Callable[[str], StreamingQuery],
+    read: Callable[[str], DataFrame],
+) -> DataFrame:
+    """Run one availableNow streaming query to completion in a fresh
+    work dir and return what ``read`` makes of its sink, materialized on
+    the driver before the dir is removed. ``start(work)`` starts the
+    query (checkpoint and sink under ``work``); ``read(work)`` builds
+    the result. A query that has not finished within
+    ``STREAM_TIMEOUT_S`` is stopped and raises TimeoutError: the row
+    never reads a partial sink, and no query outlives its checkpoint."""
+    work = tempfile.mkdtemp(prefix=prefix)
+    try:
+        q = start(work)
+        if not q.awaitTermination(STREAM_TIMEOUT_S):
+            q.stop()
+            raise TimeoutError(
+                f"streaming query {q.name or q.id} did not finish "
+                f"within {STREAM_TIMEOUT_S} s"
+            )
+        out = read(work)
+        rows = out.collect()
+        return spark.createDataFrame(rows, out.schema)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _run_to_memory(
+    spark: SparkSession,
+    prefix: str,
+    df: DataFrame,
+    output_mode: str,
+    finish: Callable[[DataFrame], DataFrame] = lambda t: t,
+) -> DataFrame:
+    """``_run_stream`` into a uniquely named memory sink; ``finish``
+    maps the sink table to the row's result."""
+    sink = f"{prefix}{uuid.uuid4().hex[:8]}"
+
+    def start(work: str) -> StreamingQuery:
+        return (
+            df.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode(output_mode)
+            .option("checkpointLocation", f"{work}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    return _run_stream(spark, prefix, start, lambda _work: finish(spark.table(sink)))
+
 
 @register(
     "streaming_psi_monitor_batch",
@@ -53,44 +128,34 @@ def q_streaming_psi_monitor_batch(spark: SparkSession, sf_dir: str) -> DataFrame
     STREAMING path (source → foreachBatch → sink) computed exactly
     what batch SQL says it should. Fresh temp checkpoint/metrics dirs
     per invocation keep reruns deterministic (batch_id is always 0)."""
-    import shutil
-    import tempfile
-
     from mapreducewordoccurences_spark.streaming.drift_monitor import (
         freeze_reference,
         start_psi_monitor,
     )
 
     events = _t(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="psi_monitor_q_")
-    try:
-        ref_dir = f"{work}/ref"
-        metrics = f"{work}/metrics"
-        ckpt = f"{work}/ckpt"
+
+    def start(work: str) -> StreamingQuery:
         freeze_reference(
-            events.where(F.col("user_id") % 2 == 0), "value", 5.0, ref_dir
+            events.where(F.col("user_id") % 2 == 0), "value", 5.0, f"{work}/ref"
         )
-        # file streams need a DIRECTORY source; glob-filter to the one
-        # table file inside the sf dir
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
+        stream = _table_stream(spark, sf_dir, "events", events.schema)
+        return start_psi_monitor(
+            stream, "value", 5.0, f"{work}/ref", f"{work}/metrics", f"{work}/ckpt"
         )
-        q = start_psi_monitor(stream, "value", 5.0, ref_dir, metrics, ckpt)
-        q.awaitTermination(300)
-        # batch_id is a partition column of the metrics log (the
-        # idempotent-replay layout), so its read-back type is inferred
-        # from the directory name — cast to the contract's bigint
-        out = spark.read.parquet(metrics).select(
+
+    # batch_id is a partition column of the metrics log (the
+    # idempotent-replay layout), so its read-back type is inferred
+    # from the directory name — cast to the contract's bigint
+    return _run_stream(
+        spark,
+        "psi_monitor_q_",
+        start,
+        lambda work: spark.read.parquet(f"{work}/metrics").select(
             F.col("batch_id").cast("bigint").alias("batch_id"),
             "psi", "n_buckets", "n_batch", "n_ref",
-        )
-        # materialize before the temp dirs vanish
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+    )
 
 
 @register(
@@ -127,66 +192,58 @@ def q_streaming_wordcount_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctness contract still pins EVERY count while the driver only
     ever sees one row at any scale. Covers the native state-store agg
     next to streaming_psi_monitor_batch's foreachBatch-metrics path."""
-    import shutil
-    import tempfile
-
     from mapreducewordoccurences_spark.functions.text import tokens
 
     docs = _t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="stream_wc_q_")
-    out_dir = f"{work}/counts"
-    try:
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("pathGlobFilter", "documents.parquet")
-            .parquet(sf_dir)
-        )
-        counts = (
-            stream.select(F.explode(tokens("text", lowercase=True)).alias("word"))
-            .groupBy("word")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
+    counts = (
+        _table_stream(spark, sf_dir, "documents", docs.schema)
+        .select(F.explode(tokens("text", lowercase=True)).alias("word"))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
 
+    def start(work: str) -> StreamingQuery:
         def write_counts(batch_df: DataFrame, _batch_id: int) -> None:
             # complete-mode replay: each batch carries the full state,
             # so overwrite is the idempotent sink contract
-            batch_df.write.mode("overwrite").parquet(out_dir)
+            batch_df.write.mode("overwrite").parquet(f"{work}/counts")
 
-        q = (
+        return (
             counts.writeStream.foreachBatch(write_counts)
             .outputMode("complete")
             .option("checkpointLocation", f"{work}/ckpt")
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
-        fold = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("word"),
-                            F.lit("="),
-                            F.col("cnt").cast("string"),
-                        )
-                    ),
-                    1,
-                    15,
+
+    fold = (
+        F.conv(
+            F.substring(
+                F.md5(
+                    F.concat(
+                        F.col("word"),
+                        F.lit("="),
+                        F.col("cnt").cast("string"),
+                    )
                 ),
-                16,
-                10,
-            ).cast("long")
-            % F.lit(1000000007)
-        )
-        agg = spark.read.parquet(out_dir).agg(
+                1,
+                15,
+            ),
+            16,
+            10,
+        ).cast("long")
+        % F.lit(1000000007)
+    )
+    return _run_stream(
+        spark,
+        "stream_wc_q_",
+        start,
+        lambda work: spark.read.parquet(f"{work}/counts").agg(
             F.count(F.lit(1)).alias("n_words"),
             F.sum("cnt").cast("bigint").alias("total_tokens"),
             F.sum(fold).cast("bigint").alias("counts_hash"),
-        )
-        rows = agg.collect()  # one row — materialize before cleanup
-        return spark.createDataFrame(rows, agg.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+    )
 
 
 @register(
@@ -206,46 +263,24 @@ def q_streaming_dedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming row: psi monitor covers foreachBatch, wordcount parity
     covers stateful aggregation, this covers the dedup state
     operator (the streaming face of the exact-dedup tier)."""
-    import shutil
-    import tempfile
-    import uuid
-
     events = _t(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="stream_dedup_q_")
-    sink = f"dedup_parity_{uuid.uuid4().hex[:8]}"
-    try:
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
+    stream = _table_stream(spark, sf_dir, "events", events.schema)
+    distinct_pairs = (
+        stream.select(
+            "user_id",
+            "event_type",
+            F.timestamp_micros(ts_micros(stream, "ts")).alias("__et"),
         )
-        distinct_pairs = (
-            stream.select(
-                "user_id",
-                "event_type",
-                F.timestamp_micros(ts_micros(stream, "ts")).alias("__et"),
-            )
-            .withWatermark("__et", "1 hour")
-            .dropDuplicates(["user_id", "event_type"])
-        )
-        q = (
-            distinct_pairs.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        out = (
-            spark.table(sink)
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .withWatermark("__et", "1 hour")
+        .dropDuplicates(["user_id", "event_type"])
+    )
+    return _run_to_memory(
+        spark,
+        "stream_dedup_q_",
+        distinct_pairs,
+        "append",
+        lambda t: t.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")),
+    )
 
 
 @register(
@@ -270,20 +305,10 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the batch semantics the oracle states. Fourth streaming
     operator driver-verified (foreachBatch, state-store agg, dedup
     state, now join state)."""
-    import shutil
-    import tempfile
-    import uuid
-
     events = _t(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="stream_ij_q_")
-    sink = f"sij_{uuid.uuid4().hex[:8]}"
 
     def side(event_type: str, alias: str) -> DataFrame:
-        s = (
-            spark.readStream.schema(events.schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
+        s = _table_stream(spark, sf_dir, "events", events.schema)
         return (
             s.where(F.col("event_type") == event_type)
             .select(
@@ -293,32 +318,22 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withWatermark(f"{alias}_ts", "2 hours")
         )
 
-    try:
-        purchases, views = side("purchase", "p"), side("view", "v")
-        joined = purchases.join(
-            views,
-            (F.col("p_user") == F.col("v_user"))
-            & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-            & (F.col("v_ts") <= F.col("p_ts")),
-        )
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        out = (
-            spark.table(sink)
-            .groupBy(F.col("p_user").alias("user_id"))
-            .agg(F.count(F.lit(1)).alias("n_view_purchase_pairs"))
-        )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    purchases, views = side("purchase", "p"), side("view", "v")
+    joined = purchases.join(
+        views,
+        (F.col("p_user") == F.col("v_user"))
+        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
+        & (F.col("v_ts") <= F.col("p_ts")),
+    )
+    return _run_to_memory(
+        spark,
+        "stream_ij_q_",
+        joined,
+        "append",
+        lambda t: t.groupBy(F.col("p_user").alias("user_id")).agg(
+            F.count(F.lit(1)).alias("n_view_purchase_pairs")
+        ),
+    )
 
 
 @register(
@@ -339,42 +354,22 @@ def q_streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFr
     equal to ~1e-12 but not bit-equal, and the contract here is the
     state machine's bookkeeping, not float associativity. Fifth
     streaming operator driver-verified."""
-    import shutil
-    import tempfile
-    import uuid
-
     from mapreducewordoccurences_spark.streaming.stateful import (
         running_user_totals,
     )
 
     events = _t(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="stream_state_q_")
-    sink = f"sut_{uuid.uuid4().hex[:8]}"
-    try:
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        q = (
-            running_user_totals(stream)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        out = spark.table(sink).select(
+    return _run_to_memory(
+        spark,
+        "stream_state_q_",
+        running_user_totals(_table_stream(spark, sf_dir, "events", events.schema)),
+        "update",
+        lambda t: t.select(
             "user_id",
             "n_events",
             F.round("total_value", 2).alias("total_value_2dp"),
-        )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+    )
 
 
 @register(
@@ -401,10 +396,6 @@ def q_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash-match order-independent. At scale this is the dimension
     pattern for streams: the per-batch broadcast costs |dim|, the
     stream side never shuffles for the join."""
-    import shutil
-    import tempfile
-    import uuid
-
     ev = _t(spark, sf_dir, "events")
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     nat = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -412,30 +403,11 @@ def q_streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.join(nat, cust.c_nationkey == nat.n_nationkey)
         .select(F.col("c_custkey").alias("user_id"), "n_name")
     )
-    work = tempfile.mkdtemp(prefix="stream_enrich_")
-    sink = f"enrich_{uuid.uuid4().hex[:8]}"
-    try:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        enriched = stream.join(F.broadcast(dim), "user_id")
-        agg = enriched.groupBy("n_name").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            decimal_sum("value", 4, "total_value"),
-        )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        out = spark.table(sink)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    enriched = _table_stream(spark, sf_dir, "events", ev.schema).join(
+        F.broadcast(dim), "user_id"
+    )
+    agg = enriched.groupBy("n_name").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        decimal_sum("value", 4, "total_value"),
+    )
+    return _run_to_memory(spark, "stream_enrich_", agg, "complete")

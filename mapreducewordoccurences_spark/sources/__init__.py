@@ -1,22 +1,6 @@
-from mapreducewordoccurences_spark.sources.readers import TABLES, load_table, read_text, read_csv, read_json, read_parquet
-from mapreducewordoccurences_spark.sources.sinks import (
-    start_foreach_batch_sink,
-    write_bucketed,
-    write_csv_kv,
-    write_json,
-    write_parquet,
-)
+from mapreducewordoccurences_spark.sources.readers import TABLES, load_table
 
 __all__ = [
     "TABLES",
     "load_table",
-    "read_text",
-    "read_csv",
-    "read_json",
-    "read_parquet",
-    "write_parquet",
-    "write_bucketed",
-    "start_foreach_batch_sink",
-    "write_csv_kv",
-    "write_json",
 ]

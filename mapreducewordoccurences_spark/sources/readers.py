@@ -2,10 +2,11 @@
 
 The reference has exactly one source: a whole-file slurp into RAM
 (src/main.c:74-110). The engine generalizes to Spark's distributed,
-out-of-core sources; parquet is the primary format (driver testdata),
-text is the reference-parity path.
+out-of-core sources; parquet is the primary format (driver testdata,
+read by ``load_table``), text is the reference-parity path
+(``core.wordcount.count_words_in_file``).
 
-All readers go through ``spark.read`` so Catalyst predicate pushdown /
+Tables load through ``spark.read`` so Catalyst predicate pushdown /
 column pruning / partition pruning apply. At 100 TB the parquet reader
 is vectorized and split-planned by ``spark.sql.files.maxPartitionBytes``.
 """
@@ -101,64 +102,3 @@ def parquet_row_count(sf_dir: str, name: str) -> int:
     full-scan ``df.count()`` job (VERDICT r11 ask #5); the persisted
     ANN indexes carry the same number in their build-time metadata."""
     return parquet_footer_rows(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def read_parquet(spark: SparkSession, path: str, nanos_as_long: bool = True) -> DataFrame:
-    if nanos_as_long:
-        _enable_nanos(spark)
-    return spark.read.parquet(path)
-
-
-def read_text(spark: SparkSession, path: str, whole_file: bool = False) -> DataFrame:
-    """Text source: DataFrame[value: string], one row per line.
-
-    ``whole_file`` preserves whole-document semantics (the reference's
-    model) at the cost of one record per file — only for small files.
-    """
-    return spark.read.text(path, wholetext=whole_file)
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema=None,
-    header: bool = True,
-    sep: str = ",",
-    mode: str = "PERMISSIVE",
-    corrupt_col: str | None = None,
-) -> DataFrame:
-    """CSV source with an explicit malformed-row policy — at crawl
-    scale some rows ARE broken, and silently dropping them is a data
-    bug. ``mode``:
-
-    - PERMISSIVE (default): broken rows parse to nulls; pass
-      ``corrupt_col`` to also capture the raw line in that column
-      (quarantine-table pattern: filter it IS NOT NULL, write to a
-      review sink, continue the pipeline on the clean rows).
-    - DROPMALFORMED: silently discard broken rows (counted only by
-      comparing counts — prefer PERMISSIVE + quarantine).
-    - FAILFAST: abort the job on the first broken row (contract
-      ingestion).
-
-    ``corrupt_col`` requires an explicit schema (Spark's contract for
-    columnNameOfCorruptRecord: the column must be declared in the
-    schema as string). Spark refuses plans that reference ONLY the
-    corrupt column (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — cache() the
-    frame before counting/quarantining on it alone.
-    """
-    reader = spark.read.option("header", header).option("sep", sep)
-    reader = reader.option("mode", mode)
-    if corrupt_col is not None:
-        reader = reader.option("columnNameOfCorruptRecord", corrupt_col)
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)
-
-
-def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)

@@ -77,8 +77,8 @@ def start_psi_monitor(
         # Partition by batch_id + dynamic partition overwrite: replay of
         # a failed epoch rewrites ONLY that batch's partition instead of
         # appending a duplicate row — exactly-once metrics without a
-        # transactional sink (same layout test_foreach_batch_sink_
-        # idempotent_layout exercises for the generic sink).
+        # transactional sink (test_streaming_psi_monitor_replay_
+        # idempotent pins it).
         (
             row.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

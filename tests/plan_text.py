@@ -4,8 +4,9 @@ The 100 TB design rule this engine holds itself to (SURVEY.md §4,
 BASELINE.json north star): filters and projections reach the parquet
 scan, small dims broadcast, shuffles are counted and justified, and no
 row-at-a-time Python sits in a hot path. These helpers make those
-properties assertable in tests (tests/test_plans.py) instead of
-eyeballed — a plan regression fails CI, not the 1000-executor run.
+properties assertable in the plan audits (tests/test_plans.py and
+the per-operator plan checks) instead of eyeballed — a plan regression
+fails CI, not the 1000-executor run.
 
 Parsing matches Spark 4 EXPLAIN output: FORMATTED mode lists each
 operator as a numbered detail block ("(5) Exchange"), SIMPLE mode

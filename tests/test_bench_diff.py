@@ -90,6 +90,17 @@ def test_latest_local_record_filters_by_comparability(tmp_path):
     assert record_round(str(tmp_path / "BENCH_local_r5.json")) == 5
 
 
+def test_latest_local_record_is_found_under_artifacts():
+    # bench.py reads its regression baseline from, and writes its
+    # record to, the repo's artifacts/ dir; the root holds none
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    latest = latest_local_record()
+    assert latest is not None
+    assert os.path.dirname(latest) == os.path.join(root, "artifacts")
+    assert record_round(latest) >= 30  # the newest record on file
+    assert latest_local_record(root) is None
+
+
 def test_latest_sf1_record_before_round_excludes_self(tmp_path):
     # ADVICE r9 #3: a re-run within round N must baseline against the
     # newest artifact from a round < N, never the file it overwrites.

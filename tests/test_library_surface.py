@@ -10,7 +10,13 @@ Reachability is a static AST scan by name: a definition is reached
 when reached code mentions its name as a ``Name``, an ``Attribute``,
 an imported alias or a string constant. A definition's own body does
 not reach it, so dead code that only calls itself, or other dead
-code, stays unreached.
+code, stays unreached. Inside the package an ``import`` is not a
+caller, and neither is any module-level statement of an
+``__init__.py``: a re-export only makes a name importable, it does not
+run it.
+
+A second check keeps each top-level name bound once per package
+module, so no definition is shadowed by a later one of the same name.
 """
 
 from __future__ import annotations
@@ -34,9 +40,8 @@ KEPT_ROOTS = {
 }
 
 
-def _non_test_files() -> list[Path]:
-    files = sorted(PACKAGE.rglob("*.py"))
-    files += sorted((ROOT / "tools").rglob("*.py"))
+def _callers_outside_package() -> list[Path]:
+    files = sorted((ROOT / "tools").rglob("*.py"))
     files += [
         p
         for p in sorted((ROOT / "perfbench").rglob("*.py"))
@@ -46,9 +51,10 @@ def _non_test_files() -> list[Path]:
     return files
 
 
-def _names(node: ast.AST) -> set[str]:
-    """Every name a node mentions: identifiers, attributes, imported
-    aliases and identifier-like string constants."""
+def _names(node: ast.AST, *, imports: bool = True) -> set[str]:
+    """Every name a node mentions: identifiers, attributes,
+    identifier-like string constants and, when ``imports`` is true,
+    imported aliases."""
     out: set[str] = set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
@@ -56,7 +62,8 @@ def _names(node: ast.AST) -> set[str]:
         elif isinstance(n, ast.Attribute):
             out.add(n.attr)
         elif isinstance(n, ast.alias):
-            out.add(n.name.rsplit(".", 1)[-1])
+            if imports:
+                out.add(n.name.rsplit(".", 1)[-1])
         elif isinstance(n, ast.Constant) and isinstance(n.value, str):
             if n.value.isidentifier():
                 out.add(n.value)
@@ -72,28 +79,32 @@ def _is_registered(node: ast.AST) -> bool:
     return False
 
 
+def _package_modules():
+    for path in sorted(PACKAGE.rglob("*.py")):
+        yield path, ast.parse(path.read_text(), filename=str(path))
+
+
 def unreached_definitions() -> list[str]:
     """Package definitions that no root reaches. The roots are every
-    name mentioned by non-test code outside the package's top-level
-    definitions (module-level statements, ``__init__`` re-exports,
-    tools, the benchmarks, the driver entry), by ``@register`` queries
-    and by the kept roots; a reached definition reaches every name its
-    own body mentions. A cluster of definitions that only call each
-    other is unreached as a whole."""
+    name mentioned by tools, the benchmarks and the driver entry, by
+    module-level statements of package modules other than
+    ``__init__.py``, by ``@register`` queries and by the kept roots; a
+    reached definition reaches every name its own body mentions.
+    Package imports and ``__init__`` re-exports reach nothing. A
+    cluster of definitions that only call each other is unreached as a
+    whole."""
     reached: set[str] = set(KEPT_ROOTS)
+    for path in _callers_outside_package():
+        reached |= _names(ast.parse(path.read_text(), filename=str(path)))
     defs = []
-    for path in _non_test_files():
-        tree = ast.parse(path.read_text(), filename=str(path))
-        if PACKAGE not in path.parents:
-            reached |= _names(tree)
-            continue
+    for path, tree in _package_modules():
         for node in tree.body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 defs.append((path, node))
                 if _is_registered(node):
                     reached.add(node.name)
-            else:
-                reached |= _names(node)
+            elif path.name != "__init__.py":
+                reached |= _names(node, imports=False)
     expanded: set[int] = set()
     grew = True
     while grew:
@@ -101,13 +112,45 @@ def unreached_definitions() -> list[str]:
         for i, (_, node) in enumerate(defs):
             if i not in expanded and node.name in reached:
                 expanded.add(i)
-                reached |= _names(node)
+                reached |= _names(node, imports=False)
                 grew = True
     return [
         f"{path.relative_to(PACKAGE)}:{node.lineno} {node.name}"
         for i, (path, node) in enumerate(defs)
         if i not in expanded
     ]
+
+
+def _bound_names(node: ast.stmt) -> list[str]:
+    """Names a module-level statement binds: a def or class, the
+    targets of an assignment, or an import."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, (ast.Import, ast.ImportFrom)):
+        return [(a.asname or a.name).split(".")[0] for a in node.names]
+    targets = []
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+
+
+def shadowed_names() -> list[str]:
+    """Top-level names that one package module binds more than once;
+    only the last binding is reachable by name."""
+    out = []
+    for path, tree in _package_modules():
+        lines: dict[str, list[int]] = {}
+        for node in tree.body:
+            for name in _bound_names(node):
+                lines.setdefault(name, []).append(node.lineno)
+        out += [
+            f"{path.relative_to(PACKAGE)}:{','.join(map(str, ls))} {name}"
+            for name, ls in lines.items()
+            if len(ls) > 1
+        ]
+    return out
 
 
 def test_every_definition_has_a_non_test_caller():
@@ -118,3 +161,11 @@ def test_every_definition_has_a_non_test_caller():
         + "\n  ".join(unreached)
     )
 
+
+def test_no_module_binds_a_top_level_name_twice():
+    shadowed = shadowed_names()
+    assert not shadowed, (
+        "package modules that bind a top-level name more than once "
+        "(the earlier binding is unreachable by name):\n  "
+        + "\n  ".join(shadowed)
+    )

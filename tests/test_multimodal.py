@@ -1,6 +1,7 @@
 """Multimodal plumbing tests: binary payload columns through
-Arrow-batched mapInPandas decoders (decode is a deterministic fake;
-the Spark-side schema/batching/partitioning is the thing under test).
+Arrow-batched mapInPandas decoders — the stdlib PNG/APNG and WAV
+codecs, dHash and audio fingerprints, and the Spark-side
+schema/batching/partitioning around them.
 """
 
 from __future__ import annotations
@@ -11,20 +12,19 @@ from pyspark.sql import functions as F
 from mapreducewordoccurences_spark.multimodal import (
     MEDIA_SCHEMA,
     decode_image_meta,
-    extract_image_features,
-    fake_image_bytes,
     sample_frames,
 )
+from mapreducewordoccurences_spark.multimodal.media import png_encode
 
 
 @pytest.fixture(scope="module")
 def media_df(spark):
     rows = [
-        (1, "image", fake_image_bytes(64, 48, 3, 1), ("s3://x/1", "image/fake", 100)),
-        (2, "image", fake_image_bytes(320, 240, 3, 1), ("s3://x/2", "image/fake", 200)),
-        (3, "video", fake_image_bytes(16, 16, 3, 10), ("s3://x/3", "video/fake", 300)),
-        (4, "image", b"garbage-not-an-image", ("s3://x/4", "image/fake", 20)),
-        (5, "image", None, ("s3://x/5", "image/fake", 0)),
+        (1, "image", png_encode(64, 48, 3, 1), ("s3://x/1", "image/png", 100)),
+        (2, "image", png_encode(320, 240, 3, 1), ("s3://x/2", "image/png", 200)),
+        (3, "video", png_encode(16, 16, 3, 10), ("s3://x/3", "image/apng", 300)),
+        (4, "image", b"garbage-not-an-image", ("s3://x/4", "image/png", 20)),
+        (5, "image", None, ("s3://x/5", "image/png", 0)),
     ]
     return spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(3)
 
@@ -39,18 +39,6 @@ def test_decode_image_meta(media_df):
     assert got[5] == (None, None, None, None)
 
 
-def test_extract_features_shape_and_determinism(media_df):
-    out = extract_image_features(media_df, dim=16)
-    rows = {r["media_id"]: r["features"] for r in out.collect()}
-    assert len(rows[1]) == 16
-    assert abs(sum(rows[1]) - 1.0) < 1e-6  # normalized histogram
-    # deterministic across runs / partitionings
-    rows2 = {r["media_id"]: r["features"] for r in
-             extract_image_features(media_df.repartition(1), dim=16).collect()}
-    assert rows[2] == rows2[2]
-    assert rows[5] is None
-
-
 def test_sample_frames_fanout(media_df):
     out = sample_frames(media_df, every_nth=2).collect()
     by_id = {}
@@ -59,62 +47,6 @@ def test_sample_frames_fanout(media_df):
     assert sorted(by_id[3]) == [0, 2, 4, 6, 8]  # 10 frames, every 2nd
     assert sorted(by_id[1]) == [0]
     assert 4 not in by_id  # corrupt payload contributes no frames
-
-
-def test_features_feed_similarity_operators(spark, media_df):
-    """The multimodal feature output plugs straight into the ANN
-    operator — the media→embedding→dedup pipeline composes."""
-    from mapreducewordoccurences_spark.functions.similarity import brute_force_knn
-
-    feats = extract_image_features(media_df, dim=16).where(F.col("features").isNotNull())
-    emb = feats.select(F.col("media_id").alias("vec_id"), F.col("features").alias("embedding"))
-    knn = brute_force_knn(emb, emb.where(F.col("vec_id") == 1), k=2)
-    got = knn.collect()
-    assert len(got) == 2
-    assert all(r["query_id"] == 1 for r in got)
-
-
-def test_resize_images_rewrites_dims_and_payload(media_df):
-    from mapreducewordoccurences_spark.multimodal import decode_image_meta, resize_images
-
-    resized = resize_images(media_df, target_width=32, target_height=24)
-    rows = {r["media_id"]: r for r in resized.collect()}
-    # decodable payloads come back at the target dims…
-    for mid in (1, 2, 3):
-        assert (rows[mid]["width"], rows[mid]["height"]) == (32, 24)
-        assert rows[mid]["payload"] is not None
-    # …and re-decode to the new header (round-trip through the codec)
-    meta = {
-        r["media_id"]: (r["width"], r["height"])
-        for r in decode_image_meta(resized).collect()
-    }
-    assert meta[1] == (32, 24) and meta[2] == (32, 24)
-    # garbage/NULL payloads stay NULL, never crash the batch
-    assert rows[4]["payload"] is None and rows[5]["payload"] is None
-    # output body shrank for the big image (32*24*3 vs 320*240*3 capped)
-    assert len(rows[2]["payload"]) < len(
-        {r["media_id"]: r for r in media_df.collect()}[2]["payload"]
-    )
-
-
-def test_resize_images_honors_col_names_and_validates_dims(spark, media_df):
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from mapreducewordoccurences_spark.multimodal import resize_images
-
-    renamed = media_df.select(
-        F.col("media_id").alias("media_id"), F.col("payload").alias("blob")
-    )
-    out = resize_images(renamed, 8, 8, payload_col="blob")
-    assert set(out.columns) == {"media_id", "blob", "width", "height"}
-    assert out.count() == media_df.count()
-
-    # uint16 header fields: reject out-of-range targets up front
-    with _pytest.raises(ValueError):
-        resize_images(media_df, 70000, 8)
-    with _pytest.raises(ValueError):
-        resize_images(media_df, 8, 0)
 
 
 def test_make_fake_media_closed_form_dims(spark):
@@ -157,43 +89,15 @@ def _png_bytes(w: int, h: int, rgb=(255, 0, 0)) -> bytes:
     return sig + chunk(b"IHDR", ihdr) + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
 
 
-def _pil_present() -> bool:
-    from mapreducewordoccurences_spark.multimodal.media import _try_import_pil
-
-    return _try_import_pil() is not None
-
-
 def test_real_codec_decode_png(spark):
-    rows = [(1, _png_bytes(3, 2)), (2, fake_image_bytes(20, 18, 3, 1)), (3, b"junk")]
+    rows = [(1, _png_bytes(3, 2)), (3, b"junk")]
     df = spark.createDataFrame(rows, "media_id long, payload binary")
     got = {r["media_id"]: r for r in decode_image_meta(df).collect()}
-    # fake-header and corrupt paths are codec-independent
-    assert (got[2]["width"], got[2]["height"]) == (20, 18)
+    # the corrupt path is codec-independent
     assert got[3]["width"] is None
     # foreign PNG bytes decode through the stdlib codec — no Pillow
     assert (got[1]["width"], got[1]["height"], got[1]["channels"]) == (3, 2, 3)
     assert got[1]["n_frames"] == 1
-
-
-def test_real_codec_features_and_resize(spark):
-    from mapreducewordoccurences_spark.multimodal.media import resize_images
-
-    rows = [(1, _png_bytes(4, 4)), (2, fake_image_bytes(16, 16, 3, 1))]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-
-    feats = {r["media_id"]: r["features"] for r in extract_image_features(df).collect()}
-    assert feats[2] is not None and len(feats[2]) == 16
-    resized = {r["media_id"]: r for r in resize_images(df, 8, 8).collect()}
-    assert (resized[2]["width"], resized[2]["height"]) == (8, 8)
-    # PNG featurizes over DECODED pixels and resizes through the
-    # stdlib codec — both paths real in any Python
-    assert feats[1] is not None and abs(sum(feats[1]) - 1.0) < 1e-6
-    assert (resized[1]["width"], resized[1]["height"]) == (8, 8)
-    # round-trip: the re-encoded payload decodes at target dims
-    rt = decode_image_meta(
-        spark.createDataFrame([(1, resized[1]["payload"])], "media_id long, payload binary")
-    ).collect()[0]
-    assert (rt["width"], rt["height"]) == (8, 8)
 
 
 # ---- audio: REAL stdlib-wave codec path (no optional deps) ----------

@@ -1,13 +1,13 @@
 """Operator-level tests for paths not covered by catalog queries:
-forward as-of join, bucketed range join, LSH-kNN recall, sliding
-streaming windows."""
+forward as-of join, kNN recall (LSH, IVF, quantized), resample
+gap-fill and the bucketed interval-overlap join."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from mapreducewordoccurences_spark.operators.joins import asof_join, range_join
+from mapreducewordoccurences_spark.operators.joins import asof_join
 from mapreducewordoccurences_spark.sources.readers import load_table, ts_micros
 
 from tests.conftest import SF_DIR
@@ -56,23 +56,6 @@ def test_asof_join_inclusive_tie(spark):
         assert out[0]["rv"] == "R", direction
 
 
-def test_range_join_bucketed_matches_naive(spark):
-    """Bucketed (equi-join) range join ≡ naive theta-join."""
-    points = spark.range(0, 2000).select(
-        F.lit(1).alias("g"), (F.col("id") % 500).alias("p"), F.col("id").alias("pid")
-    )
-    intervals = spark.createDataFrame(
-        [(1, lo, lo + w) for lo in range(0, 500, 50) for w in (10, 60)],
-        "g int, lo bigint, hi bigint",
-    )
-    naive = range_join(points, intervals, on="g", left_point="p",
-                       right_lower="lo", right_upper="hi")
-    bucketed = range_join(points, intervals, on="g", left_point="p",
-                          right_lower="lo", right_upper="hi", bucket_width=64)
-    key = lambda r: (r["pid"], r["lo"], r["hi"])
-    assert sorted(map(key, naive.collect())) == sorted(map(key, bucketed.collect()))
-
-
 def test_lsh_knn_recall_vs_brute_force(spark):
     """Multi-table sign-LSH must recover most true top-5 neighbors."""
     from mapreducewordoccurences_spark.functions.similarity import (
@@ -118,32 +101,6 @@ def test_ivf_knn_recall_vs_brute_force(spark):
     full = ivf_knn(emb, queries, k=5, nlist=16, nprobe=16)
     full_pairs = {(r["query_id"], r["neighbor_id"]) for r in full.collect()}
     assert full_pairs == exact_pairs
-
-
-def test_sliding_window_counts(spark, tmp_path):
-    import datetime as dt
-
-    from mapreducewordoccurences_spark.streaming import sliding_event_counts
-
-    base = dt.datetime(2024, 1, 1, 0, 0, 0)
-    rows = [(base + dt.timedelta(minutes=m), "click", 1, 1.0) for m in [0, 20, 50]]
-    src = str(tmp_path / "ev")
-    df = spark.createDataFrame(rows, "ts timestamp, event_type string, user_id bigint, value double")
-    df.write.parquet(src)
-    stream = spark.readStream.schema(
-        "ts timestamp, event_type string, user_id bigint, value double"
-    ).parquet(src)
-    out = sliding_event_counts(stream, window="1 hour", slide="30 minutes")
-    q = (out.writeStream.format("memory").queryName("slide")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {
-        (r["window"]["start"].strftime("%H:%M"), r["n_events"])
-        for r in spark.sql("SELECT * FROM slide").collect()
-    }
-    # events at :00,:20,:50 → window 23:30 has 2 (0,20), 00:00 has 3,
-    # 00:30 has 1 (50)
-    assert got == {("23:30", 2), ("00:00", 3), ("00:30", 1)}
 
 
 def test_asof_join_null_timestamps_yield_null_match(spark):

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from mapreducewordoccurences_spark.dedup.exact import drop_exact_dups
 from mapreducewordoccurences_spark.functions.text import token_count
 from mapreducewordoccurences_spark.sources.readers import load_table
-from mapreducewordoccurences_spark.sources.sinks import write_parquet
 
 from tests.conftest import SF_DIR
 
@@ -69,11 +68,9 @@ def test_corpus_build_pipeline(spark, outdir):
 
     # 4. write partitioned by lang, read back, verify
     path = os.path.join(outdir, "corpus")
-    write_parquet(
-        packed.select("doc_id", "lang", "source", "n_tokens", "pack_id"),
-        path,
-        partition_by=["lang"],
-    )
+    packed.select("doc_id", "lang", "source", "n_tokens", "pack_id").write.mode(
+        "overwrite"
+    ).partitionBy("lang").parquet(path)
     back = spark.read.parquet(path)
     assert back.count() == n_gated
     # partition pruning works on the written layout

@@ -11,7 +11,7 @@ import re
 
 import pytest
 
-from mapreducewordoccurences_spark.plans.explain import (
+from tests.plan_text import (
     codegen_spans,
     count_exchanges,
     formatted_plan,
@@ -173,7 +173,7 @@ def test_ivfpq_probe_prunes_partitions(spark, tmp_path):
 
 
 def test_lsh_knn_single_corpus_scan(spark):
-    from mapreducewordoccurences_spark.plans.explain import count_scans
+    from tests.plan_text import count_scans
 
     # all n_tables bucket ids come from ONE projected array + posexplode;
     # a per-table union would scan the corpus n_tables (16) times.
@@ -261,7 +261,7 @@ def test_q21_bounded_exchanges(spark):
 
 
 def test_decontaminate_broadcasts_bench_single_corpus_shuffle(spark):
-    from mapreducewordoccurences_spark.plans.explain import count_scans
+    from tests.plan_text import count_scans
 
     df = q(spark, "decontaminate_ngram_overlap")
     # benchmark shingle set broadcast; the training corpus is scanned
@@ -286,7 +286,7 @@ def test_incremental_dedup_no_full_row_shuffle(spark):
 def test_source_mix_weights_single_agg_shuffle(spark):
     # per-source agg is the only hash exchange; the one-row total
     # broadcasts back (no second corpus pass — one scan)
-    from mapreducewordoccurences_spark.plans.explain import count_scans
+    from tests.plan_text import count_scans
 
     df = q(spark, "source_mix_weights")
     assert count_scans(df) == 1

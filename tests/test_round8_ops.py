@@ -80,7 +80,7 @@ class TestGlobalNtile:
         config-bounded), never above the customer scan."""
         import re
 
-        from mapreducewordoccurences_spark.plans.explain import formatted_plan
+        from tests.plan_text import formatted_plan
         from mapreducewordoccurences_spark.queries import QUERIES
 
         df = QUERIES["ntile_customer_value_quartiles"](
@@ -221,7 +221,7 @@ class TestCapPerKey:
         from mapreducewordoccurences_spark.functions.sampling import (
             cap_per_key,
         )
-        from mapreducewordoccurences_spark.plans.explain import formatted_plan
+        from tests.plan_text import formatted_plan
 
         docs = load_table(spark, "/root/testdata/sf0.001", "documents")
         plan = formatted_plan(cap_per_key(docs, "source", 5))

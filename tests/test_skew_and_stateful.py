@@ -1,9 +1,5 @@
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -40,50 +36,6 @@ def test_salted_join_matches_plain_join(spark):
     assert {(r["k"], r["count"]) for r in plain.collect()} == {
         (r["k"], r["count"]) for r in salted.collect()
     }
-
-
-def test_stateful_running_user_totals(spark):
-    """applyInPandasWithState over a file-backed micro-batch stream:
-    final per-user totals must equal the batch aggregation."""
-    from mapreducewordoccurences_spark.streaming.stateful import running_user_totals
-
-    d = tempfile.mkdtemp(prefix="stateful_")
-    try:
-        src = os.path.join(d, "src")
-        rows = [(i, 1 + (i % 3), float(i % 10), i * 1000) for i in range(100)]
-        df = spark.createDataFrame(
-            rows, "event_id bigint, user_id bigint, value double, ts bigint"
-        )
-        df.write.parquet(src)
-
-        stream = spark.readStream.schema(
-            "event_id bigint, user_id bigint, value double, ts bigint"
-        ).parquet(src)
-        q = (
-            running_user_totals(stream)
-            .writeStream.format("memory")
-            .queryName("user_totals")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-        got = {
-            r["user_id"]: (r["n_events"], r["total_value"])
-            for r in spark.sql(
-                "SELECT * FROM user_totals"
-            ).collect()
-        }
-        expected = {
-            r["user_id"]: (r["n"], r["tv"])
-            for r in df.groupBy("user_id")
-            .agg(F.count("*").alias("n"), F.sum("value").alias("tv"))
-            .collect()
-        }
-        assert got == expected
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 class TestKeySkewStats:

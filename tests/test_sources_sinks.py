@@ -1,144 +1,6 @@
+"""Source readers: footer row counts agree with what Spark reads."""
+
 from __future__ import annotations
-
-import os
-import shutil
-import tempfile
-
-import pytest
-from pyspark.sql import functions as F
-
-from mapreducewordoccurences_spark.core import count_words
-from mapreducewordoccurences_spark.sources import (
-    read_csv,
-    read_json,
-    read_parquet,
-    read_text,
-    write_csv_kv,
-    write_json,
-    write_parquet,
-)
-
-
-@pytest.fixture()
-def tmpd():
-    d = tempfile.mkdtemp(prefix="sink_test_")
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
-
-
-def test_parquet_roundtrip_partitioned(spark, tmpd):
-    df = spark.createDataFrame(
-        [(i, f"w{i % 3}", float(i)) for i in range(100)], "id bigint, k string, v double"
-    )
-    path = os.path.join(tmpd, "p")
-    write_parquet(df, path, partition_by=["k"])
-    back = read_parquet(spark, path)
-    assert back.count() == 100
-    # partition pruning: filter on partition col reads only that dir
-    assert back.where(F.col("k") == "w1").count() == 33
-    assert sorted(os.listdir(path))[:1] == ["_SUCCESS"] or any(
-        e.startswith("k=") for e in os.listdir(path)
-    )
-
-
-def test_kv_text_sink_matches_cli_format(spark, tmpd):
-    df = spark.createDataFrame([("a b a",)], ["text"])
-    counts = count_words(df)
-    path = os.path.join(tmpd, "kv")
-    write_csv_kv(counts, path, "word", "count")
-    lines = []
-    for f in os.listdir(path):
-        if f.startswith("part-"):
-            lines += open(os.path.join(path, f)).read().splitlines()
-    assert sorted(lines) == ["a=2", "b=1"]
-
-
-def test_json_roundtrip(spark, tmpd):
-    df = spark.createDataFrame([(1, "x"), (2, "y")], "id bigint, s string")
-    path = os.path.join(tmpd, "j")
-    write_json(df, path)
-    back = read_json(spark, path, schema="id bigint, s string")
-    assert {(r["id"], r["s"]) for r in back.collect()} == {(1, "x"), (2, "y")}
-
-
-def test_csv_reader(spark, tmpd):
-    p = os.path.join(tmpd, "c.csv")
-    with open(p, "w") as f:
-        f.write("id,name\n1,alpha\n2,beta\n")
-    df = read_csv(spark, p)
-    assert {(r["id"], r["name"]) for r in df.collect()} == {(1, "alpha"), (2, "beta")}
-
-
-def test_whole_file_text_read(spark, tmpd):
-    p = os.path.join(tmpd, "t.txt")
-    with open(p, "w") as f:
-        f.write("line one\nline two\n")
-    assert read_text(spark, p).count() == 2
-    assert read_text(spark, p, whole_file=True).count() == 1
-
-
-def test_bucketed_tables_join_without_exchange(spark, tmpd):
-    """Two tables bucketed+sorted on the join key must sort-merge join
-    with NO exchange and NO sort at read time — the write-once shuffle
-    contract that makes repeated fact-fact joins cheap at scale."""
-    from mapreducewordoccurences_spark.plans.explain import formatted_plan
-    from mapreducewordoccurences_spark.sources.sinks import write_bucketed
-
-    left = spark.createDataFrame(
-        [(i % 97, i, float(i)) for i in range(5000)], "k bigint, id bigint, v double"
-    )
-    right = spark.createDataFrame(
-        [(i, f"dim{i}") for i in range(97)], "k bigint, name string"
-    )
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force SMJ so the assertion targets the bucketed path, not broadcast
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed(left, "bkt_left", ["k"], n_buckets=8, sort_cols=["k"])
-        write_bucketed(right, "bkt_right", ["k"], n_buckets=8, sort_cols=["k"])
-        joined = spark.table("bkt_left").join(spark.table("bkt_right"), "k")
-        plan = formatted_plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 5000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-        spark.sql("DROP TABLE IF EXISTS bkt_left")
-        spark.sql("DROP TABLE IF EXISTS bkt_right")
-
-
-def test_csv_malformed_row_policies(spark, tmp_path):
-    """PERMISSIVE + corrupt-record quarantine vs DROPMALFORMED vs
-    FAILFAST — the three malformed-row contracts a crawl-scale CSV
-    ingest must offer."""
-    import pytest
-
-    from mapreducewordoccurences_spark.sources.readers import read_csv
-
-    p = tmp_path / "rows.csv"
-    p.write_text("k,v\n1,10\n2,not_a_number\n3,30\n")
-    schema = "k int, v int, _bad string"
-
-    df = read_csv(
-        spark, str(p), schema=schema, mode="PERMISSIVE", corrupt_col="_bad"
-    )
-    rows = {r.k: (r.v, r._bad) for r in df.collect()}
-    assert rows[1] == (10, None) and rows[3] == (30, None)
-    assert rows[2][0] is None and "not_a_number" in rows[2][1]
-    # Spark disallows queries referencing ONLY the corrupt column
-    # (count() after the filter prunes to just _bad); cache() is the
-    # documented workaround for quarantine counting
-    df.cache()
-    try:
-        assert df.where("_bad IS NOT NULL").count() == 1
-    finally:
-        df.unpersist()
-
-    dropped = read_csv(spark, str(p), schema="k int, v int", mode="DROPMALFORMED")
-    assert {r.k for r in dropped.collect()} == {1, 3}
-
-    with pytest.raises(Exception, match="(?i)malformed|FAILFAST"):
-        read_csv(spark, str(p), schema="k int, v int", mode="FAILFAST").collect()
 
 
 def _write_rows(path, n):

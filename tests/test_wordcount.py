@@ -20,7 +20,7 @@ from mapreducewordoccurences_spark.core import (
     count_words_in_file,
     format_kv_lines,
 )
-from mapreducewordoccurences_spark.plans.explain import count_exchanges, formatted_plan
+from tests.plan_text import count_exchanges, formatted_plan
 
 ORACLE_RE = re.compile(r"[A-Za-z0-9]+")
 

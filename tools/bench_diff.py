@@ -1,7 +1,7 @@
 """Per-query bench regression gate.
 
 Joins two bench records (the FULL per-query dumps bench.py writes to
-``BENCH_local_r{N}.json`` each round — the driver's ``BENCH_r{N}.json``
+``artifacts/BENCH_local_r{N}.json`` each round — the driver's ``BENCH_r{N}.json``
 tail-captures stdout and may truncate the front of the full line, which
 is why round-over-round comparison needs these local records) and
 reports queries that got slower beyond the host-noise floor.
@@ -13,7 +13,7 @@ A query is flagged when BOTH hold:
     documents per-query run-to-run spreads of this order)
 
 Usage:
-    python tools/bench_diff.py BENCH_local_r5.json BENCH_local_r6.json
+    python tools/bench_diff.py artifacts/BENCH_local_r5.json artifacts/BENCH_local_r6.json
 
 Also importable: bench.py calls ``diff_records`` at the end of each
 run and embeds the result as the artifact's ``regressions`` field.
@@ -26,6 +26,11 @@ import json
 import os
 import re
 import sys
+
+# where bench.py and the scale tools keep their per-round records
+ARTIFACTS_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "artifacts"
+)
 
 
 def _all_timings(rec: dict) -> dict[str, float]:
@@ -76,12 +81,12 @@ def diff_records(
 
 
 def latest_local_record(
-    repo_dir: str = ".", like: dict | None = None
+    records_dir: str = ARTIFACTS_DIR, like: dict | None = None
 ) -> str | None:
-    """Highest-round ``BENCH_local_r{N}.json`` in ``repo_dir``; with
+    """Highest-round ``BENCH_local_r{N}.json`` in ``records_dir``; with
     ``like`` given, the highest-round record *comparable* to it."""
     best, best_n = None, -1
-    for path in glob.glob(os.path.join(repo_dir, "BENCH_local_r*.json")):
+    for path in glob.glob(os.path.join(records_dir, "BENCH_local_r*.json")):
         m = re.search(r"BENCH_local_r(\d+)", os.path.basename(path))
         if not m or int(m.group(1)) <= best_n:
             continue

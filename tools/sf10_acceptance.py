@@ -336,7 +336,7 @@ def main() -> int:
     out_path = (
         sys.argv[3]
         if len(sys.argv) > 3
-        else f"CORRECTNESS_sf10_r{int(rnd):02d}.json"
+        else f"artifacts/CORRECTNESS_sf10_r{int(rnd):02d}.json"
     )
 
     from mapreducewordoccurences_spark.queries import ORACLES, QUERIES

@@ -8,7 +8,7 @@ binding) would go unnoticed. This tool closes that gap (VERDICT r6
 ask #5): run the ~25 heaviest / most scale-sensitive queries at
 ``.localdata/sf1`` (tools/gen_sf1.py) with the same three-gate
 compare as the driver (rows, schema, order-insensitive values) and
-write ``CORRECTNESS_sf1_r{N}.json``.
+write ``artifacts/CORRECTNESS_sf1_r{N}.json``.
 
 The EXCLUDE set is EMPTY as of round 9 — every r8 exclusion was
 closed rather than carried:
@@ -83,7 +83,7 @@ def main() -> int:
     rnd = sys.argv[1] if len(sys.argv) > 1 else os.environ.get("SPARK_GRAFT_ROUND", "7")
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else ".localdata/sf1"
     out_path = (
-        sys.argv[3] if len(sys.argv) > 3 else f"CORRECTNESS_sf1_r{int(rnd):02d}.json"
+        sys.argv[3] if len(sys.argv) > 3 else f"artifacts/CORRECTNESS_sf1_r{int(rnd):02d}.json"
     )
 
     from mapreducewordoccurences_spark.queries import ORACLES, QUERIES

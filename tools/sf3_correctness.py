@@ -239,7 +239,7 @@ def main() -> int:
     rnd = sys.argv[1] if len(sys.argv) > 1 else os.environ.get("SPARK_GRAFT_ROUND", "9")
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else ".localdata/sf3"
     out_path = (
-        sys.argv[3] if len(sys.argv) > 3 else f"CORRECTNESS_sf3_r{int(rnd):02d}.json"
+        sys.argv[3] if len(sys.argv) > 3 else f"artifacts/CORRECTNESS_sf3_r{int(rnd):02d}.json"
     )
 
     from mapreducewordoccurences_spark.queries import ORACLES, QUERIES

@@ -28,7 +28,7 @@ agree across variants or the probe exits nonzero — a mitigation that
 changes answers is worse than a straggler. Timing: one warm-up, then
 best of 2 per variant.
 
-Writes SKEW_r{NN}.json. Local[32] caveat: a single-box "straggler" is
+Writes artifacts/SKEW_r{NN}.json. Local[32] caveat: a single-box "straggler" is
 one busy thread while 31 idle, so the naive-vs-mitigated gap here is
 a LOWER bound on the cluster-scale gap (where the straggler also
 serializes a network shuffle partition).
@@ -52,7 +52,7 @@ def main() -> int:
         "SPARK_GRAFT_ROUND", "9"
     )
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else ".localdata/sf10"
-    out_path = f"SKEW_r{int(rnd):02d}.json"
+    out_path = f"artifacts/SKEW_r{int(rnd):02d}.json"
 
     from pyspark.sql import functions as F
 
