@@ -2,7 +2,7 @@
 
 The reference has exactly one source: a whole-file slurp into RAM
 (src/main.c:74-110). The engine generalizes to Spark's distributed,
-out-of-core sources; parquet is the primary format (driver testdata,
+out-of-core sources; parquet is the primary format (catalog testdata,
 read by ``load_table``), text is the reference-parity path
 (``core.wordcount.count_words_in_file``).
 

@@ -86,7 +86,7 @@ def _package_modules():
 
 def unreached_definitions() -> list[str]:
     """Package definitions that no root reaches. The roots are every
-    name mentioned by tools, the benchmarks and the driver entry, by
+    name mentioned by tools, the benchmarks and ``__spark_entry__.py``, by
     module-level statements of package modules other than
     ``__init__.py``, by ``@register`` queries and by the kept roots; a
     reached definition reaches every name its own body mentions.

@@ -1,7 +1,7 @@
 """Per-query bench regression gate.
 
 Joins two bench records (the FULL per-query dumps bench.py writes to
-``artifacts/BENCH_local_r{N}.json`` each round — the driver's ``BENCH_r{N}.json``
+``artifacts/BENCH_local_r{N}.json`` each round — the per-round ``BENCH_r{N}.json``
 tail-captures stdout and may truncate the front of the full line, which
 is why round-over-round comparison needs these local records) and
 reports queries that got slower beyond the host-noise floor.
