@@ -246,40 +246,3 @@ class TestVocabCoverage:
             if r["vocab_size"] <= n:
                 assert r["covered_tokens"] == r["total_tokens"]
 
-
-class TestToolNameLists:
-    """A typo in a tool's hand-maintained query list silently breaks a
-    round artifact (bench zeroes, sweep errors). Pin every list to the
-    registry."""
-
-    def test_bench_sf1_core_resolves(self):
-        from mapreducewordoccurences_spark.queries import QUERIES
-        from tools.bench_sf1 import SF1_CORE
-
-        missing = [n for n in SF1_CORE if n not in QUERIES]
-        assert not missing, missing
-
-    def test_sf1_exclude_resolves(self):
-        from mapreducewordoccurences_spark.queries import ORACLES
-        from tools.sf1_oracle_sweep import EXCLUDE
-
-        missing = [n for n in EXCLUDE if n not in ORACLES]
-        assert not missing, missing
-
-    def test_scaling_probes_resolve(self):
-        from mapreducewordoccurences_spark.queries import QUERIES
-        from tools.scaling_probe import DEFAULT_PROBES, PROBE_ONLY_OPS
-
-        missing = [
-            n
-            for n in DEFAULT_PROBES
-            if n not in QUERIES and n not in PROBE_ONLY_OPS
-        ]
-        assert not missing, missing
-
-    def test_bench_lists_resolve(self):
-        import bench
-        from mapreducewordoccurences_spark.queries import QUERIES
-
-        missing = [n for n in bench.HEADLINE + bench.EXTRA if n not in QUERIES]
-        assert not missing, missing

@@ -160,24 +160,6 @@ class TestScopedVerifyCache:
             cand.unpersist()
 
 
-class TestSf3ToolPins:
-    def test_sf3_oracle_rows_exist_in_registry(self):
-        """The sf3 tool's row list must track the catalog — a renamed
-        or deleted query would otherwise surface only as an opaque
-        sweep error (same pinning contract as SF1_CORE/EXCLUDE)."""
-        from tools.sf3_correctness import INVARIANTS, ORACLE_ROWS
-
-        from mapreducewordoccurences_spark.queries import ORACLES, QUERIES
-
-        missing = [
-            n for n in ORACLE_ROWS if n not in QUERIES or n not in ORACLES
-        ]
-        assert not missing, missing
-        # invariant names must NOT shadow catalog rows (they are
-        # tool-local composites, not queries)
-        assert not set(INVARIANTS) & set(QUERIES)
-
-
 class TestMmrIvfRow:
     def test_catalog_row_green(self, spark):
         from mapreducewordoccurences_spark.queries import QUERIES
