@@ -18,11 +18,24 @@ Truncating integer division loses < 1e-12 of mass per edge per
 iteration — irrelevant for ranking, decisive for cross-engine
 equality (the DuckDB oracle states the identical integer recurrence).
 
-Scale: ranks are |V| rows, edges |E|; each iteration is one
-broadcast-or-shuffle join + one groupBy keyed on the destination —
-the textbook Pregel-style shape. Lineage is truncated per iteration
-(core/checkpointing.py) so the plan stays iteration-count-independent;
-pass ``checkpoint_dir`` for reliable checkpoints on a cluster.
+Two tiers run this recurrence, chosen by the number of distinct
+(u, v) pairs, counted once the edges are truncated:
+
+- distributed (>= IN_ROW_EDGE_LIMIT pairs): ranks are |V| rows, edges
+  |E|; each iteration is one broadcast-or-shuffle join + one groupBy
+  keyed on the destination, the textbook Pregel-style shape. Lineage
+  is truncated per iteration (core/checkpointing.py) so the plan stays
+  iteration-count-independent; pass ``checkpoint_dir`` for reliable
+  checkpoints on a cluster.
+- in-row (< IN_ROW_EDGE_LIMIT pairs): the edges collect into one row
+  and every round runs inside one Catalyst expression over an
+  array<bigint> of ranks, in one Spark job instead of ~3 per round.
+  When the whole state fits one reducer, one round is optimal (the
+  rounds x communication cost of "MapReduce Algorithms for Big Data
+  Analysis", VLDB 2012).
+
+Both tiers write the per-edge term and the rank update with the same
+SQL fragments (_term, _update), so their ranks are bit-identical.
 """
 
 from __future__ import annotations
@@ -31,6 +44,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 1_000_000_000_000  # 1e12 rank micro-units
+
+# The in-row tier runs when the truncated edge set has fewer (u, v)
+# pairs than this. Its one row then holds < 1024 edge structs, and the
+# one-time preparation (each edge's source resolved to a node position,
+# the edges grouped by destination) is O(N·E) < 2·1024² lambda steps.
+# Sized on 4 cores (local[4]), 10 rounds: 1023 pairs over ~2000 nodes
+# take 0.6 s in-row vs 2.9 s distributed; at 4095 pairs over ~8000
+# nodes the in-row tier is already slower (5.4 s vs 4.9 s).
+IN_ROW_EDGE_LIMIT = 1024
+
+
+def _term(rank: str, w: str, w_out: str) -> str:
+    """SQL for one edge's share of its source's rank. `div` is Spark's
+    INTEGRAL division: (a*b)/c through doubles would lose exactness
+    past 2^53 (rank*w reaches ~1e16)."""
+    return f"({rank} * {w}) div {w_out}"
+
+
+def _update(teleport: str, in_sum: str, damping_pct: int) -> str:
+    """SQL for a node's next rank from the sum of its in-edge terms."""
+    return f"{teleport} + ({damping_pct} * {in_sum}) div 100"
 
 
 def pagerank_fixed_point(
@@ -45,7 +79,7 @@ def pagerank_fixed_point(
     """(node, rank_fp) after ``iterations`` rounds; rank_fp is the
     int64 fixed-point rank (divide by SCALE for the float value).
     ``damping_pct`` is an integer percent so the damping multiply
-    stays integral."""
+    stays integral. Weights must be non-null."""
     from mapreducewordoccurences_spark.core.checkpointing import make_truncate
 
     truncate = make_truncate(edges, checkpoint_dir)
@@ -59,6 +93,21 @@ def pagerank_fixed_point(
     # re-run the upstream edge-construction subplan (often the
     # expensive stage when the caller passes a transition/pair plan).
     e = truncate(e.groupBy("u", "v").agg(F.sum("w").alias("w")))
+    # The tier choice counts the truncated pairs: two small jobs over
+    # the pinned blocks. (An Observation on the truncation would count
+    # them in its own job, but the first one registers a
+    # QueryExecutionListener on the session for good, and from then on
+    # unregistering a py4j listener proxy calls its `equals`, which
+    # fails unless the Python class defines one; the benchmark's traced
+    # run registers and unregisters such a proxy per operation.)
+    n_edges = e.count()
+    if n_edges == 0:  # no edges, no nodes
+        return e.select(
+            F.col("u").alias("node"), F.lit(0).cast("long").alias("rank_fp")
+        )
+    if n_edges < IN_ROW_EDGE_LIMIT:
+        return _pagerank_in_row(e, iterations, damping_pct)
+
     nodes = truncate(
         e.select(F.col("u").alias("node"))
         .union(e.select(F.col("v").alias("node")))
@@ -68,23 +117,19 @@ def pagerank_fixed_point(
     e = truncate(e.join(outw, "u"))  # (u, v, w, w_out)
 
     n_nodes = nodes.count()
-    if n_nodes == 0:
-        return nodes.select("node", F.lit(0).cast("long").alias("rank_fp"))
     teleport = (SCALE * (100 - damping_pct)) // (100 * n_nodes)
     ranks = truncate(
         nodes.select("node", F.lit(SCALE // n_nodes).cast("long").alias("rank_fp"))
     )
 
     for _ in range(iterations):
-        # `div` is Spark's INTEGRAL division — (a*b)/c through doubles
-        # would lose exactness past 2^53 (rank_fp*w reaches ~1e16).
         # Nodes with no in-edges ride through the SAME groupBy as a
         # zero term (sum(terms ∪ {0}) ≡ the former coalesce(in_sum, 0)
         # after a left join) — one exchange per round instead of the
         # groupBy + nodes-join pair (guide §2.4).
         terms = e.join(ranks, e.u == ranks.node).select(
             F.col("v").alias("node"),
-            F.expr("(rank_fp * w) div w_out").alias("term"),
+            F.expr(_term("rank_fp", "w", "w_out")).alias("term"),
         )
         ranks = truncate(
             terms.unionByName(
@@ -94,13 +139,64 @@ def pagerank_fixed_point(
             .agg(F.sum("term").alias("in_sum"))
             .select(
                 "node",
-                (
-                    F.lit(teleport).cast("long")
-                    + F.expr(f"({damping_pct} * in_sum) div 100")
-                ).alias("rank_fp"),
+                F.expr(_update(f"{teleport}L", "in_sum", damping_pct)).alias(
+                    "rank_fp"
+                ),
             )
         )
     return ranks
+
+
+def _pagerank_in_row(e: DataFrame, iterations: int, damping_pct: int) -> DataFrame:
+    """The same recurrence over a graph small enough to live in one
+    row. The (u, v, w) pairs collect into one array; the state R is an
+    array<bigint> of ranks indexed by node position; every edge's
+    source is resolved to its position once; and all rounds run as
+    one ``aggregate`` over the round numbers: one Spark job, whatever
+    ``iterations`` is. A null endpoint behaves as in the distributed
+    tier: a null node keeps its rank, a null source's edges drop.
+
+    The destination-grouped edges G ride in the fold's accumulator
+    beside R. Catalyst inlines a column used once into its consumer,
+    lambdas included, so G built in a projection of its own would be
+    rebuilt every round."""
+    # one node's in-edges, each carrying its source's out-weight
+    in_edges = (
+        "transform(nodes, n -> transform(filter(es, t -> t.v <=> n), "
+        "t -> named_struct('ui', t.ui, 'w', t.w, 'w_out', "
+        "aggregate(filter(es, o -> o.ui = t.ui), 0L, (a, o) -> a + o.w))))"
+    )
+    teleport = f"{SCALE * (100 - damping_pct)}L div (100 * size(nodes))"
+    in_sum = (
+        "aggregate(ins, 0L, (a, t) -> a + "
+        f"{_term('element_at(s.R, t.ui)', 't.w', 't.w_out')})"
+    )
+    one_round = (
+        f"transform(s.G, ins -> {_update(teleport, in_sum, damping_pct)})"
+    )
+    return (
+        e.coalesce(1)
+        .agg(F.collect_list(F.struct("u", "v", "w")).alias("es"))
+        .selectExpr(
+            "es",
+            "array_sort(array_distinct(concat("
+            "transform(es, t -> t.u), transform(es, t -> t.v)))) AS nodes",
+        )
+        .selectExpr(
+            "nodes",
+            "transform(filter(es, t -> t.u IS NOT NULL), t -> named_struct("
+            "'ui', int(array_position(nodes, t.u)), 'v', t.v, 'w', t.w)) AS es",
+        )
+        .selectExpr(
+            "nodes AS node",
+            f"aggregate(array_repeat(0, {iterations}), named_struct("
+            f"'R', array_repeat({SCALE}L div size(nodes), size(nodes)), "
+            f"'G', {in_edges}), "
+            f"(s, k) -> named_struct('R', {one_round}, 'G', s.G), "
+            "s -> s.R) AS rank_fp",
+        )
+        .selectExpr("inline(arrays_zip(node, rank_fp))")
+    )
 
 
 def triangle_count(

@@ -19,10 +19,13 @@ def q_pagerank_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle orders, so the driver can hash-match an iterative
     algorithm that float arithmetic would leave ulp-divergent
     (operators/graph.py; the oracle unrolls the identical recurrence
-    through 10 chained CTEs). Per iteration: one edges⋈ranks join +
-    one destination-keyed groupBy — the Pregel shape that scales to
-    web graphs; the event-type graph here is deliberately tiny so the
-    oracle stays cheap."""
+    through 10 chained CTEs). The event-type graph here is deliberately
+    tiny so the oracle stays cheap, so it takes the operator's in-row
+    tier: all 10 rounds run in one Catalyst expression, one Spark job.
+    A graph with IN_ROW_EDGE_LIMIT or more (u, v) pairs takes the
+    distributed tier instead: per iteration one edges⋈ranks join + one
+    destination-keyed groupBy, the Pregel shape that scales to web
+    graphs."""
     from mapreducewordoccurences_spark.operators.graph import pagerank_fixed_point
 
     events = _t(spark, sf_dir, "events")

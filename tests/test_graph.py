@@ -5,6 +5,8 @@ rows is in test_oracle_parity.py.)"""
 
 from __future__ import annotations
 
+from hypothesis import example, given, settings, strategies as st
+
 from mapreducewordoccurences_spark.operators.graph import kcore_membership
 
 
@@ -204,3 +206,114 @@ def test_pagerank_weight_sensitivity(spark):
     skewed = ranks(3, 1)
     assert abs(even["b"] - even["c"]) <= 1          # symmetric split
     assert skewed["b"] > skewed["c"]                # 3:1 split favors b
+
+
+# ---------------------------------------------------------------------------
+# PageRank's two tiers: the in-row tier (below IN_ROW_EDGE_LIMIT pairs)
+# must be bit-identical to the distributed one, cost a constant number
+# of jobs, and never run above the bound.
+# ---------------------------------------------------------------------------
+
+
+def _pagerank(edges, limit: int | None = None, **kw):
+    """pagerank_fixed_point under an optional IN_ROW_EDGE_LIMIT
+    (0 forces the distributed tier)."""
+    from unittest import mock
+
+    from mapreducewordoccurences_spark.operators import graph
+
+    if limit is None:
+        return graph.pagerank_fixed_point(edges, weight_col="w", **kw)
+    with mock.patch.object(graph, "IN_ROW_EDGE_LIMIT", limit):
+        return graph.pagerank_fixed_point(edges, weight_col="w", **kw)
+
+
+def _ranks(df) -> list[tuple]:
+    return sorted(
+        ((r["node"], r["rank_fp"]) for r in df.collect()),
+        key=lambda t: (t[0] is None, t[0]),
+    )
+
+
+def _jobs(spark, run) -> int:
+    """Spark jobs fired by ``run()``: building the frame and
+    collecting it."""
+    from uuid import uuid4
+
+    sc = spark.sparkContext
+    group = f"test-pagerank-jobs-{uuid4().hex}"  # ids accumulate per group
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_NODE = st.sampled_from([0, 1, 2, 3, 4, 5, None])
+
+
+@settings(max_examples=20, deadline=None)
+@given(
+    rows=st.lists(
+        st.tuples(_NODE, _NODE, st.integers(1, 5)), min_size=1, max_size=12
+    ),
+    iterations=st.integers(0, 6),
+)
+@example(rows=[(0, 1, 3)], iterations=4)  # a single edge
+@example(rows=[(0, 0, 1), (0, 1, 1)], iterations=3)  # self-loop
+@example(rows=[(0, 1, 1), (0, 1, 2), (1, 0, 1)], iterations=3)  # dup pair
+@example(rows=[(0, 1, 1), (0, 2, 1), (2, 0, 1)], iterations=5)  # 1 is a sink
+def test_pagerank_tiers_bit_identical(spark, rows, iterations):
+    """Random small directed weighted graphs: self-loops, duplicate
+    (u, v) pairs (weights sum), sinks whose mass leaks, null nodes.
+    The in-row tier returns exactly the distributed tier's ranks."""
+    edges = spark.createDataFrame(rows, "src long, dst long, w long")
+    in_row = _pagerank(edges, iterations=iterations)
+    distributed = _pagerank(edges, limit=0, iterations=iterations)
+    assert in_row.dtypes == distributed.dtypes
+    assert _ranks(in_row) == _ranks(distributed)
+
+
+class TestPagerankTierGate:
+    EDGES = [("a", "b", 1), ("b", "c", 2), ("c", "a", 1), ("c", "b", 1)]
+
+    def _edges(self, spark):
+        return spark.createDataFrame(self.EDGES, "src string, dst string, w long")
+
+    def test_in_row_tier_jobs_do_not_grow_with_rounds(self, spark):
+        """The in-row tier costs a fixed number of jobs however many
+        rounds run: the edge truncation's exchange and checkpoint, the
+        pair count's two, then one for the action. A per-round job
+        must not come back."""
+        edges = self._edges(spark)
+        for iterations in (1, 10, 30):
+            n = _jobs(
+                spark, lambda: _pagerank(edges, iterations=iterations).collect()
+            )
+            assert n == 5, (iterations, n)
+
+    def test_at_the_bound_the_distributed_tier_runs(self, spark):
+        """A graph with IN_ROW_EDGE_LIMIT pairs is over the bound: it
+        takes the per-round distributed loop, whose jobs grow with the
+        round count; one pair fewer than the limit stays in-row."""
+        edges = self._edges(spark)
+        pairs = len(self.EDGES)
+
+        def jobs(limit, iterations):
+            return _jobs(
+                spark,
+                lambda: _pagerank(edges, limit, iterations=iterations).collect(),
+            )
+
+        assert jobs(pairs + 1, 2) == jobs(pairs + 1, 6) == 5
+        assert jobs(pairs, 6) >= jobs(pairs, 2) + 4
+
+    def test_empty_edge_set_same_empty_frame_in_both_tiers(self, spark):
+        edges = spark.createDataFrame([], "src string, dst string, w long")
+        in_row = _pagerank(edges)
+        distributed = _pagerank(edges, limit=0)
+        assert in_row.columns == ["node", "rank_fp"]
+        assert in_row.schema == distributed.schema
+        assert in_row.count() == distributed.count() == 0

@@ -352,6 +352,28 @@ def test_catalog_hot_paths_have_no_python(catalog_plans):
     assert not failures, failures
 
 
+def test_pagerank_tiers_stay_jvm_side(spark):
+    """Both PageRank tiers are free of Python: the in-row tier's rounds
+    are one Catalyst expression over a single row (no exchange once the
+    edges are truncated), the distributed tier is join + groupBy."""
+    from unittest import mock
+
+    from mapreducewordoccurences_spark.operators import graph
+
+    edges = spark.createDataFrame(
+        [("a", "b", 1), ("b", "a", 2), ("b", "c", 1)],
+        "src string, dst string, w long",
+    )
+    in_row = graph.pagerank_fixed_point(edges, weight_col="w", iterations=3)
+    with mock.patch.object(graph, "IN_ROW_EDGE_LIMIT", 0):
+        distributed = graph.pagerank_fixed_point(
+            edges, weight_col="w", iterations=3
+        )
+    assert count_exchanges(in_row) == 0
+    assert not has_python_eval(in_row)
+    assert not has_python_eval(distributed)
+
+
 def test_bloom_probe_broadcasts_bitmap(spark):
     """The bitmap side of the membership probe must broadcast — the
     big (probe) side never shuffles for the bloom check."""

@@ -129,6 +129,30 @@ def test_wide_sibling_citations_resolve():
         )
 
 
+def test_invariants_read_the_replica_base_from_its_manifest(tmp_path):
+    """The expected values derive from the base corpus the replica was
+    generated from (``source`` in its MANIFEST.json), not from a fixed
+    directory; a manifest that records no base raises."""
+    import json
+
+    import duckdb
+    import pytest
+
+    from tests.conftest import SF_DIR
+    from tools.invariants import _docs_base_count
+
+    manifest = tmp_path / "MANIFEST.json"
+    manifest.write_text(json.dumps({"source": SF_DIR, "copies": 1}))
+    want = duckdb.sql(
+        f"SELECT count(*) FROM '{SF_DIR}/documents.parquet'"
+    ).fetchone()[0]
+    assert _docs_base_count(str(tmp_path)) == want
+
+    manifest.write_text(json.dumps({"copies": 1}))
+    with pytest.raises(KeyError, match="source"):
+        _docs_base_count(str(tmp_path))
+
+
 class TestToolNameLists:
     def test_bench_sf1_core_resolves(self):
         from tools.bench_sf1 import SF1_CORE

@@ -17,11 +17,12 @@ Two families, layered:
 - **reference invariants** (sf10/sf30): full-result comparisons against
   the pure-Python reference oracle (``tools/sf10_expected.py``), which
   computes the exact pair set / exact-dup classes / cascade audit /
-  component list of a ``tools/gen_sf1.py --copies N`` replica from the
-  sf0.1 base corpus plus the generator's own vocabulary algebra. Naive
-  "everything x100" does NOT hold: five base docs are written (almost)
-  entirely in the verbatim-kept vocabulary half and so stay
-  near-identical ACROSS copies, and salted renames can collide
+  component list of a ``tools/gen_sf1.py --copies N`` replica from its
+  base corpus (the ``source`` its ``MANIFEST.json`` records) plus the
+  generator's own vocabulary algebra. Naive "everything x100" does NOT
+  hold: five base docs are written (almost) entirely in the
+  verbatim-kept vocabulary half and so stay near-identical ACROSS
+  copies, and salted renames can collide
   (copy 159 renders both 'the' and 'dup' as 'dup'). At copies=10 the
   reference reproduces the engine's DuckDB-verified sf1 results
   bit-for-bit; only then is a larger comparison meaningful.
@@ -60,7 +61,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tests.test_oracle_parity import assert_frames_match  # noqa: E402
 from tools.gen_sf1 import vocab_map  # noqa: E402
-from tools.sf10_expected import SF01, BaseCorpus  # noqa: E402
+from tools.sf10_expected import BaseCorpus  # noqa: E402
 
 WORD = re.compile(r"[A-Za-z0-9]+")
 
@@ -252,38 +253,52 @@ def _inv_clusters_pair_closure(spark, sf_dir: str) -> tuple[bool, dict]:
 # reference invariants (sf10/sf30)
 # ---------------------------------------------------------------------------
 
-_BC_CACHE: dict[int, BaseCorpus] = {}
+_BC_CACHE: dict[tuple[int, str], BaseCorpus] = {}
+
+
+def _manifest(sf_dir: str) -> dict:
+    with open(os.path.join(sf_dir, "MANIFEST.json")) as f:
+        return json.load(f)
 
 
 def _copies(sf_dir: str) -> int:
-    with open(os.path.join(sf_dir, "MANIFEST.json")) as f:
-        return int(json.load(f)["copies"])
+    return int(_manifest(sf_dir)["copies"])
+
+
+def _source(sf_dir: str) -> str:
+    """The base directory the replica was generated from, as
+    ``tools/gen_sf1.py`` records it: every expected value derives
+    from it."""
+    manifest = _manifest(sf_dir)
+    if "source" not in manifest:
+        raise KeyError(f"{sf_dir}/MANIFEST.json records no 'source'")
+    return manifest["source"]
 
 
 def _base_corpus(sf_dir: str) -> BaseCorpus:
-    copies = _copies(sf_dir)
-    if copies not in _BC_CACHE:
-        _BC_CACHE[copies] = BaseCorpus(copies)
-    return _BC_CACHE[copies]
+    key = (_copies(sf_dir), _source(sf_dir))
+    if key not in _BC_CACHE:
+        _BC_CACHE[key] = BaseCorpus(key[0], src=key[1])
+    return _BC_CACHE[key]
 
 
-def _docs_base_count() -> int:
+def _docs_base_count(sf_dir: str) -> int:
     return duckdb.sql(
-        f"SELECT count(*) FROM '{SF01}/documents.parquet'"
+        f"SELECT count(*) FROM '{_source(sf_dir)}/documents.parquet'"
     ).fetchone()[0]
 
 
 @invariant("wordcount_closed_form", "wordcount")
 def _inv_wordcount_closed_form(spark, sf_dir: str) -> tuple[bool, dict]:
     """EXACT full-result oracle for the replica's wordcount, computed in
-    pure Python: push the sf0.1 per-word counts through each copy's
-    vocabulary map (the generator's own vocab_map) and sum. Also
+    pure Python: push the base corpus's per-word counts through each
+    copy's vocabulary map (the generator's own vocab_map) and sum. Also
     records every copy whose map is not injective — the premise the
     pair-replicating invariants below stand on."""
     from mapreducewordoccurences_spark.queries import QUERIES
 
     rows = duckdb.sql(
-        f"SELECT text FROM '{SF01}/documents.parquet'"
+        f"SELECT text FROM '{_source(sf_dir)}/documents.parquet'"
     ).fetchall()
     base = Counter()
     vocab: set[str] = set()
@@ -460,14 +475,14 @@ def _inv_per_doc_metrics_copy_consistent(
     functions of the doc alone, and the bijection preserves token
     counts, distinct counts, n-gram repeat structure, and lengths —
     so every copy of a base doc must agree on every metric, and
-    copy 0 must equal the sf0.1 run row-for-row. Catches any
+    copy 0 must equal the base corpus run row-for-row. Catches any
     partition- or corpus-size-dependence sneaking into a map-only
     operator."""
     from pyspark.sql import functions as F
 
     from mapreducewordoccurences_spark.queries import QUERIES
 
-    stride = _docs_base_count()
+    stride = _docs_base_count(sf_dir)
     out = {}
     ok = True
     for row in ("repetition_filter_stats", "text_stats"):
@@ -479,7 +494,11 @@ def _inv_per_doc_metrics_copy_consistent(
         )
         disagree = agg.where(F.col("n_variants") != 1).count()
         n_base = agg.count()
-        base = QUERIES[row](spark, SF01).toPandas().sort_values("doc_id")
+        base = (
+            QUERIES[row](spark, _source(sf_dir))
+            .toPandas()
+            .sort_values("doc_id")
+        )
         copy0 = (
             big.where(F.col("doc_id") < stride)
             .toPandas()
@@ -489,7 +508,7 @@ def _inv_per_doc_metrics_copy_consistent(
         out[row] = {
             "n_base_docs": n_base,
             "copies_disagreeing": disagree,
-            "copy0_equals_sf01": bool(copy0_equal),
+            "copy0_equals_base": bool(copy0_equal),
         }
         ok &= disagree == 0 and n_base == stride and copy0_equal
     return ok, out
