@@ -36,7 +36,10 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreducewordoccurences_spark.operators.windows import top_k_per_group
-from mapreducewordoccurences_spark.sources.readers import parquet_footer_rows
+from mapreducewordoccurences_spark.sources.readers import (
+    parquet_footer_rows,
+    read_parquet,
+)
 
 
 def _c(col: Column | str) -> Column:
@@ -514,8 +517,8 @@ def ivf_probe(
     file count."""
     spark = queries.sparkSession
     return _ivf_search(
-        spark.read.parquet(f"{path}/assignment"),
-        spark.read.parquet(f"{path}/centroids"),
+        read_parquet(spark, f"{path}/assignment"),
+        read_parquet(spark, f"{path}/centroids"),
         queries,
         k,
         nprobe,
@@ -1050,18 +1053,18 @@ def ivfpq_probe(
     spark = queries.sparkSession
     probes = _probe_cells(
         queries,
-        spark.read.parquet(f"{path}/centroids"),
+        read_parquet(spark, f"{path}/centroids"),
         nprobe,
         id_col,
         vec_col,
         query_id_col,
     )
     return _adc_shortlist_rerank(
-        spark.read.parquet(f"{path}/codes"),
+        read_parquet(spark, f"{path}/codes"),
         probes,
-        spark.read.parquet(f"{path}/books"),
+        read_parquet(spark, f"{path}/books"),
         queries,
-        spark.read.parquet(f"{path}/vectors"),
+        read_parquet(spark, f"{path}/vectors"),
         k, shortlist, m, id_col, vec_col, query_id_col,
     )
 

@@ -147,6 +147,45 @@ def test_ivf_persisted_probe_matches_inline(spark, tmp_path):
     assert persisted == inline
 
 
+def test_warm_probes_fire_no_schema_job(spark, tmp_path):
+    """The probes read their index tables through ``read_parquet``: a
+    cold probe pays one schema-inference job per table (2 for IVF, 4
+    for IVF∘PQ), a warm one none. Rebuilding an index at the same path
+    changes its file listing, so the next probe infers again; the
+    cached schema keeps the ``__cell`` partition column's type."""
+    from mapreducewordoccurences_spark.functions.similarity import (
+        build_ivf_index,
+        build_ivfpq_index,
+        ivf_probe,
+        ivfpq_probe,
+    )
+    from mapreducewordoccurences_spark.sources.readers import read_parquet
+
+    from tests.spark_jobs import count_jobs
+
+    emb = _emb(spark)
+    q = emb.where(F.col("vec_id") < 10)
+    ivf, ivfpq = str(tmp_path / "ivf"), str(tmp_path / "ivfpq")
+
+    def probe_ivf():
+        return ivf_probe(q, ivf, k=5, nprobe=4)
+
+    def probe_ivfpq():
+        return ivfpq_probe(q, ivfpq, k=5, nprobe=4, shortlist=100, m=16)
+
+    build_ivf_index(emb, ivf, nlist=16)
+    build_ivfpq_index(emb, ivfpq, nlist=16, m=16, ks=16)
+    assert [count_jobs(spark, probe_ivf) for _ in range(2)] == [2, 0]
+    assert [count_jobs(spark, probe_ivfpq) for _ in range(2)] == [4, 0]
+    for table in (f"{ivf}/assignment", f"{ivfpq}/codes"):
+        assert read_parquet(spark, table).dtypes == spark.read.parquet(table).dtypes
+
+    before = sorted(map(tuple, probe_ivf().collect()))
+    build_ivf_index(emb, ivf, nlist=16)
+    assert count_jobs(spark, probe_ivf) == 2
+    assert sorted(map(tuple, probe_ivf().collect())) == before
+
+
 class TestCodebookDeterminism:
     @pytest.mark.parametrize(
         "m, ks",

@@ -9,6 +9,8 @@ from hypothesis import example, given, settings, strategies as st
 
 from mapreducewordoccurences_spark.operators.graph import kcore_membership
 
+from tests.spark_jobs import count_jobs
+
 
 class TestKcoreMembership:
     def test_triangle_survives_chain_peels(self, spark):
@@ -235,22 +237,6 @@ def _ranks(df) -> list[tuple]:
     )
 
 
-def _jobs(spark, run) -> int:
-    """Spark jobs fired by ``run()``: building the frame and
-    collecting it."""
-    from uuid import uuid4
-
-    sc = spark.sparkContext
-    group = f"test-pagerank-jobs-{uuid4().hex}"  # ids accumulate per group
-    sc.setJobGroup(group, group)
-    try:
-        run()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 _NODE = st.sampled_from([0, 1, 2, 3, 4, 5, None])
 
 
@@ -289,7 +275,7 @@ class TestPagerankTierGate:
         must not come back."""
         edges = self._edges(spark)
         for iterations in (1, 10, 30):
-            n = _jobs(
+            n = count_jobs(
                 spark, lambda: _pagerank(edges, iterations=iterations).collect()
             )
             assert n == 5, (iterations, n)
@@ -302,7 +288,7 @@ class TestPagerankTierGate:
         pairs = len(self.EDGES)
 
         def jobs(limit, iterations):
-            return _jobs(
+            return count_jobs(
                 spark,
                 lambda: _pagerank(edges, limit, iterations=iterations).collect(),
             )

@@ -136,14 +136,16 @@ def test_ivf_probe_prunes_partitions(spark, tmp_path):
 
     emb = load_table(spark, SF_DIR, "embeddings")
     build_ivf_index(emb, str(tmp_path / "ivf"), nlist=16)
-    res = ivf_probe(
-        emb.where(F.col("vec_id") < 10), str(tmp_path / "ivf"), k=5, nprobe=4
-    )
-    # the assignment scan must carry a dynamic-partition-pruning filter
-    # on __cell: a probe batch reads nprobe/nlist of the index files,
-    # never the whole index
-    assert "dynamicpruning" in formatted_plan(res)
-    assert res.count() > 0
+    # the second probe reads its index schemas from read_parquet's cache
+    for _ in range(2):
+        res = ivf_probe(
+            emb.where(F.col("vec_id") < 10), str(tmp_path / "ivf"), k=5, nprobe=4
+        )
+        # the assignment scan must carry a dynamic-partition-pruning
+        # filter on __cell: a probe batch reads nprobe/nlist of the
+        # index files, never the whole index
+        assert "dynamicpruning" in formatted_plan(res)
+        assert res.count() > 0
 
 
 def test_ivfpq_probe_prunes_partitions(spark, tmp_path):
@@ -157,19 +159,22 @@ def test_ivfpq_probe_prunes_partitions(spark, tmp_path):
 
     emb = load_table(spark, SF_DIR, "embeddings")
     build_ivfpq_index(emb, str(tmp_path / "ivfpq"), nlist=16, m=16, ks=16)
-    res = ivfpq_probe(
-        emb.where(F.col("vec_id") < 10),
-        str(tmp_path / "ivfpq"),
-        k=5,
-        nprobe=4,
-        shortlist=50,
-        m=16,
-    )
-    # the CODE scan must carry a dynamic-partition-pruning filter on
-    # __cell: an IVF∘PQ probe reads nprobe/nlist of the code files —
-    # full vectors are touched only for the shortlist re-rank
-    assert "dynamicpruning" in formatted_plan(res)
-    assert res.count() > 0
+    # the second probe reads its index schemas from read_parquet's cache
+    for _ in range(2):
+        res = ivfpq_probe(
+            emb.where(F.col("vec_id") < 10),
+            str(tmp_path / "ivfpq"),
+            k=5,
+            nprobe=4,
+            shortlist=50,
+            m=16,
+        )
+        # the CODE scan must carry a dynamic-partition-pruning filter
+        # on __cell: an IVF∘PQ probe reads nprobe/nlist of the code
+        # files — full vectors are touched only for the shortlist
+        # re-rank
+        assert "dynamicpruning" in formatted_plan(res)
+        assert res.count() > 0
 
 
 def test_lsh_knn_single_corpus_scan(spark):

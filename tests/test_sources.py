@@ -1,6 +1,30 @@
-"""Source readers: footer row counts agree with what Spark reads."""
+"""Source readers: footer row counts agree with what Spark reads, and
+the schema cache behind ``read_parquet`` returns what inference would,
+re-infers when the files change and stays out of non-local reads."""
 
 from __future__ import annotations
+
+import os
+import shutil
+import sys
+import threading
+from types import SimpleNamespace
+from unittest import mock
+
+import pytest
+from pyspark.errors import AnalysisException
+
+from mapreducewordoccurences_spark.sources import readers
+from mapreducewordoccurences_spark.sources.readers import (
+    TABLES,
+    load_table,
+    read_parquet,
+)
+
+from tests.conftest import SF_DIR, SF_ORACLE_DIR
+from tests.spark_jobs import count_jobs
+
+NANOS = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def _write_rows(path, n):
@@ -31,3 +55,155 @@ def test_footer_row_count_skips_files_spark_ignores(spark, tmp_path):
     _write_rows(p / "_k=1" / "_temporary" / "part-00001.parquet", 4)
     assert spark.read.parquet(str(p)).count() == 5
     assert parquet_row_count(str(tmp_path), "p") == 5
+
+
+def _cached(spark, path) -> bool:
+    key = readers._schema_key(spark, path)
+    return key is not None and key in readers._schemas
+
+
+@pytest.fixture
+def nanos_restored(spark):
+    """Put the session's nanosAsLong conf back as the test found it."""
+    before = spark.conf.get(NANOS, None)
+    yield
+    if before is None:
+        spark.conf.unset(NANOS)
+    else:
+        spark.conf.set(NANOS, before)
+
+
+def _assert_cached_read_equals_inferred(spark, path):
+    inferred = spark.read.parquet(path)
+    read_parquet(spark, path)
+    assert _cached(spark, path), path
+    cached = read_parquet(spark, path)
+    assert cached.schema == inferred.schema, path
+    assert cached.collect() == inferred.collect(), path
+
+
+@pytest.mark.parametrize("sf_dir", [SF_DIR, SF_ORACLE_DIR])
+def test_cached_schema_read_equals_inferred_read(spark, sf_dir, nanos_restored):
+    """For every table, a read that takes its schema from the cache
+    returns the schema and the rows, in order, of Spark's inferring
+    read. ``events`` is read with nanosAsLong unset and true: two
+    entries, since the conf is part of the key."""
+    for name in TABLES:
+        _assert_cached_read_equals_inferred(spark, f"{sf_dir}/{name}.parquet")
+    events = f"{sf_dir}/events.parquet"
+    spark.conf.unset(NANOS)
+    _assert_cached_read_equals_inferred(spark, events)
+    unset_key = readers._schema_key(spark, events)
+    spark.conf.set(NANOS, "true")
+    _assert_cached_read_equals_inferred(spark, events)
+    true_key = readers._schema_key(spark, events)
+    assert unset_key != true_key
+    assert unset_key in readers._schemas and true_key in readers._schemas
+
+
+def test_second_load_fires_no_job(spark, tmp_path):
+    """The first load of a table pays Spark's schema-inference job;
+    the second takes the cached schema and fires none."""
+    shutil.copy(f"{SF_ORACLE_DIR}/region.parquet", tmp_path / "region.parquet")
+    first = count_jobs(spark, lambda: load_table(spark, str(tmp_path), "region"))
+    second = count_jobs(spark, lambda: load_table(spark, str(tmp_path), "region"))
+    assert (first, second) == (1, 0)
+
+
+def test_rewritten_file_is_inferred_again(spark, tmp_path):
+    """A new size or a new mtime_ns is a new key: the next read infers
+    (one job) and sees the rewritten schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "t.parquet"
+    _write_rows(path, 3)
+    assert read_parquet(spark, str(path)).dtypes == [("x", "bigint")]
+    pq.write_table(pa.table({"x": pa.array(["a", "bb"])}), path)  # new size
+    assert read_parquet(spark, str(path)).dtypes == [("x", "string")]
+
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    assert not _cached(spark, str(path))
+    assert count_jobs(spark, lambda: read_parquet(spark, str(path))) == 1
+    assert count_jobs(spark, lambda: read_parquet(spark, str(path))) == 0
+
+
+def test_file_uri_takes_the_inferring_read_uncached(spark, tmp_path):
+    """A URI is not listed driver-side: every read infers (one job)."""
+    path = tmp_path / "t.parquet"
+    _write_rows(path, 3)
+    uri = f"file:{path}"
+    for _ in range(2):
+        assert count_jobs(spark, lambda: read_parquet(spark, uri)) == 1
+    assert readers._schema_key(spark, uri) is None
+    assert read_parquet(spark, uri).count() == 3
+
+
+def test_missing_path_raises_sparks_error(spark, tmp_path):
+    """Nothing to list falls back to Spark, which raises its own error
+    (not the OSError of the driver-side stat)."""
+    with pytest.raises(AnalysisException):
+        read_parquet(spark, str(tmp_path / "missing.parquet"))
+    empty = tmp_path / "empty.parquet"
+    empty.mkdir()
+    with pytest.raises(AnalysisException):
+        read_parquet(spark, str(empty))
+
+
+def test_cache_holds_at_most_its_bound(spark, tmp_path):
+    """Past the bound the least recently used entry is dropped; a hit
+    makes an entry the most recently used."""
+    paths = []
+    for i in range(3):
+        path = tmp_path / f"t{i}.parquet"
+        _write_rows(path, i + 1)
+        paths.append(str(path))
+    with mock.patch.object(readers, "SCHEMA_CACHE_SIZE", 2):
+        for path in (paths[0], paths[1], paths[0], paths[2]):
+            read_parquet(spark, path)
+            assert len(readers._schemas) <= 2
+    assert [_cached(spark, p) for p in paths] == [True, False, True]
+
+
+def test_concurrent_reads_keep_the_cache_bounded(tmp_path):
+    """Eight threads hit and fill the cache at once, with a short
+    switch interval: every read sees its table's schema, none raises,
+    and the cache never exceeds its bound. The session is a stand-in
+    whose inferred "schema" is the path it read, so the threads spend
+    their time in the cache, not in py4j."""
+    paths = []
+    for i in range(6):
+        path = tmp_path / f"t{i}.parquet"
+        _write_rows(path, i + 1)
+        paths.append(str(path))
+    spark = mock.MagicMock()
+    spark.conf.get.return_value = "false"
+    spark.read.parquet.side_effect = lambda p: SimpleNamespace(schema=p)
+    spark.read.schema.side_effect = lambda s: SimpleNamespace(
+        parquet=lambda p: SimpleNamespace(schema=s)
+    )
+    errors = []
+
+    def reader(offset):
+        try:
+            for j in range(300):
+                path = paths[(offset + j) % len(paths)]
+                assert read_parquet(spark, path).schema == path
+                assert len(readers._schemas) <= 4
+        except Exception as exc:  # noqa: BLE001
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with mock.patch.object(readers, "SCHEMA_CACHE_SIZE", 4):
+            threads = [threading.Thread(target=reader, args=(i,)) for i in range(8)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+            assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(interval)
+    assert errors == []
