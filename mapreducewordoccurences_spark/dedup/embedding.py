@@ -115,19 +115,20 @@ def semantic_dedup_profile(
 
     Returns (cluster_id, n_members, n_dropped, n_kept).
 
-    100 TB shape: the trainer (functions/clustering.py) broadcasts the
-    k·dim centroid table and never shuffles the vectors; the pair join
-    shuffles each vector once on cluster_id, and candidate volume is
+    100 TB shape: the trainer (functions/similarity.py
+    kmeans_fit_predict) broadcasts the k·dim centroid table and never
+    shuffles the vectors; the pair join shuffles each vector once on
+    cluster_id, and candidate volume is
     Σ_c |c|² — bounded because k defaults to ``derive_semdedup_k``
     (k = max(8, n // target_cell_size) — ∝ n, the production rule;
     the paper's runs use ~25k-100k cells). Within-cell scoring is
     embarrassingly parallel
     and stays JVM-side (zip_with/aggregate dot products)."""
-    from mapreducewordoccurences_spark.functions.clustering import (
+    from mapreducewordoccurences_spark.functions.similarity import (
+        dot,
         kmeans_fit_predict,
+        l2_norm,
     )
-
-    from mapreducewordoccurences_spark.functions.similarity import dot, l2_norm
 
     if k is None:
         # production sizing rule: cells ∝ corpus size, so Σ|c|² stays
@@ -221,7 +222,7 @@ def semantic_dedup_recall(
     measured recall then transfers to the production run at the same
     k/n ratio because cell occupancy, not corpus size, drives the
     boundary-miss rate."""
-    from mapreducewordoccurences_spark.functions.clustering import (
+    from mapreducewordoccurences_spark.functions.similarity import (
         kmeans_fit_predict,
     )
 

@@ -23,13 +23,11 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mapreducewordoccurences_spark.functions.text import _c
+
 # bucket space: first 4 md5 hex chars → [0, 65536). Wide enough that
 # per-split rounding error is < 0.002%, small enough to stay in an int.
 _BUCKETS = 65536
-
-
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
 
 
 def hash_bucket(col: Column | str, salt: str = "") -> Column:

@@ -16,14 +16,19 @@ Tiers:
   over m-subspace codes cuts a shortlist that exact cosine re-ranks;
   IVF∘PQ scans only the probed cells' codes.
 
-One vector-quantization core serves every index: ``pq_codebooks`` is
-the only Lloyd trainer and ``pq_encode`` the only assignment. The IVF
-cells are the one-subspace codebook ``pq_codebooks(corpus, m=1,
-ks=nlist)``; a vector's cell is its m=1 code.
+One vector-quantization core serves every index and k-means:
+``pq_codebooks`` is the only Lloyd trainer, ``_sq_dist`` the only
+squared distance and ``_scored`` the only codeword scoring (its
+array_min is the argmin). The IVF cells are the one-subspace codebook
+``pq_codebooks(corpus, m=1, ks=nlist)`` and a vector's cell is its m=1
+code; ``kmeans_fit_predict`` is that m=1 training plus one final
+assignment.
 
-All arithmetic is JVM-side (``zip_with``/``aggregate`` fold in
-double) — no Python in the data path; results are deterministic
-(sequential fold, no float reassociation).
+The quantizer runs on an integer protocol (see the core's comment), so
+codebooks, codes, cells and ADC distances are exact integers. The exact
+tiers — every cosine score and re-rank — fold the raw vectors in
+double, sequentially, so they are deterministic too. All arithmetic is
+JVM-side; no Python in the data path.
 """
 
 from __future__ import annotations
@@ -34,6 +39,7 @@ from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from mapreducewordoccurences_spark.operators.windows import top_k_per_group
 from mapreducewordoccurences_spark.sources.readers import (
@@ -42,14 +48,10 @@ from mapreducewordoccurences_spark.sources.readers import (
 )
 
 
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
-
-
 def dot(a: Column | str, b: Column | str) -> Column:
     """Σ aᵢ·bᵢ as double, sequential left fold (deterministic)."""
     return F.aggregate(
-        F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double")),
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
@@ -62,6 +64,24 @@ def l2_norm(a: Column | str) -> Column:
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     """dot(a,b) / (||a||·||b||), double precision."""
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
+
+
+def _rerank_candidates(cand: DataFrame, k: int, query_id_col: str) -> DataFrame:
+    """The one exact re-rank: cosine of every (query, neighbor)
+    candidate of ``cand`` (query_id, neighbor_id, __qvec, __cvec), then
+    the per-query top-k on (sim desc, neighbor_id asc) →
+    (query_id, neighbor_id, rnk, sim)."""
+    scored = cand.select(
+        query_id_col,
+        "neighbor_id",
+        cosine_similarity("__qvec", "__cvec").alias("sim"),
+    )
+    return top_k_per_group(
+        scored,
+        [query_id_col],
+        [F.col("sim").desc(), F.col("neighbor_id").asc()],
+        k,
+    ).select(query_id_col, "neighbor_id", "rnk", "sim")
 
 
 def brute_force_knn(
@@ -87,98 +107,132 @@ def brute_force_knn(
     q = queries.select(
         F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qvec")
     )
-    joined = corpus.select(
+    cand = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
     ).join(F.broadcast(q), on=(F.lit(True) if include_self else F.col("neighbor_id") != F.col(query_id_col)), how="inner")
-    scored = joined.select(
-        query_id_col,
-        "neighbor_id",
-        cosine_similarity("__qvec", "__cvec").alias("sim"),
-    )
-    return top_k_per_group(
-        scored,
-        [query_id_col],
-        [F.col("sim").desc(), F.col("neighbor_id").asc()],
-        k,
-    ).select(query_id_col, "neighbor_id", "rnk", "sim")
-
-
-def _sq_dist(a: Column | str, b: Column | str) -> Column:
-    """Σ (aᵢ-bᵢ)² as double (squared L2; monotone with cosine distance
-    for unit-norm vectors, and cheaper — no sqrt)."""
-    return F.aggregate(
-        F.zip_with(
-            _c(a), _c(b), lambda x, y: (x.cast("double") - y.cast("double")) ** 2
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    return _rerank_candidates(cand, k, query_id_col)
 
 
 # ---------------------------------------------------------------------------
 # Vector quantization core — the one Lloyd trainer behind every ANN index
-# here. Product quantization (Jégou et al., "Product Quantization for
-# Nearest Neighbor Search", TPAMI 2011) splits each vector into m
-# subspaces with ks codewords each; the IVF coarse quantizer is its m=1
-# case (one subspace = the whole vector, ks = nlist cells).
+# and k-means here. Product quantization (Jégou et al., "Product
+# Quantization for Nearest Neighbor Search", TPAMI 2011) splits each vector
+# into m subspaces with ks codewords each; the IVF coarse quantizer and
+# k-means are its m=1 case (one subspace = the whole vector).
+#
+# Integer protocol: float means depend on summation order (IEEE addition
+# does not associate), so a float trainer yields a different model per
+# shuffle schedule. Each pass quantizes the vectors to non-negative
+# integers, trunc(v·2^20) + 2^21 (for |v| < 2; distances are
+# shift-invariant). Squared distances are then exact integer sums, the
+# argmin is totally ordered by (dist, code), and a codeword update is an
+# exact integer sum and a truncating division, which equals floor
+# division on these non-negative operands in Spark's ``div`` and DuckDB's
+# ``//`` alike. Codebooks are bit-identical on any partitioning and any
+# engine; the DuckDB oracle ``queries._shared._kmeans_a2_cte`` replays
+# the k-means case.
+#
+# Scale shape of a Lloyd round: one broadcast plus one shuffle bounded by
+# ks·dim rows per map partition. Every codebook rides in ONE broadcast
+# row and the argmin folds in-row, so assignment is map-only; the update
+# posexplodes each vector once into (sub, code, dim, value) rows, which
+# partial aggregation collapses before the exchange. The vectors never
+# shuffle.
 # ---------------------------------------------------------------------------
 
-def _subvectors(df: DataFrame, m: int, vec_col: str, *keep: str) -> DataFrame:
-    """(*keep, __sub, __subvec): the vector split into m contiguous
-    subspaces, JVM-side (one posexplode of a transform-built array)."""
+_SCALE = 1 << 20  # quantization step: trunc(v * 2^20)
+_SHIFT = 1 << 21  # keeps quantized coordinates non-negative for |v| < 2
+
+# The in-row expressions below are Spark SQL text: one parse on the JVM
+# where the Column API would make a py4j call per node of every nested
+# lambda, which a query that trains at build time pays per build.
+
+
+def _quantized(df: DataFrame, vec_col: str, *cols: Column | str) -> DataFrame:
+    """(*cols, __q): ``vec_col`` as array<bigint> trunc(v·2^20) + 2^21.
+    The double→bigint cast truncates toward zero, and the shift keeps
+    every coordinate non-negative, so an update's truncating division
+    is floor division."""
+    return df.select(
+        *cols,
+        F.expr(
+            f"transform(`{vec_col}`,"
+            f" x -> CAST(CAST(x AS DOUBLE) * {_SCALE} AS BIGINT) + {_SHIFT})"
+        ).alias("__q"),
+    )
+
+
+def _sq_dist(a: str, b: str) -> str:
+    """Exact integer squared L2 of two array<bigint>: integer addition
+    associates, so the fold order cannot change the result."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
+        " 0L, (acc, x) -> acc + x)"
+    )
+
+
+def _subspaces(m: int, fn) -> str:
+    """``[fn(j) for j in 0..m-1]`` as one in-row array (no lambda at
+    m=1)."""
+    if m == 1:
+        return f"array({fn('0')})"
+    return f"transform(sequence(0, {m - 1}), j -> {fn('j')})"
+
+
+def _subvec(vec: str, j: str, m: int) -> str:
+    """Subspace ``j`` of ``m``: the contiguous slice of size(vec) div m
+    coordinates (trailing coordinates past m of them belong to no
+    subspace) — the whole vector at m=1."""
+    if m == 1:
+        return vec
+    return f"slice({vec}, {j} * (size({vec}) div {m}) + 1, size({vec}) div {m})"
+
+
+def _subvectors(df: DataFrame, m: int, *keep: str) -> DataFrame:
+    """(*keep, __sub, __subvec): the quantized ``__q`` of each row split
+    into its m subvectors, one row each."""
     return df.select(
         *keep,
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" j -> slice({vec_col}, j * (size({vec_col}) div {m}) + 1,"
-                f" size({vec_col}) div {m}))"
-            )
-        ).alias("__sub", "__subvec"),
-    )
-
-
-def _book_arrays(books: DataFrame) -> DataFrame:
-    """(__sub, __codes: array<struct<__code, __cvec>>) — one row per
-    subspace, the broadcastable per-subspace codebook the fold-based
-    nearest-codeword assignment consumes (m rows of ks codewords)."""
-    return books.groupBy("__sub").agg(
-        F.collect_list(F.struct("__code", "__cvec")).alias("__codes")
-    )
-
-
-def _nearest_code(subvec_col: Column | str, codes_col: Column | str) -> Column:
-    """argmin over the in-row codeword array: score every codeword and
-    take the (dist, code)-lexicographic minimum (lowest code on equal
-    distance). Evaluated inside one projection, so assignment needs no
-    shuffle of corpus × ks scored rows."""
-    scored = F.transform(
-        _c(codes_col),
-        lambda c: F.struct(
-            _sq_dist(_c(subvec_col), c["__cvec"]).alias("__d"),
-            c["__code"].alias("__code"),
+        F.posexplode(F.expr(_subspaces(m, lambda j: _subvec("__q", j, m)))).alias(
+            "__sub", "__subvec"
         ),
     )
-    return F.array_min(scored)["__code"]
 
 
-def _pq_assign(
-    corpus: DataFrame, books: DataFrame, m: int, id_col: str, vec_col: str
-) -> DataFrame:
-    """(id, __sub, __code, __subvec): every vector's m subvectors, each
-    with its nearest codeword — map-only: the m codebook rows ride in
-    as a broadcast and the argmin folds per row. At m=1 the one
-    subvector is the whole vector and ``__code`` is its IVF cell."""
+def _scored(vec: str, codes: str) -> str:
+    """struct(__d, __code) of ``vec`` against every codeword of
+    ``codes``: its array_min is the nearest codeword in (dist, code)
+    order — the lowest code on equal distance — and its sorted prefix
+    a probe list."""
     return (
-        _subvectors(corpus, m, vec_col, id_col)
-        .join(F.broadcast(_book_arrays(books)), "__sub")
-        .select(
-            id_col,
-            "__sub",
-            _nearest_code(F.col("__subvec"), F.col("__codes")).alias("__code"),
-            "__subvec",
+        f"transform({codes}, c -> struct({_sq_dist(vec, 'c.__cvec')} AS __d,"
+        " c.__code AS __code))"
+    )
+
+
+def _nearest(m: int) -> Column:
+    """Per subspace, the nearest codeword struct(__d, __code) of the
+    quantized ``__q`` among the ``__books`` row (m entries)."""
+    return F.expr(
+        _subspaces(
+            m, lambda j: f"array_min({_scored(_subvec('__q', j, m), f'__books[{j}]')})"
         )
     )
+
+
+def _with_books(vecs: DataFrame, books: DataFrame, m: int) -> DataFrame:
+    """``vecs`` (quantized, ``__q``) beside ONE broadcast row,
+    ``__books``, holding all m codebooks — element j is subspace j's
+    codewords. A keyless broadcast join, so assignment never shuffles
+    the corpus."""
+    book_row = books.agg(
+        F.collect_list(F.struct("__sub", "__code", "__cvec")).alias("__all")
+    ).select(
+        F.expr(_subspaces(m, lambda j: f"filter(__all, c -> c.__sub = {j})")).alias(
+            "__books"
+        )
+    )
+    return vecs.crossJoin(F.broadcast(book_row))
 
 
 def pq_codebooks(
@@ -189,65 +243,97 @@ def pq_codebooks(
     vec_col: str = "embedding",
     iters: int = 2,
 ) -> DataFrame:
-    """Per-subspace Lloyd codebooks → (__sub, __code, __cvec), m·ks
-    rows. The only trainer of this module: the IVF coarse quantizer is
+    """Per-subspace Lloyd codebooks after ``iters`` updates →
+    (__sub, __code, __cvec), m·ks rows, ``__cvec`` an array<bigint> in
+    quantized space. The only trainer: the IVF coarse quantizer is
     ``pq_codebooks(corpus, m=1, ks=nlist, iters=kmeans_iters)``, whose
-    ``__code`` is the cell id and ``__cvec`` the cell centroid.
+    ``__code`` is the cell id and ``__cvec`` the cell centroid, and
+    ``kmeans_fit_predict`` trains the same m=1 codebook.
 
     Seeds are the ks lowest-id vectors (a TakeOrderedAndProject —
-    bounded, no corpus-wide window), split into subvectors; each Lloyd
-    round is one broadcast-codebook assignment plus one
-    (sub, code, dim)-keyed fixed-point average (exact BIGINT sums of
-    2²⁰-scaled values + truncating integer division, the
-    functions/clustering.py convention — codebooks, codes and
-    shortlists are bit-identical across runs and cluster layouts,
-    where F.avg over raw doubles would drift with summation order).
-    Empty codewords drop out (fewer cells, never a crash). All m
-    subspaces train in the SAME passes — the corpus streams once per
-    round, not once per subspace. At 100 TB, train on a hash-sampled
-    slice (codebooks need ~100k points, not the corpus) and broadcast
-    the result."""
-    seeds = corpus.orderBy(id_col).limit(ks).select(
-        (F.row_number().over(Window.orderBy(id_col)) - 1).alias("__code"),
-        vec_col,
+    bounded, no corpus-wide window), split into subvectors. Each round
+    assigns every vector (the broadcast codebook row, in-row argmin)
+    and replaces each codeword by the exact integer mean of its
+    members, per dimension. Empty codewords drop out (fewer codes,
+    never a crash). All m subspaces train in the SAME passes — the
+    corpus streams once per round, not once per subspace. Each round's
+    codebooks are a lazy localCheckpoint, so the next round's plan does
+    not carry the last one's lineage. At 100 TB, train on a
+    hash-sampled slice (codebooks need ~100k points, not the corpus)
+    and broadcast the result."""
+    vecs = _quantized(corpus, vec_col, id_col)
+    seeds = vecs.orderBy(id_col).limit(ks).select(
+        (F.row_number().over(Window.orderBy(id_col)) - 1).alias("__code"), "__q"
     )
-    books = _subvectors(seeds, m, vec_col, "__code").select(
-        "__sub",
-        "__code",
-        F.transform("__subvec", lambda x: x.cast("double")).alias("__cvec"),
+    books = _subvectors(seeds, m, "__code").select(
+        "__sub", "__code", F.col("__subvec").alias("__cvec")
     )
     for _ in range(iters):
         books = (
-            _pq_assign(corpus, books, m, id_col, vec_col)
+            _with_books(vecs, books, m)
             .select(
-                "__sub", "__code", F.posexplode("__subvec").alias("__pos", "__v")
+                _nearest(m)["__code"].alias("__codes"),
+                F.expr(f"int(size(__q) div {m})").alias("__dim"),
+                "__q",
             )
-            .groupBy("__sub", "__code", "__pos")
-            .agg(
-                F.sum(
-                    (F.col("__v").cast("double") * F.lit(1048576)).cast(
-                        "long"
-                    )
-                ).alias("__s"),
-                F.count(F.lit(1)).alias("__n"),
-            )
-            .select(
-                "__sub",
-                "__code",
-                "__pos",
-                (
-                    F.expr("__s div __n").cast("double") / F.lit(1048576.0)
-                ).alias("__mv"),
-            )
+            # a projection beside a generator is evaluated per generated
+            # row: the argmin runs here, once per vector, not once per
+            # coordinate
+            .select("__codes", "__dim", F.posexplode("__q").alias("__pos", "__v"))
+            .withColumn("__sub", F.expr("int(__pos div __dim)"))
+            .where(F.col("__sub") < m)
+            .groupBy("__sub", F.expr("__codes[__sub]").alias("__code"), "__pos")
+            .agg(F.sum("__v").alias("__s"), F.count(F.lit(1)).alias("__n"))
             .groupBy("__sub", "__code")
             .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("__pos", "__mv"))),
-                    lambda s: s.getField("__mv"),
+                F.expr(
+                    "transform(array_sort(collect_list("
+                    "named_struct('pos', __pos, 'mean', __s div __n))), p -> p.mean)"
                 ).alias("__cvec")
             )
+            .localCheckpoint(eager=False)
         )
     return books
+
+
+def kmeans_fit_predict(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int = 8,
+    iters: int = 2,
+) -> DataFrame:
+    """k-means as the m=1 codebook: ``iters`` assignment passes from
+    the k lowest-id seeds — ``iters - 1`` centroid updates, then the
+    final assignment → (id_col, cluster_id, sq_dist).
+
+    Every returned number is an exact integer in quantized space,
+    bit-identical across engines and partitionings; the DuckDB oracle
+    ``_kmeans_a2_cte`` replays it."""
+    cells = pq_codebooks(df, 1, k, id_col, vec_col, iters - 1)
+    best = _nearest(1)[0]
+    return _with_books(_quantized(df, vec_col, id_col), cells, 1).select(
+        id_col,
+        best["__code"].alias("cluster_id"),
+        best["__d"].alias("sq_dist"),
+    )
+
+
+def kmeans_cluster_profile(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int = 8,
+    iters: int = 2,
+) -> DataFrame:
+    """Cluster-level summary of the fit: (cluster_id, n_members,
+    sum_sq_dist) — exact integers, the oracle-checkable face of the
+    trainer."""
+    a = kmeans_fit_predict(df, id_col, vec_col, k=k, iters=iters)
+    return a.groupBy("cluster_id").agg(
+        F.count(F.lit(1)).alias("n_members"),
+        F.sum("sq_dist").alias("sum_sq_dist"),
+    )
 
 
 def pq_encode(
@@ -262,16 +348,18 @@ def pq_encode(
     m=8, ks=16 that is 4 bytes/vector vs 256 for float32×64 — the 64×
     compression that lets a trillion-vector corpus live in RAM. With
     an m=1 codebook, ``__code`` is the vector's IVF cell."""
-    return _pq_assign(corpus, books, m, id_col, vec_col).drop("__subvec")
+    return _with_books(_quantized(corpus, vec_col, id_col), books, m).select(
+        id_col, F.posexplode(_nearest(m)["__code"]).alias("__sub", "__code")
+    )
 
 
 def _ivf_cells(
     corpus: DataFrame, cells: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
-    """(id, __cell, vec): the IVF assignment — ``pq_encode`` at m=1,
-    keeping its one subvector, which is the whole vector."""
-    return _pq_assign(corpus, cells, 1, id_col, vec_col).select(
-        id_col, F.col("__code").alias("__cell"), F.col("__subvec").alias(vec_col)
+    """(id, __cell, vec): the IVF assignment — the m=1 code of each
+    vector, beside the raw vector the exact re-rank scores."""
+    return _with_books(_quantized(corpus, vec_col, id_col, vec_col), cells, 1).select(
+        id_col, _nearest(1)[0]["__code"].alias("__cell"), vec_col
     )
 
 
@@ -317,7 +405,6 @@ def _trained_books(
         _run_concurrent_jobs(*[partial(train, i) for i in missing])
     return out
 
-
 def _probe_cells(
     queries: DataFrame,
     cells: DataFrame,
@@ -327,51 +414,21 @@ def _probe_cells(
     query_id_col: str,
 ) -> DataFrame:
     """(query_id, __qvec, __cell) for each query's nprobe nearest
-    cells — the queries are split and joined to the broadcast m=1
-    codebook exactly as ``_pq_assign`` does the corpus, so one
-    broadcast serves both; the per-query top-nprobe is an in-row
-    array_sort + slice over the (dist, cell) order, so probing plans
-    no window Exchange at all."""
-    q = queries.select(
-        F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qvec")
+    cells: the quantized queries meet the broadcast row of the m=1
+    codebook as the corpus does in an assignment, and the per-query
+    top-nprobe is an in-row array_sort + slice over the (dist, cell)
+    order, so probing plans no window Exchange at all. ``__qvec`` is
+    the raw query vector, for the exact re-rank."""
+    near = F.expr(f"slice(array_sort({_scored('__q', '__books[0]')}), 1, {nprobe})")
+    q = _quantized(
+        queries,
+        vec_col,
+        F.col(id_col).alias(query_id_col),
+        F.col(vec_col).alias("__qvec"),
     )
-    near = F.slice(
-        F.array_sort(
-            F.transform(
-                F.col("__codes"),
-                lambda c: F.struct(
-                    _sq_dist(F.col("__qvec"), c["__cvec"]).alias("__dist"),
-                    c["__code"].alias("__cell"),
-                ),
-            )
-        ),
-        1,
-        nprobe,
+    return _with_books(q, cells, 1).select(
+        query_id_col, "__qvec", F.explode(near["__code"]).alias("__cell")
     )
-    return (
-        _subvectors(q, 1, "__qvec", query_id_col, "__qvec")
-        .join(F.broadcast(_book_arrays(cells)), "__sub")
-        .select(
-            query_id_col,
-            "__qvec",
-            F.explode(near.getField("__cell")).alias("__cell"),
-        )
-    )
-
-
-def _rerank_candidates(cand: DataFrame, k: int, query_id_col: str) -> DataFrame:
-    """Exact cosine re-rank of (query, neighbor) candidates → top-k."""
-    scored = cand.select(
-        query_id_col,
-        "neighbor_id",
-        cosine_similarity("__qvec", "__cvec").alias("sim"),
-    )
-    return top_k_per_group(
-        scored,
-        [query_id_col],
-        [F.col("sim").desc(), F.col("neighbor_id").asc()],
-        k,
-    ).select(query_id_col, "neighbor_id", "rnk", "sim")
 
 
 def _ivf_search(
@@ -496,6 +553,26 @@ def build_ivf_index(
         cells.unpersist()
 
 
+def _read_codebook(spark: SparkSession, path: str) -> DataFrame:
+    """An index's codebook table (``centroids`` or ``books``), refused
+    unless its codewords are integers. An index built by the earlier
+    float trainer stores ``__cvec`` as array<double>: raw-space
+    codewords, off the quantized queries by the 2^20 scale and the
+    2^21 shift, which the integer fold would otherwise reject with a
+    type-mismatch AnalysisException that names neither the table nor
+    the fix. The check reads the schema ``read_parquet`` already
+    holds, so it fires no Spark job."""
+    df = read_parquet(spark, path)
+    elem = df.schema["__cvec"].dataType.elementType
+    if not isinstance(elem, LongType):
+        raise ValueError(
+            f"{path}: __cvec holds {elem.simpleString()} codewords, not the"
+            " bigint codewords of the integer quantizer; the index predates"
+            " it — rebuild it with build_ivf_index / build_ivfpq_index"
+        )
+    return df
+
+
 def ivf_probe(
     queries: DataFrame,
     path: str,
@@ -518,7 +595,7 @@ def ivf_probe(
     spark = queries.sparkSession
     return _ivf_search(
         read_parquet(spark, f"{path}/assignment"),
-        read_parquet(spark, f"{path}/centroids"),
+        _read_codebook(spark, f"{path}/centroids"),
         queries,
         k,
         nprobe,
@@ -545,7 +622,7 @@ def lsh_bucket(vec: Column | str, planes: list[list[float]]) -> Column:
     for i, plane in enumerate(planes):
         p = F.array(*[F.lit(float(x)) for x in plane])
         bits.append(
-            F.when(dot(_c(vec), p) >= 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
+            F.when(dot(vec, p) >= 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
         )
     out = bits[0]
     for b in bits[1:]:
@@ -584,7 +661,7 @@ def lsh_knn(
         planes = _hyperplanes(dim, n_planes, seed + 1000 * t)
         tables.append((t, planes))
 
-    def bucketize(df: DataFrame, ident: str) -> DataFrame:
+    def bucketize(df: DataFrame, ident: str, vec_alias: str) -> DataFrame:
         # ONE scan: all n_tables bucket ids computed in a single
         # projected array, then posexplode to (table, bucket) rows.
         # (A union of n_tables select() branches would re-scan the
@@ -592,29 +669,19 @@ def lsh_knn(
         buckets = F.array(*[lsh_bucket(vec_col, planes) for _, planes in tables])
         return df.select(
             F.col(id_col).alias(ident),
-            F.col(vec_col).alias(f"__vec_{ident}"),
+            F.col(vec_col).alias(vec_alias),
             F.posexplode(buckets).alias("__table", "__bucket"),
         )
 
-    qb = bucketize(queries, query_id_col)
-    cb = bucketize(corpus, "neighbor_id")
+    qb = bucketize(queries, query_id_col, "__qvec")
+    cb = bucketize(corpus, "neighbor_id", "__cvec")
     cand = (
         cb.join(qb, on=["__table", "__bucket"], how="inner")
         .where(F.col("neighbor_id") != F.col(query_id_col))
-        .select(query_id_col, "neighbor_id", f"__vec_{query_id_col}", "__vec_neighbor_id")
+        .select(query_id_col, "neighbor_id", "__qvec", "__cvec")
         .dropDuplicates([query_id_col, "neighbor_id"])
     )
-    scored = cand.select(
-        query_id_col,
-        "neighbor_id",
-        cosine_similarity(f"__vec_{query_id_col}", "__vec_neighbor_id").alias("sim"),
-    )
-    return top_k_per_group(
-        scored,
-        [query_id_col],
-        [F.col("sim").desc(), F.col("neighbor_id").asc()],
-        k,
-    ).select(query_id_col, "neighbor_id", "rnk", "sim")
+    return _rerank_candidates(cand, k, query_id_col)
 
 
 def quantize_embedding(vec: Column | str) -> Column:
@@ -632,11 +699,10 @@ def quantize_embedding(vec: Column | str) -> Column:
     the quantized form then run in cheap integer arithmetic and the
     exact tier re-ranks only the survivors.
     """
-    v = _c(vec)
-    mx = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))
+    mx = F.array_max(F.transform(vec, lambda x: F.abs(x.cast("double"))))
     scale = mx / F.lit(127.0)
     q = F.when(mx > 0, F.transform(
-        v,
+        vec,
         lambda x: F.greatest(
             F.lit(-127),
             F.least(
@@ -644,7 +710,7 @@ def quantize_embedding(vec: Column | str) -> Column:
                 F.floor(x.cast("double") / scale + F.lit(0.5)).cast("int"),
             ),
         ).cast("tinyint"),
-    )).otherwise(F.transform(v, lambda x: F.lit(0).cast("tinyint")))
+    )).otherwise(F.transform(vec, lambda x: F.lit(0).cast("tinyint")))
     return F.struct(q.alias("q"), scale.alias("scale"))
 
 
@@ -803,14 +869,19 @@ def _adc_shortlist_rerank(
     is O(Σ_q |probed cells of q| × m). ``vectors`` is the (id, vec)
     store of the re-rank fetch."""
     dt = (
-        _subvectors(probes, m, "__qvec", query_id_col, "__cell")
+        _subvectors(
+            _quantized(probes, "__qvec", query_id_col, "__cell"),
+            m,
+            query_id_col,
+            "__cell",
+        )
         .join(F.broadcast(books), "__sub")
         .select(
             query_id_col,
             "__cell",
             "__sub",
             "__code",
-            _sq_dist("__subvec", "__cvec").alias("__d"),
+            F.expr(_sq_dist("__subvec", "__cvec")).alias("__d"),
         )
     )
     scored = (
@@ -1053,7 +1124,7 @@ def ivfpq_probe(
     spark = queries.sparkSession
     probes = _probe_cells(
         queries,
-        read_parquet(spark, f"{path}/centroids"),
+        _read_codebook(spark, f"{path}/centroids"),
         nprobe,
         id_col,
         vec_col,
@@ -1062,7 +1133,7 @@ def ivfpq_probe(
     return _adc_shortlist_rerank(
         read_parquet(spark, f"{path}/codes"),
         probes,
-        read_parquet(spark, f"{path}/books"),
+        _read_codebook(spark, f"{path}/books"),
         queries,
         read_parquet(spark, f"{path}/vectors"),
         k, shortlist, m, id_col, vec_col, query_id_col,

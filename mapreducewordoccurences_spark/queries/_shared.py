@@ -132,7 +132,8 @@ _STOPWORDS = (
 
 def _kmeans_a2_cte(k_limit: str = "8") -> str:
     """Exact DuckDB replay of the integer-quantized Lloyd protocol
-    (functions/clustering.py): trunc(v*2^20)+2^21 coords, integer
+    (functions/similarity.py kmeans_fit_predict, the m=1 case of
+    pq_codebooks): trunc(v*2^20)+2^21 coords, integer
     squared distances, (dist, cluster_id) argmin, truncating-div
     centroid means — every number is an exact integer, so even this
     iterative trainer hash-matches. Ends at CTE ``a2`` =

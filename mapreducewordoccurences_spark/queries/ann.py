@@ -277,10 +277,10 @@ def q_embedding_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_kmeans_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed k-means refinement (k=8, 2 assignment passes) over
-    the embeddings table — functions/clustering.py. Centroids broadcast
-    each pass; the update shuffle is bounded by k x dim x partitions, not
-    by row count."""
-    from mapreducewordoccurences_spark.functions.clustering import (
+    the embeddings table — the m=1 codebook of functions/similarity.py's
+    one Lloyd trainer. Centroids broadcast each pass; the update shuffle
+    is bounded by k x dim x partitions, not by row count."""
+    from mapreducewordoccurences_spark.functions.similarity import (
         kmeans_cluster_profile,
     )
 

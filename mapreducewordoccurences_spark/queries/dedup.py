@@ -976,9 +976,9 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     space; k grows with n so cells stay bounded). Drop rule: a vector
     with a smaller-id cell-mate at cosine >= 0.4 is dropped — greedy
     one-representative survivorship, no iterative closure. Composes
-    the exact-integer k-means trainer (functions/clustering.py, every
-    assignment bit-identical across engines) with the same cosine
-    verifier contract as dedup_embedding_cosine.
+    the exact-integer k-means trainer (functions/similarity.py
+    kmeans_fit_predict, every assignment bit-identical across engines)
+    with the same cosine verifier contract as dedup_embedding_cosine.
 
     k is DERIVED from corpus size (derive_semdedup_k: max(8,
     n // 150)) — the production ∝-n sizing rule — and since round 9

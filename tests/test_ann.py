@@ -1,7 +1,8 @@
 """ANN tiers built on the vector-quantization core of
 functions/similarity.py: product quantization, IVF∘PQ, the persisted
-IVF and IVF∘PQ indexes, and the determinism of the one Lloyd trainer
-(``pq_codebooks``; the IVF cells are its m=1 case)."""
+IVF and IVF∘PQ indexes, the determinism of the one Lloyd trainer
+(``pq_codebooks``; the IVF cells and k-means are its m=1 case) and
+the k-means contract."""
 
 from __future__ import annotations
 
@@ -186,6 +187,38 @@ def test_warm_probes_fire_no_schema_job(spark, tmp_path):
     assert sorted(map(tuple, probe_ivf().collect())) == before
 
 
+def test_probes_refuse_float_codewords(spark, tmp_path):
+    """An index written by the earlier float trainer stores ``__cvec``
+    as array<double>, codewords outside the quantized space the queries
+    are scored in. Both probes raise a ValueError that names the table
+    and asks for a rebuild."""
+    from mapreducewordoccurences_spark.functions.similarity import (
+        build_ivf_index,
+        build_ivfpq_index,
+        ivf_probe,
+        ivfpq_probe,
+    )
+
+    emb = _emb(spark)
+    q = emb.where(F.col("vec_id") < 10)
+    ivf, ivfpq = str(tmp_path / "ivf"), str(tmp_path / "ivfpq")
+    build_ivf_index(emb, ivf, nlist=4)
+    build_ivfpq_index(emb, ivfpq, nlist=4, m=8, ks=4)
+
+    def old_layout(path, subs, codes):
+        spark.createDataFrame(
+            [(s, c, [0.125] * (64 // subs)) for s in range(subs) for c in range(codes)],
+            "__sub int, __code int, __cvec array<double>",
+        ).write.mode("overwrite").parquet(path)
+
+    old_layout(f"{ivf}/centroids", 1, 4)
+    with pytest.raises(ValueError, match=r"/centroids: __cvec holds double.*rebuild"):
+        ivf_probe(q, ivf, k=5, nprobe=2)
+    old_layout(f"{ivfpq}/books", 8, 4)
+    with pytest.raises(ValueError, match=r"/books: __cvec holds double.*rebuild"):
+        ivfpq_probe(q, ivfpq, k=5, nprobe=2, shortlist=20, m=8)
+
+
 class TestCodebookDeterminism:
     @pytest.mark.parametrize(
         "m, ks",
@@ -213,21 +246,22 @@ class TestCodebookDeterminism:
         b32 = book_map(emb.repartition(32, "vec_id"))
         assert b1 == b32
 
-    # sha256 of the sorted rows, each rendered exactly (float.hex), of
-    # the 16 IVF cells, the m=16 x ks=16 PQ codebooks and the IVF
-    # assignment (vec_id -> cell). Recorded from the separate k-means
-    # trainer that the m=1 codebook replaced; a retrain must reproduce
-    # them bit for bit, which is what lets an index build and an
-    # inline search share one trained table.
+    # sha256 of the sorted rows, each rendered exactly (float.hex of
+    # every integer coordinate), of the 16 IVF cells, the m=16 x ks=16
+    # PQ codebooks and the IVF assignment (vec_id -> cell), trained on
+    # the integer protocol, each recorded after the partitioning test
+    # above held at m=8 and m=1 and identical from 1 and 32 partitions.
+    # A retrain must reproduce them bit for bit, which is what lets an
+    # index build and an inline search share one trained table.
     GOLDEN = {
         "sf0.001": (
-            "62aaf9812eef05daa28e6d1374cbb9a470210e92f20c1139bd4016eb024cca75",
-            "43cba018294b508d08e71789e222ebe2af48fd9cbe7a7da312ab06885b582d2f",
+            "298274879f873d4151cf8588eb52155a7015b1bf588a4cfe081f4cd58c0d19a2",
+            "63d589224e1284984f6442806a03086091392daf1c5f34d9daf914f1af989fd0",
             "4e0de5fc19d3ece46bda619edd1e41e11e2a150135e539e14d01ba50972b4e0a",
         ),
         "sf0.01": (
-            "3bf181b36186fc5472de4b482372b64924fc6a9b2a2dfbb5bcbe221276225d65",
-            "ec9133c08105087ac16c61bbf0ba12d0fc96686d401ff4a9bffee68e2d675f60",
+            "951313a893a997077040202cda4194921408c1a3544d345df6e2de681e250b99",
+            "2276c3f12a7c1122d6dabd39011e018b57f8b29a3424c5214e580877ba23cf63",
             "a1aa2c50c3f9f0276ad00c94744a212ff6aa55272e46dd27386be96e3f085c59",
         ),
     }
@@ -264,6 +298,75 @@ class TestCodebookDeterminism:
             ),
         )
         assert got == golden
+
+
+# k-means is the m=1 codebook plus a final assignment: the same
+# integer protocol, pinned here by its own contract — partition
+# invariance, every vector assigned once, and Lloyd monotonicity.
+
+
+def test_kmeans_partition_invariant(spark):
+    from mapreducewordoccurences_spark.functions.similarity import (
+        kmeans_cluster_profile,
+    )
+
+    emb = _emb(spark)
+    a = {
+        tuple(r)
+        for r in kmeans_cluster_profile(emb, "vec_id", "embedding", k=4, iters=2).collect()
+    }
+    b = {
+        tuple(r)
+        for r in kmeans_cluster_profile(
+            emb.repartition(13), "vec_id", "embedding", k=4, iters=2
+        ).collect()
+    }
+    assert a == b
+    assert sum(n for _, n, _ in a) == emb.count()
+
+
+def test_kmeans_every_vector_assigned_once(spark):
+    from mapreducewordoccurences_spark.functions.similarity import (
+        kmeans_fit_predict,
+    )
+
+    emb = _emb(spark)
+    fit = kmeans_fit_predict(emb, "vec_id", "embedding", k=4, iters=2)
+    rows = fit.collect()
+    assert len(rows) == emb.count()
+    assert len({r.vec_id for r in rows}) == len(rows)
+    assert all(0 <= r.cluster_id < 4 and r.sq_dist >= 0 for r in rows)
+
+
+def test_kmeans_profile_build_jobs(spark):
+    """Building ``kmeans_cluster_profile`` (k=8, one centroid update)
+    fires at most 3 Spark jobs — the lazily checkpointed Lloyd round —
+    once its table's schema is cached."""
+    from mapreducewordoccurences_spark.queries import QUERIES
+
+    from tests.spark_jobs import count_jobs
+
+    def build():
+        QUERIES["kmeans_cluster_profile"](spark, SF_DIR)
+
+    build()
+    assert count_jobs(spark, build) <= 3
+
+
+def test_kmeans_more_iters_never_worse_objective(spark):
+    """Lloyd monotonicity survives the quantization: total within-
+    cluster sq distance after 3 passes <= after 1 pass."""
+    from mapreducewordoccurences_spark.functions.similarity import (
+        kmeans_cluster_profile,
+    )
+
+    emb = _emb(spark)
+
+    def obj(iters):
+        prof = kmeans_cluster_profile(emb, "vec_id", "embedding", k=4, iters=iters)
+        return prof.agg(F.sum("sum_sq_dist")).collect()[0][0]
+
+    assert obj(3) <= obj(1)
 
 
 class TestIvfpqIndexMeta:

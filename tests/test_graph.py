@@ -142,6 +142,32 @@ class TestTriangleApprox:
         assert abs(est - exact) / exact <= 0.10
 
 
+def test_triangle_count_known_graphs(spark):
+    from mapreducewordoccurences_spark.operators.graph import triangle_count
+
+    def count(edges):
+        df = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
+        return triangle_count(df).collect()[0]
+
+    # K3: one triangle
+    r = count([(1, 2), (2, 3), (1, 3)])
+    assert (r["n_nodes"], r["n_edges"], r["n_triangles"]) == (3, 3, 1)
+    # K4: 4 triangles (every 3-subset)
+    k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
+    assert count(k4)["n_triangles"] == 4
+    # star (hub + 5 leaves): plenty of wedges, zero triangles
+    star = [(0, i) for i in range(1, 6)]
+    r = count(star)
+    assert r["n_triangles"] == 0 and r["n_edges"] == 5
+    # duplicate + reversed edges must not inflate anything
+    messy = [(1, 2), (2, 1), (2, 3), (3, 1), (1, 3), (1, 3)]
+    r = count(messy)
+    assert (r["n_edges"], r["n_triangles"]) == (3, 1)
+    # two disjoint triangles sharing no nodes
+    two = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12)]
+    assert count(two)["n_triangles"] == 2
+
+
 class TestTriangleEdgeCases:
     def test_wedge_free_graph_estimates_zero(self, spark):
         """ADVICE r7: a graph whose every vertex has degree <= 1 has

@@ -17,6 +17,9 @@ run it.
 
 A second check keeps each top-level name bound once per package
 module, so no definition is shadowed by a later one of the same name.
+A third keeps each top-level function body in one place: two
+functions whose bodies are the same AST, docstrings aside, are one
+helper copied, and the copies drift apart.
 """
 
 from __future__ import annotations
@@ -153,6 +156,35 @@ def shadowed_names() -> list[str]:
     return out
 
 
+def _body_without_docstring(
+    node: ast.FunctionDef | ast.AsyncFunctionDef,
+) -> list[ast.stmt]:
+    body = node.body
+    if (
+        body
+        and isinstance(body[0], ast.Expr)
+        and isinstance(body[0].value, ast.Constant)
+        and isinstance(body[0].value.value, str)
+    ):
+        body = body[1:]
+    return body
+
+
+def duplicated_bodies() -> list[str]:
+    """Groups of top-level package functions whose bodies, docstrings
+    aside, dump to the same AST (names, signatures and line numbers
+    are not compared)."""
+    groups: dict[str, list[str]] = {}
+    for path, tree in _package_modules():
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                body = ast.Module(body=_body_without_docstring(node), type_ignores=[])
+                groups.setdefault(ast.dump(body), []).append(
+                    f"{path.relative_to(PACKAGE)}:{node.lineno} {node.name}"
+                )
+    return [" = ".join(locs) for locs in groups.values() if len(locs) > 1]
+
+
 def test_every_definition_has_a_non_test_caller():
     unreached = unreached_definitions()
     assert not unreached, (
@@ -168,4 +200,12 @@ def test_no_module_binds_a_top_level_name_twice():
         "package modules that bind a top-level name more than once "
         "(the earlier binding is unreachable by name):\n  "
         + "\n  ".join(shadowed)
+    )
+
+
+def test_no_two_functions_share_a_body():
+    copies = duplicated_bodies()
+    assert not copies, (
+        "top-level package functions with the same body (keep one and "
+        "import it):\n  " + "\n  ".join(copies)
     )

@@ -125,6 +125,40 @@ def test_split_and_sample_plan_shapes(spark):
     assert "TakeOrderedAndProject" in formatted_plan(q(spark, "bigram_counts"))
 
 
+@pytest.mark.parametrize("m", [1, 16])
+def test_vq_trainer_never_shuffles_the_vectors(spark, monkeypatch, m):
+    """Each Lloyd round of ``pq_codebooks`` — at m=1 (the IVF cells and
+    k-means) and at m=16 (PQ) — moves only (sub, code, dim) partial
+    sums and codeword lists through its Exchanges, never the quantized
+    vector column ``__q``, and runs no Python. The rounds are captured
+    where the trainer checkpoints them."""
+    from mapreducewordoccurences_spark.functions.similarity import pq_codebooks
+    from mapreducewordoccurences_spark.sources.readers import load_table
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    rounds = []
+
+    def capture(df, eager=True, storageLevel=None):
+        rounds.append(df)
+        return df
+
+    monkeypatch.setattr(type(emb), "localCheckpoint", capture)
+    pq_codebooks(emb, m=m, ks=16, iters=2)
+    assert len(rounds) == 2
+    for df in rounds:
+        plan = formatted_plan(df)
+        inputs = re.findall(
+            r"^\(\d+\) Exchange[ \t]*\nInput \[\d+\]: \[([^\]]*)\]",
+            plan,
+            re.MULTILINE,
+        )
+        assert inputs, "a Lloyd round has an update shuffle"
+        for cols in inputs:
+            names = {c.strip().split("#")[0] for c in cols.split(",")}
+            assert "__q" not in names, cols
+        assert not has_python_eval(plan)
+
+
 def test_ivf_probe_prunes_partitions(spark, tmp_path):
     from pyspark.sql import functions as F
 
