@@ -10,20 +10,17 @@ operator:
       → min-id survivorship
       → per-source keep/drop audit
 
-Three near-dup tiers, IDENTICAL downstream plumbing and output schema:
+Two near-dup tiers, IDENTICAL downstream plumbing and output schema:
 
-- ``near_tier="jaccard"``: exact shingle-Jaccard via the capped
-  posting-list self-join (dedup/ngram.py). The verifier-grade tier —
-  right when the survivor set fits an all-candidate scoring pass.
-- ``near_tier="jaccard_prefix"``: exact shingle-Jaccard via the
-  prefix-filtering SSJoin (dedup/prefix.py). Bit-identical pair set
-  to the uncapped posting-list join (recall 1.0 by the prefix
-  theorem), but candidate volume is bounded by the rarest ~20% of
-  each doc's shingles instead of Σ df² over the whole vocabulary —
-  the exact tier that survives a df-skewed corpus (the sf1 scaling
-  probe showed the uncapped posting-list tier growing 15.7× per
-  10× data; this tier removes that quadratic-in-df term while
-  keeping the same oracle).
+- ``near_tier="jaccard_prefix"`` (the default): exact shingle-Jaccard
+  via the prefix-filtering SSJoin (dedup/prefix.py). Bit-identical
+  pair set to the uncapped posting-list join (recall 1.0 by the
+  prefix theorem), but candidate volume is bounded by the rarest
+  ~20% of each doc's shingles instead of Σ df² over the whole
+  vocabulary — the exact tier that survives a df-skewed corpus (the
+  sf1 scaling probe showed the uncapped posting-list tier growing
+  15.7× per 10× data; this tier removes that quadratic-in-df term
+  while keeping the same oracle).
 - ``near_tier="minhash_lsh"``: MinHash-LSH banding generates the
   candidates (dedup/minhash.py — ids-only band shuffle), then exact
   shingle-Jaccard is computed ON THE CANDIDATE PAIRS ONLY and
@@ -32,9 +29,13 @@ Three near-dup tiers, IDENTICAL downstream plumbing and output schema:
   |candidates| × per-pair array intersection, not |survivors|².
   Because candidates are VERIFIED against the exact score, the edge
   set equals {exact pairs} ∩ {LSH candidates} — identical to the
-  jaccard tier whenever LSH recall is 1.0 (testdata: planted dups
+  jaccard_prefix tier whenever LSH recall is 1.0 (testdata: planted dups
   have J≈1, where the 16-band × 4-row S-curve misses with
   probability (1-J⁴)¹⁶ < 3e-4 even at J=0.8).
+
+Both tiers are the shared pair core (dedup/pairs.py): a key-collision
+candidate join (prefix tokens or MinHash bands) verified by one exact
+set scorer.
 
 Scale notes: the tagged table persists once for its three consumers
 (survivor semi-join, status join, final agg); components run via
@@ -51,7 +52,6 @@ from pyspark.sql import functions as F
 from mapreducewordoccurences_spark.dedup.clusters import connected_components
 from mapreducewordoccurences_spark.dedup.exact import doc_fingerprint
 from mapreducewordoccurences_spark.dedup.minhash import minhash_lsh_pairs
-from mapreducewordoccurences_spark.dedup.ngram import ngram_jaccard_pairs
 from mapreducewordoccurences_spark.dedup.prefix import (
     prefix_filter_jaccard_pairs,
 )
@@ -92,22 +92,21 @@ def _verified_lsh_pairs(
 
 def dedup_cascade(
     docs: DataFrame,
-    near_tier: str = "jaccard",
+    near_tier: str = "jaccard_prefix",
     id_col: str = "doc_id",
     text_col: str = "text",
     source_col: str = "source",
     n: int = 3,
     threshold: float = 0.8,
-    max_shingle_df: int | None = 64,
     num_perm: int = 64,
     bands: int = 16,
     candidate_est_threshold: float = 0.5,
 ) -> DataFrame:
     """Per-source keep/drop audit of the full cascade: (source,
     n_docs, n_dropped_exact, n_dropped_near, n_kept). Swap
-    ``near_tier`` between "jaccard" and "minhash_lsh"; schema and
+    ``near_tier`` between "jaccard_prefix" and "minhash_lsh"; schema and
     keep-set semantics are identical (see module docstring)."""
-    if near_tier not in ("jaccard", "jaccard_prefix", "minhash_lsh"):
+    if near_tier not in ("jaccard_prefix", "minhash_lsh"):
         raise ValueError(f"unknown near_tier: {near_tier!r}")
 
     fp = docs.select(
@@ -126,16 +125,7 @@ def dedup_cascade(
     survivors = docs.join(
         tagged.where(~F.col("drop_exact")).select(id_col), id_col, "left_semi"
     )
-    if near_tier == "jaccard":
-        pairs = ngram_jaccard_pairs(
-            survivors,
-            id_col=id_col,
-            text_col=text_col,
-            n=n,
-            threshold=threshold,
-            max_shingle_df=max_shingle_df,
-        )
-    elif near_tier == "jaccard_prefix":
+    if near_tier == "jaccard_prefix":
         pairs = prefix_filter_jaccard_pairs(
             survivors,
             id_col=id_col,

@@ -1,9 +1,10 @@
 """Embedding-cosine near-duplicate detection.
 
-Semantic near-dups: pairs whose embedding cosine ≥ threshold. The
-scale path bucketizes with sign-LSH first (functions/similarity.py)
-so only plausible pairs are scored; ``exact=True`` scores all pairs
-(O(n²) — verifier tier / small inputs only).
+Semantic near-dups: pairs whose embedding cosine ≥ threshold.
+``embedding_near_dup_pairs`` scores every pair (O(n²) — the verifier
+tier, run on bounded slices); ``semantic_dedup_profile`` bounds the
+candidates by k-means cells (SemDeDup) and ``semantic_dedup_recall``
+measures what that bound misses against the exact tier.
 """
 
 from __future__ import annotations
@@ -11,11 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mapreducewordoccurences_spark.functions.similarity import (
-    dot,
-    lsh_bucket,
-    _hyperplanes,
-)
+from mapreducewordoccurences_spark.functions.similarity import dot
 
 
 def embedding_near_dup_pairs(
@@ -23,11 +20,6 @@ def embedding_near_dup_pairs(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exact: bool = False,
-    dim: int = 64,
-    n_planes: int = 8,
-    n_tables: int = 6,
-    seed: int = 42,
 ) -> DataFrame:
     """Pairs (a < b) with cosine(vec_a, vec_b) ≥ threshold →
     (id_a, id_b, cos_sim).
@@ -57,36 +49,7 @@ def embedding_near_dup_pairs(
         F.col(vec_col).alias("__vb"),
         F.col("__n").alias("__nb"),
     )
-    if exact:
-        cand = a.join(b, on=F.col("id_a") < F.col("id_b"), how="inner")
-    else:
-        # ONE scan: every table's bucket id in a single projected array,
-        # posexploded to (table, bucket) rows — a per-table union would
-        # re-scan the corpus n_tables times (see functions/similarity.py
-        # lsh_knn bucketize, same pattern).
-        buckets = F.array(*[
-            lsh_bucket(vec_col, _hyperplanes(dim, n_planes, seed + 1000 * t))
-            for t in range(n_tables)
-        ])
-        bucketed = withn.select(
-            F.col(id_col),
-            F.col(vec_col),
-            "__n",
-            F.posexplode(buckets).alias("__table", "__bucket"),
-        )
-        la = bucketed.select(
-            F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"),
-            F.col("__n").alias("__na"), "__table", "__bucket",
-        )
-        lb = bucketed.select(
-            F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"),
-            F.col("__n").alias("__nb"), "__table", "__bucket",
-        )
-        cand = (
-            la.join(lb, on=["__table", "__bucket"], how="inner")
-            .where(F.col("id_a") < F.col("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
+    cand = a.join(b, on=F.col("id_a") < F.col("id_b"), how="inner")
     return cand.select(
         "id_a",
         "id_b",
@@ -232,7 +195,7 @@ def semantic_dedup_recall(
         id_col, "cluster_id"
     )
     exact = embedding_near_dup_pairs(
-        df, threshold=threshold, id_col=id_col, vec_col=vec_col, exact=True
+        df, threshold=threshold, id_col=id_col, vec_col=vec_col
     ).select("id_a", "id_b")
     labeled = exact.join(
         assign.select(

@@ -29,6 +29,11 @@ document frequency. Everything is built-in array/agg expressions —
 one explode per (doc, shingle), one groupBy per doc, one explode per
 (doc, band), one self-join on (band, band_hash).
 
+Candidate generation is the shared collision self-join
+(dedup/pairs.py ``collision_pairs``) over ``minhash_band_index``'s
+band table; the incremental new×index probe is the same join with
+the index as its other side.
+
 Base hash is ``xxhash64`` — JVM-native (no string materialization, no
 base conversion), deterministic across runs/partitionings/AQE replans,
 which is the determinism a rows-only operator needs. (An earlier
@@ -38,16 +43,11 @@ consumes and cost ~25% of end-to-end runtime.)
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapreducewordoccurences_spark.dedup.ngram import shingles_df
-
-
-def _base_hash(col: Column) -> Column:
-    """64-bit integer hash of a string (signed; consumers pmod it).
-    xxhash64 is whole-stage-codegen'd — one pass over the bytes."""
-    return F.xxhash64(col)
+from mapreducewordoccurences_spark.dedup.pairs import collision_pairs
 
 
 def minhash_signatures(
@@ -62,9 +62,11 @@ def minhash_signatures(
 
     One shuffle (groupBy id); the num_perm minima fold into a single
     partial-aggregated pass, so shuffle rows = docs, not shingles.
+    The base hash of a shingle is xxhash64 (signed; one codegen'd pass
+    over the bytes).
     """
     sh = shingles_df(df, id_col, text_col, n).select(
-        F.col(id_col), _base_hash(F.col("shingle")).alias("__h")
+        F.col(id_col), F.xxhash64(F.col("shingle")).alias("__h")
     )
     # Each "permutation" is an independent 64-bit rehash of the base
     # hash: xxhash64(__h, mix_i) where mix_i folds (seed, i) into one
@@ -87,66 +89,23 @@ def minhash_signatures(
     return sh.groupBy(id_col).agg(F.expr(sig_sql).alias("signature"))
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_perm: int = 64,
-    bands: int = 16,
-    threshold: float = 0.7,
-    seed: int = 42,
-    persist: bool = True,
+def _est_jaccard(
+    cand: DataFrame,
+    sigs_a: DataFrame,
+    sigs_b: DataFrame,
+    id_col: str,
+    num_perm: int,
+    threshold: float,
 ) -> DataFrame:
-    """Candidate pairs via LSH banding, scored by estimated Jaccard
-    (signature agreement rate), filtered at ``threshold``.
-
-    Returns (doc_a, doc_b, est_jaccard). With num_perm=64, bands=16
-    (4 rows/band) the S-curve midpoint sits near J≈0.5 — catches
-    J≥0.7 pairs with >99% probability.
-
-    ``persist`` caches the banded signatures, which feed both sides of
-    the candidate self-join (Spark recomputes repeated subtrees
-    otherwise — that would re-shingle and re-hash the corpus twice).
-    """
-    if num_perm % bands != 0:
-        raise ValueError("num_perm must be divisible by bands")
-    rows_per_band = num_perm // bands
-    sigs = minhash_signatures(df, id_col, text_col, n, num_perm, seed)
-    if persist:
-        sigs = sigs.persist()
-
-    banded = sigs.select(
-        F.col(id_col),
-        F.posexplode(
-            # xxhash64 hashes the bigint slice directly — no string
-            # round-trip; a 64-bit bucket id keeps false band
-            # collisions ~0 (and any are filtered by est_jaccard).
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.xxhash64(
-                    F.slice(F.col("signature"), b * rows_per_band + 1, rows_per_band)
-                ),
-            )
-        ).alias("band", "band_hash"),
-    )
-    # The self-join shuffles ids only — carrying the num_perm-long
-    # signature through the banding explode would multiply the exchange
-    # by bands × (8·num_perm) bytes per doc (~60× at the defaults).
-    # Signatures re-join from the persisted table after candidate
-    # dedup, when the row set is already collision-pruned.
-    a = banded.select(F.col(id_col).alias("doc_a"), "band", "band_hash")
-    b = banded.select(F.col(id_col).alias("doc_b"), "band", "band_hash")
-    cand = (
-        a.join(b, on=["band", "band_hash"], how="inner")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    """(doc_a, doc_b, est_jaccard ≥ threshold): candidate pairs scored
+    by signature agreement — the share of the num_perm minima equal on
+    both sides, an unbiased Jaccard estimate. Signatures re-join here,
+    after candidate dedup, so the band shuffle carries ids only."""
     cand = cand.join(
-        sigs.select(F.col(id_col).alias("doc_a"), F.col("signature").alias("__sig_a")),
+        sigs_a.select(F.col(id_col).alias("doc_a"), F.col("signature").alias("__sig_a")),
         "doc_a",
     ).join(
-        sigs.select(F.col(id_col).alias("doc_b"), F.col("signature").alias("__sig_b")),
+        sigs_b.select(F.col(id_col).alias("doc_b"), F.col("signature").alias("__sig_b")),
         "doc_b",
     )
     est = (
@@ -163,6 +122,35 @@ def minhash_lsh_pairs(
     )
 
 
+def minhash_lsh_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    num_perm: int = 64,
+    bands: int = 16,
+    threshold: float = 0.7,
+    seed: int = 42,
+) -> DataFrame:
+    """Candidate pairs via LSH banding, scored by estimated Jaccard
+    (signature agreement rate), filtered at ``threshold``.
+
+    Returns (doc_a, doc_b, est_jaccard). With num_perm=64, bands=16
+    (4 rows/band) the S-curve midpoint sits near J≈0.5 — catches
+    J≥0.7 pairs with >99% probability.
+
+    ``minhash_band_index`` plus the collision self-join on
+    (band, band_hash). The join shuffles ids only — carrying the
+    num_perm-long signature through the banding explode would multiply
+    the exchange by bands × (8·num_perm) bytes per doc (~60× at the
+    defaults); signatures re-join from the persisted table after
+    candidate dedup, when the row set is already collision-pruned.
+    """
+    sigs, banded = minhash_band_index(df, id_col, text_col, n, num_perm, bands, seed)
+    cand = collision_pairs(banded, id_col, ["band", "band_hash"])
+    return _est_jaccard(cand, sigs, sigs, id_col, num_perm, threshold)
+
+
 def minhash_band_index(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -171,7 +159,6 @@ def minhash_band_index(
     num_perm: int = 64,
     bands: int = 16,
     seed: int = 42,
-    persist: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """The persistent LSH INDEX of a corpus: (signatures, band_table).
 
@@ -179,13 +166,13 @@ def minhash_band_index(
     (id, band, band_hash) — the two tables a production pipeline
     writes out ONCE (partitioned by band at scale) so that every
     future batch dedups against the corpus without re-shingling or
-    re-hashing a single old document. Same permutations/banding as
-    ``minhash_lsh_pairs`` given the same seed, so estimates are
-    directly comparable.
+    re-hashing a single old document. ``minhash_lsh_pairs`` is this
+    index plus the collision self-join, so estimates are directly
+    comparable given the same seed.
 
-    ``persist`` caches the signature table before deriving the band
-    table from it — the in-session analog of "written out once".
-    Without it, consuming both returned tables recomputes the whole
+    The signature table is persisted before the band table is derived
+    from it — the in-session analog of "written out once". Without it,
+    consuming both returned tables recomputes the whole
     shingle→hash→min pipeline twice (band_table shares signatures'
     lineage), which is exactly the rescan the index exists to avoid.
     Measured (r7, interleaved A/B on local[32], incremental-dedup
@@ -196,18 +183,18 @@ def minhash_band_index(
     Caching contract: the persist is NOT released by this function
     (the returned tables are lazy; the cache must outlive the
     caller's final action). Long-lived sessions indexing many corpora
-    should ``signatures.unpersist()`` when done with both tables, or
-    pass ``persist=False`` and manage caching themselves — the bench
-    harness instead clears the session cache between queries."""
+    should ``signatures.unpersist()`` when done with both tables — the
+    bench harness instead clears the session cache between queries."""
     if num_perm % bands != 0:
         raise ValueError("num_perm must be divisible by bands")
     rows_per_band = num_perm // bands
-    sigs = minhash_signatures(df, id_col, text_col, n, num_perm, seed)
-    if persist:
-        sigs = sigs.persist()
+    sigs = minhash_signatures(df, id_col, text_col, n, num_perm, seed).persist()
     band_table = sigs.select(
         F.col(id_col),
         F.posexplode(
+            # xxhash64 hashes the bigint slice directly — no string
+            # round-trip; a 64-bit bucket id keeps false band
+            # collisions ~0 (and any are filtered by est_jaccard).
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
                 lambda b: F.xxhash64(
@@ -238,46 +225,19 @@ def minhash_lsh_incremental_pairs(
     Returns (new_id, index_id, est_jaccard). The 100 TB contract:
     per batch, only the NEW documents are shingled/hashed (batch-sized
     work); the corpus contributes its stored band table to one
-    equi-join on (band, band_hash) — corpus-side cost is a join
-    against an index that dynamic partition pruning / bucketing keeps
-    cheap, NOT a rescan. new×new dedup within the batch is
-    ``minhash_lsh_pairs`` on the batch alone; this function covers
-    the new×corpus frontier."""
-    if num_perm % bands != 0:
-        raise ValueError("num_perm must be divisible by bands")
+    equi-join on (band, band_hash) — the collision join with the index
+    as its other side. Corpus-side cost is a join against an index
+    that dynamic partition pruning / bucketing keeps cheap, NOT a
+    rescan. new×new dedup within the batch is ``minhash_lsh_pairs`` on
+    the batch alone; this function covers the new×corpus frontier."""
     new_sigs, new_bands = minhash_band_index(
         new_df, id_col, text_col, n, num_perm, bands, seed
     )
-    cand = (
-        new_bands.select(
-            F.col(id_col).alias("new_id"), "band", "band_hash"
-        )
-        .join(
-            index_bands.select(
-                F.col(id_col).alias("index_id"), "band", "band_hash"
-            ),
-            on=["band", "band_hash"],
-        )
-        .where(F.col("new_id") != F.col("index_id"))
-        .dropDuplicates(["new_id", "index_id"])
+    cand = collision_pairs(
+        new_bands, id_col, ["band", "band_hash"], other=index_bands
     )
-    cand = cand.join(
-        new_sigs.select(F.col(id_col).alias("new_id"), F.col("signature").alias("__sa")),
-        "new_id",
-    ).join(
-        index_sigs.select(
-            F.col(id_col).alias("index_id"), F.col("signature").alias("__sb")
-        ),
-        "index_id",
-    )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("__sa", "__sb", lambda x, y: x == y), lambda eq: eq
-            )
-        )
-        / F.lit(float(num_perm))
-    )
-    return cand.select("new_id", "index_id", est.alias("est_jaccard")).where(
-        F.col("est_jaccard") >= threshold
+    return _est_jaccard(cand, new_sigs, index_sigs, id_col, num_perm, threshold).select(
+        F.col("doc_a").alias("new_id"),
+        F.col("doc_b").alias("index_id"),
+        "est_jaccard",
     )

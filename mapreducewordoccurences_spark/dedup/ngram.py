@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mapreducewordoccurences_spark.dedup.pairs import collision_pairs, jaccard_pairs
 from mapreducewordoccurences_spark.functions.text import tokens
 
 
@@ -69,19 +70,18 @@ def _shingle_pair_counts(
     text_col: str,
     n: int,
     max_shingle_df: int | None,
-    persist: bool,
 ) -> DataFrame:
     """Shared candidate machinery for the set-similarity scorers:
     (doc_a, doc_b, __inter, __na, __nb) for every doc pair sharing at
-    least one shingle — intersection size plus both set sizes. The
-    Jaccard scorer is a pure projection over this.
+    least one shingle — intersection size plus both set sizes, the
+    shape dedup/pairs.py ``set_overlap`` returns for verified
+    candidates. The Jaccard scorer (``jaccard_pairs``) is a pure
+    projection over this.
 
-    ``persist`` caches the multiply-consumed intermediate (the capped
-    posting-list table, or the uncapped shingle table read by both
-    self-join sides + sizes) — Spark does not dedupe repeated
-    subtrees. The cache lives until LRU eviction or
-    ``spark.catalog.clearCache()``; pass False for one-shot pipelines
-    that would rather re-tokenize than hold executor memory.
+    The multiply-consumed intermediate (the capped posting-list table,
+    or the uncapped shingle table read by both self-join sides +
+    sizes) is persisted — Spark does not dedupe repeated subtrees. The
+    cache lives until LRU eviction or ``spark.catalog.clearCache()``.
 
     Shingles are folded to 64-bit xxhash64 BEFORE the self-join: the
     shuffle then carries 8-byte longs instead of ~n-word strings
@@ -107,9 +107,8 @@ def _shingle_pair_counts(
             .where(F.size("__ids") <= max_shingle_df)
             .select("__ids")
         )
-        if persist:
-            # two consumers (sizes + pairs); one cache, list-sized rows
-            posting = posting.persist()
+        # two consumers (sizes + pairs); one cache, list-sized rows
+        posting = posting.persist()
         sizes = (
             posting.select(F.explode("__ids").alias(id_col))
             .groupBy(id_col)
@@ -127,15 +126,12 @@ def _shingle_pair_counts(
             .agg(F.count(F.lit(1)).alias("__inter"))
         )
     else:
-        if persist:
-            sh = sh.persist()
+        sh = sh.persist()
         sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
 
-        a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-        b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
+        # one row per shared shingle, counted — not deduplicated
         inter = (
-            a.join(b, on="shingle", how="inner")
-            .where(F.col("doc_a") < F.col("doc_b"))
+            collision_pairs(sh, id_col, ["shingle"], distinct=False)
             .groupBy("doc_a", "doc_b")
             .agg(F.count(F.lit(1)).alias("__inter"))
         )
@@ -151,16 +147,11 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_shingle_df: int | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """All doc pairs (a < b) with shingle-Jaccard ≥ threshold.
 
     Returns (doc_a, doc_b, jaccard). jaccard is an int/int divide —
     bit-deterministic across engines.
     """
-    counts = _shingle_pair_counts(df, id_col, text_col, n, max_shingle_df, persist)
-    jac = F.col("__inter") / (F.col("__na") + F.col("__nb") - F.col("__inter"))
-    return (
-        counts.select("doc_a", "doc_b", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
+    counts = _shingle_pair_counts(df, id_col, text_col, n, max_shingle_df)
+    return jaccard_pairs(counts, threshold)

@@ -26,7 +26,9 @@ posting-list join — the two formulations share one SQL oracle.
 Cost model at 100 TB: one groupBy(shingle) for global df, one
 per-doc sort (inside groupBy collect), one equi-join on prefix
 shingles (short lists ⇒ bounded fan-out), and candidate-bounded
-verification. No knob to mis-tune: unlike max_shingle_df, exactness
+verification. The candidate join and the verifier are the shared
+pair core (dedup/pairs.py ``collision_pairs``, ``set_overlap``,
+``jaccard_pairs``). No knob to mis-tune: unlike max_shingle_df, exactness
 does not depend on a cap.
 """
 
@@ -36,18 +38,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapreducewordoccurences_spark.dedup.ngram import shingles_df
+from mapreducewordoccurences_spark.dedup.pairs import (
+    collision_pairs,
+    jaccard_pairs,
+    set_overlap,
+)
 
 
-def prefix_filter_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
+def _rarity_ordered(
+    df: DataFrame, id_col: str, text_col: str, n: int, threshold: float
 ) -> DataFrame:
-    """All doc pairs (a < b) with shingle-Jaccard ≥ threshold —
-    bit-identical output to ``ngram_jaccard_pairs`` with no df cap,
-    via prefix filtering. Returns (doc_a, doc_b, jaccard)."""
+    """(id, __sz, __set, __prefix): each doc's shingle count, its
+    xxhash64-folded shingle set (the verification set: 8-byte
+    compares, same fold as the other tiers) and its prefix — the first
+    p = sz − ceil(t·sz) + 1 shingles under one global rarity order.
+    Persisted: the prefix index and both verifier sides read it."""
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     sh = shingles_df(df, id_col, text_col, n)
@@ -67,17 +72,14 @@ def prefix_filter_jaccard_pairs(
         )
         .select(id_col, "__ord", F.size("__ord").alias("__sz"))
     )
-    # prefix length p = sz - ceil(t*sz) + 1
     p = (
         F.col("__sz")
         - F.ceil(F.col("__sz") * F.lit(float(threshold))).cast("int")
         + F.lit(1)
     )
-    docs = ordered.select(
+    return ordered.select(
         id_col,
         "__sz",
-        # verification set: xxhash64-folded shingles (8-byte compares,
-        # same fold as the other tiers)
         F.transform("__ord", lambda s: F.xxhash64(s["shingle"])).alias(
             "__set"
         ),
@@ -85,51 +87,22 @@ def prefix_filter_jaccard_pairs(
             F.slice("__ord", 1, p), lambda s: s["shingle"]
         ).alias("__prefix"),
     ).persist()
+
+
+def prefix_filter_jaccard_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    threshold: float = 0.8,
+) -> DataFrame:
+    """All doc pairs (a < b) with shingle-Jaccard ≥ threshold —
+    bit-identical output to ``ngram_jaccard_pairs`` with no df cap,
+    via prefix filtering. Returns (doc_a, doc_b, jaccard)."""
+    docs = _rarity_ordered(df, id_col, text_col, n, threshold)
     pre = docs.select(F.col(id_col), F.explode("__prefix").alias("__tok"))
-    cand = (
-        pre.select(F.col(id_col).alias("doc_a"), "__tok")
-        .join(pre.select(F.col(id_col).alias("doc_b"), "__tok"), "__tok")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    scored = (
-        cand.join(
-            docs.select(
-                F.col(id_col).alias("doc_a"),
-                F.col("__set").alias("__ra"),
-                F.col("__sz").alias("__sa"),
-            ),
-            "doc_a",
-        )
-        .join(
-            docs.select(
-                F.col(id_col).alias("doc_b"),
-                F.col("__set").alias("__rb"),
-                F.col("__sz").alias("__sb"),
-            ),
-            "doc_b",
-        )
-        # length filter (exactness-preserving prune): J ≤ min/max, so
-        # J ≥ t requires min(|A|,|B|) ≥ t·max(|A|,|B|) — reject size-
-        # mismatched candidates BEFORE paying the array intersection
-        .where(
-            F.least("__sa", "__sb")
-            >= F.greatest("__sa", "__sb") * F.lit(float(threshold))
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.size(F.array_intersect("__ra", "__rb"))
-                / (
-                    F.col("__sa")
-                    + F.col("__sb")
-                    - F.size(F.array_intersect("__ra", "__rb"))
-                )
-            ).alias("jaccard"),
-        )
-    )
-    return scored.where(F.col("jaccard") >= threshold)
+    cand = collision_pairs(pre, id_col, ["__tok"])
+    return jaccard_pairs(set_overlap(cand, docs, id_col, "__set"), threshold)
 
 
 def prefix_filter_containment_pairs(
@@ -160,35 +133,7 @@ def prefix_filter_containment_pairs(
     explodes. Pairs of equal size are found from either side and
     deduped.
     """
-    if not (0.0 < threshold <= 1.0):
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    sh = shingles_df(df, id_col, text_col, n)
-    gdf = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-    ordered = (
-        sh.join(gdf, "shingle")
-        .groupBy(id_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("__df", "shingle"))
-            ).alias("__ord")
-        )
-        .select(id_col, "__ord", F.size("__ord").alias("__sz"))
-    )
-    p = (
-        F.col("__sz")
-        - F.ceil(F.col("__sz") * F.lit(float(threshold))).cast("int")
-        + F.lit(1)
-    )
-    docs = ordered.select(
-        id_col,
-        "__sz",
-        F.transform("__ord", lambda s: F.xxhash64(s["shingle"])).alias(
-            "__set"
-        ),
-        F.transform(
-            F.slice("__ord", 1, p), lambda s: s["shingle"]
-        ).alias("__prefix"),
-    ).persist()
+    docs = _rarity_ordered(df, id_col, text_col, n, threshold)
     # probe side: smaller doc's prefix tokens (folded); index side:
     # ALL tokens (folded full set) — exactness needs the full index
     probe = docs.select(
@@ -218,32 +163,11 @@ def prefix_filter_containment_pairs(
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    scored = (
-        cand.join(
-            docs.select(
-                F.col(id_col).alias("doc_a"),
-                F.col("__set").alias("__ra"),
-                F.col("__sz").alias("__sa"),
-            ),
-            "doc_a",
-        )
-        .join(
-            docs.select(
-                F.col(id_col).alias("doc_b"),
-                F.col("__set").alias("__rb"),
-                F.col("__sz").alias("__sb"),
-            ),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.size(F.array_intersect("__ra", "__rb"))
-                / F.least("__sa", "__sb")
-            ).alias("containment"),
-            F.col("__sa").alias("n_shingles_a"),
-            F.col("__sb").alias("n_shingles_b"),
-        )
-    )
-    return scored.where(F.col("containment") >= threshold)
+    counts = set_overlap(cand, docs, id_col, "__set")
+    return counts.select(
+        "doc_a",
+        "doc_b",
+        (F.col("__inter") / F.least("__na", "__nb")).alias("containment"),
+        F.col("__na").alias("n_shingles_a"),
+        F.col("__nb").alias("n_shingles_b"),
+    ).where(F.col("containment") >= threshold)

@@ -8,8 +8,9 @@ Pair generation uses the pigeonhole block trick: split the 63 bits
 into ``max_distance+1`` blocks — any pair within Hamming distance d
 agrees exactly on ≥1 block — so candidates come from equi-joins on
 (block_idx, block_value), never a quadratic scan. This is the
-classic Google-crawl dedup shape (Manku et al., WWW'07) expressed as
-DataFrame ops.
+classic Google-crawl dedup shape (Manku et al., WWW'07); its one
+body is dedup/pairs.py ``hamming_ball_pairs``, shared with the media
+tier's dHash ball.
 
 63 (not 64) bits: keeps every block value and the fingerprint inside
 a signed BIGINT — portable, no unsigned wraparound.
@@ -33,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mapreducewordoccurences_spark.dedup.pairs import hamming_ball_pairs
 from mapreducewordoccurences_spark.functions.text import tokens
 
 _BITS = 63
@@ -81,56 +83,16 @@ def simhash_near_dup_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_distance: int = 3,
-    persist: bool = True,
     portable: bool = False,
 ) -> DataFrame:
-    """Pairs (a < b) with Hamming(simhash_a, simhash_b) ≤ max_distance.
+    """Pairs (a < b) with Hamming(simhash_a, simhash_b) ≤ max_distance
+    → (doc_a, doc_b, hamming), through the one pigeonhole ball
+    (dedup/pairs.py ``hamming_ball_pairs``). Recall of the Hamming
+    ball is 1.0 BY CONSTRUCTION at any scale; only the
+    Hamming↔Jaccard correlation is sketchy. Keep d ≤ 8 on big data.
 
-    Pigeonhole: k = max_distance+1 blocks of ~bits/k bits; any
-    qualifying pair matches on ≥1 whole block → equi-join per block,
-    then exact Hamming verification with bit_count(xor). Recall of
-    the Hamming ball is 1.0 BY CONSTRUCTION at any scale; only the
-    Hamming↔Jaccard correlation is sketchy.
-
-    Scale note: block width = bits/(d+1) sets the join's selectivity
-    — d=3 → 15-bit blocks (32k values, scale-safe); d=16 → 3-bit
-    blocks whose equi-join degenerates to near-quadratic on large
-    corpora (observed 579 s at sf1 before r7 retired that config).
-    Keep d ≤ 8 on big data.
-
-    ``persist`` caches the fingerprints feeding both self-join sides
-    (otherwise the per-bit vote aggregation runs twice).
-    """
-    k = max_distance + 1
+    The fingerprints are persisted: they feed both self-join sides
+    (otherwise the per-bit vote aggregation runs twice)."""
     bits = _PORTABLE_BITS if portable else _BITS
-    fps = simhash_fingerprints(df, id_col, text_col, portable=portable)
-    if persist:
-        fps = fps.persist()
-    bounds = [(bits * i) // k for i in range(k + 1)]
-
-    def block(col: Column, i: int) -> Column:
-        lo, hi = bounds[i], bounds[i + 1]
-        width = hi - lo
-        return F.shiftright(col, lo).bitwiseAND(F.lit((1 << width) - 1))
-
-    blocked = fps.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.posexplode(F.array(*[block(F.col("simhash"), i) for i in range(k)])).alias(
-            "block_idx", "block_val"
-        ),
-    )
-    a = blocked.select(
-        F.col(id_col).alias("doc_a"), F.col("simhash").alias("__fa"), "block_idx", "block_val"
-    )
-    b = blocked.select(
-        F.col(id_col).alias("doc_b"), F.col("simhash").alias("__fb"), "block_idx", "block_val"
-    )
-    dist = F.bit_count(F.col("__fa").bitwiseXOR(F.col("__fb")))
-    return (
-        a.join(b, on=["block_idx", "block_val"], how="inner")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-        .select("doc_a", "doc_b", dist.alias("hamming"))
-        .where(F.col("hamming") <= max_distance)
-    )
+    fps = simhash_fingerprints(df, id_col, text_col, portable=portable).persist()
+    return hamming_ball_pairs(fps, id_col, "simhash", max_distance, bits)

@@ -868,8 +868,8 @@ def audio_fingerprints(
     n_windows: int = 64,
 ) -> DataFrame:
     """payload → (media_id, afp) via Arrow-batched mapInPandas; near-
-    dup pairing downstream is the exact-dedup groupBy shape on the
-    64-bit fingerprint — audio bytes never shuffle."""
+    dup pairing downstream is the collision self-join on the 64-bit
+    fingerprint (dedup/pairs.py) — audio bytes never shuffle."""
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1096,6 +1096,29 @@ def dhash_frames(
     return df.select(id_col, payload_col).mapInPandas(compute, FRAME_DHASH_SCHEMA)
 
 
+def clip_fingerprints(frames: DataFrame) -> DataFrame:
+    """``dhash_frames`` rows → one (media_id, clipfp) row per clip:
+    the order-canonical md5 of the clip's sorted ``frame_idx:dhash``
+    list, so two clips share a fingerprint iff every frame's dHash
+    matches at the same index. Frames that failed to decode (NULL
+    dhash) are left out. One groupBy: the shuffle carries
+    (media_id, frame_idx, int64) rows, ~20 B per frame."""
+    return (
+        frames.filter(F.col("dhash").isNotNull())
+        .groupBy("media_id")
+        .agg(
+            F.md5(
+                F.concat_ws(
+                    ",",
+                    F.sort_array(
+                        F.collect_list(F.concat_ws(":", "frame_idx", "dhash"))
+                    ),
+                )
+            ).alias("clipfp")
+        )
+    )
+
+
 def make_planted_dup_clips(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1315,57 +1338,6 @@ def make_requant_dup_jpegs(
             )
 
     return _cpu_partitions(df.select(id_col)).mapInPandas(gen, MEDIA_SCHEMA)
-
-
-def hamming_hash_pairs(
-    hashes: DataFrame,
-    id_col: str = "media_id",
-    hash_col: str = "dhash",
-    max_distance: int = 8,
-    bits: int = 64,
-) -> DataFrame:
-    """(doc_a < doc_b, hamming) pairs within a Hamming ball over a
-    64-bit perceptual hash — the dedup/simhash.py pigeonhole applied
-    to the media tier: k = d+1 blocks, any qualifying pair collides on
-    ≥1 whole block (recall 1.0 by construction), equi-join per block,
-    exact bit_count(xor) verification. Same scale contract as simhash:
-    block width bits/(d+1) sets selectivity; keep d ≤ 8 on big data."""
-    k = max_distance + 1
-    fps = bounded_persist(hashes)
-    bounds = [(bits * i) // k for i in range(k + 1)]
-
-    def block(col, i: int):
-        lo, hi = bounds[i], bounds[i + 1]
-        width = hi - lo
-        return F.shiftright(col, lo).bitwiseAND(F.lit((1 << width) - 1))
-
-    blocked = fps.select(
-        F.col(id_col),
-        F.col(hash_col),
-        F.posexplode(
-            F.array(*[block(F.col(hash_col), i) for i in range(k)])
-        ).alias("block_idx", "block_val"),
-    )
-    a = blocked.select(
-        F.col(id_col).alias("doc_a"),
-        F.col(hash_col).alias("__fa"),
-        "block_idx",
-        "block_val",
-    )
-    b = blocked.select(
-        F.col(id_col).alias("doc_b"),
-        F.col(hash_col).alias("__fb"),
-        "block_idx",
-        "block_val",
-    )
-    dist = F.bit_count(F.col("__fa").bitwiseXOR(F.col("__fb")))
-    return (
-        a.join(b, on=["block_idx", "block_val"], how="inner")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-        .select("doc_a", "doc_b", dist.alias("hamming"))
-        .where(F.col("hamming") <= max_distance)
-    )
 
 
 def make_fake_gif_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:

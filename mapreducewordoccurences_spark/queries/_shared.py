@@ -32,6 +32,7 @@ from mapreducewordoccurences_spark.core.wordcount import count_words
 from mapreducewordoccurences_spark.dedup.exact import exact_dup_groups
 from mapreducewordoccurences_spark.dedup.minhash import minhash_lsh_pairs
 from mapreducewordoccurences_spark.dedup.ngram import ngram_jaccard_pairs
+from mapreducewordoccurences_spark.dedup.pairs import collision_pairs, hamming_ball_pairs
 from mapreducewordoccurences_spark.dedup.prefix import (
     prefix_filter_containment_pairs,
     prefix_filter_jaccard_pairs,

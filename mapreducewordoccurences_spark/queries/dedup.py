@@ -169,12 +169,13 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs, exact (verifier) tier on a
-    bounded slice; the LSH-bucketed scale tier is exercised in
-    tests/test_clusters.py with planted near-duplicates."""
+    bounded slice; at corpus scale the k-means cells of
+    semantic_dedup_profile bound the candidates instead
+    (semantic_dedup_recall_audit measures what they miss)."""
     from mapreducewordoccurences_spark.dedup.embedding import embedding_near_dup_pairs
 
     emb = _t(spark, sf_dir, "embeddings").where(F.col("vec_id") < 1000)
-    pairs = embedding_near_dup_pairs(emb, threshold=0.4, exact=True)
+    pairs = embedding_near_dup_pairs(emb, threshold=0.4)
     return pairs.select("id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim"))
 
 

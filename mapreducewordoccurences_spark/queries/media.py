@@ -145,12 +145,14 @@ def q_media_image_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     each through the stdlib codec and compute a 64-bit dHash
     (difference hash — grayscale, NN-resample to 9x8, one bit per
     adjacent-pixel comparison) in Arrow-batched mapInPandas, then
-    pair up hash-equal images with an ordinary self-equi-join.
+    pair up hash-equal images with the collision self-join
+    (dedup/pairs.py collision_pairs, one key per image, so no
+    duplicate-pair drop).
 
     This is the image-pipeline twin of exact text dedup: the
     expensive perceptual work is a map-only pass producing one
-    64-bit key per image, and near-dup discovery is the exact-dedup
-    groupBy shuffle — no pairwise image comparison anywhere, so the
+    64-bit key per image, and near-dup discovery is one self-join
+    shuffle on that key — no pairwise image comparison anywhere, so the
     shape survives 100 TB of media (binary payloads never shuffle;
     only (id, hash) rows do). The acceptance oracle is the
     closed-form planted pair list, the planted-triangle pattern
@@ -167,12 +169,8 @@ def q_media_image_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("dhash").isNotNull()
         )
     )
-    a = h.select(F.col("media_id").alias("doc_a"), "dhash")
-    b = h.select(F.col("media_id").alias("doc_b"), "dhash")
-    return (
-        a.join(b, "dhash")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
+    return collision_pairs(h, "media_id", ["dhash"], distinct=False).select(
+        "doc_a", "doc_b"
     )
 
 
@@ -197,11 +195,11 @@ def q_media_audio_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFra
     (sign of adjacent window-|amplitude| sums — gain-invariant
     because |c*x| = c*|x| preserves every comparison) in
     Arrow-batched mapInPandas, then pair fingerprint-equal clips
-    with an ordinary self-equi-join.
+    with the collision self-join (dedup/pairs.py).
 
     Scale shape: identical to the image row — perceptual work is a
-    map-only pass to one 64-bit key per clip; pairing is the
-    exact-dedup groupBy shuffle; audio bytes never shuffle."""
+    map-only pass to one 64-bit key per clip; pairing is one
+    self-join shuffle on that key; audio bytes never shuffle."""
     from mapreducewordoccurences_spark.multimodal.media import (
         audio_fingerprints,
         bounded_persist,
@@ -214,12 +212,8 @@ def q_media_audio_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFra
             F.col("afp").isNotNull()
         )
     )
-    a = h.select(F.col("media_id").alias("doc_a"), "afp")
-    b = h.select(F.col("media_id").alias("doc_b"), "afp")
-    return (
-        a.join(b, "afp")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
+    return collision_pairs(h, "media_id", ["afp"], distinct=False).select(
+        "doc_a", "doc_b"
     )
 
 
@@ -242,8 +236,9 @@ def q_media_video_clip_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFram
     APNG clip fans out to one dHash row PER FRAME inside the decode
     batch (multimodal/media.py dhash_frames — payload decoded once,
     bytes never shuffle), then clip identity is an order-canonical
-    aggregate (sorted frame_idx:dhash list → md5) and pairing is the
-    exact-dedup self-equi-join on the clip fingerprint.
+    aggregate (multimodal/media.py clip_fingerprints: sorted
+    frame_idx:dhash list → md5) and pairing is the collision
+    self-join on the clip fingerprint (dedup/pairs.py).
 
     Scale shape: the only shuffles carry (media_id, frame_idx, int64)
     and then (media_id, 128-bit fingerprint) rows — at 100 TB of
@@ -251,32 +246,17 @@ def q_media_video_clip_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFram
     size; the groupBy state is one row per clip."""
     from mapreducewordoccurences_spark.multimodal.media import (
         bounded_persist,
+        clip_fingerprints,
         dhash_frames,
         make_planted_dup_clips,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    frames = dhash_frames(make_planted_dup_clips(docs)).filter(
-        F.col("dhash").isNotNull()
-    )
     clips = bounded_persist(
-        frames.groupBy("media_id").agg(
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    F.sort_array(
-                        F.collect_list(F.concat_ws(":", "frame_idx", "dhash"))
-                    ),
-                )
-            ).alias("clipfp")
-        )
+        clip_fingerprints(dhash_frames(make_planted_dup_clips(docs)))
     )
-    a = clips.select(F.col("media_id").alias("doc_a"), "clipfp")
-    b = clips.select(F.col("media_id").alias("doc_b"), "clipfp")
-    return (
-        a.join(b, "clipfp")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
+    return collision_pairs(clips, "media_id", ["clipfp"], distinct=False).select(
+        "doc_a", "doc_b"
     )
 
 
@@ -339,7 +319,7 @@ def q_media_jpeg_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual near-dup over REAL JPEG bytes: the planted copies
     are different byte streams (DRI/RSTn entropy restarts) of the
     same pixels, so byte-level dedup can never pair them while the
-    full decode → dHash → exact-groupBy pipeline pairs them exactly
+    full decode → dHash → hash-equal self-join pipeline pairs them exactly
     (restart-variant decode equality is property-tested in
     tests/test_jpeg.py). Same 100 TB shape as the PNG row: map-only
     fingerprint pass, (id, hash) shuffle, binary payloads never
@@ -356,12 +336,8 @@ def q_media_jpeg_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("dhash").isNotNull()
         )
     )
-    a = h.select(F.col("media_id").alias("doc_a"), "dhash")
-    b = h.select(F.col("media_id").alias("doc_b"), "dhash")
-    return (
-        a.join(b, "dhash")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
+    return collision_pairs(h, "media_id", ["dhash"], distinct=False).select(
+        "doc_a", "doc_b"
     )
 
 
@@ -422,7 +398,7 @@ def q_media_gif_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct, bit-identical pixels — property-tested in
     tests/test_gif.py and cross-validated against javax.imageio), so
     byte-level dedup can never pair them while decode → dHash →
-    exact-groupBy pairs them exactly. Same 100 TB shape as the
+    hash-equal self-join pairs them exactly. Same 100 TB shape as the
     PNG/JPEG rows: map-only fingerprint pass, (id, hash) shuffle,
     binary payloads never move."""
     from mapreducewordoccurences_spark.multimodal.media import (
@@ -437,12 +413,8 @@ def q_media_gif_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("dhash").isNotNull()
         )
     )
-    a = h.select(F.col("media_id").alias("doc_a"), "dhash")
-    b = h.select(F.col("media_id").alias("doc_b"), "dhash")
-    return (
-        a.join(b, "dhash")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
+    return collision_pairs(h, "media_id", ["dhash"], distinct=False).select(
+        "doc_a", "doc_b"
     )
 
 
@@ -503,8 +475,9 @@ def q_media_mp4_clip_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     environment: demux each MJPEG MP4 (vendored ISO BMFF walker),
     dHash every sample through the vendored JPEG codec (one row per
     frame inside the decode batch — the media_video_clip_dhash_pairs
-    fan-out shape), collapse to an order-sensitive clip fingerprint,
-    and pair fingerprint-equal clips with the exact-dedup groupBy.
+    fan-out shape), collapse to the same order-sensitive clip
+    fingerprint (clip_fingerprints), and pair fingerprint-equal clips
+    with the collision self-join.
     The planted copies are progressive re-encodes muxed into a
     different container stream — byte-level dedup can never pair
     them; bit-identical sample decode (tests/test_jpeg.py) guarantees
@@ -512,32 +485,17 @@ def q_media_mp4_clip_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, ~20 B/frame moves."""
     from mapreducewordoccurences_spark.multimodal.media import (
         bounded_persist,
+        clip_fingerprints,
         dhash_frames,
         make_planted_dup_mp4s,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    frames = dhash_frames(make_planted_dup_mp4s(docs)).filter(
-        F.col("dhash").isNotNull()
-    )
     clips = bounded_persist(
-        frames.groupBy("media_id").agg(
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    F.sort_array(
-                        F.collect_list(F.concat_ws(":", "frame_idx", "dhash"))
-                    ),
-                )
-            ).alias("clipfp")
-        )
+        clip_fingerprints(dhash_frames(make_planted_dup_mp4s(docs)))
     )
-    a = clips.select(F.col("media_id").alias("doc_a"), "clipfp")
-    b = clips.select(F.col("media_id").alias("doc_b"), "clipfp")
-    return (
-        a.join(b, "clipfp")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
+    return collision_pairs(clips, "media_id", ["clipfp"], distinct=False).select(
+        "doc_a", "doc_b"
     )
 
 
@@ -556,8 +514,8 @@ def q_media_jpeg_requant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The real-corpus JPEG near-dup: same image re-encoded at a
     different quality (75 vs 90) — decoded pixels genuinely differ,
     so pairing needs the Hamming-tolerant tier
-    (multimodal/media.py hamming_hash_pairs, the simhash pigeonhole
-    over dHash, d ≤ 8). Measured on the smooth-pattern family: copy
+    (dedup/pairs.py hamming_ball_pairs, the one pigeonhole ball that
+    SimHash also uses, over the signed 64-bit dHash, d ≤ 8). Measured on the smooth-pattern family: copy
     distance ≤ 5 across 120 ids, distinct patterns ~32 bits apart —
     the d=8 ball pairs every planted copy with margin. Panel-scoped
     (doc_id < 400) like the SemDeDup recall audit: the acceptance is
@@ -565,8 +523,8 @@ def q_media_jpeg_requant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ball join's selectivity floor (7-bit blocks) does not need
     scale exercise here — dedup_simhash_pairs covers that shape."""
     from mapreducewordoccurences_spark.multimodal.media import (
+        bounded_persist,
         dhash_images,
-        hamming_hash_pairs,
         make_requant_dup_jpegs,
     )
 
@@ -576,7 +534,9 @@ def q_media_jpeg_requant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = dhash_images(make_requant_dup_jpegs(docs)).filter(
         F.col("dhash").isNotNull()
     )
-    found = hamming_hash_pairs(h, max_distance=8).select(
+    found = hamming_ball_pairs(
+        bounded_persist(h), "media_id", "dhash", max_distance=8, bits=64
+    ).select(
         "doc_a", "doc_b", F.lit(1).alias("__hit")
     )
     # semi-join doc_a back to documents so both engines count the same

@@ -1,5 +1,5 @@
-"""Dedup cascade: the two near-dup tiers (exact Jaccard vs
-MinHash-LSH candidates + exact verification) must produce identical
+"""Dedup cascade: the two near-dup tiers (exact prefix-filter Jaccard
+vs MinHash-LSH candidates + exact verification) must produce identical
 keep-set semantics and schema wherever LSH recall is 1.0."""
 
 from __future__ import annotations
@@ -18,13 +18,12 @@ def rows_of(df):
 
 def test_tiers_agree_on_testdata(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    jac = dedup_cascade(docs, near_tier="jaccard", max_shingle_df=64)
     pre = dedup_cascade(docs, near_tier="jaccard_prefix")
     lsh = dedup_cascade(docs, near_tier="minhash_lsh")
-    assert jac.columns == pre.columns == lsh.columns == [
+    assert pre.columns == lsh.columns == [
         "source", "n_docs", "n_dropped_exact", "n_dropped_near", "n_kept"
     ]
-    assert rows_of(jac) == rows_of(pre) == rows_of(lsh)
+    assert rows_of(pre) == rows_of(lsh)
 
 
 def test_tiers_agree_on_planted_corpus(spark):
@@ -41,15 +40,14 @@ def test_tiers_agree_on_planted_corpus(spark):
         (6, "b", "short no"),                # < n tokens of overlap, unique
     ]
     docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    jac = dedup_cascade(docs, near_tier="jaccard", threshold=0.5)
     pre = dedup_cascade(docs, near_tier="jaccard_prefix", threshold=0.5)
     lsh = dedup_cascade(docs, near_tier="minhash_lsh", threshold=0.5)
-    got = {r["source"]: r for r in jac.collect()}
+    got = {r["source"]: r for r in pre.collect()}
     assert got["a"]["n_dropped_exact"] == 1          # doc 2
     assert got["a"]["n_kept"] == 2                   # docs 1, 5
     assert got["b"]["n_dropped_near"] == 2           # docs 3, 4 fold into 1's comp
     assert got["b"]["n_kept"] == 1                   # doc 6
-    assert rows_of(jac) == rows_of(pre) == rows_of(lsh)
+    assert rows_of(pre) == rows_of(lsh)
 
 
 def test_catalog_entries_match_each_other(spark):

@@ -61,45 +61,6 @@ def test_dup_clusters_summary(spark):
     assert got == {(5, 3, 5), (100, 2, 100)}
 
 
-def test_embedding_lsh_near_dup_recall(spark):
-    """LSH-bucketed embedding near-dup tier: planted near-duplicate
-    pairs (cos >= ~0.97) must be recovered, and the bucketize plan must
-    touch the input once per join side (posexplode, not a per-table
-    union that re-scans n_tables times)."""
-    import math
-    import random
-
-    from mapreducewordoccurences_spark.dedup.embedding import embedding_near_dup_pairs
-
-    rng = random.Random(7)
-    dim = 16
-
-    def unit(v):
-        n = math.sqrt(sum(x * x for x in v))
-        return [x / n for x in v]
-
-    rows = []
-    planted = set()
-    for i in range(0, 200, 2):
-        base = unit([rng.gauss(0, 1) for _ in range(dim)])
-        near = unit([x + rng.gauss(0, 0.05) for x in base])  # cos ~0.97+
-        rows.append((i, base))
-        rows.append((i + 1, near))
-        planted.add((i, i + 1))
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-
-    got = embedding_near_dup_pairs(
-        df, threshold=0.9, exact=False, dim=dim, n_planes=8, n_tables=6
-    )
-    found = {(r["id_a"], r["id_b"]) for r in got.collect()}
-    recall = len(found & planted) / len(planted)
-    assert recall >= 0.9, (recall, len(found))
-
-    exact = embedding_near_dup_pairs(df, threshold=0.9, exact=True, dim=dim)
-    exact_pairs = {(r["id_a"], r["id_b"]) for r in exact.collect()}
-    assert found <= exact_pairs  # LSH candidates re-ranked exactly: no false positives
-
-
 def test_incremental_minhash_matches_full_lsh_cross_pairs(spark):
     """Incremental (batch × index) candidates must equal the full
     corpus LSH pair set restricted to cross-batch pairs — same seed,

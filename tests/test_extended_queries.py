@@ -72,7 +72,7 @@ def test_ngram_jaccard_capped_path_semantics(spark):
     def pairs(**kw):
         return {
             (r["doc_a"], r["doc_b"]): r["jaccard"]
-            for r in ngram_jaccard_pairs(df, threshold=0.0, persist=False, **kw).collect()
+            for r in ngram_jaccard_pairs(df, threshold=0.0, **kw).collect()
         }
 
     uncapped = pairs()

@@ -322,6 +322,81 @@ def test_incremental_dedup_no_full_row_shuffle(spark):
     assert not has_python_eval(df)
 
 
+def _band_join_feeds(df) -> list[dict[str, str]]:
+    """{column: type} output of every exchange feeding a join keyed on
+    (band, band_hash) in ``df``'s physical plan before adaptive
+    re-planning — the exchanges nearest the join on each side."""
+
+    def children(node):
+        seq = node.children()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    def names(seq):
+        return [seq.apply(i).toString().split("#")[0] for i in range(seq.size())]
+
+    def feeds(node):
+        if node.nodeName() in ("Exchange", "BroadcastExchange"):
+            out = node.output()
+            return [
+                {
+                    out.apply(i).name(): out.apply(i).dataType().simpleString()
+                    for i in range(out.size())
+                }
+            ]
+        return [f for c in children(node) for f in feeds(c)]
+
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        stack.extend(children(node))
+        if "Join" in node.nodeName() and names(node.leftKeys()) == [
+            "band",
+            "band_hash",
+        ]:
+            out += [f for c in children(node) for f in feeds(c)]
+    return out
+
+
+def test_minhash_band_join_shuffles_ids_only(spark):
+    """MinHash's band self-join (and the incremental new×index join,
+    the same collision join with the index as its other side) moves
+    (id, band, band_hash) rows: no exchange feeding it carries the
+    num_perm-long ``signature``, which re-joins after candidate dedup.
+    Broadcasts are off, so both sides are shuffled as at scale."""
+    from pyspark.sql import functions as F
+
+    from mapreducewordoccurences_spark.dedup.minhash import (
+        minhash_band_index,
+        minhash_lsh_incremental_pairs,
+        minhash_lsh_pairs,
+    )
+    from mapreducewordoccurences_spark.sources.readers import load_table
+
+    docs = load_table(spark, SF_DIR, "documents")
+    is_new = F.col("doc_id") % 10 == 0
+    index_sigs, index_bands = minhash_band_index(docs.where(~is_new))
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for df in (
+            minhash_lsh_pairs(docs),
+            minhash_lsh_incremental_pairs(
+                docs.where(is_new), index_sigs, index_bands
+            ),
+        ):
+            feeds = _band_join_feeds(df)
+            assert len(feeds) == 2, feeds  # one shuffle per join side
+            # the signature is the band table's one array column, under
+            # whatever name a join side gives it
+            for cols in feeds:
+                assert not any(t.startswith("array") for t in cols.values()), cols
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+
+
 def test_source_mix_weights_single_agg_shuffle(spark):
     # per-source agg is the only hash exchange; the one-row total
     # broadcasts back (no second corpus pass — one scan)

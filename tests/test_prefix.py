@@ -99,7 +99,7 @@ def test_random_corpora_match_python_reference(spark):
 def uncapped_containment_pairs(docs, n, threshold):
     """Reference containment join: every pair sharing a shingle, scored
     from the uncapped posting self-join, C = |A∩B| / min(|A|,|B|)."""
-    counts = _shingle_pair_counts(docs, "doc_id", "text", n, None, False)
+    counts = _shingle_pair_counts(docs, "doc_id", "text", n, None)
     cont = F.col("__inter") / F.least(F.col("__na"), F.col("__nb"))
     return counts.select(
         "doc_a", "doc_b", cont.alias("containment"),

@@ -1,46 +1,13 @@
-"""Round-7 operators: portable SimHash, DSIR importance scores and
-repetition stats (the IVF∘PQ and codebook-determinism tests live in
-test_ann.py, the k-core guards and approximate triangle counts in
-test_graph.py)."""
+"""Round-7 operators: DSIR importance scores and repetition stats
+(portable SimHash lives in test_dedup.py, the IVF∘PQ and
+codebook-determinism tests in test_ann.py, the k-core guards and
+approximate triangle counts in test_graph.py)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from mapreducewordoccurences_spark.sources.readers import load_table
-
-
-class TestPortableSimhash:
-    def test_token_hash_matches_duckdb_bit_for_bit(self, spark):
-        """The portable 60-bit token hash (low 15 hex chars of md5) is
-        the contract that lets the DuckDB oracle recompute simhash
-        fingerprints exactly; pin the cross-engine equality."""
-        import duckdb
-
-        from mapreducewordoccurences_spark.dedup.simhash import _token_hash
-
-        toks = ["hello", "world", "42", "a", "", "Ünïcode", "x" * 100]
-        df = spark.createDataFrame([(t,) for t in toks], "t string")
-        got = {r["t"]: r["h"] for r in df.select("t", _token_hash(F.col("t"), portable=True).alias("h")).collect()}
-        con = duckdb.connect()
-        for t in toks:
-            want = con.sql(
-                "SELECT CAST(('0x' || substring(md5(?), 1, 15)) AS BIGINT)", params=[t]
-            ).fetchone()[0]
-            assert got[t] == want, t
-
-    def test_portable_fingerprints_deterministic_and_60bit(self, spark):
-        from mapreducewordoccurences_spark.dedup.simhash import simhash_fingerprints
-
-        df = spark.createDataFrame(
-            [(1, "alpha beta gamma"), (2, "alpha beta gamma"), (3, "delta")],
-            "doc_id long, text string",
-        )
-        fp = {r["doc_id"]: r["simhash"] for r in simhash_fingerprints(df, portable=True).collect()}
-        assert fp[1] == fp[2]  # identical text -> identical fingerprint
-        assert all(0 <= v < (1 << 60) for v in fp.values())
-        fp2 = {r["doc_id"]: r["simhash"] for r in simhash_fingerprints(df.repartition(5), portable=True).collect()}
-        assert fp == fp2
 
 
 class TestDsir:

@@ -8,6 +8,7 @@ import os
 import shutil
 import sys
 import threading
+from collections import OrderedDict
 from types import SimpleNamespace
 from unittest import mock
 
@@ -207,3 +208,62 @@ def test_concurrent_reads_keep_the_cache_bounded(tmp_path):
     finally:
         sys.setswitchinterval(interval)
     assert errors == []
+
+
+def test_hit_and_evicting_fill_are_ordered_by_the_lock(tmp_path, monkeypatch):
+    """A hit's ``get`` and ``move_to_end`` run under one hold of the
+    cache lock, so a fill by another thread cannot evict the entry in
+    between. Thread A hits key a and pauses inside ``get`` until thread
+    B's read has filled key b — which, at a bound of 1, evicts a — or
+    about 1 s has passed. With the lock B waits for A and A's
+    ``move_to_end`` finds its key; without it B fills at once and A's
+    ``move_to_end`` raises KeyError."""
+    paths = []
+    for i in range(2):
+        path = tmp_path / f"t{i}.parquet"
+        _write_rows(path, i + 1)
+        paths.append(str(path))
+    spark = mock.MagicMock()
+    spark.conf.get.return_value = "false"
+    spark.read.parquet.side_effect = lambda p: SimpleNamespace(schema=p)
+    spark.read.schema.side_effect = lambda s: SimpleNamespace(
+        parquet=lambda p: SimpleNamespace(schema=s)
+    )
+    key_a = readers._schema_key(spark, paths[0])
+    key_b = readers._schema_key(spark, paths[1])
+    a_in_get = threading.Event()
+    b_filled = threading.Event()
+
+    class PausingDict(OrderedDict):
+        def get(self, key, default=None):
+            value = super().get(key, default)
+            if key == key_a:
+                a_in_get.set()
+                b_filled.wait(timeout=1.0)
+            return value
+
+    schemas = PausingDict({key_a: paths[0]})
+    monkeypatch.setattr(readers, "_schemas", schemas)
+    monkeypatch.setattr(readers, "SCHEMA_CACHE_SIZE", 1)
+    got, errors = [], []
+
+    def hit():
+        try:
+            got.append(read_parquet(spark, paths[0]).schema)
+        except Exception as exc:  # noqa: BLE001
+            errors.append(exc)
+
+    def fill():
+        read_parquet(spark, paths[1])
+        b_filled.set()
+
+    a = threading.Thread(target=hit)
+    a.start()
+    assert a_in_get.wait(timeout=30)
+    b = threading.Thread(target=fill)
+    b.start()
+    a.join(timeout=30)
+    b.join(timeout=30)
+    assert not a.is_alive() and not b.is_alive()
+    assert errors == [] and got == [paths[0]]
+    assert list(schemas) == [key_b]
