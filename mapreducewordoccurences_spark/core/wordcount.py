@@ -90,14 +90,15 @@ def count_words(df: DataFrame, text_col: str = "text", sort: bool = True) -> Dat
     return counts.coalesce(1).sortWithinPartitions("word") if sort else counts
 
 
-def count_words_in_file(spark: SparkSession, path: str, sort: bool = True) -> DataFrame:
-    """File → word counts. Distributed, out-of-core replacement for the
-    reference's whole-file slurp (src/main.c:74-110): spark.read.text
-    streams line-split input splits instead of requiring the input to
-    fit in RAM. A file of a few MB already splits over every core
+def count_words_in_file(spark: SparkSession, path: str) -> DataFrame:
+    """File → word counts, sorted by word. Distributed, out-of-core
+    replacement for the reference's whole-file slurp
+    (src/main.c:74-110): spark.read.text streams line-split input
+    splits instead of requiring the input to fit in RAM. A file of a
+    few MB already splits over every core
     (``spark.sql.files.openCostInBytes`` in session._DEFAULTS).
     """
-    return count_words(spark.read.text(path), text_col="value", sort=sort)
+    return count_words(spark.read.text(path), text_col="value")
 
 
 def format_kv_lines(df: DataFrame, key_col: str = "word", val_col: str = "count") -> DataFrame:

@@ -131,9 +131,7 @@ def bloom_incremental_new_unique(
     corpus_df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    normalize: bool = True,
     fpr: float = 0.01,
-    expected_corpus_keys: int | None = None,
 ) -> DataFrame:
     """Bloom-accelerated incremental dedup. Output is IDENTICAL to
     dedup/exact.py incremental_new_unique (id, fingerprint of
@@ -148,27 +146,20 @@ def bloom_incremental_new_unique(
     from the output. At a 1% FPR the corpus-probing slice shrinks to
     (true-dup rate + 1%) of the batch.
 
-    ``expected_corpus_keys`` sizes the bitmap; when None it is taken
-    from a cheap corpus count (fine for nightly jobs where the corpus
-    table's row count is already known/cached — pass it explicitly in
-    pipelines to keep the plan fully lazy).
+    The bitmap is sized from a count of the corpus's distinct
+    fingerprints (one job while the DataFrame is built).
     """
     from mapreducewordoccurences_spark.functions.text import doc_fingerprint
 
     corpus_fp = corpus_df.select(
-        doc_fingerprint(text_col, normalize=normalize).alias("fingerprint")
+        doc_fingerprint(text_col).alias("fingerprint")
     ).distinct()
-    n = (
-        expected_corpus_keys
-        if expected_corpus_keys is not None
-        else max(64, corpus_fp.count())
-    )
-    num_bits, num_hashes = bloom_params(n, fpr)
+    num_bits, num_hashes = bloom_params(max(64, corpus_fp.count()), fpr)
     bitmap = bloom_bitmap(corpus_fp, "fingerprint", num_bits, num_hashes)
 
     batch_keep = (
         new_df.select(
-            doc_fingerprint(text_col, normalize=normalize).alias("fingerprint"),
+            doc_fingerprint(text_col).alias("fingerprint"),
             F.col(id_col),
         )
         .groupBy("fingerprint")

@@ -32,7 +32,6 @@ def edit_distance_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     prefix_len: int = 400,
-    max_ratio: float | None = None,
 ) -> DataFrame:
     """Score candidate pairs ``(doc_a, doc_b)`` with Levenshtein
     distance over lowercased ``prefix_len``-char prefixes.
@@ -40,8 +39,7 @@ def edit_distance_pairs(
     Returns (doc_a, doc_b, edit_dist, edit_ratio) where
     ``edit_ratio = edit_dist / greatest(len_a, len_b)`` is one
     int/int divide (deterministic IEEE, the repo-wide ratio rule) of
-    the PREFIX lengths, and ``max_ratio`` (when given) keeps pairs
-    with ``edit_ratio <= max_ratio``.
+    the PREFIX lengths.
 
     The lowercase + prefix normalization is applied identically on
     both sides, so the measure is symmetric; prefixes bound the DP
@@ -50,7 +48,7 @@ def edit_distance_pairs(
     """
     prefix = F.substring(F.lower(F.col(text_col)), 1, prefix_len)
     texts = docs.select(F.col(id_col).alias("_ed_id"), prefix.alias("_ed_txt"))
-    scored = (
+    return (
         cand.select("doc_a", "doc_b")
         .join(
             texts.select(
@@ -77,6 +75,3 @@ def edit_distance_pairs(
             (F.col("edit_dist") / F.col("_len")).alias("edit_ratio"),
         )
     )
-    if max_ratio is not None:
-        scored = scored.filter(F.col("edit_ratio") <= F.lit(max_ratio))
-    return scored

@@ -33,7 +33,12 @@ def embedding_near_dup_pairs(
     arithmetic (identical floats — sqrt(dot(v,v)) per row is the same
     value wherever computed), so oracle hash-matches are unaffected;
     measured 5.3× faster on the sf1 slice (29.5 → 5.6 s). Same
-    convention as semantic_dedup_profile below."""
+    convention as semantic_dedup_profile below.
+
+    The threshold test is ``coalesce(cos_sim >= t, false)``: it keeps
+    the same pairs, but it is not null-intolerant, so the optimizer
+    infers no ``isnotnull`` on the norms and does not push a second
+    norm fold, inlined, into the scan filter."""
     from mapreducewordoccurences_spark.functions.similarity import l2_norm
 
     withn = df.select(
@@ -56,7 +61,7 @@ def embedding_near_dup_pairs(
         (dot("__va", "__vb") / (F.col("__na") * F.col("__nb"))).alias(
             "cos_sim"
         ),
-    ).where(F.col("cos_sim") >= threshold)
+    ).where(F.coalesce(F.col("cos_sim") >= threshold, F.lit(False)))
 
 
 def semantic_dedup_profile(
@@ -102,7 +107,9 @@ def semantic_dedup_profile(
     )
     # norms computed ONCE per member (n folds), not per pair (2·pairs
     # folds); the per-pair expression dot/(norm_a·norm_b) is the exact
-    # same arithmetic as cosine_similarity, just with the sqrt hoisted
+    # same arithmetic as cosine_similarity, just with the sqrt hoisted;
+    # the coalesce in the threshold test keeps the optimizer from
+    # pushing an inferred isnotnull(norm), fold inlined, into the scan
     members = df.select(
         id_col, vec_col, l2_norm(vec_col).alias("__norm")
     ).join(assign, id_col)
@@ -122,7 +129,10 @@ def semantic_dedup_profile(
         a.join(b, "cluster_id")
         .where(F.col("id_a") < F.col("id_b"))
         .where(
-            dot("__va", "__vb") / (F.col("__na") * F.col("__nb")) >= threshold
+            F.coalesce(
+                dot("__va", "__vb") / (F.col("__na") * F.col("__nb")) >= threshold,
+                F.lit(False),
+            )
         )
         .select("cluster_id", F.col("id_b").alias("__dropped_id"))
         .distinct()

@@ -19,7 +19,6 @@ def exact_dup_groups(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    normalize: bool = True,
 ) -> DataFrame:
     """One row per distinct content: (fingerprint, keep_id, dup_cnt).
 
@@ -28,7 +27,7 @@ def exact_dup_groups(
     """
     return (
         df.select(
-            doc_fingerprint(text_col, normalize=normalize).alias("fingerprint"),
+            doc_fingerprint(text_col).alias("fingerprint"),
             F.col(id_col),
         )
         .groupBy("fingerprint")
@@ -44,7 +43,6 @@ def incremental_new_unique(
     corpus_df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    normalize: bool = True,
 ) -> DataFrame:
     """Incremental-ingest dedup: (id, fingerprint) of new-batch rows
     that are first-in-batch AND absent from the existing corpus.
@@ -62,12 +60,12 @@ def incremental_new_unique(
     shuffles only the new batch.
     """
     new_fp = new_df.select(
-        doc_fingerprint(text_col, normalize=normalize).alias("fingerprint"),
+        doc_fingerprint(text_col).alias("fingerprint"),
         F.col(id_col),
     )
     batch_keep = new_fp.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
     corpus_fp = corpus_df.select(
-        doc_fingerprint(text_col, normalize=normalize).alias("fingerprint")
+        doc_fingerprint(text_col).alias("fingerprint")
     ).distinct()
     return batch_keep.join(corpus_fp, on="fingerprint", how="left_anti").select(
         F.col(id_col), "fingerprint"
@@ -78,12 +76,11 @@ def drop_exact_dups(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    normalize: bool = True,
 ) -> DataFrame:
     """Return df minus non-canonical duplicates (keeps min-id per
     content group). Implemented as a semi-join against the keeper set,
     so the full rows never shuffle — only (fingerprint, id) pairs do."""
-    keepers = exact_dup_groups(df, id_col, text_col, normalize).select(
+    keepers = exact_dup_groups(df, id_col, text_col).select(
         F.col("keep_id").alias(id_col)
     )
     return df.join(keepers, on=id_col, how="left_semi")

@@ -13,20 +13,21 @@ intersection touches candidate pairs only. The scorer itself is the
 shared pair core (dedup/pairs.py ``set_overlap`` + ``jaccard_pairs``),
 the same one the prefix-filter tier verifies with.
 
-Scale notes: the per-doc shingle-set build is a map-only pass
-over the corpus; AQE broadcasts the (much smaller) candidate side of
-the two enrichment joins, so the gram table is consumed map-side with
-no corpus-sized shuffle. Shingles fold to xxhash64 LONGs so the
-per-pair ``array_intersect`` compares 8-byte primitives rather than
-~20-byte strings (measured 2.5× on the whole tier; 64-bit collisions
-across a ~100-element doc vocabulary are ~1e-17-improbable and shared
-with the posting-list tier's own folding).
+The verifier is one path and persists nothing. The per-doc
+shingle-set build is a map-only pass over the whole corpus; AQE
+broadcasts the (much smaller) candidate side of the two enrichment
+joins, so the gram table is consumed map-side with no corpus-sized
+shuffle. Semi-joining the corpus to the candidate ids first (and
+caching the pruned table) does not pay here: SCALE.md §Round-7b
+measured it 0.9 s slower at sf0.1 and a wash at sf1. Shingles fold
+to xxhash64 LONGs so the per-pair ``array_intersect`` compares 8-byte
+primitives rather than ~20-byte strings (measured 2.5× on the whole
+tier; 64-bit collisions across a ~100-element doc vocabulary are
+~1e-17-improbable and shared with the posting-list tier's own
+folding).
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -43,8 +44,6 @@ def exact_verify_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.7,
-    prune_to_candidates: bool = False,
-    persist_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Score candidate pairs with EXACT distinct-shingle Jaccard and
     keep those ≥ ``threshold``.
@@ -55,65 +54,10 @@ def exact_verify_pairs(
     ngram_jaccard_pairs, so a complete candidate set reproduces that
     tier's output exactly).
 
-    ``prune_to_candidates`` semi-joins ``docs`` to the ids that
-    actually appear in ``cand`` BEFORE tokenizing/shingling (the
-    enrichment joins are inner on candidate ids, so the output is
-    bit-identical either way). Cost model, measured by interleaved
-    A/B on local[32] (r7): at sf0.1 the prune is ~0.9 s SLOWER
-    (3.7 vs 2.9 s end-to-end MinHash row) and at sf1 it is a wash
-    (14.9 vs 14.5 s) — persisting the candidate set is a barrier,
-    and the two full-corpus shingle projections it avoids are pure
-    map work that 32 local cores absorb for free. It therefore
-    defaults OFF, matching the regime the bench measures. Flip it ON
-    on a real cluster when the corpus is large relative to the
-    candidate-doc set: the unpruned plan tokenizes the WHOLE corpus
-    twice (the broadcast-join filter applies after the per-row
-    shingle transform), i.e. ~10⁹ docs re-tokenized to score pairs
-    touching ~10⁶, plus it must re-READ the corpus — the pruned plan
-    replaces that with two cheap id-filtered scans whose tokenize
-    work is bounded by the candidate volume. When on, the candidate
-    set (sketch-bounded, consumed three times: ids + two enrichment
-    joins) and the pruned gram table (bounded by the candidate docs,
-    consumed by both enrichment joins) are persisted, and the id list
-    rides the usual AQE broadcast path into the corpus scan. When
-    off, nothing is persisted: an unpruned gram table is corpus-sized.
-
-    Caching contract: the persists taken here (and by
-    ``minhash_band_index``) are NOT unpersisted by this
-    function — the result is lazy, so the cache must outlive the
-    caller's final action. Long-lived sessions calling these
-    repeatedly have three lifecycle options (VERDICT r8 ask #7 — the
-    handle is no longer unreachable):
-
-    - pass ``persist_registry=[]``: every DataFrame THIS call
-      persists is appended to it, so the caller can ``unpersist()``
-      each handle after its final action;
-    - use ``exact_verify_scoped`` (below), which scopes the cache to
-      a ``with`` block;
-    - pass an ALREADY-persisted ``cand`` (detected via its storage
-      level; no candidate persist is taken, so its lifecycle stays
-      with the caller — the gram table is still persisted and
-      registered), or drop accumulated blocks afterwards via
-      ``spark.catalog.clearCache()`` — the bench harness does the
-      latter between queries.
+    Nothing is persisted: the gram table is corpus-sized, so it is
+    recomputed for each of the two enrichment joins rather than held
+    (caching it was measured a wash at sf0.1).
     """
-    if prune_to_candidates:
-        # check the INPUT's storage level: a .select() derives a fresh
-        # (unpersisted) plan even over a cached parent
-        caller_cached = (
-            cand.storageLevel.useMemory or cand.storageLevel.useDisk
-        )
-        cand = cand.select("doc_a", "doc_b")
-        if not caller_cached:
-            cand = cand.persist()
-            if persist_registry is not None:
-                persist_registry.append(cand)
-        ids = (
-            cand.select(F.col("doc_a").alias(id_col))
-            .unionByName(cand.select(F.col("doc_b").alias(id_col)))
-            .distinct()
-        )
-        docs = docs.join(ids, id_col, "left_semi")
     grams = docs.select(
         F.col(id_col).alias("__vid"),
         tokens(text_col, lowercase=True).alias("__t"),
@@ -123,59 +67,4 @@ def exact_verify_pairs(
             "__sh"
         ),
     )
-    # the gram table feeds BOTH enrichment joins; without a cache the
-    # tokenize+shingle+hash pass runs once per join. Pruned, the table
-    # is bounded by the candidate docs and is cached: the persist is
-    # lazy (no barrier), the first consumer populates it and the
-    # second reads the cached (id, hashed-shingle-array) rows. Same
-    # lifecycle contract as the candidate persist above
-    # (persist_registry / exact_verify_scoped / session clearCache).
-    # Unpruned, it is corpus-sized, and caching it was measured a wash
-    # at sf0.1, so it is recomputed instead of held.
-    if prune_to_candidates:
-        grams = grams.persist()
-        if persist_registry is not None:
-            persist_registry.append(grams)
     return jaccard_pairs(set_overlap(cand, grams, "__vid", "__sh"), threshold)
-
-
-@contextmanager
-def exact_verify_scoped(
-    docs: DataFrame,
-    cand: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.7,
-    prune_to_candidates: bool = True,
-) -> Iterator[DataFrame]:
-    """``exact_verify_pairs`` with its cache scoped to a ``with``
-    block: any persist the verifier takes is released on exit, so a
-    long-lived session running many verification batches does not
-    accumulate executor cache (VERDICT r8 ask #7).
-
-    Consume the yielded DataFrame's final action INSIDE the block —
-    it is lazy, and its cached candidate set is dropped on exit::
-
-        with exact_verify_scoped(docs, cand) as verified:
-            verified.write.parquet(out)
-
-    Defaults ``prune_to_candidates=True`` (the cluster regime, where
-    the candidate set and the pruned gram table are persisted); with
-    it False no cache is taken and the scope is a no-op pass-through.
-    """
-    handles: list[DataFrame] = []
-    try:
-        yield exact_verify_pairs(
-            docs,
-            cand,
-            id_col=id_col,
-            text_col=text_col,
-            n=n,
-            threshold=threshold,
-            prune_to_candidates=prune_to_candidates,
-            persist_registry=handles,
-        )
-    finally:
-        for h in handles:
-            h.unpersist()

@@ -31,14 +31,14 @@ def blocked_fuzzy_join(
     cand_col: str,
     max_dist: int = 2,
     block_prefix: int = 4,
-    len_band: int | None = None,
 ) -> DataFrame:
     """All (probe, candidate) pairs within ``max_dist`` edits that
     share a ``block_prefix``-char prefix. Adds a ``dist`` column;
-    keeps every column of both inputs (names must not collide).
+    keeps every column of both inputs (names must not collide). The
+    join also requires the lengths to differ by at most ``max_dist``,
+    which drops no pair: an edit distance is at least the length
+    difference.
     """
-    if len_band is None:
-        len_band = max_dist
     p = probes.withColumn("__pblock", F.substring(F.col(probe_col), 1, block_prefix))
     c = catalog.withColumn("__cblock", F.substring(F.col(cand_col), 1, block_prefix))
     joined = p.join(
@@ -46,7 +46,7 @@ def blocked_fuzzy_join(
         (F.col("__pblock") == F.col("__cblock"))
         & (
             F.abs(F.length(F.col(probe_col)) - F.length(F.col(cand_col)))
-            <= F.lit(len_band)
+            <= F.lit(max_dist)
         ),
     )
     return (

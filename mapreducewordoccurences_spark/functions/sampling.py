@@ -77,7 +77,6 @@ def stratified_sample(
     strata_col: str,
     fraction: float,
     id_col: str = "doc_id",
-    salt: str = "",
 ) -> DataFrame:
     """Keep ceil(fraction × stratum size) rows per stratum —
     deterministic (md5 order, id tiebreak), never empties a non-empty
@@ -87,7 +86,7 @@ def stratified_sample(
     WindowGroupLimit-style running filter, not a full sort of the
     corpus."""
     w = Window.partitionBy(strata_col).orderBy(
-        F.md5(F.concat(F.lit(salt), _c(id_col).cast("string"))), _c(id_col)
+        deterministic_shuffle_key(id_col), _c(id_col)
     )
     wn = Window.partitionBy(strata_col)
     return (
@@ -148,7 +147,6 @@ def token_budget_sample(
     group_col: str = "source",
     id_col: str = "doc_id",
     text_col: str = "text",
-    priority: Sequence[Column] | None = None,
 ) -> DataFrame:
     """Per-group curriculum cut: keep the highest-priority documents
     of each group until the group's cumulative token count reaches
@@ -157,8 +155,8 @@ def token_budget_sample(
     This is the token-budget step of a data recipe — "at most B
     tokens per source, best documents first".
 
-    ``priority`` defaults to (n_tokens DESC, id ASC): longest docs
-    first, id as the deterministic tiebreak. Output adds
+    Priority is (n_tokens DESC, id ASC): longest docs first, id as
+    the deterministic tiebreak. Output adds
     ``n_tokens`` (per-doc) and ``cum_tokens`` (running total in
     priority order).
 
@@ -174,12 +172,10 @@ def token_budget_sample(
 
     if budget_tokens <= 0:
         raise ValueError("budget_tokens must be positive")
-    if priority is None:
-        priority = [F.col("n_tokens").desc(), F.col(id_col).asc()]
     with_tok = df.withColumn("n_tokens", token_count(text_col))
     w = (
         Window.partitionBy(group_col)
-        .orderBy(*priority)
+        .orderBy(F.col("n_tokens").desc(), F.col(id_col).asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
@@ -340,7 +336,6 @@ def cap_per_key(
     key_col: str,
     cap: int,
     id_col: str = "doc_id",
-    salt: str = "",
 ) -> DataFrame:
     """Contribution capping: keep at most ``cap`` rows per key,
     chosen by deterministic hash order (md5 of the id, id tiebreak) —
@@ -356,7 +351,7 @@ def cap_per_key(
     Hash order (not "first N in storage order") keeps the kept set
     stable under repartitioning and incremental appends."""
     w = Window.partitionBy(key_col).orderBy(
-        F.md5(F.concat(F.lit(salt), _c(id_col).cast("string"))), _c(id_col)
+        deterministic_shuffle_key(id_col), _c(id_col)
     )
     return (
         df.withColumn("__cap_rn", F.row_number().over(w))

@@ -91,9 +91,9 @@ def brute_force_knn(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    include_self: bool = False,
 ) -> DataFrame:
-    """Exact cosine top-k neighbors for each query vector.
+    """Exact cosine top-k neighbors for each query vector (a query's
+    own id is never its neighbor).
 
     The query side is broadcast (it must be small — an eval set, a
     dedup probe batch); the corpus streams through map-side with NO
@@ -109,7 +109,7 @@ def brute_force_knn(
     )
     cand = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
-    ).join(F.broadcast(q), on=(F.lit(True) if include_self else F.col("neighbor_id") != F.col(query_id_col)), how="inner")
+    ).join(F.broadcast(q), on=F.col("neighbor_id") != F.col(query_id_col), how="inner")
     return _rerank_candidates(cand, k, query_id_col)
 
 
@@ -516,7 +516,6 @@ def build_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     kmeans_iters: int = 2,
-    mode: str = "overwrite",
     centroids: DataFrame | None = None,
 ) -> None:
     """One-time IVF-flat index build, persisted for partition-pruned
@@ -544,10 +543,10 @@ def build_ivf_index(
     # the tiny centroids write back-fills the assignment write's task
     # tail instead of queueing behind it
     _run_concurrent_jobs(
-        lambda: assigned.write.mode(mode)
+        lambda: assigned.write.mode("overwrite")
         .partitionBy("__cell")
         .parquet(f"{path}/assignment"),
-        lambda: cells.write.mode(mode).parquet(f"{path}/centroids"),
+        lambda: cells.write.mode("overwrite").parquet(f"{path}/centroids"),
     )
     if centroids is None:
         cells.unpersist()
@@ -977,7 +976,6 @@ def build_ivfpq_index(
     vec_col: str = "embedding",
     kmeans_iters: int = 2,
     pq_iters: int = 2,
-    mode: str = "overwrite",
     centroids: DataFrame | None = None,
     books: DataFrame | None = None,
 ) -> None:
@@ -1018,13 +1016,13 @@ def build_ivfpq_index(
     # measured ~1 s off the build at sf0.1, and on a real cluster it
     # keeps executors busy through the commit barriers
     _run_concurrent_jobs(
-        lambda: codes.write.mode(mode)
+        lambda: codes.write.mode("overwrite")
         .partitionBy("__cell")
         .parquet(f"{path}/codes"),
-        lambda: pq_books.write.mode(mode).parquet(f"{path}/books"),
-        lambda: cells.write.mode(mode).parquet(f"{path}/centroids"),
+        lambda: pq_books.write.mode("overwrite").parquet(f"{path}/books"),
+        lambda: cells.write.mode("overwrite").parquet(f"{path}/centroids"),
         lambda: corpus.select(id_col, vec_col)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(f"{path}/vectors"),
     )
     # persist the corpus row count as index metadata so probe/
@@ -1035,8 +1033,7 @@ def build_ivfpq_index(
     # spark.read.count + spark.range write pair costs ~0.5 s of job
     # latency per build). Falls back to that Spark pair on non-local
     # filesystems, where pyarrow cannot reach the index path
-    # directly. The meta is overwritten in every mode: the count it
-    # records is always the whole vectors directory's.
+    # directly.
     spark = corpus.sparkSession
     try:
         _write_meta_rowcount_local(f"{path}/vectors", f"{path}/meta")

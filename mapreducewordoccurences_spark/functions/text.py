@@ -79,15 +79,13 @@ def language_id(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    stopwords: dict[str, list[str]] | None = None,
 ) -> DataFrame:
     """Heuristic language ID: per-language stopword hit-rate, argmax.
 
-    Scores = (#tokens found in lang's stopword list) / #tokens.
+    Scores = (#tokens found in lang's ``STOPWORDS`` list) / #tokens.
     Deterministic tie-break: lexicographically first language code.
     Emits (id, lang_guess, lang_score).
     """
-    sw = stopwords or STOPWORDS
     df = df.select(
         F.col(id_col), tokens(text_col, lowercase=True).alias("__toks")
     ).select(
@@ -97,8 +95,8 @@ def language_id(
     )
     n_tok = F.col("__ntok")
     scored = []
-    for lang in sorted(sw):
-        wl = F.array([F.lit(w) for w in sw[lang]]) if sw[lang] else F.array().cast("array<string>")
+    for lang in sorted(STOPWORDS):
+        wl = F.array([F.lit(w) for w in STOPWORDS[lang]]) if STOPWORDS[lang] else F.array().cast("array<string>")
         hits = F.size(F.array_intersect(F.col("__dtoks"), wl))
         score = hits / F.nullif(n_tok, F.lit(0))
         scored.append(F.struct(F.coalesce(score, F.lit(0.0)).alias("score"), F.lit(lang).alias("lang")))
@@ -218,11 +216,10 @@ def chunk_documents(
     text_col: str = "text",
     chunk_tokens: int = 64,
     stride: int | None = None,
-    lowercase: bool = True,
 ) -> DataFrame:
     """Split documents into fixed-length token windows — the
     sequence-prep step between cleaning and packing: long documents
-    become ≤chunk_tokens pieces; ``stride < chunk_tokens`` yields
+    become ≤chunk_tokens pieces of lowercased tokens; ``stride < chunk_tokens`` yields
     overlapping windows (sliding context for retrieval indexing).
 
     Emits (id, chunk_id, n_chunk_tokens, chunk_text); docs with zero
@@ -238,7 +235,7 @@ def chunk_documents(
     if chunk_tokens <= 0 or stride <= 0:
         raise ValueError("chunk_tokens and stride must be positive")
     base = df.select(
-        F.col(id_col), tokens(text_col, lowercase=lowercase).alias("__toks")
+        F.col(id_col), tokens(text_col, lowercase=True).alias("__toks")
     ).where(F.size("__toks") >= 1)
     starts = F.sequence(F.lit(1), F.size("__toks"), F.lit(stride))
     chunks = F.transform(starts, lambda s: F.slice(F.col("__toks"), s, chunk_tokens))
@@ -252,16 +249,13 @@ def chunk_documents(
     )
 
 
-def doc_fingerprint(text: Column | str, normalize: bool = True) -> Column:
+def doc_fingerprint(text: Column | str) -> Column:
     """Deterministic 128-bit content fingerprint (hex) for exact-dup
     detection: md5 over whitespace-collapsed, lowercased text.
 
     Engine-portable: md5 is identical in Spark, DuckDB, Python —
     unlike Spark's internal murmur ``hash()``."""
-    col = _c(text)
-    if normalize:
-        col = F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
-    return F.md5(col)
+    return F.md5(F.lower(F.trim(F.regexp_replace(_c(text), r"\s+", " "))))
 
 
 # PII patterns shared by redact_pii and its DuckDB oracle strings —
@@ -290,15 +284,15 @@ def pii_counts(text: Column | str) -> dict[str, Column]:
     }
 
 
-def redact_pii(text: Column | str, replacement: str = "[PII]") -> Column:
-    """Redacted text: every PII match replaced by ``replacement``.
+def redact_pii(text: Column | str) -> Column:
+    """Redacted text: every PII match replaced by ``[PII]``.
     Patterns apply in PII_PATTERNS order (email first, so its
     dotted-domain bytes can't be re-matched as ipv4 fragments). One
     chained regexp_replace expression — single pass per pattern, no
     Python in the path."""
     col = _c(text)
     for pat in PII_PATTERNS.values():
-        col = F.regexp_replace(col, pat, replacement)
+        col = F.regexp_replace(col, pat, "[PII]")
     return col
 
 

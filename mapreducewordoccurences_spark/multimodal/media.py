@@ -442,7 +442,7 @@ def _any_image_pixels(payload: bytes | None) -> tuple[tuple[int, int, int, int],
     return None
 
 
-def make_fake_media(df: DataFrame, id_col: str = "doc_id", kind: str = "image") -> DataFrame:
+def make_fake_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Deterministic MEDIA_SCHEMA corpus derived from an id column.
 
     The testdata has no binary media, so payloads are generated as a
@@ -475,7 +475,7 @@ def make_fake_media(df: DataFrame, id_col: str = "doc_id", kind: str = "image") 
             yield pd.DataFrame(
                 {
                     "media_id": ids,
-                    "kind": kind,
+                    "kind": "image",
                     "payload": payloads,
                     "meta": [
                         {"source": "synthetic", "mime": "image/png", "bytes": len(p)}

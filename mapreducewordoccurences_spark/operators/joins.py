@@ -40,7 +40,6 @@ def asof_join(
     right_ts: str,
     right_cols: Sequence[str] | None = None,
     direction: str = "backward",
-    suffix: str = "_right",
     tolerance=None,
 ) -> DataFrame:
     """As-of (nearest-timestamp) join, Spark-first.
@@ -61,7 +60,8 @@ def asof_join(
     hot, pre-split by a time-bucket salt before calling.
 
     Ties: a right row at exactly ``left_ts`` matches (inclusive), as in
-    pandas ``merge_asof`` and DuckDB ASOF JOIN.
+    pandas ``merge_asof`` and DuckDB ASOF JOIN. A right column whose
+    name a left column already has comes out suffixed ``_right``.
 
     ``tolerance`` (pandas ``merge_asof`` parity): a maximum allowed
     time gap — a literal in the timestamp column's own difference
@@ -124,7 +124,7 @@ def asof_join(
     left_names = set(left.columns)
     out_cols = [F.col(f"__lrow.{c}").alias(c) for c in left.columns]
     for c in payload_cols:
-        out_name = c + suffix if c in left_names else c
+        out_name = c + "_right" if c in left_names else c
         out_cols.append(F.col(f"__match.{c}").alias(out_name))
     return matched.select(*out_cols)
 

@@ -65,9 +65,9 @@ def salted_join(
     right: DataFrame,
     on: str | Sequence[str],
     n_salts: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skewed-left equi-join: salt left, replicate right n_salts ways.
+    """Skewed-left inner equi-join: salt left, replicate right n_salts
+    ways.
 
     Right-side replication makes this a (|right| × n_salts) shuffle —
     use when right is too big to broadcast but small enough to
@@ -78,7 +78,7 @@ def salted_join(
     r_replicated = right.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
     )
-    out = l_salted.join(r_replicated, on=[*keys, "__salt"], how=how)
+    out = l_salted.join(r_replicated, on=[*keys, "__salt"], how="inner")
     return out.drop("__salt")
 
 

@@ -13,22 +13,14 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-_RANKERS = {
-    "row_number": F.row_number,
-    "rank": F.rank,
-    "dense_rank": F.dense_rank,
-}
-
-
 def top_k_per_group(
     df: DataFrame,
     partition_by: Sequence[str],
     order_by: Sequence[Column],
     k: int,
     rank_col: str = "rnk",
-    method: str = "row_number",
 ) -> DataFrame:
-    """Top-k rows per group via ranking window.
+    """Top-k rows per group via ``row_number`` window.
 
     One shuffle on ``partition_by`` + in-partition sort. Spark inserts
     a WindowGroupLimit (partial top-k before the shuffle) for
@@ -37,8 +29,7 @@ def top_k_per_group(
     the full input. That is the 100 TB-safe shape for "top N per key".
     """
     w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    ranker = _RANKERS[method]
-    return df.withColumn(rank_col, ranker().over(w)).where(F.col(rank_col) <= k)
+    return df.withColumn(rank_col, F.row_number().over(w)).where(F.col(rank_col) <= k)
 
 
 def running_agg(
@@ -76,7 +67,6 @@ def global_rank(
     df: DataFrame,
     order_by: Sequence[Column],
     rank_col: str = "rank",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact global ``row_number()`` over a TOTAL order with NO
     single-partition window — the 100 TB-safe replacement for
@@ -85,8 +75,9 @@ def global_rank(
     Shape: ``repartitionByRange`` on the order keys (rows in range
     partition i all sort before partition i+1), ``row_number`` WITHIN
     each range partition, plus the cumulative row count of all earlier
-    partitions. The offsets table has one row per partition — bounded
-    by config, not data — so its cumulative window and the broadcast
+    partitions. The range partitions number
+    ``spark.sql.shuffle.partitions``, and the offsets table has one
+    row per partition — bounded by config, not data — so its cumulative window and the broadcast
     join back are O(#partitions). The partitioned frame is
     ``localCheckpoint``-ed so the counts pass and the rank pass see the
     SAME physical partitioning (RangePartitioner samples per-plan;
@@ -97,10 +88,7 @@ def global_rank(
     ranks are legal-but-nondeterministic, per this module's rule.
     """
     spark = df.sparkSession
-    n = int(
-        num_partitions
-        or spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     part = (
         df.repartitionByRange(n, *order_by)
         .withColumn("__gr_pid", F.spark_partition_id())
@@ -108,7 +96,7 @@ def global_rank(
     )
     counts = part.groupBy("__gr_pid").agg(F.count(F.lit(1)).alias("__gr_n"))
     # One row per range partition: the single-partition window here is
-    # over <= num_partitions rows (config-bounded), not the data.
+    # over <= spark.sql.shuffle.partitions rows (config-bounded), not the data.
     w_off = (
         Window.orderBy("__gr_pid")
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -133,7 +121,6 @@ def global_ntile(
     order_by: Sequence[Column],
     n_tiles: int,
     tile_col: str = "tile",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """SQL-standard ``ntile(n)`` over a global total order, distributed
     via :func:`global_rank` (no single-partition window).
@@ -145,9 +132,7 @@ def global_ntile(
     given a total order. The total row count joins in as a broadcast
     1-row aggregate, so the tile expression is pure column arithmetic.
     """
-    ranked = global_rank(
-        df, order_by, rank_col="__gn_rank", num_partitions=num_partitions
-    )
+    ranked = global_rank(df, order_by, rank_col="__gn_rank")
     total = ranked.agg(F.count(F.lit(1)).alias("__gn_total"))
     j = ranked.crossJoin(F.broadcast(total))
     base = (F.col("__gn_total") / n_tiles).cast("bigint")  # N div n (N>=0)

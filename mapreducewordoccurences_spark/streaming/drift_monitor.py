@@ -50,12 +50,11 @@ def start_psi_monitor(
     ref_dir: str,
     metrics_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     floor_p: float = 1e-6,
 ):
-    """Serve-time half: returns a StreamingQuery appending
-    (batch_id, psi, n_buckets, n_batch, n_ref) per micro-batch to
-    ``metrics_dir``. Alert policy is the caller's (the standard
+    """Serve-time half: returns an ``availableNow`` StreamingQuery
+    appending (batch_id, psi, n_buckets, n_batch, n_ref) per
+    micro-batch to ``metrics_dir``. Alert policy is the caller's (the standard
     gates: psi > 0.25 page, > 0.1 warn)."""
     spark = stream_df.sparkSession
 
@@ -86,11 +85,10 @@ def start_psi_monitor(
             .parquet(metrics_dir)
         )
 
-    writer = (
+    return (
         stream_df.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(score_batch)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -410,22 +410,6 @@ class TestIvfpqIndexMeta:
             _write_meta_rowcount_local(str(empty), str(tmp_path / "meta"))
         assert not (tmp_path / "meta").exists()
 
-    def test_append_builds_keep_one_meta_row(self, spark, tmp_path):
-        """Appending to an index grows its vectors; the Spark fallback
-        (taken for a ``file:`` URI) must replace the meta row, not
-        append a second one next to the stale count."""
-        from mapreducewordoccurences_spark.functions.similarity import (
-            build_ivfpq_index,
-            ivfpq_index_rowcount,
-        )
-
-        emb = _emb(spark)
-        uri = f"file:{tmp_path / 'ivfpq_idx'}"
-        for _ in range(2):
-            build_ivfpq_index(emb, uri, nlist=4, m=4, ks=8, mode="append")
-        assert spark.read.parquet(f"{uri}/meta").count() == 1
-        assert ivfpq_index_rowcount(spark, uri) == 2 * emb.count()
-
     def test_rowcount_ignores_aborted_write_leftovers(self, spark, tmp_path):
         """A staging directory an aborted write left in ``vectors`` is
         not part of the table Spark reads, so it is not in the count."""
@@ -433,19 +417,21 @@ class TestIvfpqIndexMeta:
         import pyarrow.parquet as pq
 
         from mapreducewordoccurences_spark.functions.similarity import (
+            _write_meta_rowcount_local,
             build_ivfpq_index,
             ivfpq_index_rowcount,
         )
 
         emb = _emb(spark)
         path = tmp_path / "ivfpq_idx"
+        build_ivfpq_index(emb, str(path), nlist=4, m=4, ks=8)
         staging = path / "vectors" / ".spark-staging-1"
-        staging.mkdir(parents=True)
+        staging.mkdir()
         pq.write_table(
             pa.table({"vec_id": pa.array([0, 1], type=pa.int64())}),
             staging / "part-00000.parquet",
         )
-        build_ivfpq_index(emb, str(path), nlist=4, m=4, ks=8, mode="append")
+        _write_meta_rowcount_local(str(path / "vectors"), str(path / "meta"))
         n = spark.read.parquet(str(path / "vectors")).count()
         assert n == emb.count()
         assert ivfpq_index_rowcount(spark, str(path)) == n

@@ -20,6 +20,11 @@ module, so no definition is shadowed by a later one of the same name.
 A third keeps each top-level function body in one place: two
 functions whose bodies are the same AST, docstrings aside, are one
 helper copied, and the copies drift apart.
+
+A fourth applies the caller rule to parameters: a switch that only a
+test turns (a ``None``, ``bool`` or ``str`` default that no non-test
+call passes) is a second configuration to keep correct for no user.
+Its default becomes the code, and the branch it selected goes.
 """
 
 from __future__ import annotations
@@ -33,12 +38,21 @@ PACKAGE = ROOT / "mapreducewordoccurences_spark"
 # Kept without a non-test caller, each for the reason given.
 KEPT_ROOTS = {
     "Engine": "engine.py: the documented programmatic API (README)",
-    "exact_verify_scoped": (
-        "dedup/verify.py: the only path that releases the verifier's "
-        "persisted frames (caches stay bounded)"
-    ),
     "skew_safe_confs": (
         "operators/skew.py: a deployment conf documented in docs/DEPLOY.md"
+    ),
+}
+
+# Switches kept although no non-test call passes them, each for the
+# reason given ("function.parameter").
+KEPT_PARAMS = {
+    "mmr_diversified_topk.distributed": (
+        "functions/similarity.py: the driver path is the parity test's "
+        "reference"
+    ),
+    "jpeg_encode_progressive.subsample": (
+        "multimodal/jpeg.py: builds the progressive 4:2:0 inputs the "
+        "decoder must accept from outside"
     ),
 }
 
@@ -208,4 +222,73 @@ def test_no_two_functions_share_a_body():
     assert not copies, (
         "top-level package functions with the same body (keep one and "
         "import it):\n  " + "\n  ".join(copies)
+    )
+
+
+def _is_switch(arg: ast.arg, default: ast.expr) -> bool:
+    """A parameter that selects behaviour: a ``None``, ``bool`` or
+    ``str`` literal default, not a column name (``*_col``, the
+    schema) and not a directory (``*_dir``, a deployment path)."""
+    return (
+        isinstance(default, ast.Constant)
+        and (default.value is None or isinstance(default.value, (bool, str)))
+        and not arg.arg.endswith(("_col", "_dir"))
+    )
+
+
+def unpassed_switches() -> list[str]:
+    """Switch parameters of top-level package functions that no call
+    by name in non-test code (the package, the tools, the benchmarks
+    and the driver entry) passes, by keyword or by position. A call
+    that forwards ``*args`` or ``**kwargs`` passes every parameter."""
+    switches: dict[str, list[tuple[str, int | None, str]]] = {}
+    for path, tree in _package_modules():
+        for node in tree.body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = node.args
+            positional = a.posonlyargs + a.args
+            defaulted = list(
+                zip(positional[len(positional) - len(a.defaults):], a.defaults)
+            ) + [(k, d) for k, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+            for arg, default in defaulted:
+                if _is_switch(arg, default):
+                    pos = positional.index(arg) if arg in positional else None
+                    where = f"{path.relative_to(PACKAGE)}:{node.lineno}"
+                    switches.setdefault(node.name, []).append((arg.arg, pos, where))
+    passed: dict[str, set[str]] = {}
+    n_positional: dict[str, int] = {}
+    files = [p for p, _ in _package_modules()] + _callers_outside_package()
+    for path in files:
+        for call in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if not isinstance(call, ast.Call):
+                continue
+            name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
+            if name not in switches:
+                continue
+            if any(isinstance(x, ast.Starred) for x in call.args) or any(
+                k.arg is None for k in call.keywords
+            ):
+                passed.setdefault(name, set()).update(
+                    p for p, _, _ in switches[name]
+                )
+                continue
+            passed.setdefault(name, set()).update(k.arg for k in call.keywords)
+            n_positional[name] = max(n_positional.get(name, 0), len(call.args))
+    return [
+        f"{where} {fn}.{param}"
+        for fn, params in switches.items()
+        for param, pos, where in params
+        if param not in passed.get(fn, set())
+        and (pos is None or pos >= n_positional.get(fn, 0))
+        and f"{fn}.{param}" not in KEPT_PARAMS
+    ]
+
+
+def test_no_switch_only_tests_set():
+    unpassed = unpassed_switches()
+    assert not unpassed, (
+        "package function parameters that no non-test call passes "
+        "(make the default the code and delete the parameter, or keep "
+        "it in KEPT_PARAMS with a reason):\n  " + "\n  ".join(unpassed)
     )

@@ -34,13 +34,17 @@ def q(spark, name):
 def catalog_plans(spark) -> dict[str, str | Exception]:
     """FORMATTED plan text of every catalog query, built once for the
     catalog-wide audits (building a query also runs its build-time
-    jobs). A query whose construction raised maps to the exception."""
+    jobs). A query whose construction raised maps to the exception.
+    Each row is built on a cleared cache, as ``tools/sweep.run_row``
+    runs it, so no row's plan reads a frame an earlier row persisted."""
     plans: dict[str, str | Exception] = {}
     for name in sorted(QUERIES):
         try:
             plans[name] = formatted_plan(q(spark, name))
         except Exception as e:  # plan construction must succeed too
             plans[name] = e
+        finally:
+            spark.catalog.clearCache()
     return plans
 
 
@@ -534,6 +538,29 @@ def test_catalog_has_no_cartesian_products(catalog_plans):
             offenders.append(f"{name}: {type(plan).__name__}")
         elif "CartesianProduct" in plan:
             offenders.append(name)
+    assert not offenders, offenders
+
+
+def test_catalog_scan_filters_hold_no_array_fold(catalog_plans):
+    """No Filter directly above a scan may hold an ``aggregate(``
+    fold. Such a filter is an ``isnotnull`` the optimizer inferred
+    from a null-intolerant predicate on a column that a projection
+    computes with the fold, and pushed to the scan with the fold
+    inlined: the interpreted per-row loop then runs twice per row."""
+    offenders = []
+    for name, plan in catalog_plans.items():
+        if isinstance(plan, Exception):  # plan construction must succeed too
+            offenders.append(f"{name}: {type(plan).__name__}")
+            continue
+        below = ""
+        for block in re.split(r"^(?=\(\d+\) )", plan, flags=re.MULTILINE):
+            head = block.split("\n", 1)[0]
+            node = re.sub(r"^\(\d+\) ", "", head)
+            if node.startswith("Filter") and below.startswith("Scan"):
+                if "aggregate(" in block:
+                    offenders.append(f"{name}: {head}")
+            if not node.startswith("ColumnarToRow"):
+                below = node
     assert not offenders, offenders
 
 

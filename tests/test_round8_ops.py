@@ -4,6 +4,8 @@ scaling table, VERDICT r7 ask #3)."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -14,6 +16,19 @@ from mapreducewordoccurences_spark.operators.windows import (
 from mapreducewordoccurences_spark.sources.readers import load_table
 
 
+@contextmanager
+def _range_partitions(spark, n: int):
+    """The global operators range-partition into
+    ``spark.sql.shuffle.partitions`` parts; run a block at ``n``."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
 class TestGlobalRank:
     def test_matches_single_partition_row_number(self, spark):
         """Differential: the distributed rank must equal row_number()
@@ -22,7 +37,8 @@ class TestGlobalRank:
             "c_custkey", "c_acctbal"
         )
         order = [F.col("c_acctbal").desc(), F.col("c_custkey")]
-        got = global_rank(cust, order, rank_col="r", num_partitions=7)
+        with _range_partitions(spark, 7):
+            got = global_rank(cust, order, rank_col="r")
         truth = cust.withColumn(
             "r_true", F.row_number().over(Window.orderBy(*order))
         )
@@ -33,9 +49,8 @@ class TestGlobalRank:
 
     def test_rank_is_dense_and_unique(self, spark):
         cust = load_table(spark, "/root/testdata/sf0.001", "customer")
-        got = global_rank(
-            cust, [F.col("c_custkey")], rank_col="r", num_partitions=5
-        )
+        with _range_partitions(spark, 5):
+            got = global_rank(cust, [F.col("c_custkey")], rank_col="r")
         n = cust.count()
         assert got.select("r").distinct().count() == n
 
@@ -50,9 +65,8 @@ class TestGlobalNtile:
         )
         order = [F.col("c_acctbal").desc(), F.col("c_custkey")]
         for n_tiles in (3, 4, 7):
-            got = global_ntile(
-                cust, order, n_tiles, tile_col="q", num_partitions=6
-            )
+            with _range_partitions(spark, 6):
+                got = global_ntile(cust, order, n_tiles, tile_col="q")
             truth = cust.withColumn(
                 "q_true", F.ntile(n_tiles).over(Window.orderBy(*order))
             )
@@ -67,9 +81,8 @@ class TestGlobalNtile:
             load_table(spark, "/root/testdata/sf0.001", "region")
             .select("r_regionkey")
         )  # 5 rows
-        got = global_ntile(
-            df, [F.col("r_regionkey")], 8, tile_col="q", num_partitions=3
-        )
+        with _range_partitions(spark, 3):
+            got = global_ntile(df, [F.col("r_regionkey")], 8, tile_col="q")
         rows = {(r["r_regionkey"], r["q"]) for r in got.collect()}
         assert rows == {(i, i + 1) for i in range(5)}
 

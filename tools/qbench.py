@@ -5,6 +5,11 @@ catalog queries (noop sink, warm best-of-N) and optionally dump their
 Usage:
     python tools/qbench.py [-n RUNS] [--explain DIR] [--sf DIR] q1 q2 ...
 
+Each query's plan is built on a cleared cache. Expression ids
+(``#123``), exchange plan ids and RDD ids in the dumped plans are
+renumbered in order of first appearance, so the dumps of two trees
+compare with ``diff -r``.
+
 Keeps the bench.py methodology (noop sink, clearCache between runs,
 local[$SPARK_GRAFT_CPUS], shuffle partitions = cpus) so numbers are
 directly comparable with BENCH_local records, without paying for the
@@ -15,8 +20,19 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 import time
+
+# session-global counters that differ between two builds of one plan
+_IDS = re.compile(r"(#|plan_id=|RDD\[)(\d+)")
+
+
+def stable_ids(plan: str) -> str:
+    """``plan`` with each id ``_IDS`` matches renumbered in order of
+    first appearance."""
+    seen: dict[tuple[str, str], int] = {}
+    return _IDS.sub(lambda m: f"{m[1]}{seen.setdefault(m.groups(), len(seen))}", plan)
 
 
 def main() -> int:
@@ -55,7 +71,8 @@ def main() -> int:
                 df._jdf.queryExecution(), "formatted"
             )
             with open(os.path.join(args.explain, f"{name}.txt"), "w") as f:
-                f.write(plan)
+                f.write(stable_ids(plan))
+            spark.catalog.clearCache()
         if args.runs <= 0:
             print(f"   plan-only  {name}", flush=True)
             continue
