@@ -1,8 +1,10 @@
 """Benchmark harness: times the headline catalog queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS], printing ONE JSON line:
+local[$SPARK_GRAFT_CPUS], printing two JSON lines: the full record
 {"metric": ..., "value": total_sec, "unit": "sec",
  "queries": {name: sec, ...}, "sf": ..., "startup_sec": ...}
+and then, last, its compact headline form (``compact_record``), which
+keeps the headline per-query seconds under 2 KB for tail captures.
 
 Each query executes fully via the noop sink (no driver collect
 dominance, no result materialization cost in the timing). Session
@@ -219,6 +221,33 @@ def _default_driver_mem() -> str:
     except OSError:
         pass
     return "4g"
+
+
+def compact_record(record: dict) -> dict:
+    """The headline-only record bench.py prints last, built from the
+    full one: the headline total with its per-query seconds (so two
+    tail-captured lines can still be diffed query by query), counts
+    instead of the extra queries and errors, and the names of the
+    regressed queries (their prev/cur detail lives in the
+    artifacts/BENCH_local_r{R}.json record)."""
+    return {
+        "metric": record["metric"],
+        "value": record["value"],
+        "unit": record["unit"],
+        "sf": record["sf"],
+        "startup_sec": record["startup_sec"],
+        "extra_total_sec": record["extra_total_sec"],
+        "n_headline": len(record["queries"]),
+        "n_extra": len(record["extra_queries"]),
+        "n_errors": len(record["errors"]),
+        "cpus": record["cpus"],
+        "runs_per_query": record["runs_per_query"],
+        "queries": {q: round(sec, 3) for q, sec in record["queries"].items()},
+        "regressions": [r["query"] for r in record["regressions"]],
+        "n_regressions": len(record["regressions"]),
+        "noise_band": record["noise_band"],
+        "load_context": record["load_context"],
+    }
 
 
 def main() -> int:
@@ -441,31 +470,7 @@ def main() -> int:
     # "value" lives (this is exactly what nulled BENCH_r04's parsed
     # record). Emit a compact, self-sufficient headline line LAST so
     # any tail-based consumer always sees the headline number intact.
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total_sec",
-                "value": total,
-                "unit": "sec",
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                "startup_sec": round(startup, 3),
-                "extra_total_sec": round(sum(extra.values()), 3),
-                "n_headline": len(timings),
-                "n_extra": len(extra),
-                "n_errors": len(errors),
-                "cpus": int(cpus),
-                "runs_per_query": runs,
-                # full per-query prev/cur detail lives in the
-                # artifacts/BENCH_local_r{R}.json record; the compact line keeps
-                # the names so a tail capture still shows what moved
-                "regressions": [r["query"] for r in regressions],
-                "n_regressions": len(regressions),
-                "noise_band": band,
-                "load_context": load_ctx,
-            }
-        ),
-        flush=True,
-    )
+    print(json.dumps(compact_record(record)), flush=True)
     spark.stop()
     return 0
 

@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mapreducewordoccurences_spark.core.checkpointing import bounded_persist
 from mapreducewordoccurences_spark.dedup.clusters import connected_components
 from mapreducewordoccurences_spark.dedup.exact import doc_fingerprint
 from mapreducewordoccurences_spark.dedup.minhash import minhash_lsh_pairs
@@ -113,14 +114,12 @@ def dedup_cascade(
         id_col, source_col, doc_fingerprint(text_col).alias("f")
     )
     keep = fp.groupBy("f").agg(F.min(id_col).alias("keep_id"))
-    tagged = (
-        fp.join(keep, "f")
-        .select(
+    tagged = bounded_persist(
+        fp.join(keep, "f").select(
             id_col,
             source_col,
             (F.col(id_col) != F.col("keep_id")).alias("drop_exact"),
         )
-        .persist()
     )
     survivors = docs.join(
         tagged.where(~F.col("drop_exact")).select(id_col), id_col, "left_semi"

@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mapreducewordoccurences_spark.core.checkpointing import bounded_persist
 from mapreducewordoccurences_spark.dedup.ngram import shingles_df
 from mapreducewordoccurences_spark.dedup.pairs import collision_pairs
 
@@ -175,20 +176,19 @@ def minhash_band_index(
     consuming both returned tables recomputes the whole
     shingle→hash→min pipeline twice (band_table shares signatures'
     lineage), which is exactly the rescan the index exists to avoid.
-    Measured (r7, interleaved A/B on local[32], incremental-dedup
-    shape): wash at sf0.1, ~5% faster at sf1 (6.50 vs 6.85 s) — and
-    the win grows with corpus size since the avoided recompute is a
-    full corpus scan+shingle+128-slot-min pass.
+    Measured (interleaved A/B on local[32], incremental-dedup shape):
+    wash at sf0.1, ~5% faster at sf1 (6.50 vs 6.85 s) — and the win
+    grows with corpus size since the avoided recompute is a full
+    corpus scan+shingle+128-slot-min pass.
 
-    Caching contract: the persist is NOT released by this function
-    (the returned tables are lazy; the cache must outlive the
-    caller's final action). Long-lived sessions indexing many corpora
-    should ``signatures.unpersist()`` when done with both tables — the
-    bench harness instead clears the session cache between queries."""
+    The persist goes through ``core/checkpointing.bounded_persist``:
+    it outlives this call (the returned tables are lazy) and is
+    released when later persists push it past the session's cache
+    bound, so callers need not unpersist it."""
     if num_perm % bands != 0:
         raise ValueError("num_perm must be divisible by bands")
     rows_per_band = num_perm // bands
-    sigs = minhash_signatures(df, id_col, text_col, n, num_perm, seed).persist()
+    sigs = bounded_persist(minhash_signatures(df, id_col, text_col, n, num_perm, seed))
     band_table = sigs.select(
         F.col(id_col),
         F.posexplode(

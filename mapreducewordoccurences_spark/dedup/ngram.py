@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mapreducewordoccurences_spark.core.checkpointing import bounded_persist
 from mapreducewordoccurences_spark.dedup.pairs import collision_pairs, jaccard_pairs
 from mapreducewordoccurences_spark.functions.text import tokens
 
@@ -80,8 +81,9 @@ def _shingle_pair_counts(
 
     The multiply-consumed intermediate (the capped posting-list table,
     or the uncapped shingle table read by both self-join sides +
-    sizes) is persisted — Spark does not dedupe repeated subtrees. The
-    cache lives until LRU eviction or ``spark.catalog.clearCache()``.
+    sizes) is persisted — Spark does not dedupe repeated subtrees —
+    through ``bounded_persist``, which releases it once later persists
+    push it past the session's cache bound.
 
     Shingles are folded to 64-bit xxhash64 BEFORE the self-join: the
     shuffle then carries 8-byte longs instead of ~n-word strings
@@ -108,7 +110,7 @@ def _shingle_pair_counts(
             .select("__ids")
         )
         # two consumers (sizes + pairs); one cache, list-sized rows
-        posting = posting.persist()
+        posting = bounded_persist(posting)
         sizes = (
             posting.select(F.explode("__ids").alias(id_col))
             .groupBy(id_col)
@@ -126,7 +128,7 @@ def _shingle_pair_counts(
             .agg(F.count(F.lit(1)).alias("__inter"))
         )
     else:
-        sh = sh.persist()
+        sh = bounded_persist(sh)
         sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
 
         # one row per shared shingle, counted — not deduplicated

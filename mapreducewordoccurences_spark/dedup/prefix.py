@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mapreducewordoccurences_spark.core.checkpointing import bounded_persist
 from mapreducewordoccurences_spark.dedup.ngram import shingles_df
 from mapreducewordoccurences_spark.dedup.pairs import (
     collision_pairs,
@@ -77,16 +78,18 @@ def _rarity_ordered(
         - F.ceil(F.col("__sz") * F.lit(float(threshold))).cast("int")
         + F.lit(1)
     )
-    return ordered.select(
-        id_col,
-        "__sz",
-        F.transform("__ord", lambda s: F.xxhash64(s["shingle"])).alias(
-            "__set"
-        ),
-        F.transform(
-            F.slice("__ord", 1, p), lambda s: s["shingle"]
-        ).alias("__prefix"),
-    ).persist()
+    return bounded_persist(
+        ordered.select(
+            id_col,
+            "__sz",
+            F.transform("__ord", lambda s: F.xxhash64(s["shingle"])).alias(
+                "__set"
+            ),
+            F.transform(
+                F.slice("__ord", 1, p), lambda s: s["shingle"]
+            ).alias("__prefix"),
+        )
+    )
 
 
 def prefix_filter_jaccard_pairs(

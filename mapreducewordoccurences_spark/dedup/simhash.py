@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mapreducewordoccurences_spark.core.checkpointing import bounded_persist
 from mapreducewordoccurences_spark.dedup.pairs import hamming_ball_pairs
 from mapreducewordoccurences_spark.functions.text import tokens
 
@@ -94,5 +95,5 @@ def simhash_near_dup_pairs(
     The fingerprints are persisted: they feed both self-join sides
     (otherwise the per-bit vote aggregation runs twice)."""
     bits = _PORTABLE_BITS if portable else _BITS
-    fps = simhash_fingerprints(df, id_col, text_col, portable=portable).persist()
+    fps = bounded_persist(simhash_fingerprints(df, id_col, text_col, portable=portable))
     return hamming_ball_pairs(fps, id_col, "simhash", max_distance, bits)

@@ -23,6 +23,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mapreducewordoccurences_spark.core.checkpointing import bounded_persist
 from mapreducewordoccurences_spark.functions.text import _c
 
 # bucket space: first 4 md5 hex chars → [0, 65536). Wide enough that
@@ -300,9 +301,9 @@ def dsir_log_weights(
         h = F.conv(F.substring(F.md5(F.col("__g")), 1, 15), 16, 10).cast("long")
     else:
         h = F.xxhash64(F.col("__g"))
-    feats = grams.select(
-        "__id", "__is_target", F.pmod(h, F.lit(buckets)).alias("__b")
-    ).persist()
+    feats = bounded_persist(
+        grams.select("__id", "__is_target", F.pmod(h, F.lit(buckets)).alias("__b"))
+    )
     raw_counts = feats.groupBy("__b").agg(F.count(F.lit(1)).alias("__cr"))
     tgt_counts = (
         feats.where("__is_target").groupBy("__b").agg(F.count(F.lit(1)).alias("__ct"))

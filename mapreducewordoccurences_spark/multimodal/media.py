@@ -4,9 +4,15 @@ Media travels as opaque ``binary`` columns with typed metadata — the
 standard Spark shape for multimodal training data (payloads stay
 byte-for-byte, metadata is columnar and prunable). Heavy per-item work
 (decode, feature extraction, frame sampling) runs in Arrow-batched
-``mapInPandas`` / ``pandas_udf`` so Python touches data once per
-batch, not once per row, and each task streams batches — no executor
-needs a whole partition of media in memory at once.
+``mapInPandas`` so Python touches data once per batch, not once per
+row, and each task streams batches — no executor needs a whole
+partition of media in memory at once.
+
+Two shells carry every media map. ``_synthetic_media`` turns an id
+column into MEDIA_SCHEMA rows through a pure per-id payload function
+(the ``*_bytes`` functions below); ``_map_payloads`` turns payloads
+into typed rows through a pure per-payload row function. Everything
+else in this module is Spark-free.
 
 Codec note: image payloads go through a REAL PNG/APNG codec built on
 stdlib ``zlib`` + ``struct`` (``png_encode`` / ``_png_meta`` /
@@ -15,25 +21,23 @@ spec-complete APNG for multi-frame clips), mirroring the audio
 tier's stdlib-``wave`` path: genuine bit-format round-trips with
 zero native deps. JPEG — the format most of a real training corpus
 arrives in — is handled by a vendored codec (multimodal/jpeg.py:
-full Huffman/DCT decode incl. 4:2:0, restart markers, and — r11 —
-progressive SOF2 with successive approximation; encoders for planted
-corpora; cross-validated against javax.imageio in
-tests/test_jpeg.py), GIF by a vendored LZW codec (multimodal/gif.py),
-and Pillow remains a try-import fallback for the REMAINING formats
-(TIFF/WebP/...) — absent Pillow those yield NULL dims, the same
-graceful path corrupt bytes take, so jobs never fail on
-codec availability. The Spark-side contract — schemas,
-batch iteration, partitioning, UDF signatures — is identical on
-every path. Video frame sampling is header-driven: frame COUNTS fan
-out rows; attaching real frame bytes would slot into the same
-iterator.
+full Huffman/DCT decode incl. 4:2:0, restart markers and progressive
+SOF2 with successive approximation; encoders for planted corpora;
+cross-validated against javax.imageio in tests/test_jpeg.py), GIF by
+a vendored LZW codec (multimodal/gif.py), MJPEG MP4 by a vendored ISO
+BMFF muxer/demuxer (multimodal/mp4.py), and Pillow remains a
+try-import fallback for the REMAINING formats (TIFF/WebP/...) —
+absent Pillow those yield NULL dims, the same graceful path corrupt
+bytes take, so jobs never fail on codec availability. The Spark-side
+contract — schemas, batch iteration, partitioning — is identical on
+every path.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
@@ -71,45 +75,94 @@ IMAGE_META_SCHEMA = T.StructType(
     ]
 )
 
+
 def _cpu_partitions(ids: DataFrame) -> DataFrame:
     """Repartition an id frame to the session's full parallelism
     before CPU-bound mapInPandas generation.
 
-    Found by the r10 sf1 bench: a synthetic-media generator inherits
-    the parquet SCAN's partitioning, which is sized for IO
-    (maxPartitionBytes) — at sf1 the documents file yields TWO input
-    splits, so a 500k-image pure-Python encode+decode chain ran on
-    one or two cores while 30 idled (the JPEG row sat at ~30 min/rep
-    single-core vs ~55 s at full width). The shuffle this inserts
-    moves only 8-byte ids — nothing against the decode CPU it
-    unlocks; every downstream mapInPandas (decode/dHash/featurize)
-    inherits the widened partitioning, payloads still never shuffle."""
+    A synthetic-media generator would otherwise inherit the parquet
+    SCAN's partitioning, which is sized for IO (maxPartitionBytes):
+    at sf1 the documents file yields TWO input splits, so a 500k-image
+    pure-Python encode+decode chain ran on one or two of 32 cores
+    (the JPEG row took ~30 min per run on one core vs ~55 s at full
+    width). The shuffle this inserts moves only 8-byte ids — nothing
+    against the decode CPU it unlocks; every downstream mapInPandas
+    (decode/dHash/featurize) inherits the widened partitioning,
+    payloads still never shuffle."""
     spark = ids.sparkSession
     return ids.repartition(spark.sparkContext.defaultParallelism)
 
 
-_LIVE_CACHES: list[DataFrame] = []
-_MAX_LIVE_CACHES = 8
+def _synthetic_media(
+    df: DataFrame,
+    id_col: str,
+    kind: str,
+    mime: str,
+    payload_of: Callable[[int], bytes],
+) -> DataFrame:
+    """MEDIA_SCHEMA rows ``(id, kind, payload_of(id), meta)`` for every
+    id of ``df[id_col]``. The testdata has no binary media, so every
+    corpus is a pure function of the id and oracles can predict what
+    decodes from it. The encode runs in Arrow-batched mapInPandas over
+    ids widened to every core (``_cpu_partitions``), exactly like a
+    real media ingest would."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = pdf[id_col].astype("int64")
+            payloads = [payload_of(int(i)) for i in ids]
+            yield pd.DataFrame(
+                {
+                    "media_id": ids,
+                    "kind": kind,
+                    "payload": payloads,
+                    "meta": [
+                        {"source": "synthetic", "mime": mime, "bytes": len(p)}
+                        for p in payloads
+                    ],
+                }
+            )
+
+    return _cpu_partitions(df.select(id_col)).mapInPandas(gen, MEDIA_SCHEMA)
 
 
-def bounded_persist(df: DataFrame) -> DataFrame:
-    """persist() with a bounded lifetime (ADVICE r10): media-tier
-    fingerprint frames are persisted so the pairing self-join decodes
-    each payload once, but a long-lived session invoking these queries
-    repeatedly must not accumulate cached blocks forever. Keep at most
-    ``_MAX_LIVE_CACHES`` media caches alive (each is id + 64-bit hash —
-    a few MB even at sf30), evicting oldest-first; an evicted frame
-    that is still referenced just recomputes, so this is a memory
-    bound, never a correctness risk."""
-    while len(_LIVE_CACHES) >= _MAX_LIVE_CACHES:
-        old = _LIVE_CACHES.pop(0)
-        try:
-            old.unpersist()
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
-    out = df.persist()
-    _LIVE_CACHES.append(out)
-    return out
+# pandas dtype per Spark field type: the nullable extension dtypes
+# carry NULL through integer and double fields; other fields (strings,
+# arrays) travel as Python objects
+_PANDAS_DTYPE = {"integer": "Int32", "long": "Int64", "double": "Float64"}
+
+
+def _map_payloads(
+    df: DataFrame,
+    schema: T.StructType,
+    rows_of: Callable[[bytes | None], list[tuple]],
+    payload_col: str,
+    id_col: str,
+) -> DataFrame:
+    """payload → rows of ``schema`` via Arrow-batched mapInPandas.
+    ``schema`` starts with ``media_id``; ``rows_of(payload)`` returns
+    the other fields of each output row for one payload: one row for
+    the meta, hash and vector decoders, 0..n for the frame fan-outs.
+    Undecodable payloads yield NULL fields or no rows, never a failed
+    job (at 100 TB some corruption is guaranteed), and payload bytes
+    never shuffle."""
+    fields = schema.fields[1:]
+
+    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids, rows = [], []
+            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
+                for row in rows_of(payload):
+                    ids.append(mid)
+                    rows.append(row)
+            cols = {"media_id": pd.array(ids, dtype="int64")}
+            for k, f in enumerate(fields):
+                col = [r[k] for r in rows]
+                dtype = _PANDAS_DTYPE.get(f.dataType.typeName())
+                cols[f.name] = col if dtype is None else pd.array(col, dtype=dtype)
+            yield pd.DataFrame(cols)
+
+    return df.select(id_col, payload_col).mapInPandas(decode, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -393,10 +446,10 @@ def _real_image_meta(payload: bytes | None) -> tuple[int, int, int, int] | None:
 
 
 def _any_image_meta(payload: bytes | None) -> tuple[int, int, int, int] | None:
-    """The stdlib PNG/APNG codec first, then the vendored JPEG codec (multimodal/jpeg.py —
-    baseline + progressive), then the vendored GIF codec
-    (multimodal/gif.py — r11), then Pillow for the remaining formats
-    (TIFF/WebP/...)."""
+    """The stdlib PNG/APNG codec first, then the vendored JPEG codec
+    (multimodal/jpeg.py — baseline + progressive), then the vendored
+    GIF codec (multimodal/gif.py), then Pillow for the remaining
+    formats (TIFF/WebP/...)."""
     from mapreducewordoccurences_spark.multimodal.gif import gif_meta  # noqa: PLC0415
     from mapreducewordoccurences_spark.multimodal.jpeg import jpeg_meta  # noqa: PLC0415
 
@@ -411,9 +464,9 @@ def _any_image_meta(payload: bytes | None) -> tuple[int, int, int, int] | None:
 def _any_image_pixels(payload: bytes | None) -> tuple[tuple[int, int, int, int], bytes] | None:
     """((w, h, channels, n_frames), interleaved 8-bit pixels of frame
     0) through whichever vendored codec claims the payload — PNG/APNG
-    first, then JPEG (baseline AND progressive since r11), then GIF
-    (r11). None when none decodes (corrupt, exotic format): callers
-    take the NULL path, never fail."""
+    first, then JPEG (baseline AND progressive), then GIF. None when
+    none decodes (corrupt, exotic format): callers take the NULL path,
+    never fail."""
     from mapreducewordoccurences_spark.multimodal.gif import (  # noqa: PLC0415
         gif_meta,
         gif_pixels,
@@ -442,89 +495,126 @@ def _any_image_pixels(payload: bytes | None) -> tuple[tuple[int, int, int, int],
     return None
 
 
-def make_fake_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic MEDIA_SCHEMA corpus derived from an id column.
+# ---------------------------------------------------------------------------
+# Synthetic pixels. Every planted corpus copies ``id - 1`` into the ids
+# with ``id % _PERIOD == residue``; its base patterns are per-id seeded
+# draws, so distinct ids collide on a 64-bit hash with odds ~2^-64.
+# ---------------------------------------------------------------------------
 
-    The testdata has no binary media, so payloads are generated as a
-    pure function of the id — which means an oracle can predict every
-    decoded dimension arithmetically, WITHOUT parsing payloads:
+_PERIOD = 10
+_SIDE = 32  # side of the planted PNG, JPEG and GIF images and MP4 frames
+_KNUTH = 2654435761  # multiplicative hash spreading ids over the seeds
+
+
+def _seeded_ints(seed: int, low: int, high: int, n: int):
+    """``n`` uniform draws over [low, high) from the legacy MT19937
+    stream seeded with ``seed mod 2^32`` (frozen by numpy's compat
+    policy, so the payloads are the same on every platform)."""
+    import numpy as np  # noqa: PLC0415 — worker-side
+
+    return np.random.RandomState(seed % 2**32).randint(low, high, n)
+
+
+def _noise_pixels(pattern_id: int) -> bytes:
+    """Per-id seeded uniform grayscale noise over the full 8-bit range,
+    one ``_SIDE`` x ``_SIDE`` frame."""
+    import numpy as np  # noqa: PLC0415
+
+    return (
+        _seeded_ints(pattern_id * _KNUTH, 0, 256, _SIDE * _SIDE)
+        .astype(np.uint8)
+        .tobytes()
+    )
+
+
+def _smooth_pixels(pattern_id: int) -> bytes:
+    """Per-id seeded smooth low-frequency field (sum of 4 random 2-D
+    cosines): the JPEG-FRIENDLY pattern family — quality re-encoding
+    moves its dHash by ≤5 bits (measured across 120 ids at q90 vs
+    q75) while distinct ids stay ~32 bits apart."""
+    import numpy as np  # noqa: PLC0415
+
+    rng = np.random.RandomState((pattern_id * _KNUTH) % 2**32)
+    xx, yy = np.meshgrid(np.arange(_SIDE), np.arange(_SIDE))
+    img = np.full((_SIDE, _SIDE), 128.0)
+    for _ in range(4):
+        fx, fy = rng.uniform(0.3, 2.0, 2)
+        ph1, ph2 = rng.uniform(0, 2 * np.pi, 2)
+        amp = rng.uniform(25, 45)
+        img += (
+            amp
+            * np.cos(2 * np.pi * fx * xx / _SIDE + ph1)
+            * np.cos(2 * np.pi * fy * yy / _SIDE + ph2)
+        )
+    return np.clip(img, 5, 250).astype(np.uint8).tobytes()
+
+
+def _fake_dims(i: int) -> tuple[int, int]:
+    """(width, height) of the closed-form corpora's id ``i``."""
+    return 16 + i % 48, 16 + (i * 7) % 40
+
+
+def _gradient(i: int, f: int):
+    """Frame ``f`` of id ``i`` over ``_fake_dims(i)``: the closed-form
+    gradient (x·3 + y·5 + i + f·11) mod 200 + 20, as int64 rows."""
+    import numpy as np  # noqa: PLC0415
+
+    w, h = _fake_dims(i)
+    xx, yy = np.meshgrid(np.arange(w), np.arange(h))
+    return (xx * 3 + yy * 5 + i + f * 11) % 200 + 20
+
+
+# ---------------------------------------------------------------------------
+# PNG / APNG corpora and image decoders
+# ---------------------------------------------------------------------------
+
+
+def fake_png_bytes(i: int) -> bytes:
+    """A REAL PNG (APNG when n_frames > 1) whose header is closed-form
+    in the id, so an oracle predicts every decoded dimension
+    arithmetically, WITHOUT parsing payloads:
 
         width    = 16 + id % 48
         height   = 16 + (id * 7) % 40
         channels = 1 + id % 3
         n_frames = 1 + id % 5
 
-    Payloads are REAL PNGs (APNG when n_frames > 1), written and read
-    back through the stdlib codec (``png_encode`` / ``_png_meta``) —
-    a genuine bit-format round-trip with zero native deps, same as
-    the audio tier's stdlib-``wave`` path. The encode runs in
-    Arrow-batched mapInPandas exactly like a real media ingest would;
-    the catalog queries (media_image_dims, media_frame_sample)
-    round-trip encode → decode and check the result against the
-    closed-form oracle."""
+    Pixels are ``_png_frame_pixels``."""
+    return png_encode(*_fake_dims(i), 1 + i % 3, 1 + i % 5)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [
-                png_encode(
-                    16 + int(i) % 48, 16 + (int(i) * 7) % 40, 1 + int(i) % 3, 1 + int(i) % 5
-                )
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "image",
-                    "payload": payloads,
-                    "meta": [
-                        {"source": "synthetic", "mime": "image/png", "bytes": len(p)}
-                        for p in payloads
-                    ],
-                }
-            )
 
-    return _cpu_partitions(df.select(id_col)).mapInPandas(gen, MEDIA_SCHEMA)
+def make_fake_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Image corpus of ``fake_png_bytes``: the catalog rows
+    media_image_dims and media_frame_sample round-trip it through the
+    stdlib codec and check the result against the closed-form
+    oracle."""
+    return _synthetic_media(df, id_col, "image", "image/png", fake_png_bytes)
 
 
 def decode_image_meta(df: DataFrame, payload_col: str = "payload", id_col: str = "media_id") -> DataFrame:
-    """payload → (media_id, width, height, channels, n_frames) via
-    Arrow-batched mapInPandas, through the vendored PNG/APNG, JPEG and
-    GIF codecs, then Pillow when installed (``_any_image_meta``;
-    n_frames for animated formats). Undecodable payloads yield
-    NULL dims (never fail the job — at 100 TB some corruption is
-    guaranteed)."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [_any_image_meta(p) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col],
-                    "width": pd.array([m[0] if m else None for m in metas], dtype="Int32"),
-                    "height": pd.array([m[1] if m else None for m in metas], dtype="Int32"),
-                    "channels": pd.array([m[2] if m else None for m in metas], dtype="Int32"),
-                    "n_frames": pd.array([m[3] if m else None for m in metas], dtype="Int32"),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(decode, IMAGE_META_SCHEMA)
+    """payload → (media_id, width, height, channels, n_frames) through
+    the vendored PNG/APNG, JPEG and GIF codecs, then Pillow when
+    installed (``_any_image_meta``; n_frames for animated formats).
+    Undecodable payloads yield NULL dims."""
+    return _map_payloads(
+        df,
+        IMAGE_META_SCHEMA,
+        lambda p: [_any_image_meta(p) or (None,) * 4],
+        payload_col,
+        id_col,
+    )
 
 
 def sample_frames(
-    df: DataFrame,
-    every_nth: int = 2,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
+    df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
 ) -> DataFrame:
-    """Video-style frame sampling: one output row per kept frame index
-    (media_id, frame_idx). Frame COUNTS come from the codec's n_frames
-    (``_any_image_meta``: APNG acTL, GIF frame count, Pillow for other
-    animated formats). Real decoders would additionally attach the frame
-    bytes; attaching them is one more column in this same iterator,
-    the row-multiplicity plumbing is the part that matters to the
-    plan.
-    """
+    """Video-style frame sampling: one (media_id, frame_idx) row per
+    kept frame, every 2nd frame from frame 0. Frame COUNTS come from
+    the codec's n_frames (``_any_image_meta``: APNG acTL, GIF frame
+    count, Pillow for other animated formats); undecodable payloads
+    contribute no rows. Attaching the frame bytes would be one more
+    field in the same rows; the row-multiplicity plumbing is the part
+    that matters to the plan."""
     out_schema = T.StructType(
         [
             T.StructField("media_id", T.LongType(), False),
@@ -532,21 +622,11 @@ def sample_frames(
         ]
     )
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs = [], []
-            for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                hdr = _any_image_meta(p)
-                if hdr is None:
-                    continue
-                for frame in range(0, hdr[3], every_nth):
-                    ids.append(mid)
-                    idxs.append(frame)
-            yield pd.DataFrame(
-                {"media_id": pd.array(ids, dtype="int64"), "frame_idx": pd.array(idxs, dtype="int32")}
-            )
+    def kept(payload: bytes | None) -> list[tuple]:
+        hdr = _any_image_meta(payload)
+        return [] if hdr is None else [(f,) for f in range(0, hdr[3], 2)]
 
-    return df.select(id_col, payload_col).mapInPandas(sample, out_schema)
+    return _map_payloads(df, out_schema, kept, payload_col, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -554,7 +634,7 @@ def sample_frames(
 # the stdlib ``wave`` module. Unlike images (Pillow optional), audio
 # decode is always-real in any Python: make_fake_audio writes genuine
 # WAV containers and decode_audio_meta parses them back through the
-# codec, end to end, in the same Arrow-batched mapInPandas shape.
+# codec, end to end.
 # ---------------------------------------------------------------------------
 
 AUDIO_META_SCHEMA = T.StructType(
@@ -583,47 +663,62 @@ def _audio_params(media_id: int) -> tuple[int, int, int, int]:
     )
 
 
-def fake_audio_bytes(media_id: int) -> bytes:
-    """A genuine RIFF/WAVE PCM16 payload (stdlib ``wave`` encoder):
-    square wave with period 16 frames at the id-derived amplitude."""
+def _wav(rate: int, channels: int, pcm: bytes) -> bytes:
+    """A RIFF/WAVE PCM16 container around interleaved samples (stdlib
+    ``wave`` encoder)."""
     import io  # noqa: PLC0415
     import wave  # noqa: PLC0415
 
-    rate, channels, n_samples, amp = _audio_params(media_id)
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
         w.setnchannels(channels)
         w.setsampwidth(2)
         w.setframerate(rate)
-        frames = bytearray()
-        for s in range(n_samples):
-            val = amp if (s // 8) % 2 == 0 else -amp
-            frames += struct.pack("<h", val) * channels
-        w.writeframes(bytes(frames))
+        w.writeframes(pcm)
     return buf.getvalue()
 
 
+def fake_audio_bytes(media_id: int) -> bytes:
+    """A genuine WAV payload: a square wave with period 16 frames at
+    the id-derived amplitude (``_audio_params``)."""
+    rate, channels, n_samples, amp = _audio_params(media_id)
+    frames = bytearray()
+    for s in range(n_samples):
+        val = amp if (s // 8) % 2 == 0 else -amp
+        frames += struct.pack("<h", val) * channels
+    return _wav(rate, channels, bytes(frames))
+
+
 def make_fake_audio(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic MEDIA_SCHEMA audio corpus: real WAV payloads as a
-    pure function of the id (see _audio_params)."""
+    """Audio corpus of ``fake_audio_bytes``."""
+    return _synthetic_media(df, id_col, "audio", "audio/wav", fake_audio_bytes)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [fake_audio_bytes(int(i)) for i in ids]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "audio",
-                    "payload": payloads,
-                    "meta": [
-                        {"source": "synthetic", "mime": "audio/wav", "bytes": len(p)}
-                        for p in payloads
-                    ],
-                }
-            )
 
-    return _cpu_partitions(df.select(id_col)).mapInPandas(gen, MEDIA_SCHEMA)
+def _wav_meta(payload: bytes | None) -> tuple:
+    """(sample_rate, n_channels, n_samples, rms, peak) of one WAV
+    payload; all NULL for corrupt or non-WAV bytes, NULL rms and peak
+    for a sample width other than 16 bits."""
+    import io  # noqa: PLC0415
+    import wave  # noqa: PLC0415
+
+    import numpy as np  # noqa: PLC0415
+
+    if payload is None:
+        return (None,) * 5
+    try:
+        with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
+            rate = w.getframerate()
+            ch = w.getnchannels()
+            nf = w.getnframes()
+            if w.getsampwidth() != 2:
+                return (rate, ch, nf, None, None)
+            x = np.frombuffer(w.readframes(nf), dtype="<i2").astype(np.int64)
+        if x.size == 0:
+            return (rate, ch, nf, 0, 0)
+        rms = int(round(float(np.sqrt(np.mean((x * x).astype(np.float64))))))
+        return (rate, ch, nf, rms, int(np.max(np.abs(x))))
+    except Exception:  # noqa: BLE001 — corrupt bytes → NULL path
+        return (None,) * 5
 
 
 def decode_audio_meta(
@@ -635,56 +730,18 @@ def decode_audio_meta(
     exact range per clip; rms rounds half-up the same on every
     platform because the generator's square waves make it integral).
     Corrupt or non-WAV bytes take the NULL path, like images."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io  # noqa: PLC0415
-        import wave  # noqa: PLC0415
-
-        import numpy as np  # noqa: PLC0415
-
-        def one(payload):
-            if payload is None:
-                return (None, None, None, None, None)
-            try:
-                with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
-                    rate = w.getframerate()
-                    ch = w.getnchannels()
-                    nf = w.getnframes()
-                    if w.getsampwidth() != 2:
-                        return (rate, ch, nf, None, None)
-                    x = np.frombuffer(w.readframes(nf), dtype="<i2").astype(
-                        np.int64
-                    )
-                if x.size == 0:
-                    return (rate, ch, nf, 0, 0)
-                rms = int(round(float(np.sqrt(np.mean((x * x).astype(np.float64))))))
-                return (rate, ch, nf, rms, int(np.max(np.abs(x))))
-            except Exception:  # noqa: BLE001 — corrupt bytes → NULL path
-                return (None, None, None, None, None)
-
-        for pdf in batches:
-            metas = [one(p) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "sample_rate": pd.array([m[0] for m in metas], dtype="Int32"),
-                    "n_channels": pd.array([m[1] for m in metas], dtype="Int32"),
-                    "n_samples": pd.array([m[2] for m in metas], dtype="Int64"),
-                    "rms": pd.array([m[3] for m in metas], dtype="Int64"),
-                    "peak": pd.array([m[4] for m in metas], dtype="Int64"),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(decode, AUDIO_META_SCHEMA)
+    return _map_payloads(
+        df, AUDIO_META_SCHEMA, lambda p: [_wav_meta(p)], payload_col, id_col
+    )
 
 
 # ---------------------------------------------------------------------------
 # Perceptual image hashing (dHash) — the multimodal near-dup tier.
 # dHash (difference hash, Krawetz 2013): grayscale → nearest-neighbor
-# resample to (hash_w+1) x hash_h → one bit per horizontally adjacent
-# pixel pair (left > right). The hash is EXACTLY invariant to a
-# uniform brightness shift that doesn't wrap (strict > on both sides
-# of a constant offset), which is what makes the planted-duplicate
+# resample to 9x8 → one bit per horizontally adjacent pixel pair
+# (left > right). The hash is EXACTLY invariant to a uniform
+# brightness shift that doesn't wrap (strict > on both sides of a
+# constant offset), which is what makes the planted-duplicate
 # acceptance contract closed-form.
 # ---------------------------------------------------------------------------
 
@@ -695,114 +752,70 @@ DHASH_SCHEMA = T.StructType(
     ]
 )
 
+_DHASH_SIDE = 8  # 8 rows of 8 adjacent-column bits: one signed int64
 
-def _dhash_one(payload: bytes | None, hash_w: int, hash_h: int) -> int | None:
-    """64-bit dHash of one encoded image through the vendored codecs
-    (PNG/APNG or baseline JPEG: decode → integer grayscale →
-    NN-resample → adjacent-column bits), or None when the bytes
-    don't decode."""
+
+def _dhash(px: bytes, w: int, h: int, ch: int) -> int:
+    """The dHash kernel over one frame's interleaved 8-bit pixels:
+    integer grayscale (the exact channel mean, so a uniform
+    per-channel shift stays a uniform gray shift) → NN-resample →
+    adjacent-column bits."""
     import numpy as np  # noqa: PLC0415 — worker-side
 
-    decoded = _any_image_pixels(payload)
-    if decoded is None:
-        return None
-    (w, h, ch, _), px = decoded
     arr = np.frombuffer(px, dtype=np.uint8).reshape(h, w, ch)
-    # integer grayscale: channel mean via exact int division — a
-    # uniform per-channel shift delta stays a uniform gray shift
     gray = (arr.astype(np.uint32).sum(axis=2) // ch).astype(np.uint8)
     small = np.frombuffer(
-        _nn_resample(gray.tobytes(), w, h, 1, hash_w + 1, hash_h),
+        _nn_resample(gray.tobytes(), w, h, 1, _DHASH_SIDE + 1, _DHASH_SIDE),
         dtype=np.uint8,
-    ).reshape(hash_h, hash_w + 1)
+    ).reshape(_DHASH_SIDE, _DHASH_SIDE + 1)
     bits = (small[:, :-1] > small[:, 1:]).flatten()
     return int.from_bytes(np.packbits(bits).tobytes(), "big", signed=True)
 
 
+def _dhash_one(payload: bytes | None) -> int | None:
+    """dHash of one encoded image's first frame through the vendored
+    codecs (``_any_image_pixels``), or None when the bytes don't
+    decode."""
+    decoded = _any_image_pixels(payload)
+    if decoded is None:
+        return None
+    (w, h, ch, _), px = decoded
+    return _dhash(px, w, h, ch)
+
+
 def dhash_images(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    hash_w: int = 8,
-    hash_h: int = 8,
+    df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
 ) -> DataFrame:
-    """payload → (media_id, dhash) via Arrow-batched mapInPandas.
-
-    Undecodable payloads yield NULL hashes (the 100 TB corruption
-    rule: never fail the job). Downstream near-dup pairing is an
-    ordinary groupBy/self-equi-join on the 64-bit hash — the exact
-    dedup shuffle shape, bucketable, no all-pairs term."""
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "dhash": pd.array(
-                        [_dhash_one(p, hash_w, hash_h) for p in pdf[payload_col]],
-                        dtype="Int64",
-                    ),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(compute, DHASH_SCHEMA)
+    """payload → (media_id, dhash). Undecodable payloads yield NULL
+    hashes. Downstream near-dup pairing is an ordinary self-equi-join
+    on the 64-bit hash — the exact dedup shuffle shape, bucketable, no
+    all-pairs term."""
+    return _map_payloads(
+        df, DHASH_SCHEMA, lambda p: [(_dhash_one(p),)], payload_col, id_col
+    )
 
 
-def make_planted_dup_images(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    period: int = 10,
-    delta: int = 7,
-    side: int = 32,
-) -> DataFrame:
-    """Grayscale PNG corpus with PLANTED near-duplicates: every id with
-    ``id % period == 1`` carries the pixel pattern of ``id - 1``
-    shifted uniformly by ``delta`` gray levels.
+def planted_png_bytes(i: int) -> bytes:
+    """A 32x32 grayscale PNG with PLANTED near-duplicates: every id
+    with ``id % 10 == 1`` carries the pixel pattern of ``id - 1``
+    shifted uniformly by 7 gray levels.
 
-    Base patterns are per-id seeded uniform draws over [0, 245] (the
-    legacy MT19937 stream, frozen by numpy's compat policy), so
-    distinct ids collide on a 64-bit dHash with probability ~2^-64 —
-    while a planted copy's shift cannot wrap (245 + delta < 256) and
-    therefore preserves every strict ">" comparison: its dHash is
-    bit-identical to its source's. The acceptance oracle is the
-    closed-form planted pair list — same pattern as the planted
-    triangle row (queries/graph.py)."""
-    if not 0 < delta <= 10:
-        raise ValueError(f"delta must be in (0, 10], got {delta}")
+    Base patterns are per-id seeded uniform draws over [0, 245], so a
+    planted copy's shift cannot wrap (245 + 7 < 256) and therefore
+    preserves every strict ">" comparison: its dHash is bit-identical
+    to its source's. The acceptance oracle is the closed-form planted
+    pair list — same pattern as the planted triangle row
+    (queries/graph.py)."""
+    import numpy as np  # noqa: PLC0415
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np  # noqa: PLC0415
+    src, shift = (i - 1, 7) if i % _PERIOD == 1 else (i, 0)
+    px = _seeded_ints(src * _KNUTH, 0, 246, _SIDE * _SIDE).astype(np.uint8)
+    return png_encode(_SIDE, _SIDE, 1, 1, frames=[(px + np.uint8(shift)).tobytes()])
 
-        def base_pixels(pattern_id: int) -> "np.ndarray":
-            seed = (int(pattern_id) * 2654435761) % (2**32)
-            rng = np.random.RandomState(seed)
-            return rng.randint(0, 246, side * side).astype(np.uint8)
 
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                if i % period == 1:
-                    px = base_pixels(i - 1) + np.uint8(delta)
-                else:
-                    px = base_pixels(i)
-                payloads.append(
-                    png_encode(side, side, 1, 1, frames=[px.tobytes()])
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "image",
-                    "payload": payloads,
-                    "meta": [
-                        {"source": "synthetic", "mime": "image/png", "bytes": len(p)}
-                        for p in payloads
-                    ],
-                }
-            )
-
-    return _cpu_partitions(df.select(id_col)).mapInPandas(gen, MEDIA_SCHEMA)
+def make_planted_dup_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Image corpus of ``planted_png_bytes``."""
+    return _synthetic_media(df, id_col, "image", "image/png", planted_png_bytes)
 
 
 # ---------------------------------------------------------------------------
@@ -821,12 +834,14 @@ AUDIO_FP_SCHEMA = T.StructType(
     ]
 )
 
+_N_WINDOWS = 64  # energy windows per clip: a 63-bit fingerprint, a 64-d vector
 
-def _window_energies(payload: bytes | None, n_windows: int = 64):
+
+def _window_energies(payload: bytes | None):
     """Per-window |PCM16| sums of one WAV payload through the stdlib
-    codec (int64 ndarray of length n_windows), or None when the bytes
-    don't decode — the shared front half of the fingerprint AND the
-    energy-vector tiers."""
+    codec (int64 ndarray of length ``_N_WINDOWS``), or None when the
+    bytes don't decode — the shared front half of the fingerprint AND
+    the energy-vector tiers."""
     import io  # noqa: PLC0415
     import wave  # noqa: PLC0415
 
@@ -841,52 +856,39 @@ def _window_energies(payload: bytes | None, n_windows: int = 64):
             x = np.frombuffer(w.readframes(w.getnframes()), dtype="<i2")
     except Exception:  # noqa: BLE001 — corrupt bytes → NULL path
         return None
-    if x.size < n_windows:
+    if x.size < _N_WINDOWS:
         return None
     mag = np.abs(x.astype(np.int64))
-    bounds = (np.arange(n_windows + 1) * mag.size) // n_windows
+    bounds = (np.arange(_N_WINDOWS + 1) * mag.size) // _N_WINDOWS
     return np.add.reduceat(mag, bounds[:-1])
 
 
-def _audio_fingerprint_one(payload: bytes | None, n_windows: int = 64) -> int | None:
+def _audio_fingerprint_one(payload: bytes | None) -> int | None:
     """63-bit energy-delta fingerprint of one WAV payload through the
     stdlib codec, or None when the bytes don't decode."""
     import numpy as np  # noqa: PLC0415
 
-    energy = _window_energies(payload, n_windows)
+    energy = _window_energies(payload)
     if energy is None:
         return None
     bits = np.zeros(64, dtype=bool)
-    bits[: n_windows - 1] = energy[:-1] > energy[1:]
+    bits[: _N_WINDOWS - 1] = energy[:-1] > energy[1:]
     return int.from_bytes(np.packbits(bits).tobytes(), "big", signed=True)
 
 
 def audio_fingerprints(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    n_windows: int = 64,
+    df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
 ) -> DataFrame:
-    """payload → (media_id, afp) via Arrow-batched mapInPandas; near-
-    dup pairing downstream is the collision self-join on the 64-bit
-    fingerprint (dedup/pairs.py) — audio bytes never shuffle."""
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "afp": pd.array(
-                        [
-                            _audio_fingerprint_one(p, n_windows)
-                            for p in pdf[payload_col]
-                        ],
-                        dtype="Int64",
-                    ),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(compute, AUDIO_FP_SCHEMA)
+    """payload → (media_id, afp); near-dup pairing downstream is the
+    collision self-join on the 64-bit fingerprint (dedup/pairs.py) —
+    audio bytes never shuffle."""
+    return _map_payloads(
+        df,
+        AUDIO_FP_SCHEMA,
+        lambda p: [(_audio_fingerprint_one(p),)],
+        payload_col,
+        id_col,
+    )
 
 
 AUDIO_VEC_SCHEMA = T.StructType(
@@ -897,117 +899,65 @@ AUDIO_VEC_SCHEMA = T.StructType(
 )
 
 
+def _energy_vector(payload: bytes | None) -> list[float] | None:
+    """The L2-normalized window-energy profile of one WAV payload, or
+    None when it doesn't decode or is silent."""
+    import numpy as np  # noqa: PLC0415
+
+    e = _window_energies(payload)
+    if e is None:
+        return None
+    v = e.astype(np.float64)
+    n = float(np.sqrt((v * v).sum()))
+    return (v / n).tolist() if n > 0 else None
+
+
 def audio_energy_vectors(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    n_windows: int = 64,
+    df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
 ) -> DataFrame:
     """payload → (media_id, embedding): the L2-normalized window-
     energy profile (the same |PCM16| window sums whose SIGNS make the
-    fingerprint) as an n_windows-d dense vector — the audio twin of a
-    learned audio embedding, derived instead of inferred so every
-    downstream ANN contract is deterministic. Normalization makes the
-    vector gain-invariant to within one ulp of the normalizing sqrt
-    (a planted gain-scaled duplicate normalizes to the same vector up
-    to the last bit — cosine 1 − O(eps²), unconditionally its source's
-    nearest neighbor). Arrow-batched mapInPandas; audio bytes never
-    shuffle — only (id, 64 doubles) rows move."""
+    fingerprint) as a 64-d dense vector — the audio twin of a learned
+    audio embedding, derived instead of inferred so every downstream
+    ANN contract is deterministic. Normalization makes the vector
+    gain-invariant to within one ulp of the normalizing sqrt (a
+    planted gain-scaled duplicate normalizes to the same vector up to
+    the last bit — cosine 1 − O(eps²), unconditionally its source's
+    nearest neighbor). Audio bytes never shuffle — only (id, 64
+    doubles) rows move."""
+    return _map_payloads(
+        df, AUDIO_VEC_SCHEMA, lambda p: [(_energy_vector(p),)], payload_col, id_col
+    )
+
+
+def planted_wav_bytes(i: int) -> bytes:
+    """A mono 8 kHz WAV with PLANTED gain-scaled duplicates: every id
+    with ``id % 10 == 3`` carries the window-amplitude profile of
+    ``id - 1`` multiplied by 3 (max amplitude 2997 stays far inside
+    PCM16). Profiles are per-id seeded uniform draws over [50, 1000)
+    for 64 windows of 8 frames; each window is a ±a_w square wave, so
+    window energy is exactly 8·a_w — the fingerprint's closed-form
+    ground truth, same acceptance pattern as the image dHash row."""
     import numpy as np  # noqa: PLC0415
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vecs = []
-            for p in pdf[payload_col]:
-                e = _window_energies(p, n_windows)
-                if e is None:
-                    vecs.append(None)
-                    continue
-                v = e.astype(np.float64)
-                n = float(np.sqrt((v * v).sum()))
-                vecs.append((v / n).tolist() if n > 0 else None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "embedding": vecs,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(compute, AUDIO_VEC_SCHEMA)
+    src, gain = (i - 1, 3) if i % _PERIOD == 3 else (i, 1)
+    amps = _seeded_ints(src * _KNUTH + 17, 50, 1000, _N_WINDOWS) * gain
+    samples = np.repeat(amps.astype(np.int16), 8)
+    sign = np.where((np.arange(samples.size) // 4) % 2 == 0, 1, -1).astype(np.int16)
+    return _wav(8000, 1, (samples * sign).astype("<i2").tobytes())
 
 
-def make_planted_dup_audio(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    period: int = 10,
-    residue: int = 3,
-    gain: int = 3,
-    n_windows: int = 64,
-    frames_per_window: int = 8,
-) -> DataFrame:
-    """WAV corpus with PLANTED gain-scaled duplicates: every id with
-    ``id % period == residue`` carries the window-amplitude profile of
-    ``id - 1`` multiplied by ``gain`` (max amplitude 1000·gain stays
-    far inside PCM16). Profiles are per-id seeded uniform draws over
-    [50, 1000); each window is a ±a_w square wave, so window energy
-    is exactly frames_per_window·a_w — the fingerprint's closed-form
-    ground truth, same acceptance pattern as the image dHash row."""
-    if not 1 <= gain <= 30:
-        raise ValueError(f"gain must be in [1, 30], got {gain}")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io  # noqa: PLC0415
-        import wave  # noqa: PLC0415
-
-        import numpy as np  # noqa: PLC0415
-
-        def profile(pattern_id: int) -> "np.ndarray":
-            seed = (int(pattern_id) * 2654435761 + 17) % (2**32)
-            return np.random.RandomState(seed).randint(50, 1000, n_windows)
-
-        def encode(amps: "np.ndarray") -> bytes:
-            samples = np.repeat(amps.astype(np.int16), frames_per_window)
-            sign = np.where(
-                (np.arange(samples.size) // 4) % 2 == 0, 1, -1
-            ).astype(np.int16)
-            buf = io.BytesIO()
-            with wave.open(buf, "wb") as w:
-                w.setnchannels(1)
-                w.setsampwidth(2)
-                w.setframerate(8000)
-                w.writeframes((samples * sign).astype("<i2").tobytes())
-            return buf.getvalue()
-
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                if i % period == residue:
-                    payloads.append(encode(profile(i - 1) * gain))
-                else:
-                    payloads.append(encode(profile(i)))
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "audio",
-                    "payload": payloads,
-                    "meta": [
-                        {"source": "synthetic", "mime": "audio/wav", "bytes": len(p)}
-                        for p in payloads
-                    ],
-                }
-            )
-
-    return _cpu_partitions(df.select(id_col)).mapInPandas(gen, MEDIA_SCHEMA)
+def make_planted_dup_audio(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Audio corpus of ``planted_wav_bytes``."""
+    return _synthetic_media(df, id_col, "audio", "audio/wav", planted_wav_bytes)
 
 
 # ---------------------------------------------------------------------------
 # Video (multi-frame clip) near-dup: per-frame dHash fan-out through
-# the APNG codec, then clip-level re-aggregation. Completes the
-# image/audio/video triad with a different distributed shape: one
-# MEDIA row fans out to n_frames hash rows, and clip identity is an
-# order-canonicalized aggregate over them.
+# the APNG codec or the MP4 demuxer, then clip-level re-aggregation.
+# Completes the image/audio/video triad with a different distributed
+# shape: one MEDIA row fans out to n_frames hash rows, and clip
+# identity is an order-canonicalized aggregate over them.
 # ---------------------------------------------------------------------------
 
 FRAME_DHASH_SCHEMA = T.StructType(
@@ -1019,81 +969,45 @@ FRAME_DHASH_SCHEMA = T.StructType(
 )
 
 
+def _frame_hashes(payload: bytes | None) -> list[int | None]:
+    """The dHash of every frame of one clip: APNG frames through the
+    PNG codec, MJPEG MP4 samples (demuxed by the vendored ISO BMFF
+    walker) through the JPEG codec. A frame that does not decode
+    hashes to None; a payload that is neither yields no frames."""
+    from mapreducewordoccurences_spark.multimodal.jpeg import (  # noqa: PLC0415
+        jpeg_meta,
+        jpeg_pixels,
+    )
+    from mapreducewordoccurences_spark.multimodal.mp4 import (  # noqa: PLC0415
+        mp4_jpeg_frames,
+    )
+
+    meta = _png_meta(payload)
+    if meta is not None:
+        frames = [(meta, _png_pixels(payload, frame=f)) for f in range(meta[3])]
+    else:
+        samples = mp4_jpeg_frames(payload) or []
+        metas = [jpeg_meta(s) for s in samples]
+        frames = [
+            (m, None if m is None else jpeg_pixels(s)) for m, s in zip(metas, samples)
+        ]
+    return [None if px is None else _dhash(px, *m[:3]) for m, px in frames]
+
+
 def dhash_frames(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    hash_w: int = 8,
-    hash_h: int = 8,
+    df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
 ) -> DataFrame:
-    """payload → one (media_id, frame_idx, dhash) row PER FRAME via
-    Arrow-batched mapInPandas — the frame fan-out happens inside the
-    batch (pure map work), so a clip never needs to be decoded twice
-    and payload bytes still never shuffle."""
-    import numpy as np  # noqa: PLC0415
-
-    def _hash_gray_frame(px: bytes, w: int, h: int, ch: int) -> int:
-        arr = np.frombuffer(px, dtype=np.uint8).reshape(h, w, ch)
-        gray = (arr.astype(np.uint32).sum(axis=2) // ch).astype(np.uint8)
-        small = np.frombuffer(
-            _nn_resample(gray.tobytes(), w, h, 1, hash_w + 1, hash_h),
-            dtype=np.uint8,
-        ).reshape(hash_h, hash_w + 1)
-        bits = (small[:, :-1] > small[:, 1:]).flatten()
-        return int.from_bytes(np.packbits(bits).tobytes(), "big", signed=True)
-
-    def _frame_hashes(payload: bytes | None) -> list[int | None]:
-        meta = _png_meta(payload)
-        if meta is not None:
-            w, h, ch, n_frames = meta
-            out: list[int | None] = []
-            for f in range(n_frames):
-                px = _png_pixels(payload, frame=f)
-                out.append(
-                    None if px is None else _hash_gray_frame(px, w, h, ch)
-                )
-            return out
-        # MJPEG MP4 clips (r11): demux samples through the vendored
-        # ISO BMFF walker, decode each through the vendored JPEG codec
-        from mapreducewordoccurences_spark.multimodal.jpeg import (  # noqa: PLC0415
-            jpeg_meta,
-            jpeg_pixels,
-        )
-        from mapreducewordoccurences_spark.multimodal.mp4 import (  # noqa: PLC0415
-            mp4_jpeg_frames,
-        )
-
-        samples = mp4_jpeg_frames(payload)
-        if samples is None:
-            return []
-        out = []
-        for s in samples:
-            m = jpeg_meta(s)
-            px = jpeg_pixels(s) if m is not None else None
-            out.append(
-                None if px is None else _hash_gray_frame(px, m[0], m[1], m[2])
-            )
-        return out
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            idxs: list[int] = []
-            hashes: list[int | None] = []
-            for i, p in zip(pdf[id_col].astype("int64"), pdf[payload_col]):
-                for f, hv in enumerate(_frame_hashes(p)):
-                    ids.append(int(i))
-                    idxs.append(f)
-                    hashes.append(hv)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="int64"),
-                    "frame_idx": pd.array(idxs, dtype="int32"),
-                    "dhash": pd.array(hashes, dtype="Int64"),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(compute, FRAME_DHASH_SCHEMA)
+    """payload → one (media_id, frame_idx, dhash) row PER FRAME — the
+    frame fan-out happens inside the batch (pure map work), so a clip
+    never needs to be decoded twice and payload bytes still never
+    shuffle."""
+    return _map_payloads(
+        df,
+        FRAME_DHASH_SCHEMA,
+        lambda p: list(enumerate(_frame_hashes(p))),
+        payload_col,
+        id_col,
+    )
 
 
 def clip_fingerprints(frames: DataFrame) -> DataFrame:
@@ -1119,115 +1033,44 @@ def clip_fingerprints(frames: DataFrame) -> DataFrame:
     )
 
 
-def make_planted_dup_clips(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    period: int = 10,
-    residue: int = 7,
-    delta: int = 7,
-    side: int = 16,
-    n_frames: int = 4,
-) -> DataFrame:
-    """APNG clip corpus with PLANTED near-duplicates: ids with
-    ``id % period == residue`` carry every frame of ``id - 1``'s clip
-    shifted uniformly by ``delta`` gray levels (non-wrapping, so each
-    frame's dHash — and hence the clip fingerprint — is preserved
-    exactly). Frame patterns are seeded per (pattern_id, frame)."""
-    if not 0 < delta <= 10:
-        raise ValueError(f"delta must be in (0, 10], got {delta}")
+def planted_apng_bytes(i: int) -> bytes:
+    """A 4-frame 16x16 grayscale APNG clip with PLANTED
+    near-duplicates: ids with ``id % 10 == 7`` carry every frame of
+    ``id - 1``'s clip shifted uniformly by 7 gray levels
+    (non-wrapping, so each frame's dHash — and hence the clip
+    fingerprint — is preserved exactly). Frame patterns are seeded per
+    (pattern_id, frame)."""
+    import numpy as np  # noqa: PLC0415
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np  # noqa: PLC0415
+    src, shift = (i - 1, 7) if i % _PERIOD == 7 else (i, 0)
+    frames = [
+        (
+            _seeded_ints(src * _KNUTH + f * 97 + 29, 0, 246, 16 * 16).astype(np.uint8)
+            + np.uint8(shift)
+        ).tobytes()
+        for f in range(4)
+    ]
+    return png_encode(16, 16, 1, 4, frames=frames)
 
-        def frame_pixels(pattern_id: int, f: int) -> "np.ndarray":
-            seed = (int(pattern_id) * 2654435761 + f * 97 + 29) % (2**32)
-            rng = np.random.RandomState(seed)
-            return rng.randint(0, 246, side * side).astype(np.uint8)
 
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                pattern, shift = (
-                    (i - 1, np.uint8(delta))
-                    if i % period == residue
-                    else (i, np.uint8(0))
-                )
-                frames = [
-                    (frame_pixels(pattern, f) + shift).tobytes()
-                    for f in range(n_frames)
-                ]
-                payloads.append(png_encode(side, side, 1, n_frames, frames=frames))
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "video",
-                    "payload": payloads,
-                    "meta": [
-                        {"source": "synthetic", "mime": "image/apng", "bytes": len(p)}
-                        for p in payloads
-                    ],
-                }
-            )
-
-    return _cpu_partitions(df.select(id_col)).mapInPandas(gen, MEDIA_SCHEMA)
+def make_planted_dup_clips(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Video corpus of ``planted_apng_bytes``."""
+    return _synthetic_media(df, id_col, "video", "image/apng", planted_apng_bytes)
 
 
 # ---------------------------------------------------------------------------
-# JPEG planted corpora (round 10) — the vendored baseline codec
-# (multimodal/jpeg.py) closes the media tier's availability hole: a
-# real training corpus is mostly JPEG, and until r10 a Pillow-less
-# cluster yielded NULL dims/features for every JPEG payload.
+# JPEG corpora — the vendored codec (multimodal/jpeg.py) means a
+# Pillow-less cluster decodes the format a real training corpus mostly
+# arrives in, instead of yielding NULL dims/features for it.
 # ---------------------------------------------------------------------------
 
 
-def _jpeg_noise_pixels(pattern_id: int, side: int) -> bytes:
-    """Per-id seeded uniform grayscale noise (the PNG planted corpus's
-    pattern family — distinct ids collide on a 64-bit dHash with
-    probability ~2^-64)."""
-    import numpy as np  # noqa: PLC0415
-
-    seed = (int(pattern_id) * 2654435761) % (2**32)
-    rng = np.random.RandomState(seed)
-    return rng.randint(0, 256, side * side).astype(np.uint8).tobytes()
-
-
-def _jpeg_smooth_pixels(pattern_id: int, side: int) -> bytes:
-    """Per-id seeded smooth low-frequency field (sum of 4 random 2-D
-    cosines): the JPEG-FRIENDLY pattern family — quality re-encoding
-    moves its dHash by ≤5 bits (measured across 120 ids at q90 vs
-    q75) while distinct ids stay ~32 bits apart."""
-    import numpy as np  # noqa: PLC0415
-
-    seed = (int(pattern_id) * 2654435761) % (2**32)
-    rng = np.random.RandomState(seed)
-    xx, yy = np.meshgrid(np.arange(side), np.arange(side))
-    img = np.full((side, side), 128.0)
-    for _ in range(4):
-        fx, fy = rng.uniform(0.3, 2.0, 2)
-        ph1, ph2 = rng.uniform(0, 2 * np.pi, 2)
-        amp = rng.uniform(25, 45)
-        img += (
-            amp
-            * np.cos(2 * np.pi * fx * xx / side + ph1)
-            * np.cos(2 * np.pi * fy * yy / side + ph2)
-        )
-    return np.clip(img, 5, 250).astype(np.uint8).tobytes()
-
-
-def make_planted_dup_jpegs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    period: int = 10,
-    side: int = 32,
-    quality: int = 85,
-) -> DataFrame:
-    """Grayscale JPEG corpus with planted BYTE-DISTINCT duplicates:
-    every id with ``id % period == 1`` encodes the SAME pixels as
-    ``id - 1`` through a different coding path — alternating between
-    a restart-interval re-encode (DRI + RSTn markers, reset DC
-    predictors) and a PROGRESSIVE (SOF2) re-encode (r11: multi-scan
+def planted_jpeg_bytes(i: int) -> bytes:
+    """A 32x32 grayscale JPEG (q85) with planted BYTE-DISTINCT
+    duplicates: every id with ``id % 10 == 1`` encodes the SAME noise
+    pixels as ``id - 1`` through a different coding path — alternating
+    between a restart-interval re-encode (DRI + RSTn markers, reset DC
+    predictors) and a PROGRESSIVE (SOF2) re-encode (multi-scan
     spectral selection + successive approximation) — either way a
     genuinely different entropy stream that decodes bit-identically
     (property-tested: both coders quantize through the same
@@ -1235,265 +1078,128 @@ def make_planted_dup_jpegs(
     while byte-level dedup can never pair them. This is the JPEG twin
     of the PNG corpus's non-wrapping brightness shift: an EXACT
     invariance, closed-form oracle, no recall tolerance needed — and
-    since r11 it proves the dHash tier no longer silently drops the
-    progressive slice a real web corpus carries."""
+    it proves the dHash tier reads the progressive slice a real web
+    corpus carries."""
+    from mapreducewordoccurences_spark.multimodal.jpeg import (  # noqa: PLC0415
+        jpeg_encode,
+        jpeg_encode_progressive,
+    )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mapreducewordoccurences_spark.multimodal.jpeg import (  # noqa: PLC0415
-            jpeg_encode,
-            jpeg_encode_progressive,
+    if i % _PERIOD != 1:
+        return jpeg_encode(_SIDE, _SIDE, 1, _noise_pixels(i), quality=85)
+    if (i // _PERIOD) % 2 == 1:
+        return jpeg_encode_progressive(
+            _SIDE, _SIDE, 1, _noise_pixels(i - 1), quality=85
         )
-
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                if i % period == 1:
-                    if (i // period) % 2 == 1:
-                        payloads.append(
-                            jpeg_encode_progressive(
-                                side, side, 1,
-                                _jpeg_noise_pixels(i - 1, side),
-                                quality=quality,
-                            )
-                        )
-                    else:
-                        payloads.append(
-                            jpeg_encode(
-                                side, side, 1,
-                                _jpeg_noise_pixels(i - 1, side),
-                                quality=quality, restart_interval=4,
-                            )
-                        )
-                else:
-                    payloads.append(
-                        jpeg_encode(
-                            side, side, 1, _jpeg_noise_pixels(i, side),
-                            quality=quality,
-                        )
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "image",
-                    "payload": payloads,
-                    "meta": [
-                        {"source": "synthetic", "mime": "image/jpeg", "bytes": len(p)}
-                        for p in payloads
-                    ],
-                }
-            )
-
-    return _cpu_partitions(df.select(id_col)).mapInPandas(gen, MEDIA_SCHEMA)
+    return jpeg_encode(
+        _SIDE, _SIDE, 1, _noise_pixels(i - 1), quality=85, restart_interval=4
+    )
 
 
-def make_requant_dup_jpegs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    period: int = 10,
-    side: int = 32,
-) -> DataFrame:
-    """Smooth-pattern JPEG corpus with planted QUALITY-RE-ENCODED
-    duplicates: ids with ``id % period == 1`` carry the pixels of
-    ``id - 1`` re-encoded at quality 75 instead of 90 — the classic
+def make_planted_dup_jpegs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Image corpus of ``planted_jpeg_bytes``."""
+    return _synthetic_media(df, id_col, "image", "image/jpeg", planted_jpeg_bytes)
+
+
+def requant_jpeg_bytes(i: int) -> bytes:
+    """A 32x32 smooth-pattern JPEG with planted QUALITY-RE-ENCODED
+    duplicates: ids with ``id % 10 == 1`` carry the pixels of
+    ``id - 1`` encoded at quality 75 instead of 90 — the classic
     real-corpus near-dup (same image, different compression), where
     the decoded pixels genuinely differ and only a Hamming-tolerant
     perceptual match can pair them."""
+    from mapreducewordoccurences_spark.multimodal.jpeg import (  # noqa: PLC0415
+        jpeg_encode,
+    )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mapreducewordoccurences_spark.multimodal.jpeg import (  # noqa: PLC0415
-            jpeg_encode,
-        )
+    src, quality = (i - 1, 75) if i % _PERIOD == 1 else (i, 90)
+    return jpeg_encode(_SIDE, _SIDE, 1, _smooth_pixels(src), quality=quality)
 
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                if i % period == 1:
-                    payloads.append(
-                        jpeg_encode(
-                            side, side, 1, _jpeg_smooth_pixels(i - 1, side),
-                            quality=75,
-                        )
-                    )
-                else:
-                    payloads.append(
-                        jpeg_encode(
-                            side, side, 1, _jpeg_smooth_pixels(i, side),
-                            quality=90,
-                        )
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "image",
-                    "payload": payloads,
-                    "meta": [
-                        {"source": "synthetic", "mime": "image/jpeg", "bytes": len(p)}
-                        for p in payloads
-                    ],
-                }
-            )
 
-    return _cpu_partitions(df.select(id_col)).mapInPandas(gen, MEDIA_SCHEMA)
+def make_requant_dup_jpegs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Image corpus of ``requant_jpeg_bytes``."""
+    return _synthetic_media(df, id_col, "image", "image/jpeg", requant_jpeg_bytes)
+
+
+def fake_jpeg_bytes(i: int) -> bytes:
+    """A baseline JFIF (q85) exercising every encoder/decoder branch:
+    dims are ``_fake_dims``, odd ids are grayscale, even ids are
+    4:2:0-subsampled color, and every 4th id carries restart markers.
+    Pixels are the cheap closed-form ``_gradient``, so the
+    dims/channels oracles stay arithmetic."""
+    import numpy as np  # noqa: PLC0415
+
+    from mapreducewordoccurences_spark.multimodal.jpeg import (  # noqa: PLC0415
+        jpeg_encode,
+    )
+
+    w, h = _fake_dims(i)
+    base = _gradient(i, 0)
+    rst = 4 if i % 4 == 0 else 0
+    if i % 2 == 1:
+        px = base.astype(np.uint8).tobytes()
+        return jpeg_encode(w, h, 1, px, quality=85, restart_interval=rst)
+    rgb = np.stack(
+        [base, (base + 40) % 220 + 20, (base + 80) % 220 + 20], axis=2
+    ).astype(np.uint8)
+    return jpeg_encode(
+        w, h, 3, rgb.tobytes(), quality=85, subsample=True, restart_interval=rst
+    )
+
+
+def make_fake_jpeg_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Image corpus of ``fake_jpeg_bytes``."""
+    return _synthetic_media(df, id_col, "image", "image/jpeg", fake_jpeg_bytes)
+
+
+# ---------------------------------------------------------------------------
+# GIF corpora — the vendored LZW codec (multimodal/gif.py)
+# ---------------------------------------------------------------------------
+
+
+def fake_gif_bytes(i: int) -> bytes:
+    """A GIF89a with closed-form metadata, the GIF twin of
+    ``fake_png_bytes``/``fake_jpeg_bytes``: dims are ``_fake_dims``,
+    n_frames = 1 + id % 3 (animated GIFs via per-frame GCE blocks) of
+    ``_gradient`` pixels, and every 3rd id is INTERLACED — so the
+    dims/frame-count oracle stays pure arithmetic while the payloads
+    exercise the vendored LZW decoder's branches (multi-frame
+    compositing, interlace reorder)."""
+    import numpy as np  # noqa: PLC0415
+
+    from mapreducewordoccurences_spark.multimodal.gif import (  # noqa: PLC0415
+        gif_encode,
+    )
+
+    frames = [_gradient(i, f).astype(np.uint8).tobytes() for f in range(1 + i % 3)]
+    return gif_encode(*_fake_dims(i), frames, interlace=(i % 3 == 0))
 
 
 def make_fake_gif_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic GIF corpus with closed-form metadata, the GIF
-    twin of make_fake_media/make_fake_jpeg_media: dims vary per id
-    (16+id%48 x 16+7id%40), n_frames = 1 + id % 3 (animated GIFs via
-    per-frame GCE blocks), and every 3rd id is INTERLACED — so the
-    dims/frame-count oracle stays pure arithmetic while the payloads
-    are genuine GIF89a streams exercising the vendored LZW decoder's
-    branches (multi-frame compositing, interlace reorder)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np  # noqa: PLC0415
-
-        from mapreducewordoccurences_spark.multimodal.gif import (  # noqa: PLC0415
-            gif_encode,
-        )
-
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = 16 + i % 48, 16 + (i * 7) % 40
-                nf = 1 + i % 3
-                xx, yy = np.meshgrid(np.arange(w), np.arange(h))
-                frames = [
-                    ((xx * 3 + yy * 5 + i + f * 11) % 200 + 20)
-                    .astype(np.uint8)
-                    .tobytes()
-                    for f in range(nf)
-                ]
-                payloads.append(
-                    gif_encode(w, h, frames, interlace=(i % 3 == 0))
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "image",
-                    "payload": payloads,
-                    "meta": [
-                        {"source": "synthetic", "mime": "image/gif", "bytes": len(p)}
-                        for p in payloads
-                    ],
-                }
-            )
-
-    return _cpu_partitions(df.select(id_col)).mapInPandas(gen, MEDIA_SCHEMA)
+    """Image corpus of ``fake_gif_bytes``."""
+    return _synthetic_media(df, id_col, "image", "image/gif", fake_gif_bytes)
 
 
-def make_planted_dup_gifs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    period: int = 10,
-    side: int = 32,
-) -> DataFrame:
-    """Grayscale GIF corpus with planted BYTE-DISTINCT duplicates:
-    every id with ``id % period == 1`` encodes the SAME pixels as
+def planted_gif_bytes(i: int) -> bytes:
+    """A 32x32 grayscale GIF with planted BYTE-DISTINCT duplicates:
+    every id with ``id % 10 == 1`` encodes the SAME noise pixels as
     ``id - 1`` but INTERLACED (4-pass row reorder) — a genuinely
     different LZW stream that decodes bit-identically (GIF is
     lossless), so its dHash equals its source's exactly. The GIF twin
     of the JPEG corpus's restart-interval/progressive variants: exact
     invariance, closed-form oracle, no recall tolerance."""
+    from mapreducewordoccurences_spark.multimodal.gif import (  # noqa: PLC0415
+        gif_encode,
+    )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mapreducewordoccurences_spark.multimodal.gif import (  # noqa: PLC0415
-            gif_encode,
-        )
-
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                if i % period == 1:
-                    payloads.append(
-                        gif_encode(
-                            side, side,
-                            [_jpeg_noise_pixels(i - 1, side)],
-                            interlace=True,
-                        )
-                    )
-                else:
-                    payloads.append(
-                        gif_encode(
-                            side, side, [_jpeg_noise_pixels(i, side)]
-                        )
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "image",
-                    "payload": payloads,
-                    "meta": [
-                        {"source": "synthetic", "mime": "image/gif", "bytes": len(p)}
-                        for p in payloads
-                    ],
-                }
-            )
-
-    return _cpu_partitions(df.select(id_col)).mapInPandas(gen, MEDIA_SCHEMA)
+    planted = i % _PERIOD == 1
+    src = i - 1 if planted else i
+    return gif_encode(_SIDE, _SIDE, [_noise_pixels(src)], interlace=planted)
 
 
-def make_fake_jpeg_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic JPEG corpus exercising every encoder/decoder
-    branch: dims vary per id (16+id%48 x 16+7id%40), odd ids are
-    grayscale, even ids are 4:2:0-subsampled color, and every 4th id
-    carries restart markers. Pixels are cheap closed-form gradients,
-    so dims/channels oracles stay arithmetic while the payloads are
-    genuine baseline JFIF streams."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np  # noqa: PLC0415
-
-        from mapreducewordoccurences_spark.multimodal.jpeg import (  # noqa: PLC0415
-            jpeg_encode,
-        )
-
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = 16 + i % 48, 16 + (i * 7) % 40
-                xx, yy = np.meshgrid(np.arange(w), np.arange(h))
-                base = (xx * 3 + yy * 5 + i) % 200 + 20
-                rst = 4 if i % 4 == 0 else 0
-                if i % 2 == 1:
-                    px = base.astype(np.uint8).tobytes()
-                    payloads.append(
-                        jpeg_encode(w, h, 1, px, quality=85, restart_interval=rst)
-                    )
-                else:
-                    rgb = np.stack(
-                        [base, (base + 40) % 220 + 20, (base + 80) % 220 + 20],
-                        axis=2,
-                    ).astype(np.uint8)
-                    payloads.append(
-                        jpeg_encode(
-                            w, h, 3, rgb.tobytes(), quality=85,
-                            subsample=True, restart_interval=rst,
-                        )
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "image",
-                    "payload": payloads,
-                    "meta": [
-                        {"source": "synthetic", "mime": "image/jpeg", "bytes": len(p)}
-                        for p in payloads
-                    ],
-                }
-            )
-
-    return _cpu_partitions(df.select(id_col)).mapInPandas(gen, MEDIA_SCHEMA)
+def make_planted_dup_gifs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Image corpus of ``planted_gif_bytes``."""
+    return _synthetic_media(df, id_col, "image", "image/gif", planted_gif_bytes)
 
 
 # ---------------------------------------------------------------------------
@@ -1520,148 +1226,77 @@ def decode_mp4_meta(
     df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
 ) -> DataFrame:
     """payload → (media_id, width, height, n_frames, codec,
-    duration_ms) through the vendored MP4 sample-table walker in
-    Arrow-batched mapInPandas — no sample bytes touched, so corpus
-    profiling is cheap. Non-MP4/corrupt payloads yield NULL metadata
-    (the 100 TB corruption rule)."""
+    duration_ms) through the vendored MP4 sample-table walker — no
+    sample bytes touched, so corpus profiling is cheap. Non-MP4/corrupt
+    payloads yield NULL metadata."""
     from mapreducewordoccurences_spark.multimodal.mp4 import (  # noqa: PLC0415
         mp4_meta,
     )
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [mp4_meta(p) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "width": pd.array(
-                        [m[0] if m else None for m in metas], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [m[1] if m else None for m in metas], dtype="Int32"
-                    ),
-                    "n_frames": pd.array(
-                        [m[2] if m else None for m in metas], dtype="Int32"
-                    ),
-                    "codec": [m[3] if m else None for m in metas],
-                    "duration_ms": pd.array(
-                        [m[4] if m else None for m in metas], dtype="Float64"
-                    ),
-                }
-            )
+    return _map_payloads(
+        df,
+        VIDEO_META_SCHEMA,
+        lambda p: [mp4_meta(p) or (None,) * 5],
+        payload_col,
+        id_col,
+    )
 
-    return df.select(id_col, payload_col).mapInPandas(decode, VIDEO_META_SCHEMA)
+
+def fake_mp4_bytes(i: int) -> bytes:
+    """An MJPEG MP4 with closed-form metadata: dims are ``_fake_dims``
+    (odd dims are fine: the grayscale frames have no chroma
+    constraint), n_frames = 1 + id % 4 at 10 fps (duration_ms =
+    100·n_frames, timescale 1000). Every sample is a baseline JFIF
+    (q85) of ``_gradient`` pixels; the dims/frames/duration oracle
+    stays pure arithmetic."""
+    import numpy as np  # noqa: PLC0415
+
+    from mapreducewordoccurences_spark.multimodal.jpeg import (  # noqa: PLC0415
+        jpeg_encode,
+    )
+    from mapreducewordoccurences_spark.multimodal.mp4 import (  # noqa: PLC0415
+        mp4_encode_mjpeg,
+    )
+
+    w, h = _fake_dims(i)
+    samples = [
+        jpeg_encode(w, h, 1, _gradient(i, f).astype(np.uint8).tobytes(), quality=85)
+        for f in range(1 + i % 4)
+    ]
+    return mp4_encode_mjpeg(w, h, samples, fps=10)
 
 
 def make_fake_mp4_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic MJPEG-MP4 corpus with closed-form metadata:
-    dims vary per id (16+id%48 x 16+7id%40 — even dims not required:
-    MJPEG has no chroma constraint here since frames are grayscale),
-    n_frames = 1 + id % 4 at 10 fps (duration_ms = 100·n_frames,
-    timescale 1000). Every sample is a genuine baseline JFIF stream;
-    the dims/frames/duration oracle stays pure arithmetic."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np  # noqa: PLC0415
-
-        from mapreducewordoccurences_spark.multimodal.jpeg import (  # noqa: PLC0415
-            jpeg_encode,
-        )
-        from mapreducewordoccurences_spark.multimodal.mp4 import (  # noqa: PLC0415
-            mp4_encode_mjpeg,
-        )
-
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = 16 + i % 48, 16 + (i * 7) % 40
-                nf = 1 + i % 4
-                xx, yy = np.meshgrid(np.arange(w), np.arange(h))
-                samples = [
-                    jpeg_encode(
-                        w, h, 1,
-                        ((xx * 3 + yy * 5 + i + f * 11) % 200 + 20)
-                        .astype(np.uint8)
-                        .tobytes(),
-                        quality=85,
-                    )
-                    for f in range(nf)
-                ]
-                payloads.append(mp4_encode_mjpeg(w, h, samples, fps=10))
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "video",
-                    "payload": payloads,
-                    "meta": [
-                        {"source": "synthetic", "mime": "video/mp4", "bytes": len(p)}
-                        for p in payloads
-                    ],
-                }
-            )
-
-    return _cpu_partitions(df.select(id_col)).mapInPandas(gen, MEDIA_SCHEMA)
+    """Video corpus of ``fake_mp4_bytes``."""
+    return _synthetic_media(df, id_col, "video", "video/mp4", fake_mp4_bytes)
 
 
-def make_planted_dup_mp4s(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    period: int = 10,
-    side: int = 32,
-    n_frames: int = 3,
-) -> DataFrame:
-    """MJPEG-MP4 clip corpus with planted BYTE-DISTINCT duplicates:
-    ids with ``id % period == 1`` carry the SAME frames as ``id - 1``
-    but with every sample re-encoded as PROGRESSIVE JPEG (SOF2) — a
-    different container byte stream whose samples decode
-    bit-identically to their baseline siblings (the r11 invariance),
-    so the per-frame dHash sequence — and hence the clip fingerprint —
+def planted_mp4_bytes(i: int) -> bytes:
+    """A 3-frame 32x32 MJPEG MP4 clip (q85, 10 fps) with planted
+    BYTE-DISTINCT duplicates: ids with ``id % 10 == 1`` carry the SAME
+    noise frames as ``id - 1`` but with every sample encoded as
+    PROGRESSIVE JPEG (SOF2) — a different container byte stream whose
+    samples decode bit-identically to their baseline siblings, so the
+    per-frame dHash sequence — and hence the clip fingerprint —
     matches exactly while byte-level dedup can never pair them."""
+    from mapreducewordoccurences_spark.multimodal.jpeg import (  # noqa: PLC0415
+        jpeg_encode,
+        jpeg_encode_progressive,
+    )
+    from mapreducewordoccurences_spark.multimodal.mp4 import (  # noqa: PLC0415
+        mp4_encode_mjpeg,
+    )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mapreducewordoccurences_spark.multimodal.jpeg import (  # noqa: PLC0415
-            jpeg_encode,
-            jpeg_encode_progressive,
-        )
-        from mapreducewordoccurences_spark.multimodal.mp4 import (  # noqa: PLC0415
-            mp4_encode_mjpeg,
-        )
+    planted = i % _PERIOD == 1
+    encode = jpeg_encode_progressive if planted else jpeg_encode
+    src = i - 1 if planted else i
+    samples = [
+        encode(_SIDE, _SIDE, 1, _noise_pixels(src * 131 + f * 977), quality=85)
+        for f in range(3)
+    ]
+    return mp4_encode_mjpeg(_SIDE, _SIDE, samples, fps=10)
 
-        def frame_px(pattern_id: int, f: int) -> bytes:
-            return _jpeg_noise_pixels(pattern_id * 131 + f * 977, side)
 
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                if i % period == 1:
-                    samples = [
-                        jpeg_encode_progressive(
-                            side, side, 1, frame_px(i - 1, f), quality=85
-                        )
-                        for f in range(n_frames)
-                    ]
-                else:
-                    samples = [
-                        jpeg_encode(
-                            side, side, 1, frame_px(i, f), quality=85
-                        )
-                        for f in range(n_frames)
-                    ]
-                payloads.append(mp4_encode_mjpeg(side, side, samples, fps=10))
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "video",
-                    "payload": payloads,
-                    "meta": [
-                        {"source": "synthetic", "mime": "video/mp4", "bytes": len(p)}
-                        for p in payloads
-                    ],
-                }
-            )
-
-    return _cpu_partitions(df.select(id_col)).mapInPandas(gen, MEDIA_SCHEMA)
+def make_planted_dup_mp4s(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Video corpus of ``planted_mp4_bytes``."""
+    return _synthetic_media(df, id_col, "video", "video/mp4", planted_mp4_bytes)

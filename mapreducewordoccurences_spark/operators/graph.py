@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mapreducewordoccurences_spark.core.checkpointing import bounded_persist
+
 SCALE = 1_000_000_000_000  # 1e12 rank micro-units
 
 # The in-row tier runs when the truncated edge set has fewer (u, v)
@@ -304,13 +306,12 @@ def triangle_count_approx(
     """
     from pyspark.sql import Window
 
-    e = (
+    e = bounded_persist(
         edges.select(
             F.least(a_col, b_col).alias("u"), F.greatest(a_col, b_col).alias("v")
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .persist()
     )
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).select(
         F.col("u").alias("center"), F.col("v").alias("nbr")
@@ -320,9 +321,9 @@ def triangle_count_approx(
     idx_w = Window.partitionBy("center").orderBy(
         F.xxhash64("center", "nbr", F.lit(seed)), F.col("nbr")
     )
-    indexed = sym.select(
-        "center", "nbr", (F.row_number().over(idx_w) - 1).alias("idx")
-    ).persist()
+    indexed = bounded_persist(
+        sym.select("center", "nbr", (F.row_number().over(idx_w) - 1).alias("idx"))
+    )
     stats = (
         indexed.groupBy("center")
         .agg(F.count(F.lit(1)).alias("d"))

@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mapreducewordoccurences_spark.core.checkpointing import bounded_persist
+
 
 def salted_agg(
     df: DataFrame,
@@ -101,7 +103,7 @@ def key_skew_stats(
     task — a global window here would funnel every distinct key
     through one reducer, exactly the skew this function diagnoses.
     """
-    per = df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("n_rows")).persist()
+    per = bounded_persist(df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("n_rows")))
     totals = per.agg(
         F.sum("n_rows").cast("double").alias("__total"),
         F.count(F.lit(1)).cast("double").alias("__n_keys"),

@@ -28,6 +28,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mapreducewordoccurences_spark.core.checkpointing import bounded_persist
 from mapreducewordoccurences_spark.core.wordcount import count_words
 from mapreducewordoccurences_spark.dedup.exact import exact_dup_groups
 from mapreducewordoccurences_spark.dedup.minhash import minhash_lsh_pairs

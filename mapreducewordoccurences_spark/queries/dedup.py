@@ -706,15 +706,15 @@ def q_simhash_recall_acceptance(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale-exercised by dedup_simhash_pairs (the portable d=3 row,
     hash-green at sf1 and sf3); this row's contract is the
     Hamming↔Jaccard correlation, which pruning preserves exactly.
-    The exact pair set is persisted (repo caching contract — three
+    The exact pair set is persisted under the cache bound (three
     consumers: prune ids, join left side, denominator), and both
     counts come from ONE left-join aggregate instead of two exact
     evaluations."""
     docs = _t(spark, sf_dir, "documents")
-    exact = (
-        prefix_filter_jaccard_pairs(docs, n=3, threshold=0.8)
-        .select("doc_a", "doc_b", "jaccard")
-        .persist()
+    exact = bounded_persist(
+        prefix_filter_jaccard_pairs(docs, n=3, threshold=0.8).select(
+            "doc_a", "doc_b", "jaccard"
+        )
     )
     exact_ids = (
         exact.select(F.col("doc_a").alias("doc_id"))

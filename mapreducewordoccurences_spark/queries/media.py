@@ -1,13 +1,43 @@
-"""Multimodal media rows: real PNG/APNG image round-trips, WAV audio corpus statistics, and frame-sampling fan-out, all through Arrow-batched mapInPandas.
+"""Multimodal media rows over real PNG/APNG, WAV, JPEG, GIF and MP4 payloads: dims and frame-count histograms, audio statistics, frame sampling, perceptual near-dup pairs and audio ANN, all through Arrow-batched mapInPandas.
 
-Split from the former single-module queries.py (round 7). The
-QUERIES/ORACLES registration contract is unchanged: importing this
-module registers its queries with the shared registry.
+Importing this module registers its queries with the shared registry.
+Every corpus is synthesized from the documents' ids
+(multimodal/media.py), so each oracle predicts the engine's answer
+arithmetically: the dims rows from closed-form headers, the pair rows
+from the planted-pair list.
 """
 
 from __future__ import annotations
 
 from mapreducewordoccurences_spark.queries._shared import *  # noqa: F401,F403
+
+# the planted-pair oracle: every doc_id with doc_id % 10 == residue
+# carries the content of doc_id - 1 (the planted corpora of
+# multimodal/media.py), counted only where that predecessor exists
+_PLANTED = """
+    FROM documents d JOIN documents o ON o.doc_id = d.doc_id - 1
+    WHERE d.doc_id % 10 = {residue}
+"""
+_PLANTED_PAIRS = "SELECT d.doc_id - 1 AS doc_a, d.doc_id AS doc_b" + _PLANTED
+
+
+def _fingerprints(df: DataFrame, key: str) -> DataFrame:
+    """A media fingerprint frame without its undecodable (NULL-key)
+    rows, persisted under the session's cache bound so the pairing
+    join decodes each payload once."""
+    return bounded_persist(df.filter(F.col(key).isNotNull()))
+
+
+def _equal_key_pairs(df: DataFrame, key: str) -> DataFrame:
+    """(doc_a, doc_b) for every two media with the same ``key``: the
+    collision self-join (dedup/pairs.py collision_pairs) over one key
+    per media id, so no duplicate-pair drop. The perceptual work is a
+    map-only pass to one key per payload; pairing is one self-join
+    shuffle on that key, and binary payloads never shuffle."""
+    return collision_pairs(
+        _fingerprints(df, key), "media_id", [key], distinct=False
+    ).select("doc_a", "doc_b")
+
 
 @register(
     "media_image_dims",
@@ -44,8 +74,8 @@ def q_media_image_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "media_frame_sample",
-    # n_frames = 1 + doc_id % 5 (make_fake_media), every_nth=2 →
-    # kept frame indices are range(0, n_frames, 2), oracle-computable
+    # n_frames = 1 + doc_id % 5 (make_fake_media), every 2nd frame
+    # kept → frame indices range(0, n_frames, 2), oracle-computable
     # without touching payload bytes
     """
     SELECT doc_id AS media_id,
@@ -63,7 +93,7 @@ def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    return sample_frames(make_fake_media(docs), every_nth=2)
+    return sample_frames(make_fake_media(docs))
 
 
 @register(
@@ -132,11 +162,7 @@ def q_media_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # invariant under a non-wrapping uniform shift, so the engine's
     # hash-equal pair set IS the planted set (distinct base patterns
     # are per-id uniform draws: 64-bit collision odds ~2^-64)
-    """
-    SELECT d.doc_id - 1 AS doc_a, d.doc_id AS doc_b
-    FROM documents d JOIN documents o ON o.doc_id = d.doc_id - 1
-    WHERE d.doc_id % 10 = 1
-    """,
+    _PLANTED_PAIRS.format(residue=1),
 )
 def q_media_image_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual near-dup detection over REAL image bytes, end to
@@ -158,20 +184,12 @@ def q_media_image_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form planted pair list, the planted-triangle pattern
     (queries/graph.py) applied to the multimodal tier."""
     from mapreducewordoccurences_spark.multimodal.media import (
-        bounded_persist,
         dhash_images,
         make_planted_dup_images,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    h = bounded_persist(
-        dhash_images(make_planted_dup_images(docs)).filter(
-            F.col("dhash").isNotNull()
-        )
-    )
-    return collision_pairs(h, "media_id", ["dhash"], distinct=False).select(
-        "doc_a", "doc_b"
-    )
+    return _equal_key_pairs(dhash_images(make_planted_dup_images(docs)), "dhash")
 
 
 @register(
@@ -181,11 +199,7 @@ def q_media_image_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (make_planted_dup_audio), and the energy-delta fingerprint is
     # exactly invariant under positive integer gain — the engine's
     # fingerprint-equal pair set IS the closed-form planted list
-    """
-    SELECT d.doc_id - 1 AS doc_a, d.doc_id AS doc_b
-    FROM documents d JOIN documents o ON o.doc_id = d.doc_id - 1
-    WHERE d.doc_id % 10 = 3
-    """,
+    _PLANTED_PAIRS.format(residue=3),
 )
 def q_media_audio_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio near-dup detection over REAL WAV bytes, end to end — the
@@ -202,19 +216,11 @@ def q_media_audio_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFra
     self-join shuffle on that key; audio bytes never shuffle."""
     from mapreducewordoccurences_spark.multimodal.media import (
         audio_fingerprints,
-        bounded_persist,
         make_planted_dup_audio,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    h = bounded_persist(
-        audio_fingerprints(make_planted_dup_audio(docs)).filter(
-            F.col("afp").isNotNull()
-        )
-    )
-    return collision_pairs(h, "media_id", ["afp"], distinct=False).select(
-        "doc_a", "doc_b"
-    )
+    return _equal_key_pairs(audio_fingerprints(make_planted_dup_audio(docs)), "afp")
 
 
 @register(
@@ -224,11 +230,7 @@ def q_media_audio_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFra
     # per-frame dHash is shift-invariant, so the canonicalized clip
     # fingerprint matches exactly and the pair set is the closed-form
     # planted list
-    """
-    SELECT d.doc_id - 1 AS doc_a, d.doc_id AS doc_b
-    FROM documents d JOIN documents o ON o.doc_id = d.doc_id - 1
-    WHERE d.doc_id % 10 = 7
-    """,
+    _PLANTED_PAIRS.format(residue=7),
 )
 def q_media_video_clip_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Clip-level (video) near-dup detection, completing the
@@ -245,26 +247,22 @@ def q_media_video_clip_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFram
     video the shuffled bytes are ~20 B/frame, independent of frame
     size; the groupBy state is one row per clip."""
     from mapreducewordoccurences_spark.multimodal.media import (
-        bounded_persist,
         clip_fingerprints,
         dhash_frames,
         make_planted_dup_clips,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    clips = bounded_persist(
-        clip_fingerprints(dhash_frames(make_planted_dup_clips(docs)))
-    )
-    return collision_pairs(clips, "media_id", ["clipfp"], distinct=False).select(
-        "doc_a", "doc_b"
+    return _equal_key_pairs(
+        clip_fingerprints(dhash_frames(make_planted_dup_clips(docs))), "clipfp"
     )
 
 
 # ---------------------------------------------------------------------------
-# JPEG tier (round 10) — the vendored baseline codec
-# (multimodal/jpeg.py) under the oracle gate. Reference corpora are
-# mostly JPEG; before r10, a Pillow-less cluster silently NULLed
-# every JPEG payload's dims/features.
+# JPEG, GIF and MP4 tiers — the vendored codecs (multimodal/jpeg.py,
+# gif.py, mp4.py) under the oracle gate. Reference corpora are mostly
+# JPEG; without these codecs a Pillow-less cluster would NULL every
+# such payload's dims/features.
 # ---------------------------------------------------------------------------
 
 
@@ -309,11 +307,7 @@ def q_media_jpeg_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same pixels as id - 1 under a different entropy stream
     # (restart markers reset DC prediction), which decodes
     # bit-identically — dHash equality pairing IS the planted list
-    """
-    SELECT d.doc_id - 1 AS doc_a, d.doc_id AS doc_b
-    FROM documents d JOIN documents o ON o.doc_id = d.doc_id - 1
-    WHERE d.doc_id % 10 = 1
-    """,
+    _PLANTED_PAIRS.format(residue=1),
 )
 def q_media_jpeg_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual near-dup over REAL JPEG bytes: the planted copies
@@ -325,20 +319,12 @@ def q_media_jpeg_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint pass, (id, hash) shuffle, binary payloads never
     move."""
     from mapreducewordoccurences_spark.multimodal.media import (
-        bounded_persist,
         dhash_images,
         make_planted_dup_jpegs,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    h = bounded_persist(
-        dhash_images(make_planted_dup_jpegs(docs)).filter(
-            F.col("dhash").isNotNull()
-        )
-    )
-    return collision_pairs(h, "media_id", ["dhash"], distinct=False).select(
-        "doc_a", "doc_b"
-    )
+    return _equal_key_pairs(dhash_images(make_planted_dup_jpegs(docs)), "dhash")
 
 
 @register(
@@ -358,9 +344,8 @@ def q_media_jpeg_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_media_gif_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GIF plumbing end-to-end on a Pillow-less cluster (r11: the
-    last vendored-codec gap — GIF payloads previously yielded NULL
-    features here): synthesize genuine GIF89a payloads (single- and
+    """GIF plumbing end-to-end on a Pillow-less cluster: synthesize
+    genuine GIF89a payloads (single- and
     multi-frame, every 3rd interlaced — multimodal/gif.py
     gif_encode), parse dims AND frame counts back through the
     vendored block walker in Arrow-batched mapInPandas, and aggregate
@@ -386,11 +371,7 @@ def q_media_gif_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same pixels as id - 1 INTERLACED (different LZW stream,
     # identical pixels — GIF is lossless), so dHash equality pairing
     # IS the planted list
-    """
-    SELECT d.doc_id - 1 AS doc_a, d.doc_id AS doc_b
-    FROM documents d JOIN documents o ON o.doc_id = d.doc_id - 1
-    WHERE d.doc_id % 10 = 1
-    """,
+    _PLANTED_PAIRS.format(residue=1),
 )
 def q_media_gif_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual near-dup over REAL GIF bytes through the vendored
@@ -402,20 +383,12 @@ def q_media_gif_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     PNG/JPEG rows: map-only fingerprint pass, (id, hash) shuffle,
     binary payloads never move."""
     from mapreducewordoccurences_spark.multimodal.media import (
-        bounded_persist,
         dhash_images,
         make_planted_dup_gifs,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    h = bounded_persist(
-        dhash_images(make_planted_dup_gifs(docs)).filter(
-            F.col("dhash").isNotNull()
-        )
-    )
-    return collision_pairs(h, "media_id", ["dhash"], distinct=False).select(
-        "doc_a", "doc_b"
-    )
+    return _equal_key_pairs(dhash_images(make_planted_dup_gifs(docs)), "dhash")
 
 
 @register(
@@ -435,9 +408,8 @@ def q_media_gif_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_media_mp4_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MP4 container plumbing end-to-end WITHOUT ffmpeg (r11, VERDICT
-    r10 ask #4): mux genuine MJPEG MP4s (every sample a complete JFIF
-    stream), walk the ISO BMFF sample tables back (stsd dims,
+    """MP4 container plumbing end-to-end WITHOUT ffmpeg: mux genuine
+    MJPEG MP4s (every sample a complete JFIF stream), walk the ISO BMFF sample tables back (stsd dims,
     stts/stsz frame counts, mdhd timescale→duration) in Arrow-batched
     mapInPandas, and aggregate a histogram the oracle predicts
     arithmetically. Any container break (box framing, sample-table
@@ -464,11 +436,7 @@ def q_media_mp4_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     # carry the same frames as id - 1 with every sample re-encoded as
     # progressive JPEG — per-sample pixels decode bit-identically, so
     # the clip fingerprint pairing IS the planted list
-    """
-    SELECT d.doc_id - 1 AS doc_a, d.doc_id AS doc_b
-    FROM documents d JOIN documents o ON o.doc_id = d.doc_id - 1
-    WHERE d.doc_id % 10 = 1
-    """,
+    _PLANTED_PAIRS.format(residue=1),
 )
 def q_media_mp4_clip_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Clip-level near-dup over REAL MP4 bytes in the default
@@ -484,18 +452,14 @@ def q_media_mp4_clip_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fingerprints match exactly. 100 TB shape: payloads never
     shuffle, ~20 B/frame moves."""
     from mapreducewordoccurences_spark.multimodal.media import (
-        bounded_persist,
         clip_fingerprints,
         dhash_frames,
         make_planted_dup_mp4s,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    clips = bounded_persist(
-        clip_fingerprints(dhash_frames(make_planted_dup_mp4s(docs)))
-    )
-    return collision_pairs(clips, "media_id", ["clipfp"], distinct=False).select(
-        "doc_a", "doc_b"
+    return _equal_key_pairs(
+        clip_fingerprints(dhash_frames(make_planted_dup_mp4s(docs))), "clipfp"
     )
 
 
@@ -504,11 +468,9 @@ def q_media_mp4_clip_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the acceptance contract of the Hamming-tolerant tier on a
     # deterministic 400-doc panel: n_planted is closed-form; recall
     # of the planted quality-re-encoded pairs must clear 0.9
-    """
-    SELECT CAST(count(*) AS BIGINT) AS n_planted, TRUE AS recall_ok
-    FROM documents d JOIN documents o ON o.doc_id = d.doc_id - 1
-    WHERE d.doc_id % 10 = 1 AND d.doc_id < 400
-    """,
+    "SELECT CAST(count(*) AS BIGINT) AS n_planted, TRUE AS recall_ok"
+    + _PLANTED.format(residue=1)
+    + "AND d.doc_id < 400",
 )
 def q_media_jpeg_requant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The real-corpus JPEG near-dup: same image re-encoded at a
@@ -523,7 +485,6 @@ def q_media_jpeg_requant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ball join's selectivity floor (7-bit blocks) does not need
     scale exercise here — dedup_simhash_pairs covers that shape."""
     from mapreducewordoccurences_spark.multimodal.media import (
-        bounded_persist,
         dhash_images,
         make_requant_dup_jpegs,
     )
@@ -531,18 +492,16 @@ def q_media_jpeg_requant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") < 400
     )
-    h = dhash_images(make_requant_dup_jpegs(docs)).filter(
-        F.col("dhash").isNotNull()
-    )
+    h = _fingerprints(dhash_images(make_requant_dup_jpegs(docs)), "dhash")
     found = hamming_ball_pairs(
-        bounded_persist(h), "media_id", "dhash", max_distance=8, bits=64
+        h, "media_id", "dhash", max_distance=8, bits=64
     ).select(
         "doc_a", "doc_b", F.lit(1).alias("__hit")
     )
     # semi-join doc_a back to documents so both engines count the same
     # planted set: the oracle joins on the predecessor's EXISTENCE, so a
     # corpus with a gap right before an id ≡ 1 (mod 10) must not charge
-    # recall for a pair that cannot exist (ADVICE r10)
+    # recall for a pair that cannot exist
     ids = _t(spark, sf_dir, "documents").select("doc_id")
     planted = (
         ids.where((F.col("doc_id") % 10 == 1) & (F.col("doc_id") < 400))
@@ -574,7 +533,7 @@ def q_media_jpeg_requant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_media_audio_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio-similarity ANN (VERDICT r11 ask #8): the IVF lifecycle
+    """Audio-similarity ANN: the IVF lifecycle
     reused unchanged over AUDIO-derived vectors — synthesize the
     planted-dup WAV corpus, map each clip to its L2-normalized 64-d
     window-energy profile (multimodal/media.py audio_energy_vectors;
@@ -593,7 +552,6 @@ def q_media_audio_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreducewordoccurences_spark.functions.similarity import ivf_knn
     from mapreducewordoccurences_spark.multimodal.media import (
         audio_energy_vectors,
-        bounded_persist,
         make_planted_dup_audio,
     )
 

@@ -1229,8 +1229,8 @@ def q_vocab_coverage_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     what fraction of token OCCURRENCES the top-N vocabulary covers —
     the OOV-rate complement at candidate vocab sizes 10/100/1000).
     Plan: one corpus scan → word-count aggregate (map-side combine),
-    PERSISTED (repo caching contract — two consumers below; the
-    harness clears cache between queries); the rank runs over the
+    PERSISTED under the cache bound (``bounded_persist``; two
+    consumers below); the rank runs over the
     VOCABULARY axis — ONE orderBy(freq).limit(max N) cut
     (TakeOrderedAndProject, never a global sort of the vocab; at web
     scale the vocab is 10^8-10^9 rows and the N cuts are fixed
@@ -1240,7 +1240,7 @@ def q_vocab_coverage_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the 1-row total."""
     docs = _t(spark, sf_dir, "documents")
     cuts = (10, 100, 1000)
-    freq = (
+    freq = bounded_persist(
         docs.select(
             F.explode(
                 F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
@@ -1248,7 +1248,6 @@ def q_vocab_coverage_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("f"))
-        .persist()
     )
     tot = freq.agg(
         F.sum("f").cast("bigint").alias("total_tokens"),

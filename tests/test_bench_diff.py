@@ -111,3 +111,43 @@ def test_latest_sf1_record_before_round_excludes_self(tmp_path):
     assert latest_sf1_record(str(tmp_path)).endswith("r09.json")
     assert latest_sf1_record(str(tmp_path), before_round=9).endswith("r08.json")
     assert latest_sf1_record(str(tmp_path), before_round=7) is None
+
+
+def test_compact_record_carries_per_query_seconds():
+    """bench.py's last line keeps the headline per-query seconds, so a
+    tail capture can be diffed query by query, and stays under 2 KB."""
+    from bench import HEADLINE, compact_record
+
+    record = {
+        "metric": "headline_queries_total_sec",
+        "value": 1234.567,
+        "unit": "sec",
+        "queries": {q: 123.4567 for q in HEADLINE},
+        "extra_queries": {f"extra_{i}": 1.0 for i in range(145)},
+        "extra_total_sec": 145.0,
+        "sf": 0.1,
+        "startup_sec": 20.123,
+        "cold_total_sec": 2000.0,
+        "runs_per_query": 7,
+        "cpus": 4,
+        "errors": {},
+        "noise_band": {
+            "headline_best_sec": 1234.567,
+            "headline_median_sec": 1300.123,
+            "headline_worst_sec": 1400.456,
+            "median_over_best": 1.0531,
+            "per_query_rel_spread_p90": 0.2345,
+        },
+        "load_context": {"loadavg_1m": 3.21, "loadavg_5m": 2.98, "co_jvms": 1},
+        "regressions": [
+            {"query": "dedup_ngram_jaccard", "prev": 1.0, "cur": 2.0},
+            {"query": "text_stats", "prev": 1.0, "cur": 2.0},
+        ],
+    }
+    line = json.dumps(compact_record(record))
+    got = json.loads(line)
+    assert got["queries"] == {q: 123.457 for q in HEADLINE}
+    assert len(got["queries"]) == 20
+    assert got["value"] == 1234.567
+    assert got["regressions"] == ["dedup_ngram_jaccard", "text_stats"]
+    assert len(line.encode()) < 2048

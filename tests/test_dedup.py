@@ -281,3 +281,88 @@ class TestHammingBall:
                 for r in hamming_ball_pairs(df, "media_id", "h", d, bits).collect()
             }
             assert got == want, (bits, d)
+
+
+def test_operator_caches_stay_bounded(spark):
+    """Operators persist their twice-read intermediates through
+    ``bounded_persist``: called more often than the bound in one
+    session, at most ``_MAX_LIVE_CACHES`` cached frames stay live (the
+    session's CacheManager entries), and the newest stay cached."""
+    from mapreducewordoccurences_spark.core.checkpointing import _MAX_LIVE_CACHES
+    from mapreducewordoccurences_spark.dedup.minhash import minhash_band_index
+    from mapreducewordoccurences_spark.dedup.prefix import prefix_filter_jaccard_pairs
+    from mapreducewordoccurences_spark.dedup.simhash import simhash_near_dup_pairs
+    from mapreducewordoccurences_spark.dedup.substrings import duplicate_window_spans
+
+    def entries() -> int:
+        return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+    operators = [
+        simhash_near_dup_pairs,
+        minhash_band_index,
+        prefix_filter_jaccard_pairs,
+        duplicate_window_spans,
+    ]
+    spark.catalog.clearCache()
+    try:
+        for k in range(_MAX_LIVE_CACHES + 4):
+            # a distinct input per call: Spark caches one plan only once
+            docs = _docs(spark, [(1, "a b c d e"), (2, f"a b c d {k}")])
+            operators[k % len(operators)](docs)
+        assert entries() == _MAX_LIVE_CACHES
+    finally:
+        spark.catalog.clearCache()
+
+
+def test_bounded_persist_holds_its_bound_across_threads(spark):
+    """Concurrent callers share one bound: with more threads than
+    cores persisting distinct frames, the live list and the session's
+    CacheManager never end above ``_MAX_LIVE_CACHES``."""
+    import sys
+    import threading
+
+    from mapreducewordoccurences_spark.core import checkpointing
+
+    def work(t: int) -> None:
+        for k in range(6):
+            checkpointing.bounded_persist(spark.range(t * 100 + k + 1))
+
+    spark.catalog.clearCache()
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+        assert not any(th.is_alive() for th in threads)
+        assert len(checkpointing._LIVE_CACHES) == checkpointing._MAX_LIVE_CACHES
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        assert cm.numCachedEntries() == checkpointing._MAX_LIVE_CACHES
+    finally:
+        sys.setswitchinterval(switch)
+        spark.catalog.clearCache()
+
+
+def test_bounded_persist_keeps_a_replanned_frame_cached(spark):
+    """Spark caches by plan: persisting a frame whose plan an older
+    entry already holds, then filling the bound, must not evict the
+    new frame's cache through the old entry."""
+    from mapreducewordoccurences_spark.core.checkpointing import (
+        _MAX_LIVE_CACHES,
+        bounded_persist,
+    )
+
+    spark.catalog.clearCache()
+    try:
+        bounded_persist(spark.range(1000))
+        spark.catalog.clearCache()  # as the harnesses do between runs
+        again = bounded_persist(spark.range(1000))
+        for k in range(_MAX_LIVE_CACHES - 1):
+            bounded_persist(spark.range(k + 1))
+        assert again.storageLevel.useMemory
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        assert cm.numCachedEntries() == _MAX_LIVE_CACHES
+    finally:
+        spark.catalog.clearCache()

@@ -25,6 +25,11 @@ A fourth applies the caller rule to parameters: a switch that only a
 test turns (a ``None``, ``bool`` or ``str`` default that no non-test
 call passes) is a second configuration to keep correct for no user.
 Its default becomes the code, and the branch it selected goes.
+
+A fifth keeps the media tier one pipeline: in ``multimodal/`` only the
+two shells call ``mapInPandas`` — ``_synthetic_media`` for every
+synthetic corpus, ``_map_payloads`` for every payload decoder — so a
+new generator or decoder is a pure per-id or per-payload function.
 """
 
 from __future__ import annotations
@@ -291,4 +296,39 @@ def test_no_switch_only_tests_set():
         "package function parameters that no non-test call passes "
         "(make the default the code and delete the parameter, or keep "
         "it in KEPT_PARAMS with a reason):\n  " + "\n  ".join(unpassed)
+    )
+
+
+# the only functions in multimodal/ that may call mapInPandas
+MEDIA_SHELLS = {"_synthetic_media", "_map_payloads"}
+
+
+def media_maps_outside_shells() -> list[str]:
+    """``mapInPandas`` calls in ``multimodal/`` outside the bodies of
+    the top-level ``MEDIA_SHELLS`` functions."""
+    out = []
+    for path in sorted((PACKAGE / "multimodal").rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        inside = {
+            id(n)
+            for node in tree.body
+            if isinstance(node, ast.FunctionDef) and node.name in MEDIA_SHELLS
+            for n in ast.walk(node)
+        }
+        out += [
+            f"{path.relative_to(PACKAGE)}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and getattr(n.func, "attr", None) == "mapInPandas"
+            and id(n) not in inside
+        ]
+    return out
+
+
+def test_media_maps_through_one_shell():
+    outside = media_maps_outside_shells()
+    assert not outside, (
+        "mapInPandas calls in multimodal/ outside _synthetic_media and "
+        "_map_payloads (pass a per-id payload function or a per-payload "
+        "row function to one of them instead):\n  " + "\n  ".join(outside)
     )

@@ -1,11 +1,15 @@
 """Multimodal plumbing tests: binary payload columns through
 Arrow-batched mapInPandas decoders — the stdlib PNG/APNG and WAV
-codecs, dHash and audio fingerprints, and the Spark-side
+codecs, dHash, audio fingerprints and energy vectors, the synthetic
+corpora's pinned payload bytes, and the Spark-side
 schema/batching/partitioning around them.
 """
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -40,7 +44,7 @@ def test_decode_image_meta(media_df):
 
 
 def test_sample_frames_fanout(media_df):
-    out = sample_frames(media_df, every_nth=2).collect()
+    out = sample_frames(media_df).collect()
     by_id = {}
     for r in out:
         by_id.setdefault(r["media_id"], []).append(r["frame_idx"])
@@ -274,7 +278,7 @@ def test_make_fake_media_payloads_are_real_png(spark):
         assert rows[i]["meta"]["mime"] == "image/png"
     # frame sampling reads APNG acTL frame counts through the codec
     by_id = {}
-    for r in sample_frames(make_fake_media(ids), every_nth=2).collect():
+    for r in sample_frames(make_fake_media(ids)).collect():
         by_id.setdefault(r["media_id"], []).append(r["frame_idx"])
     assert sorted(by_id[4]) == [0, 2, 4]  # 1 + 4 % 5 = 5 frames
 
@@ -283,8 +287,6 @@ class TestDhashPerceptualDedup:
     def test_uniform_shift_invariance_and_distinctness(self):
         """A non-wrapping brightness shift must not change the dHash;
         distinct random patterns must (codec-level unit check)."""
-        import numpy as np
-
         from mapreducewordoccurences_spark.multimodal.media import (
             _dhash_one,
             png_encode,
@@ -293,20 +295,18 @@ class TestDhashPerceptualDedup:
         rng = np.random.RandomState(42)
         base = rng.randint(0, 246, 32 * 32).astype(np.uint8)
         other = rng.randint(0, 246, 32 * 32).astype(np.uint8)
-        h_base = _dhash_one(png_encode(32, 32, 1, 1, frames=[base.tobytes()]), 8, 8)
+        h_base = _dhash_one(png_encode(32, 32, 1, 1, frames=[base.tobytes()]))
         h_shift = _dhash_one(
-            png_encode(32, 32, 1, 1, frames=[(base + np.uint8(9)).tobytes()]), 8, 8
+            png_encode(32, 32, 1, 1, frames=[(base + np.uint8(9)).tobytes()])
         )
-        h_other = _dhash_one(png_encode(32, 32, 1, 1, frames=[other.tobytes()]), 8, 8)
+        h_other = _dhash_one(png_encode(32, 32, 1, 1, frames=[other.tobytes()]))
         assert h_base == h_shift
         assert h_base != h_other
-        assert _dhash_one(b"not a png", 8, 8) is None
+        assert _dhash_one(b"not a png") is None
 
     def test_rgb_channel_mean_shift_invariance(self):
         """Grayscale = exact integer channel mean, so a uniform shift
         applied to EVERY channel stays a uniform gray shift."""
-        import numpy as np
-
         from mapreducewordoccurences_spark.multimodal.media import (
             _dhash_one,
             png_encode,
@@ -314,9 +314,9 @@ class TestDhashPerceptualDedup:
 
         rng = np.random.RandomState(7)
         base = rng.randint(0, 240, 16 * 16 * 3).astype(np.uint8)
-        a = _dhash_one(png_encode(16, 16, 3, 1, frames=[base.tobytes()]), 8, 8)
+        a = _dhash_one(png_encode(16, 16, 3, 1, frames=[base.tobytes()]))
         b = _dhash_one(
-            png_encode(16, 16, 3, 1, frames=[(base + np.uint8(6)).tobytes()]), 8, 8
+            png_encode(16, 16, 3, 1, frames=[(base + np.uint8(6)).tobytes()])
         )
         assert a == b and a is not None
 
@@ -344,8 +344,6 @@ class TestDhashPerceptualDedup:
 
 class TestAudioFingerprintDedup:
     def test_gain_invariance_and_distinctness(self):
-        import numpy as np
-
         from mapreducewordoccurences_spark.multimodal.media import (
             _audio_fingerprint_one,
         )
@@ -404,7 +402,7 @@ class TestVideoClipDhashDedup:
         )
 
         docs = spark.range(20).withColumnRenamed("id", "doc_id")
-        fr = dhash_frames(make_planted_dup_clips(docs, n_frames=4))
+        fr = dhash_frames(make_planted_dup_clips(docs))
         # fan-out: 4 hash rows per clip, all frames decoded
         counts = {r["media_id"]: r["n"] for r in
                   fr.groupBy("media_id").agg(F.count("*").alias("n")).collect()}
@@ -429,3 +427,136 @@ class TestVideoClipDhashDedup:
             ).collect()
         }
         assert got == {(i - 1, i) for i in range(7, 500, 10)}
+
+
+def test_window_energies_shape_and_gain_scaling():
+    from mapreducewordoccurences_spark.multimodal.media import (
+        _window_energies,
+        fake_audio_bytes,
+    )
+
+    e = _window_energies(fake_audio_bytes(7))
+    assert e is not None and e.shape == (64,) and (e > 0).all()
+    # corrupt bytes take the NULL path
+    assert _window_energies(b"RIFFgarbage") is None
+    assert _window_energies(None) is None
+
+
+def test_normalized_energy_vector_is_gain_invariant():
+    """A gain-scaled clip must normalize to (numerically) the same
+    vector — the property the audio IVF row's planted dups rely on."""
+    import io
+    import wave
+
+    from mapreducewordoccurences_spark.multimodal.media import _window_energies
+
+    def wav(gain: int) -> bytes:
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(1)
+            w.setsampwidth(2)
+            w.setframerate(8000)
+            rng = np.random.RandomState(5)
+            amps = rng.randint(50, 1000, 64)
+            frames = np.repeat(amps * gain, 8).astype("<i2")
+            frames[::2] *= -1
+            w.writeframes(frames.tobytes())
+        return buf.getvalue()
+
+    a = _window_energies(wav(1)).astype(np.float64)
+    b = _window_energies(wav(3)).astype(np.float64)
+    na, nb = a / np.linalg.norm(a), b / np.linalg.norm(b)
+    cos = float(na @ nb)
+    assert cos > 1 - 1e-12
+
+
+# ---- synthetic corpora: one shell, pinned payloads -------------------
+
+# generator → (payload function, kind, mime, md5 of the payloads of
+# ids 0..199 concatenated in id order). The digests pin every byte the
+# catalog's media rows decode, so a refactor of a payload function
+# that changes one pixel, header field or codec option fails here.
+CORPORA = {
+    "make_fake_media": (
+        "fake_png_bytes", "image", "image/png",
+        "24a8b6bdcc6ed67e067a43fefdc327d9",
+    ),
+    "make_fake_audio": (
+        "fake_audio_bytes", "audio", "audio/wav",
+        "8bd00073e8b5beb9dff27ad80e64c824",
+    ),
+    "make_planted_dup_images": (
+        "planted_png_bytes", "image", "image/png",
+        "f9d2c9c8998aa339b8ceee0f1850fb25",
+    ),
+    "make_planted_dup_audio": (
+        "planted_wav_bytes", "audio", "audio/wav",
+        "b43c664c73180a2ef5a3a527128568b6",
+    ),
+    "make_planted_dup_clips": (
+        "planted_apng_bytes", "video", "image/apng",
+        "72de0f72c26a285b9d163e5347069fc6",
+    ),
+    "make_planted_dup_jpegs": (
+        "planted_jpeg_bytes", "image", "image/jpeg",
+        "b49412106d9691b3e6bddaaf5e086ca3",
+    ),
+    "make_requant_dup_jpegs": (
+        "requant_jpeg_bytes", "image", "image/jpeg",
+        "237e39aea5da8f3a4c2b3bfeee64bfef",
+    ),
+    "make_fake_gif_media": (
+        "fake_gif_bytes", "image", "image/gif",
+        "61c81a39cf700bd5579a1623260c4e0e",
+    ),
+    "make_planted_dup_gifs": (
+        "planted_gif_bytes", "image", "image/gif",
+        "b3b5097b8462c1e6f97e1d37f0d723fc",
+    ),
+    "make_fake_jpeg_media": (
+        "fake_jpeg_bytes", "image", "image/jpeg",
+        "32ae95b0d6876d4283bd5336b8fd7fe4",
+    ),
+    "make_fake_mp4_media": (
+        "fake_mp4_bytes", "video", "video/mp4",
+        "3693a1eb56f44feb80cb77e1bd175e42",
+    ),
+    "make_planted_dup_mp4s": (
+        "planted_mp4_bytes", "video", "video/mp4",
+        "8884fd8e6b0603818d25a6f1b4a74b43",
+    ),
+}
+
+
+@pytest.mark.parametrize("generator", sorted(CORPORA))
+def test_payload_bytes_are_pinned(generator):
+    from mapreducewordoccurences_spark.multimodal import media
+
+    payload_of, _kind, _mime, md5 = CORPORA[generator]
+    fn = getattr(media, payload_of)
+    got = hashlib.md5(b"".join(fn(i) for i in range(200))).hexdigest()
+    assert got == md5
+
+
+def test_generators_wrap_their_payload_functions(spark):
+    """Each generator is the one shell around its payload function:
+    same bytes per id, its kind and mime, and the byte count in meta."""
+    from mapreducewordoccurences_spark.multimodal import media
+
+    ids = spark.range(4).select(F.col("id").alias("doc_id"))
+    frames = [
+        getattr(media, g)(ids).select(F.lit(g).alias("gen"), "*")
+        for g in sorted(CORPORA)
+    ]
+    union = frames[0]
+    for f in frames[1:]:
+        union = union.unionByName(f)
+    rows = union.collect()
+    assert len(rows) == 4 * len(CORPORA)
+    for r in rows:
+        payload_of, kind, mime, _md5 = CORPORA[r["gen"]]
+        want = getattr(media, payload_of)(r["media_id"])
+        assert bytes(r["payload"]) == want, r["gen"]
+        assert (r["kind"], r["meta"]["mime"]) == (kind, mime), r["gen"]
+        assert r["meta"]["source"] == "synthetic"
+        assert r["meta"]["bytes"] == len(want)
